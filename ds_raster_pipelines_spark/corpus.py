@@ -222,7 +222,7 @@ def _with_pcell(df: DataFrame, id_col: str = "i") -> DataFrame:
 
     pts = centroid_cols_for_images(df, id_col)
     return pts.withColumn(
-        "pcell", grid.encode_col(F.col("lon_c"), F.col("lat_c"), PCELL_RES)
+        "pcell", grid.encode_col("lon_c", "lat_c", PCELL_RES)
     ).drop("lon_c", "lat_c")
 
 
@@ -727,14 +727,16 @@ def images_meta_sql(i_expr: str = "o_orderkey") -> dict[str, str]:
 
 
 def centroid_cols_for_images(df: DataFrame, i_col: str = "i") -> DataFrame:
-    """Attach the tile-centroid lon/lat (JVM exprs, matches images_meta_sql)."""
-    i = F.col(i_col)
-    return df.withColumns(
-        {
-            "lon_c": F.lit(-180.0) + F.lit(0.25) * ((i * 13) % 1440) + F.lit(0.125),
-            "lat_c": F.lit(90.0) - F.lit(0.25) * ((i * 7) % 720) - F.lit(0.125),
-        }
-    )
+    """Attach the tile-centroid lon/lat (JVM exprs, matches images_meta_sql;
+    one ``F.expr`` per column, DOUBLE literals so both stay DOUBLE)."""
+    from .grid import dbl_sql as d
+
+    i = f"`{i_col}`"
+    # chained withColumn: one JVM call each (withColumns converts its
+    # name and Column lists element by element)
+    return df.withColumn(
+        "lon_c", F.expr(f"{d(-180)} + {d(0.25)} * (({i} * 13) % 1440) + {d(0.125)}")
+    ).withColumn("lat_c", F.expr(f"{d(90)} - {d(0.25)} * (({i} * 7) % 720) - {d(0.125)}"))
 
 
 def footprint_cols_for_images(df: DataFrame, i_col: str = "i") -> DataFrame:
@@ -742,13 +744,12 @@ def footprint_cols_for_images(df: DataFrame, i_col: str = "i") -> DataFrame:
     edge) as columns. The raster kernels (operators/raster.py) consume
     ONLY these columns — the corpus-specific strided-fill formula lives
     here, not in the operators."""
-    i = F.col(i_col)
-    return df.withColumns(
-        {
-            "lon0": F.lit(-180.0) + F.lit(0.25) * ((i * 13) % 1440),
-            "lat_top": F.lit(90.0) - F.lit(0.25) * ((i * 7) % 720),
-        }
-    )
+    from .grid import dbl_sql as d
+
+    i = f"`{i_col}`"
+    return df.withColumn(
+        "lon0", F.expr(f"{d(-180)} + {d(0.25)} * (({i} * 13) % 1440)")
+    ).withColumn("lat_top", F.expr(f"{d(90)} - {d(0.25)} * (({i} * 7) % 720)"))
 
 
 # ----------------------------------------------- big synthetic documents ---

@@ -12,12 +12,16 @@ Scheme (quadtree-on-equirectangular, square cells):
   iy = clamp(floor(( 90 - lat) / 180 * ny), 0, ny-1)
   cell_id = (r << 54) | (iy << 27) | ix          -- fits a signed int64, r <= 26
 
-Everything here has three synchronized implementations:
-  * numpy (vectorized, for Arrow kernels and goldens),
-  * Spark Column expressions (JVM-side bit ops — stays in whole-stage
-    codegen, NO Python UDF),
-  * ANSI-SQL text (identical arithmetic, for the DuckDB oracle).
-Cross-checked in tests/test_grid.py.
+Implementations, cross-checked in tests/test_grid.py:
+  * numpy (vectorized, for Arrow kernels and goldens);
+  * SQL text (``encode_sql``, ``centroid_sql``, ``parent_sql`` ...), the
+    single text form of each formula: the DuckDB oracle runs it as is and
+    Spark runs it through ``encode_col`` / ``centroid_cols`` as ONE
+    ``F.expr`` — JVM arithmetic in whole-stage codegen, NO Python UDF, and
+    built in a fixed few driver→JVM round trips, where a Column builder
+    pays one per literal and operator (plus one more when Python frees it);
+  * Column builders for the bit-field helpers (``parent_col``, ``ix_col``,
+    ``iy_col``, ``grid_disk_col``).
 """
 
 from __future__ import annotations
@@ -122,16 +126,30 @@ def cover_rect_np(min_lon: float, min_lat: float, max_lon: float, max_lat: float
 # ---------------------------------------------------------------- spark ---
 
 
-def encode_col(lon: Column, lat: Column, res: int) -> Column:
-    """Spark Column: lon/lat -> cell_id. Pure JVM arithmetic (codegen'd)."""
-    nx, ny = nx_ny(res)
-    ix = F.least(F.greatest(F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(nx)), F.lit(0)), F.lit(nx - 1))
-    iy = F.least(F.greatest(F.floor((F.lit(90.0) - lat) / F.lit(180.0) * F.lit(ny)), F.lit(0)), F.lit(ny - 1))
-    return (
-        F.lit(int(res) << RES_SHIFT).cast("long")
-        .bitwiseOR(F.shiftleft(iy.cast("long"), IY_SHIFT))
-        .bitwiseOR(ix.cast("long"))
-    )
+def encode_col(lon: str | Column, lat: str | Column, res: int) -> Column:
+    """Spark Column: lon/lat -> cell_id, one ``F.expr`` over
+    :func:`encode_sql`. ``lon``/``lat`` are Spark-SQL text (a column name
+    or an expression); a plain column reference ``F.col(name)`` is taken
+    as its name."""
+    return F.expr(encode_sql(_sql_text(lon), _sql_text(lat), res))
+
+
+def cell_isin(col: str, cells) -> Column:
+    """``col IN (c1, c2, ...)`` over integer cell ids, as one ``F.expr``:
+    the same few JVM round trips however long the list (``Column.isin``
+    builds a JVM literal per element). The optimizer still lowers a long
+    list to an ``INSET`` filter pushed to the parquet scan. No cells:
+    matches no row."""
+    ints = ", ".join(str(int(c)) for c in cells)
+    return F.expr(f"`{col}` IN ({ints})" if ints else "false")
+
+
+def _sql_text(x: str | Column) -> str:
+    if isinstance(x, str):
+        return x
+    # a column reference renders as its bare name; quoted, anything else
+    # fails to resolve instead of parsing as something unintended
+    return "`" + x._jc.toString().replace("`", "``") + "`"
 
 
 def res_col(cell: Column) -> Column:
@@ -159,11 +177,11 @@ def parent_col(cell: Column, parent_res: int, res: int) -> Column:
     )
 
 
-def centroid_cols(cell: Column, res: int) -> tuple[Column, Column]:
-    nx, ny = nx_ny(res)
-    lon = F.lit(-180.0) + (ix_col(cell).cast("double") + F.lit(0.5)) * F.lit(360.0 / nx)
-    lat = F.lit(90.0) - (iy_col(cell).cast("double") + F.lit(0.5)) * F.lit(180.0 / ny)
-    return lon, lat
+def centroid_cols(cell: str | Column, res: int) -> tuple[Column, Column]:
+    """Spark Columns (lon, lat) of each cell's centre at ``res``, one
+    ``F.expr`` each over :func:`centroid_sql`."""
+    lon, lat = centroid_sql(_sql_text(cell), res)
+    return F.expr(lon), F.expr(lat)
 
 
 def grid_disk_col(cell: Column, k: int, res: int) -> Column:
@@ -191,14 +209,29 @@ def grid_disk_col(cell: Column, k: int, res: int) -> Column:
 
 
 # ------------------------------------------------------------------ sql ---
-# Identical arithmetic as ANSI SQL text, for the DuckDB oracle. Keep these
-# byte-for-byte in sync with encode_col/encode_np (tests cross-check).
+# The single text form of each formula, valid in Spark SQL and DuckDB alike
+# (encode_col/centroid_cols wrap it; encode_np is its numpy twin). Literals
+# that must be DOUBLE are written by dbl_sql: a bare ``180.0`` is DECIMAL
+# in both engines (``0.25 * i`` would come out DECIMAL, not DOUBLE).
+
+
+def dbl_sql(x: float) -> str:
+    """``x`` as a DOUBLE literal in Spark SQL and DuckDB: the exponent form
+    ``180.0e0`` (``180.0D`` is Spark-only — DuckDB reads the D as an alias)."""
+    r = repr(float(x))
+    return r if "e" in r else f"{r}e0"
 
 
 def encode_sql(lon_expr: str, lat_expr: str, res: int) -> str:
     nx, ny = nx_ny(res)
-    ix = f"least(greatest(cast(floor((({lon_expr}) + 180.0) / 360.0 * {nx}) as bigint), 0), {nx - 1})"
-    iy = f"least(greatest(cast(floor((90.0 - ({lat_expr})) / 180.0 * {ny}) as bigint), 0), {ny - 1})"
+    ix = (
+        f"least(greatest(cast(floor((({lon_expr}) + {dbl_sql(180)}) / {dbl_sql(360)} * {nx})"
+        f" as bigint), 0), {nx - 1})"
+    )
+    iy = (
+        f"least(greatest(cast(floor(({dbl_sql(90)} - ({lat_expr})) / {dbl_sql(180)} * {ny})"
+        f" as bigint), 0), {ny - 1})"
+    )
     return f"(cast({int(res) << RES_SHIFT} as bigint) | ({iy} << {IY_SHIFT}) | {ix})"
 
 
@@ -221,8 +254,8 @@ def parent_sql(cell_expr: str, parent_res: int, res: int) -> str:
 
 def centroid_sql(cell_expr: str, res: int) -> tuple[str, str]:
     nx, ny = nx_ny(res)
-    lon = f"(-180.0 + ({ix_sql(cell_expr)} + 0.5) * {360.0 / nx!r})"
-    lat = f"(90.0 - ({iy_sql(cell_expr)} + 0.5) * {180.0 / ny!r})"
+    lon = f"({dbl_sql(-180)} + ({ix_sql(cell_expr)} + {dbl_sql(0.5)}) * {dbl_sql(360.0 / nx)})"
+    lat = f"({dbl_sql(90)} - ({iy_sql(cell_expr)} + {dbl_sql(0.5)}) * {dbl_sql(180.0 / ny)})"
     return lon, lat
 
 

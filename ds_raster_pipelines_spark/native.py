@@ -860,6 +860,50 @@ long hist_segments(const unsigned char *data, const int64_t *bounds,
     return 0;
 }
 
+/* Per-segment sum, min and max over a binary column's data buffer in one
+ * pass: segment k is bytes [bounds[2k], bounds[2k+1]) of data[0..n).
+ * An empty or out-of-range segment returns -1 and the caller runs its
+ * numpy reference (np.*.reduceat has its own answer for empty segments).
+ * The fixed 64-byte inner loop is what -O2 vectorizes (a loop with an
+ * unknown trip count stays scalar there: measured 6x slower). */
+long seg_sum_min_max(const unsigned char *data, int64_t n, const int64_t *bounds,
+                     long nseg, int64_t *sums, unsigned char *mins,
+                     unsigned char *maxs)
+{
+    long k;
+    int j;
+    for (k = 0; k < nseg; k++) {
+        int64_t b0 = bounds[2 * k], b1 = bounds[2 * k + 1], i;
+        uint64_t s = 0;
+        unsigned char lo = 255, hi = 0;
+        if (b0 < 0 || b1 > n || b0 >= b1)
+            return -1;
+        for (i = b0; i + 64 <= b1; i += 64) {
+            const unsigned char *p = data + i;
+            uint32_t part = 0;
+            unsigned char l = 255, h = 0;
+            for (j = 0; j < 64; j++) {
+                part += p[j];
+                l = p[j] < l ? p[j] : l;
+                h = p[j] > h ? p[j] : h;
+            }
+            s += part;
+            lo = l < lo ? l : lo;
+            hi = h > hi ? h : hi;
+        }
+        for (; i < b1; i++) {
+            unsigned char v = data[i];
+            s += v;
+            lo = v < lo ? v : lo;
+            hi = v > hi ? v : hi;
+        }
+        sums[k] = (int64_t)s;
+        mins[k] = lo;
+        maxs[k] = hi;
+    }
+    return 0;
+}
+
 /* ---- MD5 (RFC 1321, from-scratch reference implementation) -------- */
 typedef struct { uint32_t a, b, c, d; } md5st;
 static const uint32_t MD5K[64] = {
@@ -1232,6 +1276,16 @@ def _build() -> ctypes.CDLL | None:
             ctypes.c_long,
             ctypes.c_long,
             ctypes.POINTER(ctypes.c_int64),
+        ]
+        lib.seg_sum_min_max.restype = ctypes.c_long
+        lib.seg_sum_min_max.argtypes = [
+            ctypes.c_char_p,
+            ctypes.c_int64,
+            ctypes.POINTER(ctypes.c_int64),
+            ctypes.c_long,
+            ctypes.POINTER(ctypes.c_int64),
+            ctypes.c_char_p,
+            ctypes.c_char_p,
         ]
         lib.bilinear_stack.restype = ctypes.c_long
         lib.bilinear_stack.argtypes = [
@@ -1653,6 +1707,29 @@ def hist_segments(
         out.ctypes.data_as(i64p),
     )
     return rc == 0
+
+
+def seg_sum_min_max(data: np.ndarray, bounds: np.ndarray):
+    """(sums int64, mins uint8, maxs uint8) of each segment
+    data[bounds[2k]:bounds[2k+1]] of a uint8 buffer, in one pass — or None
+    when the library is unavailable or a segment is empty or out of range
+    (the caller runs its numpy reference)."""
+    lib = get_lib()
+    if lib is None:
+        return None
+    data = np.ascontiguousarray(data, dtype=np.uint8)
+    bounds = np.ascontiguousarray(bounds, dtype=np.int64)
+    nseg = len(bounds) // 2
+    sums = np.empty(nseg, dtype=np.int64)
+    mins = np.empty(nseg, dtype=np.uint8)
+    maxs = np.empty(nseg, dtype=np.uint8)
+    rc = lib.seg_sum_min_max(
+        data.ctypes.data_as(ctypes.c_char_p), len(data),
+        bounds.ctypes.data_as(ctypes.POINTER(ctypes.c_int64)), nseg,
+        sums.ctypes.data_as(ctypes.POINTER(ctypes.c_int64)),
+        mins.ctypes.data_as(ctypes.c_char_p), maxs.ctypes.data_as(ctypes.c_char_p),
+    )
+    return (sums, mins, maxs) if rc == 0 else None
 
 
 def minhash_doc_sigs(texts, offs: np.ndarray, pa: np.ndarray, pb: np.ndarray, p: int):

@@ -400,6 +400,22 @@ def lsh_candidate_pairs(
     )
 
 
+def word_set_sizes(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """(doc_id, n_words): |set(words)| per doc, one row per doc that has a
+    word. A MAP-SIDE closed form over the corpus scan (r8 s4):
+    array_distinct the split array, drop the empty token the split of
+    doubled separators leaves behind — equals a groupBy(doc_id).count()
+    over exploded words without its exchange. Like that groupBy, it has no
+    row for a doc without words (size() would give null or -1 for null
+    text and 0 for an empty doc)."""
+    return df.select(
+        "doc_id",
+        F.size(
+            F.array_remove(F.array_distinct(F.split(F.col(text_col), " ")), "")
+        ).alias("n_words"),
+    ).where(F.col("n_words") > 0)
+
+
 def minhash_dedup_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -431,16 +447,7 @@ def minhash_dedup_pairs(
         minhash_signatures(df, text_col, strategy), rows_per_band, max_bucket,
         scope=sc, _fresh=False,
     )
-    # |set(words)| per doc has a MAP-SIDE closed form over the corpus scan
-    # (r8 s4): array_distinct the split array, drop the empty token the
-    # split of doubled separators leaves behind — equals the old
-    # groupBy(doc_id).count() over exploded words without its exchange.
-    sizes = df.select(
-        "doc_id",
-        F.size(
-            F.array_remove(F.array_distinct(F.split(F.col(text_col), " ")), "")
-        ).alias("n_words"),
-    )
+    sizes = word_set_sizes(df, text_col)
     wa = words.select(F.col("doc_id").alias("doc_a"), "w")
     wb = words.select(F.col("doc_id").alias("doc_b"), "w")
     shared = (

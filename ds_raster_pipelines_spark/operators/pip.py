@@ -301,7 +301,7 @@ class PolygonSetTooLarge(ValueError):
     pass
 
 
-def cover_local(spark, admin: DataFrame, res: int, max_polygons: int | None = None):
+def cover_local_pdf(admin: DataFrame, res: int, max_polygons: int | None = None):
     """Driver-side cover build for broadcast-small polygon tables: one
     collect, zero extra Spark jobs (the distributed polygon_cover_cells
     costs a python stage + broadcast per query — measurable serial time
@@ -312,11 +312,9 @@ def cover_local(spark, admin: DataFrame, res: int, max_polygons: int | None = No
     go through the distributed cover (polygon_cover_cells), never the
     driver. pip_join auto-switches on this signal.
 
-    Returns (adm_rows, rings, cover_df). The cover carries everything a
-    downstream refine needs (geometry index + bbox bounds), so ONE
-    broadcast serves the whole PIP join — every extra tiny broadcast is a
-    full defaultParallelism-task job (~0.3 s on this box).
-    The cover DataFrame is single-slice (tiny local relation)."""
+    Returns (adm_rows, rings, cover_pdf): the cover as a pandas frame with
+    the COVER_SCHEMA columns — every cover cell of every geometry, plus
+    what a downstream refine needs (geometry index + bbox bounds)."""
     if max_polygons is None:
         max_polygons = MAX_LOCAL_POLYGONS  # read at call time (testable)
     rows = admin.select("adm_id", "geom_wkb").limit(max_polygons + 1).collect()
@@ -339,19 +337,27 @@ def cover_local(spark, admin: DataFrame, res: int, max_polygons: int | None = No
             (r["adm_id"], int(c), bool(f), gi, mnx, mny, mxx, mxy)
             for c, f in zip(cells.tolist(), full.tolist())
         )
+    cover = pd.DataFrame(
+        recs, columns=["adm_id", "cell_id", "full", "_gi", "_mnx", "_mny", "_mxx", "_mxy"]
+    )
+    return rows, rings, cover
+
+
+def cover_local(spark, admin: DataFrame, res: int, max_polygons: int | None = None):
+    """:func:`cover_local_pdf` with the cover as a Spark DataFrame.
+
+    Returns (adm_rows, rings, cover_df). The cover carries everything a
+    downstream refine needs, so ONE broadcast serves the whole PIP join —
+    every extra tiny broadcast is a full defaultParallelism-task job
+    (~0.3 s on this box). The cover DataFrame is single-slice (tiny local
+    relation)."""
+    rows, rings, cover = cover_local_pdf(admin, res, max_polygons)
     # Arrow local relation, NOT createDataFrame(python_list): the pickled-
     # row RDD path costs ~7 s PER EVALUATION on this box (python worker
     # deserialization) even coalesced to 1 slice, and the cover is
     # re-evaluated by every broadcast — measured as the entire fixed
     # overhead of the sf0.1 flagship. The pandas→Arrow path is ~0.25 s.
-    cover = spark.createDataFrame(
-        pd.DataFrame(
-            recs,
-            columns=["adm_id", "cell_id", "full", "_gi", "_mnx", "_mny", "_mxx", "_mxy"],
-        ),
-        schema=COVER_SCHEMA,
-    )
-    return rows, rings, cover
+    return rows, rings, spark.createDataFrame(cover, schema=COVER_SCHEMA)
 
 
 def pip_join(
@@ -392,7 +398,8 @@ def pip_join(
     if boundary not in ("half_open", "closed"):
         raise ValueError(f"boundary={boundary!r} (want 'half_open' or 'closed')")
     helper_cols = ["full", "_gi", "_mnx", "_mny", "_mxx", "_mxy"]
-    pts = points.withColumn("cell_id", grid.encode_col(F.col(lon_col), F.col(lat_col), res))
+    lon, lat = f"`{lon_col}`", f"`{lat_col}`"
+    pts = points.withColumn("cell_id", grid.encode_col(lon, lat, res))
     if cover is None or rings is None or adm_rows is None:
         try:
             adm_rows, rings, cover = cover_local(points.sparkSession, admin, res)
@@ -411,16 +418,10 @@ def pip_join(
         # extra Python stages in the task pipeline. The interval shape
         # follows ``boundary`` so bbox and ray-cast agree on edge points.
         if boundary == "closed":
-            in_rect = (
-                F.col(lon_col).between(F.col("_mnx"), F.col("_mxx"))
-                & F.col(lat_col).between(F.col("_mny"), F.col("_mxy"))
-            )
+            in_rect = f"{lon} BETWEEN _mnx AND _mxx AND {lat} BETWEEN _mny AND _mxy"
         else:
-            in_rect = (
-                (F.col(lon_col) >= F.col("_mnx")) & (F.col(lon_col) < F.col("_mxx"))
-                & (F.col(lat_col) >= F.col("_mny")) & (F.col(lat_col) < F.col("_mxy"))
-            )
-        return cand.where(F.col("full") | in_rect).drop(*helper_cols)
+            in_rect = f"{lon} >= _mnx AND {lon} < _mxx AND {lat} >= _mny AND {lat} < _mxy"
+        return cand.where(F.expr(f"`full` OR ({in_rect})")).drop(*helper_cols)
     # interior shortcut: candidates in 'full' cells are inside by
     # construction (the UDF gets -1 and short-circuits them vectorized).
     # Kept as ONE plan branch: splitting full/edge into a union would
@@ -472,7 +473,7 @@ def pip_join_distributed(
     layout changes. AQE's skew split remains the runtime fallback when
     salting is off.
     """
-    pts = points.withColumn("cell_id", grid.encode_col(F.col(lon_col), F.col(lat_col), res))
+    pts = points.withColumn("cell_id", grid.encode_col(f"`{lon_col}`", f"`{lat_col}`", res))
     if cover is None:
         cover = polygon_cover_cells(admin, res)
     if n_salt is not None:

@@ -147,7 +147,9 @@ def _zonal_pixel_reduce(
     def with_cell(df: DataFrame) -> DataFrame:
         return df.withColumn(
             "cell_id",
-            grid.encode_col(F.col("lon0") + half, F.col("lat_top") - half, res),
+            grid.encode_col(
+                f"lon0 + {grid.dbl_sql(half)}", f"lat_top - {grid.dbl_sql(half)}", res
+            ),
         )
 
     pts = with_cell(images)
@@ -175,7 +177,7 @@ def _zonal_pixel_reduce(
         from ..corpus import PCELL_RES
 
         parents = sorted({int(grid.parent_np(np.asarray([c]), PCELL_RES)[0]) for c in expanded})
-        pts = with_cell(images.where(F.col("pcell").isin(parents)).drop("pcell"))
+        pts = with_cell(images.where(grid.cell_isin("pcell", parents)).drop("pcell"))
     pruned = pts.join(F.broadcast(cover), "cell_id", "left_semi").drop("cell_id")
 
     # 2. decode + per-polygon masked reduction in one Arrow kernel

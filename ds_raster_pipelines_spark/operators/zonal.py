@@ -35,25 +35,27 @@ def zonal_stats(
     correctness gate: identical hashes at local[8] vs local[32]).
     """
     keys = keys or ["adm_id"]
-    v = F.col(value_col)
+    v = f"`{value_col}`"
 
-    def r(c):
-        return F.round(c, round_dp) if round_dp is not None else c
+    def r(c: str) -> str:
+        return f"round({c}, {round_dp})" if round_dp is not None else c
 
     if fixed_scale is not None:
-        iv = F.sum(F.round(v * fixed_scale, 0).cast("long")).cast("double")
-        sum_expr = iv / fixed_scale
-        avg_expr = iv / (F.lit(fixed_scale) * F.count(F.lit(1)))
+        iv = f"cast(sum(cast(round({v} * {fixed_scale}, 0) as bigint)) as double)"
+        sum_expr = f"{iv} / {fixed_scale}"
+        avg_expr = f"{iv} / ({fixed_scale} * count(1))"
     else:
-        sum_expr = F.sum(v)
-        avg_expr = F.avg(v)
-    return joined.groupBy(*keys).agg(
-        r(avg_expr).alias("avg_value"),
-        r(F.min(v)).alias("min_value"),
-        r(F.max(v)).alias("max_value"),
-        r(sum_expr).alias("sum_value"),
-        F.count(F.lit(1)).alias("n_tiles"),
-    )
+        sum_expr = f"sum({v})"
+        avg_expr = f"avg({v})"
+    out = {
+        "avg_value": r(avg_expr),
+        "min_value": r(f"min({v})"),
+        "max_value": r(f"max({v})"),
+        "sum_value": r(sum_expr),
+        "n_tiles": "count(1)",
+    }
+    # one F.expr per output column: a fixed few JVM round trips each
+    return joined.groupBy(*keys).agg(*[F.expr(f"{e} AS {n}") for n, e in out.items()])
 
 
 def zonal_stats_weighted(
@@ -71,16 +73,13 @@ def zonal_stats_weighted(
     accumulators are exact longs: order-independent, bit-identical across
     engines and parallelism — never accumulate a float product."""
     keys = keys or ["adm_id"]
-    w = F.col(weight_col).cast("long")
-    iv = F.round(F.col(value_col) * fixed_scale, 0).cast("long")
-
-    def r(c):
-        return F.round(c, round_dp) if round_dp is not None else c
-
+    w = f"cast(`{weight_col}` as bigint)"
+    iv = f"cast(round(`{value_col}` * {fixed_scale}, 0) as bigint)"
+    wavg = f"cast(sum({w} * {iv}) as double) / ({fixed_scale} * sum({w}))"
+    if round_dp is not None:
+        wavg = f"round({wavg}, {round_dp})"
     return joined.groupBy(*keys).agg(
-        r(
-            F.sum(w * iv).cast("double") / (F.lit(fixed_scale) * F.sum(w))
-        ).alias("wavg_value"),
-        F.sum(w).alias("sum_weight"),
-        F.count(F.lit(1)).alias("n_tiles"),
+        F.expr(f"{wavg} AS wavg_value"),
+        F.expr(f"sum({w}) AS sum_weight"),
+        F.expr("count(1) AS n_tiles"),
     )

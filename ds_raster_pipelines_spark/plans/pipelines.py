@@ -73,7 +73,7 @@ class IngestPipeline:
         tiles = corpus.centroid_cols_for_images(tiles, "i")
         return tiles.withColumns(
             {
-                "cell_id": grid.encode_col(F.col("lon_c"), F.col("lat_c"), self.res),
+                "cell_id": grid.encode_col("lon_c", "lat_c", self.res),
                 "date": F.lit(d.isoformat()).cast("date"),
                 "crs": F.lit("EPSG:4326"),
             }

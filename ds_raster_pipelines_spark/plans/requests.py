@@ -81,8 +81,7 @@ def pruned_scan(
 
         w, s, e, n = spec.bbox
         ring = parse_wkb_polygon(wkb_polygon_rect(w, s, e, n))
-        cells = [int(c) for c in cover_cells_driver([ring], spec.grid_res)]
-        df = df.where(F.col(cell_col).isin(cells))
+        df = df.where(grid.cell_isin(cell_col, cover_cells_driver([ring], spec.grid_res)))
     return df.where(request_predicates(spec, date_col, leadtime_col, lon_col, lat_col))
 
 

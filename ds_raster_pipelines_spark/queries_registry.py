@@ -355,7 +355,7 @@ def cell_encode_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         _pq(spark, sf_dir, "orders").select(F.col("o_orderkey").alias("i"))
     )
     return (
-        pts.withColumn("cell_id", grid.encode_col(F.col("lon_c"), F.col("lat_c"), _RES_H))
+        pts.withColumn("cell_id", grid.encode_col("lon_c", "lat_c", _RES_H))
         .groupBy("cell_id")
         .agg(F.count(F.lit(1)).alias("n_points"))
         .orderBy("cell_id")
@@ -384,7 +384,7 @@ def cell_parent_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = corpus.centroid_cols_for_images(
         _pq(spark, sf_dir, "orders").select(F.col("o_orderkey").alias("i"))
     )
-    cells = pts.withColumn("cell_id", grid.encode_col(F.col("lon_c"), F.col("lat_c"), _RES_H))
+    cells = pts.withColumn("cell_id", grid.encode_col("lon_c", "lat_c", _RES_H))
     return (
         cells.withColumn("parent_id", grid.parent_col(F.col("cell_id"), 2, _RES_H))
         .groupBy("parent_id")
@@ -1511,7 +1511,7 @@ def knn_ring_halo(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = corpus.centroid_cols_for_images(
         _pq(spark, sf_dir, "orders").select(F.col("o_orderkey").alias("i"))
     )
-    tiles = pts.select(grid.encode_col(F.col("lon_c"), F.col("lat_c"), _RES_K).alias("cell_id"))
+    tiles = pts.select(grid.encode_col("lon_c", "lat_c", _RES_K).alias("cell_id"))
     return halo_counts(tiles, k=1, res=_RES_K).orderBy("cell_id")
 
 
@@ -2526,10 +2526,10 @@ def bbox_prune_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = cover_cells_driver([ring], res)
     pts = corpus.centroid_cols_for_images(
         _pq(spark, sf_dir, "orders").select(F.col("o_orderkey").alias("i"))
-    ).withColumn("cell_id", grid.encode_col(F.col("lon_c"), F.col("lat_c"), res))
+    ).withColumn("cell_id", grid.encode_col("lon_c", "lat_c", res))
     exact = F.col("lon_c").between(60.0, 75.0) & F.col("lat_c").between(29.0, 38.0)
     return (
-        pts.where(F.col("cell_id").isin([int(c) for c in cells]))  # coarse prune
+        pts.where(grid.cell_isin("cell_id", cells))  # coarse prune
         .where(exact)
         .agg(
             F.count(F.lit(1)).alias("n_in_bbox"),
@@ -2570,7 +2570,7 @@ def request_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             "date": F.to_date("o_orderdate"),
         }
     )
-    t = t.withColumn("cell_id", grid.encode_col(F.col("lon_c"), F.col("lat_c"), 6))
+    t = t.withColumn("cell_id", grid.encode_col("lon_c", "lat_c", 6))
     pr = pruned_scan(
         t, spec, date_col="date", leadtime_col="leadtime",
         lon_col="lon_c", lat_col="lat_c", cell_col="cell_id",
@@ -2669,7 +2669,7 @@ def cell_compact_multilevel(spark: SparkSession, sf_dir: str) -> DataFrame:
         _pq(spark, sf_dir, "orders").select(F.col("o_orderkey").alias("i"))
     )
     sparse = pts.select(
-        grid.encode_col(F.col("lon_c"), F.col("lat_c"), R).alias("cell_id")
+        grid.encode_col("lon_c", "lat_c", R).alias("cell_id")
     )
     out = grid.compact_cells(block.unionByName(sparse), res=R, min_res=MR)
     return (
@@ -2929,7 +2929,7 @@ def pip_all_touched(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus.centroid_cols_for_images(
             _pq(spark, sf_dir, "orders").select(F.col("o_orderkey").alias("i"))
         )
-    ).withColumn("cell_id", grid.encode_col(F.col("lon_c"), F.col("lat_c"), res))
+    ).withColumn("cell_id", grid.encode_col("lon_c", "lat_c", res))
     overlap = (
         (F.col("lon0") <= F.col("_mxx"))
         & (F.col("lon0") + 0.25 >= F.col("_mnx"))

@@ -16,7 +16,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from .. import codecs, corpus
+from .. import codecs, corpus, native
 
 DECODE_STATS_SCHEMA = (
     "i bigint, image_id string, caption string, fmt string, phash bigint,"
@@ -37,16 +37,111 @@ def _binary_offsets_data(arr) -> tuple[np.ndarray, np.ndarray]:
     return off.astype(np.int64, copy=False), data
 
 
+def seg_sum_min_max_reference(data: np.ndarray, bounds: np.ndarray):
+    """numpy reference of native.seg_sum_min_max: (sums, mins, maxs) of
+    each segment data[bounds[2k]:bounds[2k+1]]. Segment reduceat — ONE
+    pass over the data buffer per reduction. (A fancy-index gather here
+    builds an int64 index matrix 8x the payload size per batch; under
+    32-way worker concurrency the page faults + bandwidth made the kernel
+    ~40x slower — measured.)"""
+    trailing = bounds[-1] == len(data)
+    b = bounds[:-1] if trailing else bounds
+    # accumulate in int64 via the ufunc dtype — no widened copy
+    sums = np.add.reduceat(data, b, dtype=np.int64)[0::2]
+    mn = np.minimum.reduceat(data, b)[0::2]
+    mx = np.maximum.reduceat(data, b)[0::2]
+    return sums, mn, mx
+
+
+def _decode_stats_batch(b, tolerant: bool):
+    """decode_stats on one Arrow record batch (see there)."""
+    import pyarrow as pa
+
+    n = b.num_rows
+    names = b.schema.names
+    col = {name: b.column(i) for i, name in enumerate(names)}
+    fmts = np.asarray(col["fmt"].to_pylist(), dtype=object)
+    ws = col["w"].to_numpy(zero_copy_only=False)
+    hs = col["h"].to_numpy(zero_copy_only=False)
+    arr = col["bytes"]
+    if arr.null_count and not tolerant:
+        raise ValueError("null bytes in images table")
+    off, data = _binary_offsets_data(arr)
+    mean = np.full(n, np.nan)
+    mn = np.full(n, np.nan)
+    mx = np.full(n, np.nan)
+    ok = np.ones(n, dtype=bool)
+    npx = (ws.astype(np.int64)) * hs.astype(np.int64)
+    seg_len = off[1:] - off[:-1]
+    # vectorized fast path: fixed-size uncompressed payloads reduce per
+    # segment straight off the Arrow data buffer — the C kernel in one
+    # pass, or the numpy reference
+    fixed = (fmts == "raw") | (fmts == "qnt")
+    bad_size = fixed & (seg_len != npx)
+    if bad_size.any():
+        if not tolerant:
+            k = int(np.nonzero(bad_size)[0][0])
+            raise ValueError(
+                f"payload size mismatch for fixed-size fmt at row {k}: "
+                f"{seg_len[k]} bytes for {npx[k]} pixels"
+            )
+        ok[bad_size] = False
+    good_fixed = fixed & ~bad_size
+    if good_fixed.any():
+        idx = np.nonzero(good_fixed)[0]
+        bounds = np.empty(2 * len(idx), dtype=np.int64)
+        bounds[0::2] = off[idx]
+        bounds[1::2] = off[idx + 1]
+        stats = native.seg_sum_min_max(data, bounds)
+        if stats is None:
+            stats = seg_sum_min_max_reference(data, bounds)
+        sums, lo, hi = stats
+        mean[idx] = sums / npx[idx]
+        mn[idx] = lo
+        mx[idx] = hi
+    for k in np.nonzero(~fixed)[0]:
+        try:
+            px = codecs.decode_tile(
+                data[off[k] : off[k + 1]].tobytes(), fmts[k], int(ws[k]), int(hs[k])
+            )
+        except Exception:
+            if not tolerant:
+                raise
+            ok[k] = False
+            continue
+        mean[k] = px.mean(dtype=np.float64)
+        mn[k] = float(px.min())
+        mx[k] = float(px.max())
+    arrays = [
+        col["i"],
+        col["image_id"],
+        col["caption"],
+        col["fmt"],
+        col["phash"],
+        pa.array(mean, pa.float64(), from_pandas=True),
+        pa.array(mn, pa.float64(), from_pandas=True),
+        pa.array(mx, pa.float64(), from_pandas=True),
+        pa.array(npx),
+    ]
+    names_out = ["i", "image_id", "caption", "fmt", "phash",
+                 "mean_value", "min_value", "max_value", "n_px"]
+    if tolerant:
+        arrays.append(pa.array(ok))
+        names_out.append("decode_ok")
+    return pa.RecordBatch.from_arrays(arrays, names=names_out)
+
+
 def decode_stats(images: DataFrame, on_error: str = "raise") -> DataFrame:
     """images -> per-tile decoded stats. Columns preserved: i, image_id,
     caption (byte-exact propagation — input_hint invariant), fmt, phash.
 
     mapInArrow kernel: string/int columns pass through as Arrow arrays
     (zero conversion); the binary column is sliced from the Arrow buffers
-    directly. Fixed-size formats (raw/qnt) decode as ONE vectorized gather
-    + row-wise reductions per batch; entropy-coded formats (png/tif) fall
-    back to per-blob decode. Pixels never leave the kernel — only stats
-    do, so nothing pixel-sized ever crosses a shuffle.
+    directly. Fixed-size formats (raw/qnt) reduce per segment straight off
+    the data buffer (native.seg_sum_min_max, or its numpy reference);
+    entropy-coded formats (png/tif) fall back to per-blob decode. Pixels
+    never leave the kernel — only stats do, so nothing pixel-sized ever
+    crosses a shuffle.
 
     ``on_error``: ``"raise"`` (default — a corrupt blob fails the task;
     payload-size mismatches on the fixed-size path are detected, never
@@ -60,83 +155,8 @@ def decode_stats(images: DataFrame, on_error: str = "raise") -> DataFrame:
     schema = DECODE_STATS_SCHEMA + (", decode_ok boolean" if tolerant else "")
 
     def kernel(batches):
-        import pyarrow as pa
-
         for b in batches:
-            n = b.num_rows
-            names = b.schema.names
-            col = {name: b.column(i) for i, name in enumerate(names)}
-            fmts = np.asarray(col["fmt"].to_pylist(), dtype=object)
-            ws = col["w"].to_numpy(zero_copy_only=False)
-            hs = col["h"].to_numpy(zero_copy_only=False)
-            arr = col["bytes"]
-            if arr.null_count and not tolerant:
-                raise ValueError("null bytes in images table")
-            off, data = _binary_offsets_data(arr)
-            mean = np.full(n, np.nan)
-            mn = np.full(n, np.nan)
-            mx = np.full(n, np.nan)
-            ok = np.ones(n, dtype=bool)
-            npx = (ws.astype(np.int64)) * hs.astype(np.int64)
-            seg_len = off[1:] - off[:-1]
-            # vectorized fast path: fixed-size uncompressed payloads via
-            # segment reduceat — ONE pass over the data buffer. (A fancy-
-            # index gather here builds an int64 index matrix 8x the payload
-            # size per batch; under 32-way worker concurrency the page
-            # faults + bandwidth made the kernel ~40x slower — measured.)
-            fixed = (fmts == "raw") | (fmts == "qnt")
-            bad_size = fixed & (seg_len != npx)
-            if bad_size.any():
-                if not tolerant:
-                    k = int(np.nonzero(bad_size)[0][0])
-                    raise ValueError(
-                        f"payload size mismatch for fixed-size fmt at row {k}: "
-                        f"{seg_len[k]} bytes for {npx[k]} pixels"
-                    )
-                ok[bad_size] = False
-            good_fixed = fixed & ~bad_size
-            if good_fixed.any():
-                idx = np.nonzero(good_fixed)[0]
-                bounds = np.empty(2 * len(idx), dtype=np.int64)
-                bounds[0::2] = off[idx]
-                bounds[1::2] = off[idx + 1]
-                trailing = bounds[-1] == len(data)
-                b = bounds[:-1] if trailing else bounds
-                # accumulate in int64 via the ufunc dtype — no widened copy
-                sums = np.add.reduceat(data, b, dtype=np.int64)[0::2]
-                mean[idx] = sums / npx[idx]
-                mn[idx] = np.minimum.reduceat(data, b)[0::2]
-                mx[idx] = np.maximum.reduceat(data, b)[0::2]
-            for k in np.nonzero(~fixed)[0]:
-                try:
-                    px = codecs.decode_tile(
-                        data[off[k] : off[k + 1]].tobytes(), fmts[k], int(ws[k]), int(hs[k])
-                    )
-                except Exception:
-                    if not tolerant:
-                        raise
-                    ok[k] = False
-                    continue
-                mean[k] = px.mean(dtype=np.float64)
-                mn[k] = float(px.min())
-                mx[k] = float(px.max())
-            arrays = [
-                col["i"],
-                col["image_id"],
-                col["caption"],
-                col["fmt"],
-                col["phash"],
-                pa.array(mean, pa.float64(), from_pandas=True),
-                pa.array(mn, pa.float64(), from_pandas=True),
-                pa.array(mx, pa.float64(), from_pandas=True),
-                pa.array(npx),
-            ]
-            names_out = ["i", "image_id", "caption", "fmt", "phash",
-                         "mean_value", "min_value", "max_value", "n_px"]
-            if tolerant:
-                arrays.append(pa.array(ok))
-                names_out.append("decode_ok")
-            yield pa.RecordBatch.from_arrays(arrays, names=names_out)
+            yield _decode_stats_batch(b, tolerant)
 
     return images.mapInArrow(kernel, schema=schema)
 

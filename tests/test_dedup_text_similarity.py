@@ -33,6 +33,19 @@ def test_exact_dedup(spark, docs):
     assert out["n_copies"].tolist() == [2, 1, 1, 1]
 
 
+def test_word_set_sizes_skips_docs_without_words(spark):
+    """The sizes frame minhash_dedup_pairs verifies against has one row per
+    doc that has a word — no n_words = -1/null (null text) or 0 (empty or
+    separator-only text) rows."""
+    from ds_raster_pipelines_spark.operators.dedup import word_set_sizes
+
+    docs = spark.createDataFrame(
+        [(1, "a b a"), (2, None), (3, ""), (4, "  "), (5, "x  y")], "doc_id long, text string"
+    )
+    got = {r["doc_id"]: r["n_words"] for r in word_set_sizes(docs).collect()}
+    assert got == {1: 2, 5: 2}
+
+
 def test_jaccard_pairs_golden(spark, docs):
     from ds_raster_pipelines_spark.operators.dedup import jaccard_pairs
 

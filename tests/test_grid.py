@@ -73,8 +73,12 @@ def test_cover_rect():
 @pytest.mark.parametrize("res", [2, 5, 9])
 def test_sql_matches_numpy(res):
     rng = np.random.default_rng(7)
-    lon = rng.uniform(-180, 180, 300)
-    lat = rng.uniform(-90, 90, 300)
+    nx, ny = grid.nx_ny(res)
+    # random points plus exact cell edges and the ±180/±90 clamps
+    lon = np.concatenate([rng.uniform(-180, 180, 300), -180.0 + np.arange(nx + 1) * (360.0 / nx),
+                          [180.0, -180.0]])
+    lat = np.concatenate([rng.uniform(-90, 90, 300), 90.0 - np.arange(nx + 1) % (ny + 1)
+                          * (180.0 / ny), [-90.0, 90.0]])
     want = grid.encode_np(lon, lat, res)
     import pandas as pd
 
@@ -98,31 +102,65 @@ def test_spark_exprs_match_numpy(spark):
     from pyspark.sql import functions as F
 
     rng = np.random.default_rng(3)
-    lon = rng.uniform(-180, 180, 400)
-    lat = rng.uniform(-90, 90, 400)
     res = 6
+    nx, ny = grid.nx_ny(res)
+    # random points, then every exact cell edge (the floor lands on an
+    # integer), the grid's outer edges and the poles/antimeridian, which
+    # clamp into the first/last row and column
+    edge_lon = -180.0 + np.arange(nx + 1) * (360.0 / nx)
+    edge_lat = 90.0 - np.arange(ny + 1) * (180.0 / ny)
+    lon = np.concatenate([
+        rng.uniform(-180, 180, 400), edge_lon, np.zeros(ny + 1),
+        [180.0, -180.0, 180.0, -180.0, 0.0, 0.0],
+    ])
+    lat = np.concatenate([
+        rng.uniform(-90, 90, 400), np.zeros(nx + 1), edge_lat,
+        [90.0, -90.0, -90.0, 90.0, 90.0, -90.0],
+    ])
     df = spark.createDataFrame(pd.DataFrame({"lon": lon, "lat": lat}))
-    out = (
-        df.select(
-            grid.encode_col(F.col("lon"), F.col("lat"), res).alias("cell"),
-        )
-        .toPandas()["cell"]
-        .to_numpy()
-    )
-    assert (out == grid.encode_np(lon, lat, res)).all()
+    pdf = df.select(
+        grid.encode_col("lon", "lat", res).alias("cell"),
+        grid.encode_col(F.col("lon"), F.col("lat"), res).alias("cell_from_cols"),
+    ).toPandas()
+    want = grid.encode_np(lon, lat, res)
+    assert (pdf["cell"].to_numpy() == want).all()
+    assert (pdf["cell_from_cols"].to_numpy() == want).all()
+    r, ix, iy = grid.decode_np(want[-6:])
+    assert ix.tolist() == [nx - 1, 0, nx - 1, 0, nx // 2, nx // 2]
+    assert iy.tolist() == [0, ny - 1, ny - 1, 0, 0, ny - 1]
     # parent + centroid + disk via Spark
-    cells = grid.encode_np(lon, lat, res)
+    cells = want
     df2 = spark.createDataFrame(pd.DataFrame({"cell": cells}))
     pdf = df2.select(
         grid.parent_col(F.col("cell"), 3, res).alias("p"),
         grid.grid_disk_col(F.col("cell"), 1, res).alias("disk"),
-        *[c.alias(n) for c, n in zip(grid.centroid_cols(F.col("cell"), res), ["clon", "clat"])],
+        *[c.alias(n) for c, n in zip(grid.centroid_cols("cell", res), ["clon", "clat"])],
     ).toPandas()
     assert (pdf["p"].to_numpy() == grid.parent_np(cells, 3)).all()
     clon, clat = grid.centroid_np(cells)
-    assert np.allclose(pdf["clon"], clon) and np.allclose(pdf["clat"], clat)
+    assert (pdf["clon"].to_numpy() == clon).all() and (pdf["clat"].to_numpy() == clat).all()
     for k in range(len(cells)):
         assert list(pdf["disk"].iloc[k]) == grid.grid_disk_np(int(cells[k]), 1)
+
+
+def test_written_pcell_matches_numpy(spark, tmp_path):
+    """The pcell column corpus._write_corpus stores equals encode_np of the
+    closed-form tile centroids, including the tiles whose centroid sits
+    exactly on a res-5 cell edge (ids with (i*13) % 1440 == 22 or
+    (i*7) % 720 == 22: 0.25*22 + 0.125 = 5.625, one cell width)."""
+    from ds_raster_pipelines_spark import corpus
+
+    ids = np.arange(3000, dtype=np.int64)
+    on_edge = ((ids * 13) % 1440 == 22) | ((ids * 7) % 720 == 22)
+    assert on_edge.sum() >= 4
+    path = str(tmp_path / "tiles")
+    corpus._write_corpus(spark.range(0, len(ids), 1, 2).withColumnRenamed("id", "i"), path,
+                         n_rows=len(ids))
+    got = spark.read.parquet(path).select("i", "pcell").toPandas().sort_values("i")
+    assert got["i"].tolist() == ids.tolist()
+    lon = -180.0 + 0.25 * ((ids * 13) % 1440) + 0.125
+    lat = 90.0 - 0.25 * ((ids * 7) % 720) - 0.125
+    assert (got["pcell"].to_numpy() == grid.encode_np(lon, lat, corpus.PCELL_RES)).all()
 
 
 def test_compact_cells_against_numpy_reference(spark):

@@ -432,3 +432,82 @@ def test_decode_features_vectorized_bitexact():
             assert np.array_equal(
                 out[k], np.bincount(px_qnt.ravel() >> shift, minlength=bins)
             )
+
+
+def _raw_tiles_batch(sizes, seed):
+    """Arrow batch in the decode_stats input shape: raw tiles of ``sizes``
+    pixels each (w=size, h=1), random bytes."""
+    import pyarrow as pa
+
+    rng = np.random.default_rng(seed)
+    k = len(sizes)
+    blobs = [rng.integers(0, 256, n, dtype=np.uint8).tobytes() for n in sizes]
+    return pa.RecordBatch.from_arrays(
+        [pa.array(range(k), pa.int64()), pa.array([f"t{j}" for j in range(k)]),
+         pa.array(["c"] * k), pa.array(["raw"] * k), pa.array([0] * k, pa.int64()),
+         pa.array(blobs, pa.binary()), pa.array(sizes, pa.int32()), pa.array([1] * k, pa.int32())],
+        names=["i", "image_id", "caption", "fmt", "phash", "bytes", "w", "h"],
+    )
+
+
+def _decode_both_paths(batch):
+    """decode_stats on one batch with the native library, then without it
+    (the no-toolchain path: the numpy reduceat reference)."""
+    from ds_raster_pipelines_spark.sources.images import _decode_stats_batch
+
+    native.get_lib()
+    with_lib = _decode_stats_batch(batch, False)
+    saved = native._lib
+    native._lib = None
+    try:
+        assert native.seg_sum_min_max(np.zeros(4, np.uint8), np.array([0, 4])) is None
+        without = _decode_stats_batch(batch, False)
+    finally:
+        native._lib = saved
+    return with_lib, without
+
+
+def test_seg_sum_min_max_parity_gaps_and_trailing():
+    """C per-segment sum/min/max == the numpy reduceat reference over random
+    segment layouts: gaps between segments, segments of 1..200 bytes, and
+    a last segment ending exactly at the end of the data buffer (the
+    reference's ``trailing`` branch) or before it."""
+    from ds_raster_pipelines_spark.sources.images import seg_sum_min_max_reference
+
+    if native.get_lib() is None:
+        pytest.skip("no toolchain: numpy path is the only path")
+    rng = np.random.default_rng(11)
+    for trial in range(40):
+        nseg = int(rng.integers(1, 30))
+        lens = rng.integers(1, 200, nseg)
+        gaps = rng.integers(0, 3, nseg) * rng.integers(0, 50, nseg)
+        starts = np.cumsum(gaps + np.concatenate([[0], lens[:-1]]))
+        ends = starts + lens
+        tail = 0 if trial % 2 else int(rng.integers(1, 40))
+        data = rng.integers(0, 256, int(ends[-1]) + tail, dtype=np.uint8)
+        bounds = np.empty(2 * nseg, dtype=np.int64)
+        bounds[0::2], bounds[1::2] = starts, ends
+        got = native.seg_sum_min_max(data, bounds)
+        want = seg_sum_min_max_reference(data, bounds)
+        for g, w in zip(got, want):
+            assert g.dtype == w.dtype and np.array_equal(g, w), trial
+
+
+def test_decode_stats_fixed_path_parity_trailing_segment():
+    """Full-size raw tiles, the last one ending at the end of the Arrow
+    data buffer: native and no-toolchain decode give identical stats."""
+    with_lib, without = _decode_both_paths(_raw_tiles_batch([4096, 1, 4096, 333, 4096], 1))
+    assert with_lib.equals(without)
+
+
+def test_decode_stats_fixed_path_parity_zero_pixel_row():
+    """A zero-pixel raw row (w=0): the C kernel declines the empty segment
+    and the numpy reference answers, so both paths agree exactly."""
+    from ds_raster_pipelines_spark.sources.images import _binary_offsets_data
+
+    batch = _raw_tiles_batch([4096, 0, 4096], 2)
+    off, data = _binary_offsets_data(batch.column(5))
+    assert native.seg_sum_min_max(data, np.repeat(off, 2)[1:-1]) is None
+    with np.errstate(divide="ignore", invalid="ignore"):
+        with_lib, without = _decode_both_paths(batch)
+    assert with_lib.equals(without)
