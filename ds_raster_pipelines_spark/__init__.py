@@ -27,3 +27,5 @@ spatial joins are exact integer-key equi-joins (never float joins).
 """
 
 __version__ = "0.1.0"
+
+from . import _zipcache  # noqa: F401,E402  (cheap per-task zip-importer refresh)

@@ -18,8 +18,9 @@ Design rules:
   MESSAGES and exception types are byte-identical to the fallback;
 * compilation is attempted once per process, guarded by a file lock, and
   cached under /tmp keyed on the source hash — concurrent Python workers
-  share one build; a missing compiler or failed build silently selects
-  the Python path (a warning is recorded on this module for tests).
+  share one build; a missing compiler or failed build selects the Python
+  path, records ``build_error`` on this module and logs it once per
+  process as a WARNING.
 
 Everything here is public knowledge: ITU-T T.81 for the JPEG scan
 structure, the C89 standard library, and the ctypes module docs.
@@ -29,6 +30,7 @@ from __future__ import annotations
 
 import ctypes
 import hashlib
+import logging
 import os
 import subprocess
 import tempfile
@@ -676,13 +678,15 @@ long grib_files_sum(const unsigned char *bufs, const int64_t *file_off,
 /* AVI (RIFF) container walk: LINE-FOR-LINE translation of avi.parse_avi
  * (header walk, movi scan, idx1 parse + cross-validation) WITHOUT
  * touching payload bytes.  Any anomaly — bad magic, chunk overrun,
- * short header, idx1/movi disagreement, declared-frame mismatch, more
- * frames than `cap` — returns a negative code and the caller re-runs
- * the pure-Python parse so exception types/messages stay identical.
+ * short header, idx1/movi disagreement, declared-frame mismatch —
+ * returns AVIERR and the caller re-runs the pure-Python parse so
+ * exception types/messages stay identical.  More frames than `cap`
+ * returns AVICAP: the caller grows its buffers and calls again.
  *
  * meta out: [0]=w [1]=h [2]=usec_per_frame [3]=handler packed LE.
  * frame_off/frame_size out: `cap`-sized.  Returns the frame count. */
 #define AVIERR (-1)
+#define AVICAP (-2)
 static uint32_t rd32le(const unsigned char *d, int64_t p)
 {
     return (uint32_t)d[p] | ((uint32_t)d[p + 1] << 8)
@@ -733,9 +737,12 @@ long avi_scan(const unsigned char *d, int64_t n,
                             int64_t d3 = p3 + 8;
                             if (d3 + s3 > e3) return AVIERR;
                             if (f3[0]=='s' && f3[1]=='t' && f3[2]=='r' && f3[3]=='h'
-                                && d3 + 8 <= n
-                                && d[d3]=='v' && d[d3+1]=='i' && d[d3+2]=='d' && d[d3+3]=='s')
+                                && d3 + 4 <= n
+                                && d[d3]=='v' && d[d3+1]=='i' && d[d3+2]=='d' && d[d3+3]=='s') {
+                                /* py slices a short handler here */
+                                if (d3 + 8 > n) return AVIERR;
                                 handler = (int64_t)rd32le(d, d3 + 4);
+                            }
                             p3 = d3 + s3 + (s3 % 2);
                         }
                     }
@@ -763,7 +770,7 @@ long avi_scan(const unsigned char *d, int64_t n,
         int64_t data = p + 8;
         if (data + size > movi_end) return AVIERR;
         if ((fcc[2]=='d' && (fcc[3]=='c' || fcc[3]=='b'))) {
-            if (nf >= cap) return AVIERR;
+            if (nf >= cap) return AVICAP; /* caller grows the buffers */
             frame_off[nf] = data;
             frame_size[nf] = size;
             nf++;
@@ -1347,11 +1354,17 @@ def _build() -> ctypes.CDLL | None:
 
 
 def get_lib() -> ctypes.CDLL | None:
-    """The compiled kernel library, or None if unavailable (use fallback)."""
+    """The compiled kernel library, or None if unavailable (use fallback).
+    The build is tried once per process; a failure is logged then."""
     global _lib, _lib_tried
     if not _lib_tried:
         _lib = _build()
         _lib_tried = True
+        if _lib is None:
+            logging.getLogger(__name__).warning(
+                "native kernels unavailable, using the Python fallbacks: %s",
+                build_error,
+            )
     return _lib
 
 
@@ -1584,11 +1597,27 @@ def jpeg_decode_scan_multi(
     return True
 
 
-_AVI_FRAME_CAP = 4096
-# per-process scratch: one avi_scan call at a time per worker (Spark
-# Python workers are single-threaded), so reusing the output buffers
-# removes the 64 KB of numpy allocations that dominated per-call cost
+_AVI_FRAME_CAP = 4096  # initial scratch capacity, in frames
+_AVI_CAP = -2  # avi_scan's AVICAP: more frames than the buffers hold
+# per-process scratch, reused across calls (it removes the 64 KB of numpy
+# allocations that dominated per-call cost) and doubled whenever a video
+# has more frames than it holds
 _AVI_SCRATCH: tuple | None = None
+
+
+def _avi_scratch(cap: int) -> tuple:
+    global _AVI_SCRATCH
+    meta = np.zeros(4, dtype=np.int64)
+    off = np.empty(cap, dtype=np.int64)
+    size = np.empty(cap, dtype=np.int64)
+    i64p = ctypes.POINTER(ctypes.c_int64)
+    _AVI_SCRATCH = (
+        cap, meta, off, size,
+        meta.ctypes.data_as(i64p),
+        off.ctypes.data_as(i64p),
+        size.ctypes.data_as(i64p),
+    )
+    return _AVI_SCRATCH
 
 
 def avi_scan(buf):
@@ -1598,30 +1627,23 @@ def avi_scan(buf):
     ``(w, h, usec_per_frame, handler_bytes, [(payload_off, size), ...])``
     or ``None`` when the native library is unavailable or the walk hit
     ANY anomaly — the caller must then run avi.parse_avi (pure Python)
-    so exception types and messages are byte-identical."""
-    global _AVI_SCRATCH
+    so exception types and messages are byte-identical.  A video with
+    more frames than the scratch buffers hold grows them and walks again.
+
+    Single-threaded only: the output buffers are one module-level scratch
+    per process (Spark Python workers run one task at a time)."""
     lib = get_lib()
     if lib is None:
         return None
-    if _AVI_SCRATCH is None:
-        meta = np.zeros(4, dtype=np.int64)
-        off = np.empty(_AVI_FRAME_CAP, dtype=np.int64)
-        size = np.empty(_AVI_FRAME_CAP, dtype=np.int64)
-        i64p = ctypes.POINTER(ctypes.c_int64)
-        _AVI_SCRATCH = (
-            meta, off, size,
-            meta.ctypes.data_as(i64p),
-            off.ctypes.data_as(i64p),
-            size.ctypes.data_as(i64p),
-        )
-    meta, off, size, meta_p, off_p, size_p = _AVI_SCRATCH
     if isinstance(buf, tuple):  # (base_address, length): zero-copy form
-        addr, blen = buf
-        rc = lib.avi_scan(
-            ctypes.c_char_p(addr), blen, meta_p, off_p, size_p, _AVI_FRAME_CAP
-        )
+        ptr, blen = ctypes.c_char_p(buf[0]), buf[1]
     else:
-        rc = lib.avi_scan(buf, len(buf), meta_p, off_p, size_p, _AVI_FRAME_CAP)
+        ptr, blen = buf, len(buf)
+    cap, meta, off, size, meta_p, off_p, size_p = _AVI_SCRATCH or _avi_scratch(_AVI_FRAME_CAP)
+    rc = lib.avi_scan(ptr, blen, meta_p, off_p, size_p, cap)
+    while rc == _AVI_CAP:
+        cap, meta, off, size, meta_p, off_p, size_p = _avi_scratch(2 * cap)
+        rc = lib.avi_scan(ptr, blen, meta_p, off_p, size_p, cap)
     if rc < 0:
         return None
     hv = int(meta[3])

@@ -5,6 +5,8 @@ document fingerprinting. No Python in the hot path.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -18,6 +20,8 @@ LANG_MARKERS: dict[str, list[str]] = {
 
 STOPWORDS = ["the", "and", "of", "to", "a", "in"]
 PUNCT_RX = r"[.,!?;:'\"()-]"
+# largest LM (rows) ngram_lm_scores collects to the driver for its kernel
+_LM_COLLECT_MAX = 1_000_000
 
 
 def token_count(text: Column) -> Column:
@@ -312,10 +316,17 @@ def ngram_lm_scores(
     # per-instance gram explode (measured 1.9 s of the 2.5 s query at
     # sf1.0) never materializes.  logp values stay JVM-computed (no C
     # log()/round drift); kernel == join-path pinned by pytest.  The
-    # join form remains for n > 3 / no toolchain.
+    # join form remains for n > 3 / no toolchain, and for an LM over
+    # _LM_COLLECT_MAX rows (a large-charset corpus): V, collected above,
+    # is its row count, so the bound costs no Spark job.
     from .. import native as _nat
 
-    if n <= 3 and _nat.get_lib() is not None:
+    if n <= 3 and tv["v"] > _LM_COLLECT_MAX:
+        logging.getLogger(__name__).warning(
+            "ngram_lm_scores: LM has %d rows (> %d), scoring with the join form",
+            tv["v"], _LM_COLLECT_MAX,
+        )
+    elif n <= 3 and _nat.get_lib() is not None:
         logp0_int = int(
             df.sparkSession.range(1).select(logp0.alias("v")).collect()[0][0]
         )

@@ -213,3 +213,20 @@ def test_lm_score_kernel_matches_join(docs):
         assert _sorted(ngram_lm_scores(docs)) == expect
     finally:
         native._lib = saved
+
+
+def test_lm_collect_bound_takes_join_form(docs, monkeypatch, caplog):
+    """An LM over _LM_COLLECT_MAX rows is never collected to the driver:
+    ngram_lm_scores scores it with the broadcast-join form instead, logs
+    why, and returns exactly what the kernel path returns."""
+    from ds_raster_pipelines_spark.operators import text
+
+    kernel_df = text.ngram_lm_scores(docs)
+    monkeypatch.setattr(text, "_LM_COLLECT_MAX", 1)
+    with caplog.at_level("WARNING", logger=text.__name__):
+        join_df = text.ngram_lm_scores(docs)
+    assert [r.levelname for r in caplog.records] == ["WARNING"]
+    kernel_plan = kernel_df._jdf.queryExecution().executedPlan().toString()
+    join_plan = join_df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in kernel_plan and "MapInArrow" not in join_plan
+    assert _sorted(join_df) == _sorted(kernel_df)

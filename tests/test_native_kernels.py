@@ -309,6 +309,56 @@ def test_native_avi_scan_flag_byte_corruption():
             assert (w, h, fps, handler, fr) == (m.w, m.h, m.fps, m.handler, m.frames)
 
 
+def test_native_avi_scan_truncated_strh_falls_back():
+    """A buffer that ends inside a ``vids`` stream header: Python slices a
+    short handler, so the native walk must fall back instead of reporting
+    ``handler=b""``, and frame_stats_arrow raises parse_avi's error.  The
+    movi list comes first so the walk gets that far."""
+    import struct
+
+    import pyarrow as pa
+
+    from ds_raster_pipelines_spark import avi
+    from ds_raster_pipelines_spark.sources.images import _binary_offsets_data
+
+    strh = b"strh" + struct.pack("<I", 6) + b"vidsMJ"  # 2 of 4 handler bytes
+    strl = b"LIST" + struct.pack("<I", 4 + len(strh)) + b"strl" + strh
+    hdrl = b"LIST" + struct.pack("<I", 4 + len(strl)) + b"hdrl" + strl
+    body = b"AVI " + avi._list(b"movi", avi._chunk(b"00dc", b"\x00\x01")) + hdrl
+    blob = b"RIFF" + struct.pack("<I", len(body)) + body
+
+    assert native.avi_scan(blob) is None
+    assert avi.parse_avi(blob).handler == _parse_avi_python(blob).handler == b"MJ"
+    with pytest.raises(NotImplementedError) as want:
+        avi.frame_stats_multi([blob])
+    assert repr(b"MJ") in str(want.value)
+    off, data = _binary_offsets_data(pa.array([blob], type=pa.binary()))
+    with pytest.raises(NotImplementedError) as got:
+        avi.frame_stats_arrow(off, data)
+    assert str(got.value) == str(want.value)
+
+
+def test_native_avi_scan_grows_past_frame_cap(monkeypatch):
+    """A video with more frames than the scratch buffers hold stays on the
+    native walk (the buffers grow) and equals the Python parse."""
+    from ds_raster_pipelines_spark import avi
+
+    if native.get_lib() is None:
+        pytest.skip("no toolchain: Python parse is the only path")
+    n = 5000
+    assert n > native._AVI_FRAME_CAP
+    blob = avi.encode_avi([bytes([k % 251, 1, k % 7]) for k in range(n)], 8, 8)
+    monkeypatch.setattr(native, "_AVI_SCRATCH", None)
+    r = native.avi_scan(blob)
+    assert r is not None and native._AVI_SCRATCH[0] >= n
+    m = _parse_avi_python(blob)
+    w, h, usec, handler, fr = r
+    assert len(fr) == n
+    assert (w, h, round(1_000_000 / usec), handler, fr) == (m.w, m.h, m.fps, m.handler, m.frames)
+    small = avi.encode_avi([b"\x00" * 10], 8, 8)  # grown buffers serve small videos too
+    assert native.avi_scan(small)[4] == _parse_avi_python(small).frames
+
+
 def test_frame_stats_arrow_equals_multi():
     """frame_stats_arrow over Arrow (offsets, data) views == the
     list-of-bytes frame_stats_multi, for MJPG and DCT handlers, all
@@ -450,20 +500,37 @@ def _raw_tiles_batch(sizes, seed):
     )
 
 
-def _decode_both_paths(batch):
+@pytest.fixture
+def drop_toolchain(monkeypatch, tmp_path):
+    """Calling it loses the toolchain for the rest of the test: no ``cc``
+    on PATH, an empty kernel cache and a build not yet tried."""
+
+    def drop():
+        monkeypatch.setenv("PATH", str(tmp_path))
+        monkeypatch.setattr(native, "_CACHE_ROOT", str(tmp_path / "kernels"))
+        monkeypatch.setattr(native, "_lib", None)
+        monkeypatch.setattr(native, "_lib_tried", False)
+        monkeypatch.setattr(native, "build_error", None)
+
+    return drop
+
+
+def _decode_both_paths(batch, drop_toolchain, caplog):
     """decode_stats on one batch with the native library, then without it
-    (the no-toolchain path: the numpy reduceat reference)."""
+    (the no-toolchain path: the numpy reduceat reference).  The failed
+    build is logged exactly once per process."""
     from ds_raster_pipelines_spark.sources.images import _decode_stats_batch
 
     native.get_lib()
     with_lib = _decode_stats_batch(batch, False)
-    saved = native._lib
-    native._lib = None
-    try:
+    drop_toolchain()
+    with caplog.at_level("WARNING", logger=native.__name__):
+        assert native.get_lib() is None and native.get_lib() is None
         assert native.seg_sum_min_max(np.zeros(4, np.uint8), np.array([0, 4])) is None
         without = _decode_stats_batch(batch, False)
-    finally:
-        native._lib = saved
+    warnings = [r for r in caplog.records if r.name == native.__name__]
+    assert len(warnings) == 1 and warnings[0].levelname == "WARNING"
+    assert native.build_error and native.build_error in warnings[0].getMessage()
     return with_lib, without
 
 
@@ -493,14 +560,16 @@ def test_seg_sum_min_max_parity_gaps_and_trailing():
             assert g.dtype == w.dtype and np.array_equal(g, w), trial
 
 
-def test_decode_stats_fixed_path_parity_trailing_segment():
+def test_decode_stats_fixed_path_parity_trailing_segment(drop_toolchain, caplog):
     """Full-size raw tiles, the last one ending at the end of the Arrow
     data buffer: native and no-toolchain decode give identical stats."""
-    with_lib, without = _decode_both_paths(_raw_tiles_batch([4096, 1, 4096, 333, 4096], 1))
+    with_lib, without = _decode_both_paths(
+        _raw_tiles_batch([4096, 1, 4096, 333, 4096], 1), drop_toolchain, caplog
+    )
     assert with_lib.equals(without)
 
 
-def test_decode_stats_fixed_path_parity_zero_pixel_row():
+def test_decode_stats_fixed_path_parity_zero_pixel_row(drop_toolchain, caplog):
     """A zero-pixel raw row (w=0): the C kernel declines the empty segment
     and the numpy reference answers, so both paths agree exactly."""
     from ds_raster_pipelines_spark.sources.images import _binary_offsets_data
@@ -509,5 +578,5 @@ def test_decode_stats_fixed_path_parity_zero_pixel_row():
     off, data = _binary_offsets_data(batch.column(5))
     assert native.seg_sum_min_max(data, np.repeat(off, 2)[1:-1]) is None
     with np.errstate(divide="ignore", invalid="ignore"):
-        with_lib, without = _decode_both_paths(batch)
+        with_lib, without = _decode_both_paths(batch, drop_toolchain, caplog)
     assert with_lib.equals(without)
