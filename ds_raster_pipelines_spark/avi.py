@@ -294,50 +294,17 @@ def decode_avi_frames(buf: bytes, every_n: int = 1, offset: int = 0) -> list[np.
     return [dec(bytes(buf[d : d + s])) for d, s in meta.frames[offset::every_n]]
 
 
-def decode_avi_frames_multi(
-    bufs: list[bytes], every_n: int = 1, offset: int = 0
-) -> list[list[np.ndarray]]:
-    """Batched form of :func:`decode_avi_frames` over MANY blobs: MJPG
-    frames from ALL blobs share one cross-frame batched IDCT
-    (jpeg.decode_jpeg_batch), which is where per-frame numpy dispatch
-    dominated the MJPEG stats kernel.  Per-blob output lists are
-    identical to calling decode_avi_frames on each blob."""
-    metas = [parse_avi(b) for b in bufs]
-    out: list[list] = []
-    mj_payloads: list[bytes] = []
-    mj_slots: list[tuple[int, int]] = []
-    for idx, (buf, meta) in enumerate(zip(bufs, metas)):
-        sel = meta.frames[offset::every_n]
-        if meta.handler == _FOURCC_MJPG:
-            out.append([None] * len(sel))
-            for j, (d, s) in enumerate(sel):
-                mj_payloads.append(bytes(buf[d : d + s]))
-                mj_slots.append((idx, j))
-        elif meta.handler == _FOURCC_HANDLER:
-            from . import codecs
-
-            out.append([codecs.decode_dct(bytes(buf[d : d + s])) for d, s in sel])
-        else:
-            raise NotImplementedError(
-                f"AVI stream handler {meta.handler!r} not available in this environment"
-            )
-    if mj_payloads:
-        from . import jpeg
-
-        for (idx, j), px in zip(mj_slots, jpeg.decode_jpeg_batch(mj_payloads)):
-            out[idx][j] = px
-    return out
-
-
 def frame_stats_arrow(
     off: "np.ndarray", data: "np.ndarray", every_n: int = 1, offset: int = 0
 ) -> list[list[tuple[int, int]]]:
-    """frame_stats_multi straight off an Arrow binary column's zero-copy
-    (offsets, data) views: the container walk runs via the native scan's
+    """Per-blob ``[(n_px, sum_px), ...]`` for the sampled frames of an
+    Arrow binary column's zero-copy (offsets, data) views — equal to
+    ``[(px.size, int(px.sum())) for px in decode_avi_frames(...)]``
+    (pytest-pinned).  The container walk runs via the native scan's
     pointer form (no per-blob bytes object is ever created; only the
-    sampled frames' payload bytes are copied for the JPEG batch), and
-    per-blob results are identical to frame_stats_multi (pytest-pinned).
-    Python fallback per blob on any native anomaly — exact errors."""
+    sampled frames' payload bytes are copied), and MJPG sums accumulate
+    inside the native IDCT (jpeg.decode_jpeg_batch_stats).  Python
+    fallback per blob on any native anomaly — exact errors."""
     from . import native
 
     base = data.ctypes.data
@@ -374,46 +341,5 @@ def frame_stats_arrow(
         from . import jpeg
 
         for (idx, j), st in zip(mj_slots, jpeg.decode_jpeg_batch_stats(mj_payloads)):
-            out[idx][j] = st
-    return out
-
-
-def frame_stats_multi(
-    bufs: list[bytes], every_n: int = 1, offset: int = 0
-) -> list[list[tuple[int, int]]]:
-    """Per-blob ``[(n_px, sum_px), ...]`` for the sampled frames — equal
-    to ``[(px.size, int(px.sum())) for px in decode_avi_frames(...)]``
-    (pytest-pinned), with MJPG sums accumulated inside the native IDCT
-    (jpeg.decode_jpeg_batch_stats) so the stats consumer never touches
-    per-frame pixel arrays."""
-    metas = [parse_avi(b) for b in bufs]
-    out: list[list] = []
-    mj_payloads: list[bytes] = []
-    mj_slots: list[tuple[int, int]] = []
-    for idx, (buf, meta) in enumerate(zip(bufs, metas)):
-        sel = meta.frames[offset::every_n]
-        if meta.handler == _FOURCC_MJPG:
-            out.append([None] * len(sel))
-            for j, (d, s) in enumerate(sel):
-                mj_payloads.append(bytes(buf[d : d + s]))
-                mj_slots.append((idx, j))
-        elif meta.handler == _FOURCC_HANDLER:
-            from . import codecs
-
-            lst = []
-            for d, s in sel:
-                px = codecs.decode_dct(bytes(buf[d : d + s]))
-                lst.append((px.size, int(px.sum(dtype=np.int64))))
-            out.append(lst)
-        else:
-            raise NotImplementedError(
-                f"AVI stream handler {meta.handler!r} not available in this environment"
-            )
-    if mj_payloads:
-        from . import jpeg
-
-        for (idx, j), st in zip(
-            mj_slots, jpeg.decode_jpeg_batch_stats(mj_payloads)
-        ):
             out[idx][j] = st
     return out

@@ -182,7 +182,7 @@ def encode_dct(pixels: np.ndarray, quality: int = 90) -> bytes:
 
 # int32 raster quant tables per quality for the native IDCT (values are
 # exact small integers, so the cast is lossless); keyed by quality so the
-# array identity is stable for native._ptr's pointer cache.
+# array identity is stable for native._addr's address memo.
 _DCT_QI32: dict[int, np.ndarray] = {}
 
 
@@ -205,14 +205,13 @@ def decode_dct(data: bytes) -> np.ndarray:
     # einsum below pytest-pinned over corpus tiles and random blobs
     from . import native
 
-    if native.get_lib() is not None:
-        zz_i32 = np.ascontiguousarray(
-            zz_raw.reshape(-1, _DCT_N * _DCT_N), dtype=np.int32
-        )
+    # the kernel writes every block it is given into an (h, w) frame: only
+    # a payload of exactly that many blocks goes native (the numpy path
+    # raises the canonical error for any other size)
+    if zz_raw.size == nby * nbx * _DCT_N * _DCT_N == h * w:
+        zz_i32 = np.ascontiguousarray(zz_raw.reshape(-1, _DCT_N * _DCT_N), dtype=np.int32)
         out = np.empty((1, h, w), dtype=np.uint8)
-        if native.jpeg_idct_blocks(
-            zz_i32, _q_i32(quality), _IDCT_BASIS, _ZZ2R, nbx, nby * nbx, out
-        ):
+        if native.jpeg_idct_blocks(zz_i32, _q_i32(quality), _IDCT_BASIS, _ZZ2R, nbx, nby * nbx, out):
             return out[0]
     q = _dct_scaled_q(quality)
     zz = zz_raw.astype(np.float64).reshape(-1, _DCT_N * _DCT_N)

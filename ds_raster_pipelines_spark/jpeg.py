@@ -382,6 +382,19 @@ def _parse_header(raw: bytes) -> tuple:
     return parsed
 
 
+def _scan_segments(bodies: list[bytes], blocks: np.ndarray, hdr: tuple, zz: np.ndarray) -> bool:
+    """One native entropy walk over unstuffed segments, each starting from
+    a zero DC predictor; segment i's ``blocks[i]`` blocks follow segment
+    i-1's in ``zz``.  False: no library, or a malformed segment."""
+    seg_off = np.zeros(len(bodies) + 1, dtype=np.int64)
+    np.cumsum([len(x) for x in bodies], out=seg_off[1:])
+    zz_off = np.zeros(len(bodies), dtype=np.int64)
+    np.cumsum(blocks[:-1], out=zz_off[1:])
+    return native.jpeg_decode_scan_multi(
+        b"".join(bodies), seg_off, blocks, zz_off, hdr[3], hdr[4], hdr[5], hdr[6], zz
+    )
+
+
 def _scan_coefficients(raw: bytes, hdr: tuple) -> tuple[np.ndarray, int, int]:
     """Entropy-decode the scan into zigzag coefficients (nblocks, 64)."""
     h, w, _q, dc_sym, dc_len, ac_sym, ac_len, restart_interval, scan_start = hdr
@@ -396,67 +409,63 @@ def _scan_coefficients(raw: bytes, hdr: tuple) -> tuple[np.ndarray, int, int]:
         intervals = re.split(b"\xff[\xd0-\xd7]", body)
     else:
         intervals = [body]
+    intervals = [seg.replace(b"\xff\x00", b"\xff") for seg in intervals]
 
     nby = (h + _DCT_N - 1) // _DCT_N
     nbx = (w + _DCT_N - 1) // _DCT_N
     nblocks = nby * nbx
     zz = np.zeros((nblocks, _DCT_N * _DCT_N), dtype=np.int32)
-    bi = 0
     # Native fast path: the entropy walk is bitstream-serial (symbol
     # lengths depend on prior symbols), so it cannot vectorize; the C
     # translation in native.py runs the identical state machine ~50x
-    # faster than the Python loop below.  Any malformed-stream condition
-    # makes it bail (returns None) and the Python loop re-runs from a
-    # zeroed zz so error messages stay byte-identical.
-    native_done = False
-    if native.get_lib() is not None:
-        native_done = True
-        for seg in intervals:
-            limit = min(nblocks, bi + restart_interval) if restart_interval else nblocks
-            if native.jpeg_decode_scan(
-                seg.replace(b"\xff\x00", b"\xff"),
-                dc_sym, dc_len, ac_sym, ac_len, limit - bi, zz, bi, 0,
-            ) is None:
-                native_done = False  # malformed stream: Python re-raises below
-                break
-            bi = limit
-            if bi >= nblocks:
-                break
-    if not native_done:
-        zz[:] = 0
-        bi = 0
-        for seg in intervals:
-            rdr = _BitReader(seg.replace(b"\xff\x00", b"\xff"))
-            dc_prev = 0
-            limit = min(nblocks, bi + restart_interval) if restart_interval else nblocks
-            while bi < limit:
+    # faster than the Python loop below.  Each restart interval is one
+    # segment starting from a zero DC predictor, exactly as RSTn resets
+    # it.  Too few intervals for the SOF, or any malformed segment, runs
+    # the Python loop so error messages stay byte-identical.
+    if restart_interval:
+        seg_blocks = [
+            min(restart_interval, nblocks - b0) for b0 in range(0, nblocks, restart_interval)
+        ]
+    else:
+        seg_blocks = [nblocks]
+    if len(intervals) >= len(seg_blocks) and _scan_segments(
+        intervals[: len(seg_blocks)], np.asarray(seg_blocks, dtype=np.int64), hdr, zz
+    ):
+        return zz, nby, nbx
+    zz[:] = 0
+    bi = 0
+    for seg in intervals:
+        rdr = _BitReader(seg)
+        dc_prev = 0
+        limit = min(nblocks, bi + restart_interval) if restart_interval else nblocks
+        while bi < limit:
+            p = rdr.peek16()
+            s = int(dc_sym[p])
+            if s < 0:
+                raise ValueError("invalid DC Huffman code")
+            rdr.skip(int(dc_len[p]))
+            dc_prev += _extend(rdr.take(s), s) if s else 0
+            row = zz[bi]
+            row[0] = dc_prev
+            k = 1
+            while k < 64:
                 p = rdr.peek16()
-                s = int(dc_sym[p])
-                if s < 0:
-                    raise ValueError("invalid DC Huffman code")
-                rdr.skip(int(dc_len[p]))
-                dc_prev += _extend(rdr.take(s), s) if s else 0
-                row = zz[bi]
-                row[0] = dc_prev
-                k = 1
-                while k < 64:
-                    p = rdr.peek16()
-                    sym = int(ac_sym[p])
-                    if sym < 0:
-                        raise ValueError("invalid AC Huffman code")
-                    rdr.skip(int(ac_len[p]))
-                    if sym == 0x00:  # EOB
-                        break
-                    if sym == 0xF0:  # ZRL
-                        k += 16
-                        continue
-                    k += sym >> 4
-                    s = sym & 0x0F
-                    if k >= 64:
-                        raise ValueError("AC run past block end")
-                    row[k] = _extend(rdr.take(s), s)
-                    k += 1
-                bi += 1
+                sym = int(ac_sym[p])
+                if sym < 0:
+                    raise ValueError("invalid AC Huffman code")
+                rdr.skip(int(ac_len[p]))
+                if sym == 0x00:  # EOB
+                    break
+                if sym == 0xF0:  # ZRL
+                    k += 16
+                    continue
+                k += sym >> 4
+                s = sym & 0x0F
+                if k >= 64:
+                    raise ValueError("AC run past block end")
+                row[k] = _extend(rdr.take(s), s)
+                k += 1
+            bi += 1
 
     if bi != nblocks:
         raise ValueError(f"decoded {bi} blocks, SOF promises {nblocks}")
@@ -471,7 +480,7 @@ from .codecs import _IDCT_BASIS, _ZZ2R
 
 _INV_ZZ = np.argsort(_DCT_ZZ)
 # per-header raveled quant tables: keeps the array identity stable so
-# native._ptr can cache its ctypes pointer (headers are memoized, so the
+# native._addr can memoize its address (headers are memoized, so the
 # id() key is stable per corpus template)
 _QRASTER_CACHE: dict[int, tuple[np.ndarray, np.ndarray]] = {}
 
@@ -491,8 +500,7 @@ def _pixels_from_zz(
     """Dequantize + IDCT a stack of ``k`` same-shape frames' zigzag rows
     ((k*nby*nbx, 64)) to (k, h, w) uint8.  k==1 is the single-frame path;
     batching only grows the leading dgemm dimension, so per-block float
-    arithmetic (and therefore every decoded byte) is unchanged — pinned
-    by the batch-vs-single parity pytest.
+    arithmetic (and therefore every decoded byte) is unchanged.
 
     Fast path (r8): the native kernel expands P = D^T C D per block as a
     sum of nonzero-coefficient basis blocks (jpeg_idct_blocks) — entropy
@@ -502,12 +510,9 @@ def _pixels_from_zz(
     the real corpora, random encoded images and random dense coefficient
     stacks is pytest-pinned (test_native_kernels)."""
     zz_c = np.ascontiguousarray(zz, dtype=np.int32)
-    if native.get_lib() is not None:
-        frames = np.empty((k, nby * _DCT_N, nbx * _DCT_N), dtype=np.uint8)
-        if native.jpeg_idct_blocks(
-            zz_c, _q_raster(q), _IDCT_BASIS, _ZZ2R, nbx, nby * nbx, frames
-        ):
-            return frames[:, :h, :w]
+    frames = np.empty((k, nby * _DCT_N, nbx * _DCT_N), dtype=np.uint8)
+    if native.jpeg_idct_blocks(zz_c, _q_raster(q), _IDCT_BASIS, _ZZ2R, nbx, nby * nbx, frames):
+        return frames[:, :h, :w]
     quant = np.take(zz_c, _INV_ZZ, axis=1)  # unzigzag as a gather
     coef = quant.reshape(-1, _DCT_N, _DCT_N) * q
     # IDCT as two batched matmuls in the einsum greedy path's
@@ -539,122 +544,24 @@ def decode_jpeg(data: bytes) -> np.ndarray:
     return _pixels_from_zz(zz, hdr[2], 1, nby, nbx, hdr[0], hdr[1])[0]
 
 
-# IDCT batch sizing: measured sweet spot, NOT a memory bound.  Large
-# chunks (64-256 frames) make the float64 intermediates spill L2 and run
-# SLOWER than per-frame decodes (same cache-residency effect documented
-# for the GRIB batched unpack, sources/gribfiles.py); 8 frames (~0.5 MB
-# of working set) amortizes numpy dispatch while staying cache-resident.
-_IDCT_CHUNK_FRAMES = 8
-
-
-def decode_jpeg_batch(blobs: list[bytes]) -> list[np.ndarray]:
-    """Decode MANY baseline JFIF streams, batching BOTH the entropy walk
-    (one native call per shared-header frame group — the per-frame
-    foreign-call overhead was ~15 us vs ~2 us of actual C time) and the
-    dequant+IDCT stage across frames sharing (quant table, h, w) — the
-    MJPEG frame-stack shape.  Any malformed frame falls back to the
-    per-frame path (which itself falls back to pure Python), keeping
-    exceptions byte-identical.  Output order matches input; every
-    frame's bytes equal decode_jpeg's (pytest-pinned)."""
-    n = len(blobs)
-    raws = [bytes(b) for b in blobs]
-    hdrs = [_parse_header(raw) for raw in raws]
-    dims = []
-    for hdr in hdrs:
-        nby = (hdr[0] + _DCT_N - 1) // _DCT_N
-        nbx = (hdr[1] + _DCT_N - 1) // _DCT_N
-        dims.append((nby, nbx))
-    out: list[np.ndarray | None] = [None] * n
-    pending: list[int] = []  # frames decoded by the fallback path below
-    scan_groups: dict[int, list[int]] = {}
-    native_ok = native.get_lib() is not None
-    for idx, hdr in enumerate(hdrs):
-        if native_ok and hdr[7] == 0:
-            # identical headers are the SAME memoized tuple (id-stable)
-            scan_groups.setdefault(id(hdr), []).append(idx)
-        else:
-            pending.append(idx)
-    for idxs in scan_groups.values():
-        # one native scan call AND one native IDCT call per shared-header
-        # group (r8): frames of one group share (q, h, w), so the whole
-        # group's zigzag stack feeds _pixels_from_zz directly — no
-        # per-chunk concatenate, no per-frame numpy dispatch.
-        hdr = hdrs[idxs[0]]
-        bodies: list[bytes] = []
-        seg_blocks: list[int] = []
-        for idx in idxs:
-            raw = raws[idx]
-            end = raw.rfind(b"\xff\xd9")
-            if end < 0:
-                _scan_coefficients(raw, hdr)  # raises the canonical error
-            bodies.append(raw[hdr[8] : end].replace(b"\xff\x00", b"\xff"))
-            nby, nbx = dims[idx]
-            seg_blocks.append(nby * nbx)
-        seg_off = np.zeros(len(bodies) + 1, dtype=np.int64)
-        np.cumsum([len(x) for x in bodies], out=seg_off[1:])
-        blocks_arr = np.asarray(seg_blocks, dtype=np.int64)
-        zz_off = np.zeros(len(bodies), dtype=np.int64)
-        np.cumsum(blocks_arr[:-1], out=zz_off[1:])
-        # np.empty: jpeg_decode_scan_multi zeroes each segment's region
-        # C-side at first touch (the Python np.zeros pass over the
-        # ~256 B/block buffer measured ~7 us/blob); the no-native branch
-        # below zeroes before the per-frame fallback decodes.
-        zz_all = np.empty((int(blocks_arr.sum()), _DCT_N * _DCT_N), dtype=np.int32)
-        if native.jpeg_decode_scan_multi(
-            b"".join(bodies), seg_off, blocks_arr, zz_off,
-            hdr[3], hdr[4], hdr[5], hdr[6], zz_all,
-        ):
-            nby, nbx = dims[idxs[0]]
-            px = _pixels_from_zz(
-                zz_all, hdr[2], len(idxs), nby, nbx, hdr[0], hdr[1]
-            )
-            for j, idx in enumerate(idxs):
-                out[idx] = px[j]
-        else:
-            pending.extend(idxs)  # malformed somewhere: exact per-frame errors
-    if pending:
-        zz_list: dict[int, np.ndarray] = {}
-        for idx in pending:
-            zz_list[idx] = _scan_coefficients(raws[idx], hdrs[idx])[0]
-        groups: dict[tuple, list[int]] = {}
-        for idx in pending:
-            hdr = hdrs[idx]
-            key = (hdr[2].tobytes(), hdr[0], hdr[1], dims[idx])
-            groups.setdefault(key, []).append(idx)
-        for (_qb, h, w, (nby, nbx)), idxs in groups.items():
-            q = hdrs[idxs[0]][2]
-            for c0 in range(0, len(idxs), _IDCT_CHUNK_FRAMES):
-                chunk = idxs[c0 : c0 + _IDCT_CHUNK_FRAMES]
-                zz_cat = np.concatenate([zz_list[i] for i in chunk], axis=0)
-                px = _pixels_from_zz(zz_cat, q, len(chunk), nby, nbx, h, w)
-                for j, i in enumerate(chunk):
-                    out[i] = px[j]
-    return out
-
-
 def decode_jpeg_batch_stats(blobs: list[bytes]) -> list[tuple[int, int]]:
     """(n_px, sum_px) per baseline JFIF stream — equal to
     ``(px.size, int(px.sum()))`` over ``decode_jpeg``'s output for every
-    stream (pytest-pinned), but with the sums accumulated INSIDE the
-    native IDCT for crop-free frames (h, w multiples of 8), so the stats
-    consumer never materializes per-frame numpy views or runs per-frame
-    ``sum`` dispatches.  Odd-dimension, restart-interval or malformed
-    streams take the decode path (which itself falls back to pure
-    Python with canonical errors)."""
-    n = len(blobs)
+    stream (pytest-pinned).  Frames sharing a header go through one native
+    entropy walk and one native IDCT that accumulates the sums itself, so
+    the stats consumer never materializes per-frame numpy views.  Frames
+    whose h, w are not multiples of 8, restart-interval or malformed
+    streams, and every frame when the library is missing take
+    ``decode_jpeg`` (which itself falls back to pure Python with
+    canonical errors)."""
     raws = [bytes(b) for b in blobs]
     hdrs = [_parse_header(raw) for raw in raws]
-    out: list[tuple[int, int] | None] = [None] * n
+    out: list[tuple[int, int] | None] = [None] * len(raws)
     pending: list[int] = []
     scan_groups: dict[int, list[int]] = {}
-    native_ok = native.get_lib() is not None
     for idx, hdr in enumerate(hdrs):
-        if (
-            native_ok
-            and hdr[7] == 0
-            and hdr[0] % _DCT_N == 0
-            and hdr[1] % _DCT_N == 0
-        ):
+        if hdr[7] == 0 and hdr[0] % _DCT_N == 0 and hdr[1] % _DCT_N == 0:
+            # identical headers are the SAME memoized tuple (id-stable)
             scan_groups.setdefault(id(hdr), []).append(idx)
         else:
             pending.append(idx)
@@ -668,33 +575,22 @@ def decode_jpeg_batch_stats(blobs: list[bytes]) -> list[tuple[int, int]]:
             if end < 0:
                 _scan_coefficients(raw, hdr)  # raises the canonical error
             bodies.append(raw[hdr[8] : end].replace(b"\xff\x00", b"\xff"))
-        seg_off = np.zeros(len(bodies) + 1, dtype=np.int64)
-        np.cumsum([len(x) for x in bodies], out=seg_off[1:])
-        blocks_arr = np.full(len(bodies), nby * nbx, dtype=np.int64)
-        zz_off = np.zeros(len(bodies), dtype=np.int64)
-        np.cumsum(blocks_arr[:-1], out=zz_off[1:])
         # np.empty: jpeg_decode_scan_multi zeroes each segment's region
         # C-side at first touch (the Python np.zeros pass over the
-        # ~256 B/block buffer measured ~7 us/blob); the no-native branch
-        # below zeroes before the per-frame fallback decodes.
-        zz_all = np.empty((int(blocks_arr.sum()), _DCT_N * _DCT_N), dtype=np.int32)
-        if native.jpeg_decode_scan_multi(
-            b"".join(bodies), seg_off, blocks_arr, zz_off,
-            hdr[3], hdr[4], hdr[5], hdr[6], zz_all,
+        # ~256 B/block buffer measured ~7 us/blob)
+        zz = np.empty((len(idxs) * nby * nbx, _DCT_N * _DCT_N), dtype=np.int32)
+        frames = np.empty((len(idxs), nby * _DCT_N, nbx * _DCT_N), dtype=np.uint8)
+        sums = np.zeros(len(idxs), dtype=np.int64)
+        if _scan_segments(
+            bodies, np.full(len(idxs), nby * nbx, dtype=np.int64), hdr, zz
+        ) and native.jpeg_idct_blocks(
+            zz, _q_raster(hdr[2]), _IDCT_BASIS, _ZZ2R, nbx, nby * nbx, frames, sums
         ):
-            frames = np.empty(
-                (len(idxs), nby * _DCT_N, nbx * _DCT_N), dtype=np.uint8
-            )
-            sums = np.zeros(len(idxs), dtype=np.int64)
-            if native.jpeg_idct_blocks(
-                zz_all, _q_raster(hdr[2]), _IDCT_BASIS, _ZZ2R,
-                nbx, nby * nbx, frames, sums,
-            ):
-                npx = hdr[0] * hdr[1]
-                for j, idx in enumerate(idxs):
-                    out[idx] = (npx, int(sums[j]))
-                continue
-        pending.extend(idxs)  # malformed somewhere: exact per-frame errors
+            npx = hdr[0] * hdr[1]
+            for j, idx in enumerate(idxs):
+                out[idx] = (npx, int(sums[j]))
+        else:
+            pending.extend(idxs)  # malformed somewhere: exact per-frame errors
     for idx in pending:
         px = decode_jpeg(raws[idx])
         out[idx] = (px.size, int(px.sum(dtype=np.int64)))

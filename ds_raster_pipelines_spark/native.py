@@ -17,10 +17,16 @@ Design rules:
 * any C-side error (nonzero return) re-runs the Python path so error
   MESSAGES and exception types are byte-identical to the fallback;
 * compilation is attempted once per process, guarded by a file lock, and
-  cached under /tmp keyed on the source hash — concurrent Python workers
-  share one build; a missing compiler or failed build selects the Python
-  path, records ``build_error`` on this module and logs it once per
-  process as a WARNING.
+  cached under /tmp — concurrent Python workers share one build.  The
+  cache key covers the source, the compile command, the machine type and
+  the CPU flags, so a ``-march=native`` library built on one CPU is never
+  loaded on another.  A missing compiler or failed build selects the
+  Python path, records ``build_error`` on this module and logs it once
+  per process as a WARNING;
+* the bindings are one table (``_SIGNATURES``: argument codes per C
+  entry) and every wrapper calls the C entry through ``_call``.  Each
+  call that takes the Python path — library missing, or input declined
+  by the kernel — is counted in ``fallbacks`` by kernel name.
 
 Everything here is public knowledge: ITU-T T.81 for the JPEG scan
 structure, the C89 standard library, and the ctypes module docs.
@@ -28,10 +34,12 @@ structure, the C89 standard library, and the ctypes module docs.
 
 from __future__ import annotations
 
+import collections
 import ctypes
 import hashlib
 import logging
 import os
+import platform
 import subprocess
 import tempfile
 
@@ -153,23 +161,14 @@ static long scan_core(const unsigned char *d, long n,
     return dc_prev;
 }
 
-/* Multi-segment form of jpeg_decode_scan: decode nseg independent
- * entropy segments (each with its own DPCM predictor reset — i.e. one
- * whole no-restart frame per segment) in ONE call, amortizing the
- * foreign-call overhead that dominated per-frame decodes.  seg_off has
- * nseg+1 entries into the concatenated UNSTUFFED bodies; seg_blocks[i]
- * blocks are written at zz + zz_off[i]*64.  Returns 0 or the first
- * segment's error code (caller falls back per frame).
+/* Decode nseg independent entropy segments (each starts from a zero DPCM
+ * predictor: one whole no-restart frame, or one restart interval) in ONE
+ * call, amortizing the foreign-call overhead that dominated per-frame
+ * decodes.  seg_off has nseg+1 entries into the concatenated UNSTUFFED
+ * bodies; seg_blocks[i] blocks are written at zz + zz_off[i]*64.
+ * Returns 0 or the first failing segment's error code (caller falls back
+ * to the Python decoder for exact error semantics).
  */
-long jpeg_decode_scan(const unsigned char *d, long n,
-                      const int16_t *dc_sym, const uint8_t *dc_len,
-                      const int16_t *ac_sym, const uint8_t *ac_len,
-                      long nblocks, int32_t *zz, long dc_in)
-{
-    return scan_core(d, n, dc_sym, dc_len, ac_sym, ac_len,
-                     nblocks, zz, dc_in, 0, 0, 0, 0);
-}
-
 long jpeg_decode_scan_multi(const unsigned char *data, const int64_t *seg_off,
                             const int64_t *seg_blocks, const int64_t *zz_off,
                             long nseg,
@@ -281,20 +280,19 @@ long jpeg_idct_blocks(const int32_t *zz, long nblocks,
     return 0;
 }
 
-/* Per-message EXACT integer sums over GRIB2 data sections, for the
+/* Per-message EXACT integer sum over a GRIB2 data section, for the
  * D=E=0, R=0 case where decoded values are raw packed integers (the
  * graded GRIB corpora) — sum and count per message without ever
  * materializing a float array.  Mirrors grib.py _unpack_bits /
  * _decode_complex / decode_values for packing templates 0, 2 and 3
  * (second-order spatial differencing) plus the section-6 bitmap
- * population check.  Messages this subset cannot prove exact set
- * ok[i]=0 and the caller decodes them on the Python path instead.
+ * population check.  A message this subset cannot prove exact returns
+ * 0 and the caller decodes it on the Python path instead.
  *
- * fields per message (10 int64 slots):
+ * f (10 int64 slots):
  *  [0]=packing_template [1]=bits_per_value [2]=n_points [3]=data_offset
  *  [4]=data_len [5]=s5_offset [6]=bitmap_offset(-1 none) [7]=ni [8]=nj
  *  [9]=integral reference value (v = R + x with E=0, D=0)
- * scratch: caller-provided int64 buffer >= max n_points (two spans).
  */
 static uint64_t rdbits(const unsigned char *p, long bitpos, int w)
 {
@@ -317,7 +315,6 @@ static long sm_read(const unsigned char *buf, long pos, int ww)
         return -(long)(u & ((1ULL << (8 * ww - 1)) - 1));
     return (long)u;
 }
-/* Shared per-message exact-sum core (see grib_sum_exact docs above). */
 static int msg_sum_exact(const unsigned char *buf, long n, const int64_t *f,
                          int64_t *out_sum, int64_t *out_cnt)
 {
@@ -440,17 +437,6 @@ static int msg_sum_exact(const unsigned char *buf, long n, const int64_t *f,
     *out_sum = sum + iref * npts; /* v = R + x, R integral */
     *out_cnt = npts;
     return 1;
-}
-long grib_sum_exact(const unsigned char *buf, long n,
-                    const int64_t *fields, long nmsg,
-                    int64_t *out_sum, int64_t *out_cnt,
-                    unsigned char *ok)
-{
-    long mi;
-    for (mi = 0; mi < nmsg; mi++)
-        ok[mi] = (unsigned char)msg_sum_exact(buf, n, fields + mi * 10,
-                                              out_sum + mi, out_cnt + mi);
-    return 0;
 }
 
 /* GRIB2 multi-message header scan: mirrors grib.py scan_messages —
@@ -1143,16 +1129,66 @@ long md5_word_grams(const unsigned char *texts, const int64_t *offs,
 
 _CACHE_ROOT = os.environ.get("SPARK_GRAFT_NATIVE_DIR", "/tmp/spark_graft_native")
 
+# -march=native: inline rint() as a rounding insn (a libm CALL per pixel at
+# baseline -O2 dominated the IDCT kernel); -ffp-contract=off: NO fma
+# contraction — the sparse-IDCT sums must round every multiply-add like the
+# numpy path does (byte-parity pytest); -fno-math-errno: allow the inline
+# form (results unchanged for finite args).
+_CC = ["cc", "-O2", "-march=native", "-ffp-contract=off", "-fno-math-errno", "-fPIC", "-shared"]
+
+# The binding table: exported C entry -> argument codes.  Every entry
+# returns long.  p = pointer, declared c_void_p (_call passes a numpy array
+# as its data address; bytes, an int address or None pass unchanged),
+# l = long, q = int64_t, i = int.  A pytest checks it against _C_SRC.
+_SIGNATURES = {
+    "jpeg_decode_scan_multi": "pppplppppp",
+    "jpeg_idct_blocks": "plpppllpp",
+    "grib_scan": "pllpp",
+    "grib_files_sum": "pplppplplp",
+    "avi_scan": "pqpppl",
+    "bilinear_stack": "plllppplppplpp",
+    "hist_segments": "pplllp",
+    "seg_sum_min_max": "pqplppp",
+    "minhash_doc_sigs": "pplpplqp",
+    "lm_score_docs": "ppllpplqpp",
+    "md5_word_grams": "ppllipppq",
+}
+_CTYPES = {"p": ctypes.c_void_p, "l": ctypes.c_long, "q": ctypes.c_int64, "i": ctypes.c_int}
+
 _lib = None
 _lib_tried = False
 build_error: str | None = None  # inspected by tests
+# calls that took the Python path, by kernel name: the library is missing
+# or the kernel declined its input
+fallbacks: collections.Counter = collections.Counter()
+
+
+def _cpu_flags() -> str:
+    """The ``flags`` line of /proc/cpuinfo, or "" where there is none."""
+    try:
+        with open("/proc/cpuinfo") as fh:
+            for line in fh:
+                if line.startswith("flags"):
+                    return line.strip()
+    except OSError:
+        pass
+    return ""
+
+
+def _so_path(cpu_flags: str) -> str:
+    """Cache path of the compiled library.  -march=native code can die with
+    SIGILL on another CPU, so a shared cache keys the library on the source,
+    the compile command, the machine type and the CPU flags.  A compiler
+    change cannot cause SIGILL and is not part of the key."""
+    key = "\0".join([_C_SRC, " ".join(_CC), platform.machine(), cpu_flags])
+    digest = hashlib.md5(key.encode()).hexdigest()[:16]
+    return os.path.join(_CACHE_ROOT, f"kernels_{digest}.so")
 
 
 def _build() -> ctypes.CDLL | None:
-    """Compile (once, machine-wide) and load the kernel library."""
+    """Compile (once per cache key, machine-wide) and load the kernel library."""
     global build_error
-    digest = hashlib.md5(_C_SRC.encode()).hexdigest()[:16]
-    so_path = os.path.join(_CACHE_ROOT, f"kernels_{digest}.so")
+    so_path = _so_path(_cpu_flags())
     if not os.path.exists(so_path):
         try:
             os.makedirs(_CACHE_ROOT, exist_ok=True)
@@ -1160,7 +1196,7 @@ def _build() -> ctypes.CDLL | None:
             # concurrently; exactly one compiles, the rest wait on flock
             import fcntl
 
-            with open(os.path.join(_CACHE_ROOT, f"build_{digest}.lock"), "w") as lk:
+            with open(so_path + ".lock", "w") as lk:
                 fcntl.flock(lk, fcntl.LOCK_EX)
                 if not os.path.exists(so_path):
                     with tempfile.TemporaryDirectory(dir=_CACHE_ROOT) as td:
@@ -1168,18 +1204,7 @@ def _build() -> ctypes.CDLL | None:
                         with open(src, "w") as fh:
                             fh.write(_C_SRC)
                         tmp_so = os.path.join(td, "kernels.so")
-                        # -march=native: inline rint() as a rounding insn
-                        # (a libm CALL per pixel at baseline -O2 dominated
-                        # the IDCT kernel); -ffp-contract=off: NO fma
-                        # contraction — the sparse-IDCT sums must round
-                        # every multiply-add like the numpy path does
-                        # (byte-parity pytest); -fno-math-errno: allow the
-                        # inline form (results unchanged for finite args).
-                        cmd = [
-                            "cc", "-O2", "-march=native", "-ffp-contract=off",
-                            "-fno-math-errno", "-fPIC", "-shared",
-                            "-o", tmp_so, src, "-lm",
-                        ]
+                        cmd = [*_CC, "-o", tmp_so, src, "-lm"]
                         try:
                             subprocess.run(
                                 cmd, check=True, capture_output=True, timeout=120
@@ -1198,155 +1223,10 @@ def _build() -> ctypes.CDLL | None:
             return None
     try:
         lib = ctypes.CDLL(so_path)
-        lib.jpeg_decode_scan.restype = ctypes.c_long
-        lib.jpeg_decode_scan.argtypes = [
-            ctypes.c_char_p,
-            ctypes.c_long,
-            ctypes.POINTER(ctypes.c_int16),
-            ctypes.POINTER(ctypes.c_uint8),
-            ctypes.POINTER(ctypes.c_int16),
-            ctypes.POINTER(ctypes.c_uint8),
-            ctypes.c_long,
-            ctypes.POINTER(ctypes.c_int32),
-            ctypes.c_long,
-        ]
-        lib.jpeg_decode_scan_multi.restype = ctypes.c_long
-        lib.jpeg_decode_scan_multi.argtypes = [
-            ctypes.c_char_p,
-            ctypes.POINTER(ctypes.c_int64),
-            ctypes.POINTER(ctypes.c_int64),
-            ctypes.POINTER(ctypes.c_int64),
-            ctypes.c_long,
-            ctypes.POINTER(ctypes.c_int16),
-            ctypes.POINTER(ctypes.c_uint8),
-            ctypes.POINTER(ctypes.c_int16),
-            ctypes.POINTER(ctypes.c_uint8),
-            ctypes.POINTER(ctypes.c_int32),
-        ]
-        lib.jpeg_idct_blocks.restype = ctypes.c_long
-        lib.jpeg_idct_blocks.argtypes = [
-            ctypes.POINTER(ctypes.c_int32),
-            ctypes.c_long,
-            ctypes.POINTER(ctypes.c_int32),
-            ctypes.POINTER(ctypes.c_double),
-            ctypes.c_char_p,
-            ctypes.c_long,
-            ctypes.c_long,
-            ctypes.POINTER(ctypes.c_uint8),
-            ctypes.POINTER(ctypes.c_int64),
-        ]
-        lib.grib_sum_exact.restype = ctypes.c_long
-        lib.grib_sum_exact.argtypes = [
-            ctypes.c_char_p,
-            ctypes.c_long,
-            ctypes.POINTER(ctypes.c_int64),
-            ctypes.c_long,
-            ctypes.POINTER(ctypes.c_int64),
-            ctypes.POINTER(ctypes.c_int64),
-            ctypes.POINTER(ctypes.c_uint8),
-        ]
-        lib.grib_files_sum.restype = ctypes.c_long
-        lib.grib_files_sum.argtypes = [
-            ctypes.c_char_p,
-            ctypes.POINTER(ctypes.c_int64),
-            ctypes.c_long,
-            ctypes.POINTER(ctypes.c_int64),
-            ctypes.POINTER(ctypes.c_int64),
-            ctypes.POINTER(ctypes.c_int64),
-            ctypes.c_long,
-            ctypes.POINTER(ctypes.c_int64),
-            ctypes.c_long,
-            ctypes.POINTER(ctypes.c_uint8),
-        ]
-        lib.grib_scan.restype = ctypes.c_long
-        lib.grib_scan.argtypes = [
-            ctypes.c_char_p,
-            ctypes.c_long,
-            ctypes.c_long,
-            ctypes.POINTER(ctypes.c_int64),
-            ctypes.POINTER(ctypes.c_double),
-        ]
-        lib.avi_scan.restype = ctypes.c_long
-        lib.avi_scan.argtypes = [
-            ctypes.c_char_p,
-            ctypes.c_int64,
-            ctypes.POINTER(ctypes.c_int64),
-            ctypes.POINTER(ctypes.c_int64),
-            ctypes.POINTER(ctypes.c_int64),
-            ctypes.c_long,
-        ]
-        lib.hist_segments.restype = ctypes.c_long
-        lib.hist_segments.argtypes = [
-            ctypes.c_char_p,
-            ctypes.POINTER(ctypes.c_int64),
-            ctypes.c_long,
-            ctypes.c_long,
-            ctypes.c_long,
-            ctypes.POINTER(ctypes.c_int64),
-        ]
-        lib.seg_sum_min_max.restype = ctypes.c_long
-        lib.seg_sum_min_max.argtypes = [
-            ctypes.c_char_p,
-            ctypes.c_int64,
-            ctypes.POINTER(ctypes.c_int64),
-            ctypes.c_long,
-            ctypes.POINTER(ctypes.c_int64),
-            ctypes.c_char_p,
-            ctypes.c_char_p,
-        ]
-        lib.bilinear_stack.restype = ctypes.c_long
-        lib.bilinear_stack.argtypes = [
-            ctypes.c_char_p,
-            ctypes.c_long,
-            ctypes.c_long,
-            ctypes.c_long,
-            ctypes.POINTER(ctypes.c_int64),
-            ctypes.POINTER(ctypes.c_int64),
-            ctypes.POINTER(ctypes.c_double),
-            ctypes.c_long,
-            ctypes.POINTER(ctypes.c_int64),
-            ctypes.POINTER(ctypes.c_int64),
-            ctypes.POINTER(ctypes.c_double),
-            ctypes.c_long,
-            ctypes.POINTER(ctypes.c_double),
-            ctypes.POINTER(ctypes.c_double),
-        ]
-        lib.lm_score_docs.restype = ctypes.c_long
-        lib.lm_score_docs.argtypes = [
-            ctypes.c_char_p,
-            ctypes.POINTER(ctypes.c_int64),
-            ctypes.c_long,
-            ctypes.c_long,
-            ctypes.POINTER(ctypes.c_int64),
-            ctypes.POINTER(ctypes.c_int64),
-            ctypes.c_long,
-            ctypes.c_int64,
-            ctypes.POINTER(ctypes.c_int64),
-            ctypes.POINTER(ctypes.c_int64),
-        ]
-        lib.minhash_doc_sigs.restype = ctypes.c_long
-        lib.minhash_doc_sigs.argtypes = [
-            ctypes.c_char_p,
-            ctypes.POINTER(ctypes.c_int64),
-            ctypes.c_long,
-            ctypes.POINTER(ctypes.c_int64),
-            ctypes.POINTER(ctypes.c_int64),
-            ctypes.c_long,
-            ctypes.c_int64,
-            ctypes.POINTER(ctypes.c_int64),
-        ]
-        lib.md5_word_grams.restype = ctypes.c_long
-        lib.md5_word_grams.argtypes = [
-            ctypes.c_char_p,
-            ctypes.POINTER(ctypes.c_int64),
-            ctypes.c_long,
-            ctypes.c_long,
-            ctypes.c_int,
-            ctypes.POINTER(ctypes.c_int64),
-            ctypes.POINTER(ctypes.c_int32),
-            ctypes.POINTER(ctypes.c_int64),
-            ctypes.c_int64,
-        ]
+        for name, codes in _SIGNATURES.items():
+            fn = getattr(lib, name)
+            fn.restype = ctypes.c_long
+            fn.argtypes = [_CTYPES[c] for c in codes]
         return lib
     except Exception as exc:
         build_error = f"{type(exc).__name__}: {exc}"
@@ -1368,58 +1248,30 @@ def get_lib() -> ctypes.CDLL | None:
     return _lib
 
 
-# LUT arrays are module-memoized in jpeg.py (_LUT_CACHE), so their ctypes
-# pointers can be cached too — data_as() was ~25 us/frame of pure wrapper
-# overhead.  The cache holds a reference to each array, pinning it so the
-# pointer can never dangle.
-_PTR_CACHE: dict[int, tuple[np.ndarray, object]] = {}
-
-
-def _ptr(arr: np.ndarray, ctype) -> object:
-    hit = _PTR_CACHE.get(id(arr))
-    if hit is None or hit[0] is not arr:
-        hit = (arr, arr.ctypes.data_as(ctypes.POINTER(ctype)))
-        _PTR_CACHE[id(arr)] = hit
-    return hit[1]
-
-
-def jpeg_decode_scan(
-    body: bytes,
-    dc_sym: np.ndarray,
-    dc_len: np.ndarray,
-    ac_sym: np.ndarray,
-    ac_len: np.ndarray,
-    nblocks: int,
-    zz: np.ndarray,
-    bi0: int,
-    dc_in: int,
-) -> int | None:
-    """Decode ``nblocks`` blocks from an unstuffed entropy segment into
-    ``zz[bi0:bi0+nblocks]`` (int32 (N, 64) zigzag rows, pre-zeroed).
-
-    Returns the outgoing DC predictor, or None when the native library is
-    unavailable or the stream is malformed — callers must then run the
-    pure-Python decoder (which either succeeds or raises the canonical
-    error)."""
+def _call(name: str, *args) -> int | None:
+    """Run C entry ``name``, passing numpy arrays as their data address.
+    None, counted in ``fallbacks``, when the library is missing."""
     lib = get_lib()
     if lib is None:
+        fallbacks[name] += 1
         return None
-    out = zz[bi0 : bi0 + nblocks]
-    rc = lib.jpeg_decode_scan(
-        body,
-        len(body),
-        _ptr(dc_sym, ctypes.c_int16),
-        _ptr(dc_len, ctypes.c_uint8),
-        _ptr(ac_sym, ctypes.c_int16),
-        _ptr(ac_len, ctypes.c_uint8),
-        nblocks,
-        out.ctypes.data_as(ctypes.POINTER(ctypes.c_int32)),
-        dc_in,
+    return getattr(lib, name)(
+        *[a.ctypes.data if isinstance(a, np.ndarray) else a for a in args]
     )
-    if rc <= -1000000:
-        out[:] = 0  # leave zz clean for the Python fallback pass
-        return None
-    return int(rc)
+
+
+# LUT, quant and basis arrays are memoized by their owners (jpeg._LUT_CACHE,
+# jpeg._q_raster, codecs), so their addresses can be memoized too — reading
+# ``.ctypes.data`` was a measurable share of the per-call cost.  The memo
+# holds a reference to each array, so an address can never dangle.
+_ADDR_CACHE: dict[int, tuple[np.ndarray, int]] = {}
+
+
+def _addr(arr: np.ndarray) -> int:
+    hit = _ADDR_CACHE.get(id(arr))
+    if hit is None or hit[0] is not arr:
+        hit = _ADDR_CACHE[id(arr)] = (arr, arr.ctypes.data)
+    return hit[1]
 
 
 def jpeg_idct_blocks(
@@ -1442,52 +1294,10 @@ def jpeg_idct_blocks(
     matmul path instead.  ``basis`` must be the 64x64 float64 outer-
     product expansion of the SAME DCT matrix the numpy path uses (the
     parity pytest pins byte-equality between the two paths)."""
-    lib = get_lib()
-    if lib is None:
-        return False
-    lib.jpeg_idct_blocks(
-        zz.ctypes.data_as(ctypes.POINTER(ctypes.c_int32)),
-        zz.shape[0],
-        _ptr(q_raster, ctypes.c_int32),
-        _ptr(basis, ctypes.c_double),
-        zz_to_raster,
-        nbx,
-        blocks_per_frame,
-        out.ctypes.data_as(ctypes.POINTER(ctypes.c_uint8)),
-        None
-        if frame_sums is None
-        else frame_sums.ctypes.data_as(ctypes.POINTER(ctypes.c_int64)),
-    )
-    return True
-
-
-def grib_sum_exact(buf: bytes, fields: np.ndarray):
-    """Exact integer (sum, n_present) per GRIB2 message for the E=0,
-    D=0, integral-reference case (decoded values are raw packed ints
-    plus an integer offset).  ``fields`` is int64 (nmsg, 10):
-    packing_template, bits_per_value, n_points, data_offset, data_len,
-    s5_offset, bitmap_offset(-1), ni, nj, integral ref_value.
-    Returns (sums, counts, ok) int64/int64/bool arrays, or None when the
-    native library is unavailable.  Messages with ok=False (unsupported
-    variant or malformed stream) must be decoded on the Python path,
-    which either succeeds or raises the canonical error."""
-    lib = get_lib()
-    if lib is None:
-        return None
-    nmsg = fields.shape[0]
-    sums = np.zeros(nmsg, dtype=np.int64)
-    cnts = np.zeros(nmsg, dtype=np.int64)
-    ok = np.zeros(nmsg, dtype=np.uint8)
-    lib.grib_sum_exact(
-        buf,
-        len(buf),
-        fields.ctypes.data_as(ctypes.POINTER(ctypes.c_int64)),
-        nmsg,
-        sums.ctypes.data_as(ctypes.POINTER(ctypes.c_int64)),
-        cnts.ctypes.data_as(ctypes.POINTER(ctypes.c_int64)),
-        ok.ctypes.data_as(ctypes.POINTER(ctypes.c_uint8)),
-    )
-    return sums, cnts, ok.astype(bool)
+    return _call(
+        "jpeg_idct_blocks", zz, zz.shape[0], _addr(q_raster), _addr(basis),
+        zz_to_raster, nbx, blocks_per_frame, out, frame_sums,
+    ) is not None
 
 
 def grib_files_sum(
@@ -1506,27 +1316,19 @@ def grib_files_sum(
     (file_idx, forecast_time, perturbation, sum, n_present); files with
     ok_file False must take the Python path — or None when the native
     library is unavailable."""
-    lib = get_lib()
-    if lib is None:
-        return None
     nfiles = len(file_off) - 1
     ok = np.zeros(nfiles, dtype=np.uint8)
     cap = max(nfiles * 16, 1024)
     while True:
         out = np.empty((cap, 5), dtype=np.int64)
-        rc = lib.grib_files_sum(
-            bufs,
-            file_off.ctypes.data_as(ctypes.POINTER(ctypes.c_int64)),
-            nfiles,
-            alt_off.ctypes.data_as(ctypes.POINTER(ctypes.c_int64)),
-            probe_slot.ctypes.data_as(ctypes.POINTER(ctypes.c_int64)),
-            probe_val.ctypes.data_as(ctypes.POINTER(ctypes.c_int64)),
-            len(alt_off) - 1,
-            out.ctypes.data_as(ctypes.POINTER(ctypes.c_int64)),
-            cap,
-            ok.ctypes.data_as(ctypes.POINTER(ctypes.c_uint8)),
+        rc = _call(
+            "grib_files_sum", bufs, file_off, nfiles, alt_off, probe_slot,
+            probe_val, len(alt_off) - 1, out, cap, ok,
         )
+        if rc is None:
+            return None
         if rc >= 0:
+            fallbacks["grib_files_sum"] += nfiles - int(ok.sum())
             return out[:rc], ok.astype(bool)
         cap *= 4  # out_cap overflow: retry bigger (bounded by total bytes)
 
@@ -1543,21 +1345,15 @@ def grib_scan(buf: bytes, max_msgs: int = 64):
     multi-message file (zeroing a 4096-row buffer per call was ~70% of
     the native scan's wall time); a file with more messages retries once
     at the 4096 ceiling (GERR-9 from the C side)."""
-    lib = get_lib()
-    if lib is None:
-        return None
     out = np.empty((max_msgs, GRIB_SCAN_SLOTS), dtype=np.int64)
     refs = np.empty(max_msgs, dtype=np.float64)
-    rc = lib.grib_scan(
-        buf,
-        len(buf),
-        max_msgs,
-        out.ctypes.data_as(ctypes.POINTER(ctypes.c_int64)),
-        refs.ctypes.data_as(ctypes.POINTER(ctypes.c_double)),
-    )
+    rc = _call("grib_scan", buf, len(buf), max_msgs, out, refs)
     if rc == -2000009 and max_msgs < 4096:  # GERR-9: message-count cap
         return grib_scan(buf, 4096)
+    if rc is None:
+        return None
     if rc < 0:
+        fallbacks["grib_scan"] += 1
         return None
     return out[:rc], refs[:rc]
 
@@ -1573,26 +1369,19 @@ def jpeg_decode_scan_multi(
     ac_len: np.ndarray,
     zz: np.ndarray,
 ) -> bool:
-    """Decode many no-restart frames' scans in one native call.  False
-    means unavailable/malformed — caller re-runs the per-frame path
-    (which itself falls back to pure Python with exact errors)."""
-    lib = get_lib()
-    if lib is None:
-        return False
-    rc = lib.jpeg_decode_scan_multi(
-        bodies,
-        seg_off.ctypes.data_as(ctypes.POINTER(ctypes.c_int64)),
-        seg_blocks.ctypes.data_as(ctypes.POINTER(ctypes.c_int64)),
-        zz_off.ctypes.data_as(ctypes.POINTER(ctypes.c_int64)),
-        len(seg_blocks),
-        _ptr(dc_sym, ctypes.c_int16),
-        _ptr(dc_len, ctypes.c_uint8),
-        _ptr(ac_sym, ctypes.c_int16),
-        _ptr(ac_len, ctypes.c_uint8),
-        zz.ctypes.data_as(ctypes.POINTER(ctypes.c_int32)),
+    """Decode many entropy segments (whole no-restart frames, or restart
+    intervals) in one native call; segment i's ``seg_blocks[i]`` blocks
+    land at ``zz[zz_off[i]:]``, zeroed first.  False means unavailable or
+    malformed: the caller runs the Python scan, which decodes or raises
+    the canonical error."""
+    rc = _call(
+        "jpeg_decode_scan_multi", bodies, seg_off, seg_blocks, zz_off, len(seg_blocks),
+        _addr(dc_sym), _addr(dc_len), _addr(ac_sym), _addr(ac_len), zz,
     )
+    if rc is None:
+        return False
     if rc <= -1000000:
-        zz[:] = 0
+        fallbacks["jpeg_decode_scan_multi"] += 1
         return False
     return True
 
@@ -1610,13 +1399,7 @@ def _avi_scratch(cap: int) -> tuple:
     meta = np.zeros(4, dtype=np.int64)
     off = np.empty(cap, dtype=np.int64)
     size = np.empty(cap, dtype=np.int64)
-    i64p = ctypes.POINTER(ctypes.c_int64)
-    _AVI_SCRATCH = (
-        cap, meta, off, size,
-        meta.ctypes.data_as(i64p),
-        off.ctypes.data_as(i64p),
-        size.ctypes.data_as(i64p),
-    )
+    _AVI_SCRATCH = (cap, meta, off, size, meta.ctypes.data, off.ctypes.data, size.ctypes.data)
     return _AVI_SCRATCH
 
 
@@ -1632,19 +1415,16 @@ def avi_scan(buf):
 
     Single-threaded only: the output buffers are one module-level scratch
     per process (Spark Python workers run one task at a time)."""
-    lib = get_lib()
-    if lib is None:
-        return None
-    if isinstance(buf, tuple):  # (base_address, length): zero-copy form
-        ptr, blen = ctypes.c_char_p(buf[0]), buf[1]
-    else:
-        ptr, blen = buf, len(buf)
+    ptr, blen = buf if isinstance(buf, tuple) else (buf, len(buf))
     cap, meta, off, size, meta_p, off_p, size_p = _AVI_SCRATCH or _avi_scratch(_AVI_FRAME_CAP)
-    rc = lib.avi_scan(ptr, blen, meta_p, off_p, size_p, cap)
+    rc = _call("avi_scan", ptr, blen, meta_p, off_p, size_p, cap)
     while rc == _AVI_CAP:
         cap, meta, off, size, meta_p, off_p, size_p = _avi_scratch(2 * cap)
-        rc = lib.avi_scan(ptr, blen, meta_p, off_p, size_p, cap)
+        rc = _call("avi_scan", ptr, blen, meta_p, off_p, size_p, cap)
+    if rc is None:
+        return None
     if rc < 0:
+        fallbacks["avi_scan"] += 1
         return None
     hv = int(meta[3])
     handler = b"" if hv < 0 else hv.to_bytes(4, "little")
@@ -1657,60 +1437,38 @@ def avi_scan(buf):
     )
 
 
-def md5_word_grams(texts: bytes, offs: np.ndarray, n: int):
+def md5_word_grams(texts, offs: np.ndarray, n: int):
     """Per-doc positional word-n-gram md5 hashes over a concatenated text
     buffer (Arrow offsets layout).  Returns (counts, pos, h) with counts
     int64[ndocs], pos int32[total], h int64[total] — or None when the
     native library is unavailable (caller uses the Column-expression
     path, which is the always-correct fallback)."""
-    lib = get_lib()
-    if lib is None:
-        return None
     ndocs = len(offs) - 1
     counts = np.zeros(ndocs, dtype=np.int64)
-    i64p = ctypes.POINTER(ctypes.c_int64)
-    i32p = ctypes.POINTER(ctypes.c_int32)
     offs = np.ascontiguousarray(offs, dtype=np.int64)
-    none_i32 = ctypes.cast(None, i32p)
-    total = lib.md5_word_grams(
-        texts, offs.ctypes.data_as(i64p), ndocs, n, 1,
-        counts.ctypes.data_as(i64p), none_i32,
-        ctypes.cast(None, i64p), 0,
-    )
-    if total < 0:
+    total = _call("md5_word_grams", texts, offs, ndocs, n, 1, counts, None, None, 0)
+    if total is None:
         return None
-    pos = np.empty(int(total), dtype=np.int32)
-    h = np.empty(int(total), dtype=np.int64)
-    rc = lib.md5_word_grams(
-        texts, offs.ctypes.data_as(i64p), ndocs, n, 0,
-        counts.ctypes.data_as(i64p),
-        pos.ctypes.data_as(i32p), h.ctypes.data_as(i64p), int(total),
-    )
-    if rc != total:
-        return None
-    return counts, pos, h
+    if total >= 0:
+        pos = np.empty(total, dtype=np.int32)
+        h = np.empty(total, dtype=np.int64)
+        rc = _call("md5_word_grams", texts, offs, ndocs, n, 0, counts, pos, h, total)
+        if rc == total:
+            return counts, pos, h
+    fallbacks["md5_word_grams"] += 1
+    return None
 
 
 def bilinear_stack(px: np.ndarray, tabs: tuple, out: np.ndarray, tmp: np.ndarray) -> bool:
     """C separable bilinear over a (n, h, w) uint8 stack into the (n,
     out_h, out_w) float64 ``out`` using precomputed (lo_y, hi_y, fr_y,
     lo_x, hi_x, fr_x) gather tables.  False = library unavailable."""
-    lib = get_lib()
-    if lib is None:
-        return False
     lo_y, hi_y, fr_y, lo_x, hi_x, fr_x = tabs
     n, h, w = px.shape
-    i64p = ctypes.POINTER(ctypes.c_int64)
-    f64p = ctypes.POINTER(ctypes.c_double)
-    lib.bilinear_stack(
-        px.ctypes.data_as(ctypes.c_char_p), n, h, w,
-        lo_y.ctypes.data_as(i64p), hi_y.ctypes.data_as(i64p),
-        fr_y.ctypes.data_as(f64p), out.shape[1],
-        lo_x.ctypes.data_as(i64p), hi_x.ctypes.data_as(i64p),
-        fr_x.ctypes.data_as(f64p), out.shape[2],
-        tmp.ctypes.data_as(f64p), out.ctypes.data_as(f64p),
-    )
-    return True
+    return _call(
+        "bilinear_stack", px, n, h, w, lo_y, hi_y, fr_y, out.shape[1],
+        lo_x, hi_x, fr_x, out.shape[2], tmp, out,
+    ) is not None
 
 
 def hist_segments(
@@ -1718,16 +1476,9 @@ def hist_segments(
 ) -> bool:
     """Per-segment byte>>shift histograms into out[nseg, bins] (int64,
     caller-zeroed).  False = unavailable/mismatch, caller falls back."""
-    lib = get_lib()
-    if lib is None:
-        return False
-    i64p = ctypes.POINTER(ctypes.c_int64)
-    rc = lib.hist_segments(
-        data.ctypes.data_as(ctypes.c_char_p),
-        bounds.ctypes.data_as(i64p),
-        out.shape[0], shift, bins,
-        out.ctypes.data_as(i64p),
-    )
+    rc = _call("hist_segments", data, bounds, out.shape[0], shift, bins, out)
+    if rc is not None and rc != 0:
+        fallbacks["hist_segments"] += 1
     return rc == 0
 
 
@@ -1736,21 +1487,15 @@ def seg_sum_min_max(data: np.ndarray, bounds: np.ndarray):
     data[bounds[2k]:bounds[2k+1]] of a uint8 buffer, in one pass — or None
     when the library is unavailable or a segment is empty or out of range
     (the caller runs its numpy reference)."""
-    lib = get_lib()
-    if lib is None:
-        return None
     data = np.ascontiguousarray(data, dtype=np.uint8)
     bounds = np.ascontiguousarray(bounds, dtype=np.int64)
     nseg = len(bounds) // 2
     sums = np.empty(nseg, dtype=np.int64)
     mins = np.empty(nseg, dtype=np.uint8)
     maxs = np.empty(nseg, dtype=np.uint8)
-    rc = lib.seg_sum_min_max(
-        data.ctypes.data_as(ctypes.c_char_p), len(data),
-        bounds.ctypes.data_as(ctypes.POINTER(ctypes.c_int64)), nseg,
-        sums.ctypes.data_as(ctypes.POINTER(ctypes.c_int64)),
-        mins.ctypes.data_as(ctypes.c_char_p), maxs.ctypes.data_as(ctypes.c_char_p),
-    )
+    rc = _call("seg_sum_min_max", data, len(data), bounds, nseg, sums, mins, maxs)
+    if rc is not None and rc != 0:
+        fallbacks["seg_sum_min_max"] += 1
     return (sums, mins, maxs) if rc == 0 else None
 
 
@@ -1758,20 +1503,11 @@ def minhash_doc_sigs(texts, offs: np.ndarray, pa: np.ndarray, pb: np.ndarray, p:
     """Per-doc md5-strategy MinHash signature matrix out[ndocs, k]
     (int64; -1 rows = doc had no words), or None when the native
     library is unavailable."""
-    lib = get_lib()
-    if lib is None:
-        return None
     ndocs = len(offs) - 1
-    k = len(pa)
-    out = np.full((ndocs, k), -1, dtype=np.int64)
-    i64p = ctypes.POINTER(ctypes.c_int64)
+    out = np.full((ndocs, len(pa)), -1, dtype=np.int64)
     offs = np.ascontiguousarray(offs, dtype=np.int64)
-    lib.minhash_doc_sigs(
-        texts, offs.ctypes.data_as(i64p), ndocs,
-        pa.ctypes.data_as(i64p), pb.ctypes.data_as(i64p),
-        k, p, out.ctypes.data_as(i64p),
-    )
-    return out
+    rc = _call("minhash_doc_sigs", texts, offs, ndocs, pa, pb, len(pa), p, out)
+    return None if rc is None else out
 
 
 def lm_score_docs(texts, offs: np.ndarray, n: int, keys: np.ndarray,
@@ -1779,23 +1515,14 @@ def lm_score_docs(texts, offs: np.ndarray, n: int, keys: np.ndarray,
     """Per-doc (n_grams, logp_micro) against an open-addressing packed
     LM table (keys/vals pow2-sized, -1 = empty).  None = unavailable or
     malformed UTF-8 — caller uses the expression path."""
-    lib = get_lib()
-    if lib is None:
-        return None
     ndocs = len(offs) - 1
     ng = np.zeros(ndocs, dtype=np.int64)
     lp = np.zeros(ndocs, dtype=np.int64)
-    i64p = ctypes.POINTER(ctypes.c_int64)
     offs = np.ascontiguousarray(offs, dtype=np.int64)
-    rc = lib.lm_score_docs(
-        texts, offs.ctypes.data_as(i64p), ndocs, n,
-        keys.ctypes.data_as(i64p), vals.ctypes.data_as(i64p),
-        len(keys) - 1, logp0,
-        ng.ctypes.data_as(i64p), lp.ctypes.data_as(i64p),
-    )
-    if rc != 0:
-        return None
-    return ng, lp
+    rc = _call("lm_score_docs", texts, offs, ndocs, n, keys, vals, len(keys) - 1, logp0, ng, lp)
+    if rc is not None and rc != 0:
+        fallbacks["lm_score_docs"] += 1
+    return (ng, lp) if rc == 0 else None
 
 
 def build_lm_table(pairs, pack):

@@ -255,35 +255,19 @@ def _signatures_kernel_md5(df: DataFrame, text_col: str = "text") -> DataFrame:
     pb_arr = [b for _, b in MINHASH_PARAMS]
 
     def kernel(batches):
-        import ctypes as _ct
-
         import numpy as np
         import pyarrow as pa
 
         from .. import native as _native
+        from ..sources.images import _binary_offsets_data
 
         pa_np = np.asarray(pa_arr, dtype=np.int64)
         pb_np = np.asarray(pb_arr, dtype=np.int64)
         for b in batches:
             arr = b.column(1)
-            otype = (
-                np.int64
-                if pa.types.is_large_string(arr.type) or pa.types.is_large_binary(arr.type)
-                else np.int32
-            )
-            bufs = arr.buffers()
-            off = np.frombuffer(bufs[1], otype)[
-                arr.offset : arr.offset + len(arr) + 1
-            ].astype(np.int64, copy=False)
-            data = (
-                np.frombuffer(bufs[2], np.uint8)
-                if bufs[2] is not None
-                else np.zeros(1, np.uint8)
-            )
+            off, data = _binary_offsets_data(arr)
             sigs = (
-                _native.minhash_doc_sigs(
-                    data.ctypes.data_as(_ct.c_char_p), off, pa_np, pb_np, MINHASH_P
-                )
+                _native.minhash_doc_sigs(data, off, pa_np, pb_np, MINHASH_P)
                 if not arr.null_count
                 else None
             )
@@ -819,32 +803,12 @@ def _positional_gram_hashes(
         import pyarrow as pa
 
         from .. import native as _native
-
-        import ctypes as _ct
+        from ..sources.images import _binary_offsets_data
 
         for b in batches:
             arr = b.column(1)
-            otype = (
-                np.int64
-                if pa.types.is_large_string(arr.type) or pa.types.is_large_binary(arr.type)
-                else np.int32
-            )
-            bufs = arr.buffers()
-            off = np.frombuffer(bufs[1], otype)[
-                arr.offset : arr.offset + len(arr) + 1
-            ].astype(np.int64, copy=False)
-            data = (
-                np.frombuffer(bufs[2], np.uint8)
-                if bufs[2] is not None
-                else np.zeros(1, np.uint8)
-            )
-            r = (
-                _native.md5_word_grams(
-                    data.ctypes.data_as(_ct.c_char_p), off, n
-                )
-                if not arr.null_count
-                else None
-            )
+            off, data = _binary_offsets_data(arr)
+            r = _native.md5_word_grams(data, off, n) if not arr.null_count else None
             if r is None:
                 # hashlib twin — same bytes hashed, bit-identical; also
                 # the null-text path (a null explodes to ZERO gram rows

@@ -761,26 +761,15 @@ def resample_bilinear_stats(
                     *_interp_tables(tw, out_w),
                 )
                 tmp = np.empty(out_h * tw, dtype=np.float64)
-                use_native = (
-                    pxs[idxs[0]].dtype == np.uint8
-                    and _native.get_lib() is not None
-                )
-                for c0 in range(0, len(idxs), 128 if use_native else 8):
-                    # numpy fallback keeps small chunks: large stacks
-                    # spill L2 on the float64 intermediates (same
-                    # measured effect as the JPEG IDCT chunking) — 8
-                    # tiles measured 32.6 us/tile vs 85 per-tile
-                    sub = idxs[c0 : c0 + (128 if use_native else 8)]
+                for c0 in range(0, len(idxs), 128):
+                    sub = idxs[c0 : c0 + 128]
                     stack = np.ascontiguousarray(
                         np.stack([pxs[k] for k in sub])
                     )
-                    if use_native:
-                        rs = np.empty(
-                            (len(sub), out_h, out_w), dtype=np.float64
-                        )
-                        if not _native.bilinear_stack(stack, tabs, rs, tmp):
-                            rs = bilinear_resample(stack, out_h, out_w)
-                    else:
+                    rs = np.empty((len(sub), out_h, out_w), dtype=np.float64)
+                    if stack.dtype != np.uint8 or not _native.bilinear_stack(
+                        stack, tabs, rs, tmp
+                    ):
                         rs = bilinear_resample(stack, out_h, out_w)
                     means[sub] = rs.reshape(len(sub), -1).mean(axis=1)
             yield pd.DataFrame(

@@ -360,39 +360,23 @@ def _lm_score_kernel(
     grams emit no row — identical to the gram-explode + groupBy form."""
 
     def kernel(batches):
-        import ctypes as _ct
-
         import numpy as np
         import pyarrow as pa
 
         from .. import native as _nat
+        from ..sources.images import _binary_offsets_data
 
         keys = vals = None
         lm_dict = None
         for b in batches:
             arr = b.column(1)
             doc_ids = b.column(0).to_numpy(zero_copy_only=False)
-            otype = (
-                np.int64
-                if pa.types.is_large_string(arr.type) or pa.types.is_large_binary(arr.type)
-                else np.int32
-            )
-            bufs = arr.buffers()
-            off = np.frombuffer(bufs[1], otype)[
-                arr.offset : arr.offset + len(arr) + 1
-            ].astype(np.int64, copy=False)
-            data = (
-                np.frombuffer(bufs[2], np.uint8)
-                if bufs[2] is not None
-                else np.zeros(1, np.uint8)
-            )
+            off, data = _binary_offsets_data(arr)
             r = None
             if not arr.null_count:
                 if keys is None:
                     keys, vals = _nat.build_lm_table(lm_pairs, _lm_pack)
-                r = _nat.lm_score_docs(
-                    data.ctypes.data_as(_ct.c_char_p), off, n, keys, vals, logp0_int
-                )
+                r = _nat.lm_score_docs(data, off, n, keys, vals, logp0_int)
             if r is None:  # python twin: same code points, same lookups
                 if lm_dict is None:
                     lm_dict = dict(lm_pairs)

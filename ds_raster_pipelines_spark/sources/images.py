@@ -25,15 +25,19 @@ DECODE_STATS_SCHEMA = (
 
 
 def _binary_offsets_data(arr) -> tuple[np.ndarray, np.ndarray]:
-    """Zero-copy (offsets, data) views of an Arrow binary array — avoids
-    materializing per-row Python bytes objects (the dominant cost of the
-    pandas path: converting a big binary column to pandas is slower than
-    the decode math itself)."""
+    """Zero-copy (offsets, data) views of an Arrow binary or string array
+    (large types included) — avoids materializing per-row Python objects
+    (the dominant cost of the pandas path: converting a big binary column
+    to pandas is slower than the decode math itself).  An array without a
+    data buffer (every value empty or null) gets a one-byte zero buffer,
+    so ``data`` always has an address."""
     import pyarrow as pa
 
-    otype = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
-    off = np.frombuffer(arr.buffers()[1], otype)[arr.offset : arr.offset + len(arr) + 1]
-    data = np.frombuffer(arr.buffers()[2], np.uint8)
+    large = pa.types.is_large_binary(arr.type) or pa.types.is_large_string(arr.type)
+    bufs = arr.buffers()
+    off = np.frombuffer(bufs[1], np.int64 if large else np.int32)
+    off = off[arr.offset : arr.offset + len(arr) + 1]
+    data = np.frombuffer(bufs[2], np.uint8) if bufs[2] is not None else np.zeros(1, np.uint8)
     return off.astype(np.int64, copy=False), data
 
 

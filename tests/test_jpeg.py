@@ -108,9 +108,12 @@ def test_decoder_reads_tables_from_stream():
     assert np.array_equal(out_orig, px) or codecs.psnr(px, out_orig) > 30
 
 
-def test_restart_markers_decode():
+def test_restart_markers_decode(monkeypatch):
     """DRI + RSTn streams (encoder never emits them; real cameras do):
-    hand-build a two-interval stream and check the DC predictor resets."""
+    hand-build a two-interval stream and check the DC predictor resets.
+    The native scan decodes both intervals as segments (spied: it must
+    succeed), and equals the forced-Python decode; with the second
+    interval dropped both paths raise the same block-count error."""
     px = _gradient(1)
     blob = jpeg.encode_jpeg(px, 90)
     # re-wrap: decode to coefficients is internal, so emulate by splitting
@@ -146,7 +149,26 @@ def test_restart_markers_decode():
         + scan_of(s2)
         + b"\xff\xd9"
     )
+    from ds_raster_pipelines_spark import native
+
     assert np.array_equal(jpeg.decode_jpeg(spliced), px)
+    if native.get_lib() is None:
+        pytest.skip("no toolchain: the Python scan is the only path")
+    calls = []
+    real = native.jpeg_decode_scan_multi
+    monkeypatch.setattr(
+        native, "jpeg_decode_scan_multi", lambda *a: calls.append(real(*a)) or calls[-1]
+    )
+    got = jpeg.decode_jpeg(spliced)
+    assert calls == [True]
+    short = spliced[: spliced.index(b"\xff\xd0")] + b"\xff\xd9"
+    with pytest.raises(ValueError) as native_err:
+        jpeg.decode_jpeg(short)
+    monkeypatch.setattr(native, "_lib", None)
+    assert np.array_equal(jpeg.decode_jpeg(spliced), got)
+    with pytest.raises(ValueError) as python_err:
+        jpeg.decode_jpeg(short)
+    assert str(native_err.value) == str(python_err.value) == "decoded 32 blocks, SOF promises 64"
 
 
 def test_corruption_guards():

@@ -9,6 +9,10 @@ trivially pass (both runs use Python) and the build test records why.
 
 from __future__ import annotations
 
+import collections
+import re
+import shutil
+
 import numpy as np
 import pytest
 
@@ -91,10 +95,10 @@ def test_native_matches_python_after_fallback_reset(quality):
 
 
 def test_decode_jpeg_batch_equals_single():
-    """Cross-frame batched IDCT parity: decode_jpeg_batch must produce
-    byte-identical frames to per-frame decode_jpeg over mixed sizes,
-    qualities, and the corpus gradient domain (batching only grows the
-    leading dgemm dimension)."""
+    """decode_jpeg_batch_stats (shared-header groups, sums inside the
+    native IDCT) equals (px.size, px.sum()) over per-frame decode_jpeg
+    over mixed sizes, qualities and the corpus gradient domain; odd
+    dimensions (13x21) take the per-frame crop path and stay exact."""
     rng = np.random.RandomState(11)
     blobs = []
     for t in range(25):
@@ -105,25 +109,14 @@ def test_decode_jpeg_batch_equals_single():
     base = np.arange(64, dtype=np.uint8)[None, :]
     for c in range(0, 97, 11):
         blobs.append(jpeg.encode_jpeg((base + np.uint8(c)).repeat(64, axis=0), 90))
-    batch = jpeg.decode_jpeg_batch(blobs)
-    for got, blob in zip(batch, blobs):
-        assert np.array_equal(got, jpeg.decode_jpeg(blob))
-
-
-def test_avi_frames_multi_equals_per_blob():
-    """decode_avi_frames_multi (the batched video-stats path) returns the
-    same frame arrays as per-blob decode_avi_frames for both codecs."""
-    from ds_raster_pipelines_spark import avi
-    from ds_raster_pipelines_spark.sources.multimodal import video_frames_for
-
-    for codec_enc in (avi.encode_avi_mjpeg, avi.encode_avi_dct):
-        vids = [codec_enc(video_frames_for(i)) for i in range(6)]
-        multi = avi.decode_avi_frames_multi(vids, 2)
-        for vid, frames in zip(vids, multi):
-            ref = avi.decode_avi_frames(vid, 2)
-            assert len(frames) == len(ref)
-            for a, b in zip(frames, ref):
-                assert np.array_equal(a, b)
+    for h, w in ((13, 21), (64, 64), (48, 40)):
+        blobs.append(jpeg.encode_jpeg(rng.randint(0, 256, size=(h, w)).astype(np.uint8), 85))
+    before = native.fallbacks.copy()
+    got = jpeg.decode_jpeg_batch_stats(blobs)
+    if native.get_lib() is not None:
+        assert not native.fallbacks - before  # every frame took the native path
+    want = [(px.size, int(px.sum(dtype=np.int64))) for px in map(jpeg.decode_jpeg, blobs)]
+    assert got == want
 
 
 def test_native_idct_parity_dense_random_stacks():
@@ -174,6 +167,25 @@ def test_native_idct_parity_decode_dct():
     for c in range(0, 97, 13):
         fr = (base + np.uint8(c)).repeat(64, axis=0)
         assert np.array_equal(codecs.decode_dct(codecs.encode_dct(fr, 90)), fr)
+    # a payload with more blocks than its header's frame holds, or a frame
+    # that is not whole blocks: the numpy path's error, never a native write
+    import struct
+    import zlib
+
+    for w, h, nblocks in ((8, 8, 40), (12, 12, 1)):
+        blob = codecs._DCT_MAGIC + struct.pack("<HHB", w, h, 90) + zlib.compress(
+            np.ones(64 * nblocks, "<i2").tobytes()
+        )
+        with pytest.raises(ValueError) as got:
+            codecs.decode_dct(blob)
+        saved = native._lib
+        native._lib = None
+        try:
+            with pytest.raises(ValueError) as want:
+                codecs.decode_dct(blob)
+        finally:
+            native._lib = saved
+        assert str(got.value) == str(want.value)
 
 
 def test_native_idct_odd_dims_crop():
@@ -188,52 +200,6 @@ def test_native_idct_odd_dims_crop():
         a = jpeg.decode_jpeg(blob)
         assert a.shape == (h, w)
         assert np.array_equal(a, _decode_python(blob))
-
-
-def test_frame_stats_multi_equals_decoded_sums():
-    """avi.frame_stats_multi (native in-IDCT sums) must equal
-    (px.size, px.sum()) over decode_avi_frames for both codecs and for
-    the pure-Python fallback."""
-    from ds_raster_pipelines_spark import avi
-
-    rng = np.random.RandomState(9)
-    blobs = []
-    for k in range(6):
-        frames = [
-            rng.randint(0, 256, size=(64, 64)).astype(np.uint8)
-            for _ in range(3 + k % 3)
-        ]
-        enc = avi.encode_avi_mjpeg if k % 2 == 0 else avi.encode_avi_dct
-        blobs.append(enc(frames))
-    for every_n in (1, 2):
-        want = [
-            [(px.size, int(px.sum(dtype=np.int64))) for px in frames]
-            for frames in (avi.decode_avi_frames(b, every_n) for b in blobs)
-        ]
-        assert avi.frame_stats_multi(blobs, every_n) == want
-        saved = native._lib
-        native._lib = None
-        try:
-            assert avi.frame_stats_multi(blobs, every_n) == want
-        finally:
-            native._lib = saved
-
-
-def test_decode_jpeg_batch_stats_odd_dims():
-    """Odd-dimension streams (crop needed) must take the pixel path and
-    still return exact cropped sums."""
-    from ds_raster_pipelines_spark import jpeg as J
-
-    rng = np.random.RandomState(2)
-    imgs = [rng.randint(0, 256, size=(13, 21)).astype(np.uint8),
-            rng.randint(0, 256, size=(64, 64)).astype(np.uint8)]
-    streams = [J.encode_jpeg(im, 85) for im in imgs]
-    got = J.decode_jpeg_batch_stats(streams)
-    want = [
-        (px.size, int(px.sum(dtype=np.int64)))
-        for px in (J.decode_jpeg(s) for s in streams)
-    ]
-    assert got == want
 
 
 def _parse_avi_python(blob: bytes):
@@ -330,7 +296,7 @@ def test_native_avi_scan_truncated_strh_falls_back():
     assert native.avi_scan(blob) is None
     assert avi.parse_avi(blob).handler == _parse_avi_python(blob).handler == b"MJ"
     with pytest.raises(NotImplementedError) as want:
-        avi.frame_stats_multi([blob])
+        avi.decode_avi_frames(blob)
     assert repr(b"MJ") in str(want.value)
     off, data = _binary_offsets_data(pa.array([blob], type=pa.binary()))
     with pytest.raises(NotImplementedError) as got:
@@ -360,8 +326,9 @@ def test_native_avi_scan_grows_past_frame_cap(monkeypatch):
 
 
 def test_frame_stats_arrow_equals_multi():
-    """frame_stats_arrow over Arrow (offsets, data) views == the
-    list-of-bytes frame_stats_multi, for MJPG and DCT handlers, all
+    """frame_stats_arrow over Arrow (offsets, data) views == (px.size,
+    px.sum()) over decode_avi_frames, for MJPG and DCT handlers, 16x24
+    frames and 64x64 ones (MJPG sums inside the native IDCT), all
     sampling phases, and with the native library forced off."""
     import pyarrow as pa
 
@@ -370,9 +337,10 @@ def test_frame_stats_arrow_equals_multi():
 
     rng = np.random.default_rng(3)
     blobs = []
-    for k in range(6):
+    for k in range(8):
+        shape = (64, 64) if k >= 4 else (16, 24)
         frames = [
-            rng.integers(0, 256, size=(16, 24), dtype=np.uint8)
+            rng.integers(0, 256, size=shape, dtype=np.uint8)
             for _ in range(2 + k % 3)
         ]
         enc = avi.encode_avi_mjpeg if k % 2 else avi.encode_avi_dct
@@ -380,7 +348,10 @@ def test_frame_stats_arrow_equals_multi():
     arr = pa.array(blobs, type=pa.binary())
     off, data = _binary_offsets_data(arr)
     for every_n, offset in ((1, 0), (2, 0), (2, 1), (3, 1)):
-        expect = avi.frame_stats_multi(blobs, every_n, offset)
+        expect = [
+            [(px.size, int(px.sum(dtype=np.int64))) for px in avi.decode_avi_frames(b, every_n, offset)]
+            for b in blobs
+        ]
         assert avi.frame_stats_arrow(off, data, every_n, offset) == expect
         saved = native._lib
         native._lib = None
@@ -511,14 +482,16 @@ def drop_toolchain(monkeypatch, tmp_path):
         monkeypatch.setattr(native, "_lib", None)
         monkeypatch.setattr(native, "_lib_tried", False)
         monkeypatch.setattr(native, "build_error", None)
+        monkeypatch.setattr(native, "fallbacks", collections.Counter())
 
     return drop
 
 
 def _decode_both_paths(batch, drop_toolchain, caplog):
     """decode_stats on one batch with the native library, then without it
-    (the no-toolchain path: the numpy reduceat reference).  The failed
-    build is logged exactly once per process."""
+    (the no-toolchain path: the numpy reduceat reference): byte-identical
+    output, the failed build logged exactly once per process, and the
+    fallback counted."""
     from ds_raster_pipelines_spark.sources.images import _decode_stats_batch
 
     native.get_lib()
@@ -531,7 +504,8 @@ def _decode_both_paths(batch, drop_toolchain, caplog):
     warnings = [r for r in caplog.records if r.name == native.__name__]
     assert len(warnings) == 1 and warnings[0].levelname == "WARNING"
     assert native.build_error and native.build_error in warnings[0].getMessage()
-    return with_lib, without
+    assert native.fallbacks["seg_sum_min_max"] > 0
+    assert with_lib.equals(without)
 
 
 def test_seg_sum_min_max_parity_gaps_and_trailing():
@@ -563,10 +537,7 @@ def test_seg_sum_min_max_parity_gaps_and_trailing():
 def test_decode_stats_fixed_path_parity_trailing_segment(drop_toolchain, caplog):
     """Full-size raw tiles, the last one ending at the end of the Arrow
     data buffer: native and no-toolchain decode give identical stats."""
-    with_lib, without = _decode_both_paths(
-        _raw_tiles_batch([4096, 1, 4096, 333, 4096], 1), drop_toolchain, caplog
-    )
-    assert with_lib.equals(without)
+    _decode_both_paths(_raw_tiles_batch([4096, 1, 4096, 333, 4096], 1), drop_toolchain, caplog)
 
 
 def test_decode_stats_fixed_path_parity_zero_pixel_row(drop_toolchain, caplog):
@@ -578,5 +549,40 @@ def test_decode_stats_fixed_path_parity_zero_pixel_row(drop_toolchain, caplog):
     off, data = _binary_offsets_data(batch.column(5))
     assert native.seg_sum_min_max(data, np.repeat(off, 2)[1:-1]) is None
     with np.errstate(divide="ignore", invalid="ignore"):
-        with_lib, without = _decode_both_paths(batch, drop_toolchain, caplog)
-    assert with_lib.equals(without)
+        _decode_both_paths(batch, drop_toolchain, caplog)
+
+
+def test_binding_table_matches_c_source():
+    """_SIGNATURES declares exactly the exported (non-static) C entries of
+    _C_SRC, one argument code per parameter, each code matching the
+    parameter's C type, and every entry resolves on the loaded library."""
+    src = re.sub(r"/\*.*?\*/", "", native._C_SRC, flags=re.S)
+    defs = re.findall(r"^long (\w+)\(([^)]*)\)", src, re.M)
+    assert {name for name, _ in defs} == set(native._SIGNATURES)
+    for name, params in defs:
+        codes = [
+            "p" if "*" in prm else {"long": "l", "int64_t": "q", "int": "i"}[prm.split()[-2]]
+            for prm in (" ".join(x.split()) for x in params.split(","))
+        ]
+        assert "".join(codes) == native._SIGNATURES[name], name
+    lib = native.get_lib()
+    if lib is not None:
+        for name in native._SIGNATURES:
+            assert getattr(lib, name).argtypes, name
+
+
+def test_kernel_cache_keyed_on_cpu_flags(monkeypatch, tmp_path):
+    """Two CPU-flag strings give two cache paths, and a library planted at
+    the other CPU's path is never loaded."""
+    lib = native.get_lib()
+    if lib is None:
+        pytest.skip("no toolchain: nothing to cache")
+    monkeypatch.setattr(native, "_CACHE_ROOT", str(tmp_path))
+    here, other = "flags : fpu sse2 avx2", "flags : fpu sse2 avx512f"
+    assert native._so_path(here) != native._so_path(other)
+    shutil.copy(lib._name, native._so_path(here))
+    with open(native._so_path(other), "wb") as fh:
+        fh.write(b"a library built for another CPU")
+    monkeypatch.setattr(native, "_cpu_flags", lambda: here)
+    got = native._build()
+    assert got is not None and got._name == native._so_path(here)
