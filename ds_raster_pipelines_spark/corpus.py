@@ -30,7 +30,10 @@ salted-join path). Integer bounds guarantee no centroid-on-edge ties
 
 from __future__ import annotations
 
+import os
+import shutil
 import struct
+from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
@@ -199,13 +202,6 @@ def images_from_range(spark: SparkSession, n: int, partitions: int | None = None
     return images_from_ids(ids.withColumnRenamed("id", "i"), partitions=0)
 
 
-def images_from_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus keyed by o_orderkey — gives the DuckDB oracle the identical
-    deterministic id set without shipping bytes to SQL."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    return images_from_ids(orders.select(F.col("o_orderkey").alias("i")))
-
-
 # Generator version — bump when the corpus definition changes so stale
 # materializations are regenerated.
 CORPUS_VERSION = "v3-pcell"
@@ -265,128 +261,48 @@ def _write_corpus(
         images.write.mode(mode).parquet(path)
 
 
-def read_corpus(spark: SparkSession, path: str) -> DataFrame:
-    """Corpus scan; `pcell` is the partition column (filter it for pruning)."""
-    return spark.read.parquet(path)
+# Root of the stored-table cache: every materialized_* table lives at
+# CACHE_ROOT/CORPUS_VERSION/<name> and is built at most once per version.
+CACHE_ROOT = "/tmp/spark_graft_corpus"
+
+# Ids per append job of a chunked build (materialized_images_n halves it
+# beyond 64M tiles; see there).
+IMAGES_CHUNK = 4_000_000
+DOCS_CHUNK = 8_000_000
 
 
-def materialized_images(spark: SparkSession, sf_dir: str, cache_root: str = "/tmp/spark_graft_corpus") -> str:
-    """Materialize the synthetic corpus for ``sf_dir`` as a cell-partitioned
-    parquet table (once), and return its path.
+def stored(name: str, write: Callable[[str], None]) -> str:
+    """Path of the stored table ``name``, calling ``write(path)`` first if
+    it is not complete yet.
 
-    This mirrors production: the image corpus is a stored Iceberg-layout
-    table (partitioned by coarse cell), not something generated inline — so
-    the flagship query has exactly ONE Python stage (the decode kernel).
-    Chaining Arrow kernels (generate → decode) ships the binary column
-    across two JVM↔Python boundaries, which measures at >10x the kernel
-    cost; never do that.
-    """
-    import os
-
-    key = sf_dir.rstrip("/").replace("/", "_").lstrip("_")
-    path = f"{cache_root}/{CORPUS_VERSION}/{key}"
-    marker = f"{path}/_SUCCESS"
-    if not os.path.exists(marker):
-        # pass the ID STREAM, not an images plan: column pruning cannot
-        # reach through mapInPandas, so handing _write_corpus a generated
-        # images DataFrame would synthesize every tile's bytes TWICE
-        # (once under the pcell/count derivation, once for the write)
-        orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-        _write_corpus(orders.select(F.col("o_orderkey").alias("i")), path)
+    A table is complete once its ``_SUCCESS`` marker exists (Spark's
+    committer writes it last), so a directory without one is the partial
+    output of a killed build: it is removed before ``write`` runs, and
+    ``write`` may use a plain ``.write.parquet(path)``."""
+    path = f"{CACHE_ROOT}/{CORPUS_VERSION}/{name}"
+    if not os.path.exists(f"{path}/_SUCCESS"):
+        shutil.rmtree(path, ignore_errors=True)
+        write(path)
     return path
 
 
-def materialized_images_flipped(
-    spark: SparkSession,
-    sf_dir: str,
-    orientation: str = "flip_lon",
-    cache_root: str = "/tmp/spark_graft_corpus",
+def stored_chunked(
+    spark: SparkSession, name: str, n: int, chunk: int, write_ids: Callable[[DataFrame, str], None]
 ) -> str:
-    """Same corpus stored in a flipped pixel orientation (F3 ingest case:
-    south-up / lon-descending sources). Footprints identical; the decode
-    kernels must normalize via the lon_ascending/lat_descending columns
-    for downstream stats to match the canonical corpus."""
-    import os
+    """``stored`` for a table over ids 0..n-1 built as resumable append
+    jobs: ``write_ids(ids, tmp)`` appends the rows of one ``spark.range``
+    chunk (column ``id``) to the staging directory ``tmp``.
 
-    key = sf_dir.rstrip("/").replace("/", "_").lstrip("_")
-    path = f"{cache_root}/{CORPUS_VERSION}/{key}_{orientation}"
-    if not os.path.exists(f"{path}/_SUCCESS"):
-        orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-        ids = orders.select(F.col("o_orderkey").alias("i"))
-        _write_corpus(ids, path, orientation=orientation)
-    return path
+    Per-chunk resume (multi-hour builds must survive a kill): a manifest
+    records each chunk's id-range AFTER its append job commits. Spark's
+    FileOutputCommitter stages task files under _temporary and commits at
+    job end, so a killed chunk leaves only staging dirs — scrub those, skip
+    manifested chunks, and the restart continues where the last commit
+    left off. This is the same lineage-manifest discipline the Iceberg
+    snapshot log uses (streaming/incremental.py), applied to staging."""
 
-
-def materialized_images_fmt(
-    spark: SparkSession,
-    sf_dir: str,
-    fmt: str = "tif",
-    cache_root: str = "/tmp/spark_graft_corpus",
-) -> str:
-    """Same corpus stored with every tile in one on-disk format — e.g.
-    ``tif`` (strip PackBits) / ``cog`` (tiled + overview), the reference's
-    actual raster containers (floodscan_pipeline.py:384, pipeline.py:277).
-    Pixel values identical to the canonical corpus (both lossless), so the
-    closed-form pixel oracles apply with the qnt branch dropped."""
-    import os
-
-    key = sf_dir.rstrip("/").replace("/", "_").lstrip("_")
-    path = f"{cache_root}/{CORPUS_VERSION}/{key}_{fmt}"
-    if not os.path.exists(f"{path}/_SUCCESS"):
-        orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-        ids = orders.select(F.col("o_orderkey").alias("i"))
-        _write_corpus(ids, path, fmt_override=fmt)
-    return path
-
-
-def materialized_images_n(
-    spark: SparkSession, n: int, cache_root: str = "/tmp/spark_graft_corpus"
-) -> str:
-    """Materialize an n-tile corpus (ids 0..n-1) — used by the scaling
-    benchmark, where the workload must be compute-dominated at both
-    parallelism levels (sf0.1's 150k tiles finish in seconds and measure
-    scheduler overhead, not scaling)."""
-    import os
-
-    path = f"{cache_root}/{CORPUS_VERSION}/range_{n}"
-    if not os.path.exists(f"{path}/_SUCCESS"):
-        if os.path.exists(path):
-            # stale partial corpus from a run that crashed before the final
-            # rename ever wrote _SUCCESS — remove it (mirroring the tmp
-            # cleanup below) or the os.rename at the end wedges every run
-            import shutil
-
-            shutil.rmtree(path)
-        import shutil
-        # ids only (see materialized_images: no images plan through
-        # _write_corpus), and n_rows passed so no count job runs at all.
-        # Generation runs in <=4M-tile JOBS (append per chunk): bounding
-        # per-task output volume sidesteps a python-runner flow-control
-        # wedge observed on this box when a single byte-generating task
-        # emits ~2 GB (worker stuck in tcp_sendmsg / task thread in epoll
-        # at 32M tiles x 64 tasks) — and at warehouse scale you'd stage a
-        # 128 GB corpus as resumable chunked jobs anyway.
-        # Per-task output volume must stay well under the python-runner
-        # socket envelope (~500 MB/task is the edge: a 128M-tile build at
-        # 4M-tile chunks put ~525 MB on each of 32 generator tasks and a
-        # worker crashed mid-write with a broken Arrow pipe — same failure
-        # family as the round-3 2 GB wedge). Halve the chunk beyond 64M
-        # tiles: ~260 MB/task, comfortably inside the envelope.
-        chunk = int(
-            os.environ.get(
-                "SPARK_GRAFT_CORPUS_CHUNK",
-                4_000_000 if n <= 64_000_000 else 2_000_000,
-            )
-        )
+    def build(path: str) -> None:
         tmp = f"{path}.__building__"
-        # Per-chunk resume (multi-hour builds must survive a kill): a
-        # manifest records each chunk's id-range AFTER its append job
-        # commits. Spark's FileOutputCommitter stages task files under
-        # _temporary and commits at job end, so a killed chunk leaves
-        # only staging dirs — scrub those, skip manifested chunks, and
-        # the restart continues where the last commit left off. This is
-        # the same lineage-manifest discipline the Iceberg snapshot log
-        # uses (streaming/incremental.py), applied to corpus staging.
         manifest = f"{tmp}/_CHUNKS_DONE"
         done: set[int] = set()
         if os.path.exists(manifest):
@@ -402,22 +318,122 @@ def materialized_images_n(
         for lo in range(0, n, chunk):
             if lo in done:
                 continue
-            ids = spark.range(lo, min(lo + chunk, n), 1, spark.sparkContext.defaultParallelism)
-            # n_rows=n keeps the layout decision (partitionBy vs plain)
-            # identical across chunks
-            _write_corpus(ids.withColumnRenamed("id", "i"), tmp, n_rows=n, mode="append")
+            hi = min(lo + chunk, n)
+            write_ids(spark.range(lo, hi, 1, spark.sparkContext.defaultParallelism), tmp)
             with open(manifest, "a") as f:
-                f.write(f"{lo} {min(lo + chunk, n)}\n")
+                f.write(f"{lo} {hi}\n")
         os.remove(manifest)
         # crash-window guard (ADVICE r7): a chunk whose append committed
-        # but whose manifest line was never written re-appends on resume.
-        # Validate total rows before publishing; on mismatch rebuild.
+        # but whose manifest line was never written is re-appended on
+        # resume, silently duplicating up to one chunk of rows. Validate
+        # the total row count before publishing (metadata-only parquet
+        # count); on mismatch rebuild from scratch.
         if spark.read.parquet(tmp).count() != n:
             shutil.rmtree(tmp)
-            return materialized_images_n(spark, n, cache_root)
+            return build(path)
         os.rename(tmp, path)
         open(f"{path}/_SUCCESS", "a").close()
-    return path
+
+    return stored(name, build)
+
+
+def sf_name(sf_dir: str, suffix: str = "") -> str:
+    """Stored-table name of a table derived from ``sf_dir``."""
+    return sf_dir.rstrip("/").replace("/", "_").lstrip("_") + suffix
+
+
+def order_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The corpus id stream of ``sf_dir``: one ``i`` per o_orderkey, so the
+    DuckDB oracle sees the identical deterministic id set.
+
+    Materializers hand _write_corpus this ID STREAM, not an images plan:
+    column pruning cannot reach through mapInPandas, so a generated images
+    DataFrame would synthesize every tile's bytes TWICE (once under the
+    pcell/count derivation, once for the write)."""
+    return spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+        F.col("o_orderkey").alias("i")
+    )
+
+
+def stored_per_order(
+    spark: SparkSession, sf_dir: str, suffix: str, build: Callable[[DataFrame], DataFrame]
+) -> str:
+    """``stored`` table ``sf_name(sf_dir, suffix)`` of one generated blob
+    row per order id: ``build`` maps the id stream, hash-spread over one
+    partition per core, to the rows."""
+    return stored(
+        sf_name(sf_dir, suffix),
+        lambda p: build(
+            order_ids(spark, sf_dir).repartition(spark.sparkContext.defaultParallelism, "i")
+        ).write.parquet(p),
+    )
+
+
+def materialized_images(spark: SparkSession, sf_dir: str) -> str:
+    """Materialize the synthetic corpus for ``sf_dir`` as a cell-partitioned
+    parquet table (once), and return its path.
+
+    This mirrors production: the image corpus is a stored Iceberg-layout
+    table (partitioned by coarse cell), not something generated inline — so
+    the flagship query has exactly ONE Python stage (the decode kernel).
+    Chaining Arrow kernels (generate → decode) ships the binary column
+    across two JVM↔Python boundaries, which measures at >10x the kernel
+    cost; never do that.
+    """
+    return stored(sf_name(sf_dir), lambda p: _write_corpus(order_ids(spark, sf_dir), p))
+
+
+def materialized_images_flipped(
+    spark: SparkSession, sf_dir: str, orientation: str = "flip_lon"
+) -> str:
+    """Same corpus stored in a flipped pixel orientation (F3 ingest case:
+    south-up / lon-descending sources). Footprints identical; the decode
+    kernels must normalize via the lon_ascending/lat_descending columns
+    for downstream stats to match the canonical corpus."""
+    return stored(
+        sf_name(sf_dir, f"_{orientation}"),
+        lambda p: _write_corpus(order_ids(spark, sf_dir), p, orientation=orientation),
+    )
+
+
+def materialized_images_fmt(spark: SparkSession, sf_dir: str, fmt: str = "tif") -> str:
+    """Same corpus stored with every tile in one on-disk format — e.g.
+    ``tif`` (strip PackBits) / ``cog`` (tiled + overview), the reference's
+    actual raster containers (floodscan_pipeline.py:384, pipeline.py:277).
+    Pixel values identical to the canonical corpus (both lossless), so the
+    closed-form pixel oracles apply with the qnt branch dropped."""
+    return stored(
+        sf_name(sf_dir, f"_{fmt}"),
+        lambda p: _write_corpus(order_ids(spark, sf_dir), p, fmt_override=fmt),
+    )
+
+
+def materialized_images_n(spark: SparkSession, n: int) -> str:
+    """Materialize an n-tile corpus (ids 0..n-1) — used by the scaling
+    benchmark, where the workload must be compute-dominated at both
+    parallelism levels (sf0.1's 150k tiles finish in seconds and measure
+    scheduler overhead, not scaling)."""
+    # Generation runs in chunked append JOBS: bounding per-task output
+    # volume sidesteps a python-runner flow-control wedge observed on this
+    # box when a single byte-generating task emits ~2 GB (worker stuck in
+    # tcp_sendmsg / task thread in epoll at 32M tiles x 64 tasks) — and at
+    # warehouse scale you'd stage a 128 GB corpus as resumable chunked
+    # jobs anyway. Per-task output volume must stay well under the
+    # python-runner socket envelope (~500 MB/task is the edge: a
+    # 128M-tile build at 4M-tile chunks put ~525 MB on each of 32
+    # generator tasks and a worker crashed mid-write with a broken Arrow
+    # pipe — same failure family as the round-3 2 GB wedge). Halve the
+    # chunk beyond 64M tiles: ~260 MB/task, comfortably inside the
+    # envelope.
+    chunk = IMAGES_CHUNK if n <= 64_000_000 else IMAGES_CHUNK // 2
+    # n_rows=n skips the count job and keeps the layout decision
+    # (partitionBy vs plain) identical across chunks
+    return stored_chunked(
+        spark, f"range_{n}", n, chunk,
+        lambda ids, tmp: _write_corpus(
+            ids.withColumnRenamed("id", "i"), tmp, n_rows=n, mode="append"
+        ),
+    )
 
 
 # ------------------------------------------------------- admin polygons ---
@@ -820,52 +836,11 @@ def synthetic_docs(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def materialized_docs_n(
-    spark: SparkSession, n: int, cache_root: str = "/tmp/spark_graft_corpus"
-) -> str:
+def materialized_docs_n(spark: SparkSession, n: int) -> str:
     """Materialize an n-doc synthetic documents table (resumable chunked
-    append jobs, same lineage-manifest discipline as
-    materialized_images_n)."""
-    import os
-    import shutil
-
-    path = f"{cache_root}/{CORPUS_VERSION}/docs_{n}"
-    if not os.path.exists(f"{path}/_SUCCESS"):
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        chunk = int(os.environ.get("SPARK_GRAFT_DOCS_CHUNK", "8000000"))
-        tmp = f"{path}.__building__"
-        manifest = f"{tmp}/_CHUNKS_DONE"
-        done: set[int] = set()
-        if os.path.exists(manifest):
-            with open(manifest) as f:
-                done = {int(line.split()[0]) for line in f if line.strip()}
-            for root, dirs, _files in os.walk(tmp):
-                for d in list(dirs):
-                    if d == "_temporary":
-                        shutil.rmtree(os.path.join(root, d))
-                        dirs.remove(d)
-        elif os.path.exists(tmp):
-            shutil.rmtree(tmp)
-        for lo in range(0, n, chunk):
-            if lo in done:
-                continue
-            ids = spark.range(lo, min(lo + chunk, n), 1,
-                              spark.sparkContext.defaultParallelism)
-            synthetic_docs(ids.withColumnRenamed("id", "doc_id")).write.mode(
-                "append"
-            ).parquet(tmp)
-            with open(manifest, "a") as f:
-                f.write(f"{lo} {min(lo + chunk, n)}\n")
-        os.remove(manifest)
-        # crash-window guard (ADVICE r7): a chunk whose parquet append
-        # committed but whose manifest line was never written would be
-        # re-appended on resume, silently duplicating up to one chunk of
-        # docs. Validate the total row count before publishing; on
-        # mismatch rebuild from scratch (metadata-only parquet count).
-        if spark.read.parquet(tmp).count() != n:
-            shutil.rmtree(tmp)
-            return materialized_docs_n(spark, n, cache_root)
-        os.rename(tmp, path)
-        open(f"{path}/_SUCCESS", "a").close()
-    return path
+    append jobs, see stored_chunked)."""
+    return stored_chunked(
+        spark, f"docs_{n}", n, DOCS_CHUNK,
+        lambda ids, tmp: synthetic_docs(ids.withColumnRenamed("id", "doc_id"))
+        .write.mode("append").parquet(tmp),
+    )

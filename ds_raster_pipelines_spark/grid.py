@@ -152,10 +152,6 @@ def _sql_text(x: str | Column) -> str:
     return "`" + x._jc.toString().replace("`", "``") + "`"
 
 
-def res_col(cell: Column) -> Column:
-    return F.shiftright(cell, RES_SHIFT)
-
-
 def ix_col(cell: Column) -> Column:
     return cell.bitwiseAND(F.lit(IX_MASK))
 

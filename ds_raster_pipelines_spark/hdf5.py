@@ -578,30 +578,6 @@ def _load_data(buf: bytes, shape, dtype, layout: bytes, filters, name: str) -> n
     return data
 
 
-def _read_dataset(buf: bytes, name: str, hdr_addr: int,
-                  ranges: list | None = None) -> H5Dataset:
-    shape = dtype = None
-    layout = None
-    filters = []
-    attrs = {}
-    for t, body in _walk_messages(buf, hdr_addr, ranges):
-        if t == 0x0001:
-            shape = _parse_ds(body)
-        elif t == 0x0003:
-            dtype, _cls = _parse_dt(body)
-        elif t == 0x0008:
-            layout = bytes(body)
-        elif t == 0x000B:
-            filters = _parse_filters(body)
-        elif t == 0x000C:
-            an, av = _parse_attr(body)
-            attrs[an] = av
-    if shape is None or dtype is None or layout is None:
-        raise ValueError(f"dataset {name!r}: missing dataspace/datatype/layout")
-    data = _load_data(buf, tuple(shape), dtype, layout, filters, name)
-    return H5Dataset(name, tuple(shape), dtype, attrs, data)
-
-
 def _read_links(buf: bytes, hdr_addr: int, ranges: list | None = None):
     """One group object header -> ([(child name, header addr)], attrs,
     is_group). Handles old-style symbol-table groups AND new-style

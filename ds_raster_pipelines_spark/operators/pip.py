@@ -110,11 +110,6 @@ def _cover_geometry(parts: list, res: int) -> tuple[np.ndarray, np.ndarray]:
     return cells, inside & ~near_edge
 
 
-def _cover_one(ring: np.ndarray, res: int) -> tuple[np.ndarray, np.ndarray]:
-    """Single-ring legacy wrapper over :func:`_cover_geometry`."""
-    return _cover_geometry([[ring]], res)
-
-
 def polygon_cover_cells(admin: DataFrame, res: int) -> DataFrame:
     """(adm_id, cell_id, full) covering triples at ``res``.
 

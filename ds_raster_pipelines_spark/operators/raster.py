@@ -26,8 +26,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import grid
-from ..corpus import TILE_H, TILE_W, parse_wkb_geometry
-from .pip import _is_axis_rect, _points_in_rings, polygon_cover_cells
+from ..corpus import parse_wkb_geometry
+from .pip import _is_axis_rect, _points_in_rings
 
 ZONAL_PIXEL_SCHEMA = "gi int, px_count bigint, px_sum bigint"
 

@@ -25,13 +25,8 @@ _LM_COLLECT_MAX = 1_000_000
 
 
 def token_count(text: Column) -> Column:
-    """Whitespace token count (the BPE-ish regex variant is tokens_bpe)."""
+    """Whitespace token count."""
     return F.size(F.split(text, " "))
-
-
-def tokens_bpe_ish(text: Column) -> Column:
-    """BPE-ish subword proxy: alnum runs + punctuation marks each count."""
-    return F.size(F.filter(F.split(text, r"(?<=\W)|(?=\W)"), lambda t: F.trim(t) != ""))
 
 
 def count_word(text: Column, word: str) -> Column:

@@ -1609,146 +1609,48 @@ def orientation_flip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return zonal_pixel_stats(images, corpus.admin_df(spark, offset=0.07), res=6)
 
 
-@register("zonal_pixel_stats_tif", _zps_oracle(offset=0.03, lossless=True))
-def zonal_pixel_stats_tif(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pixel-level zonal stats over a corpus stored as REAL strip-PackBits
-    TIFF bytes (tiff.py, from-scratch baseline codec — the reference's
-    on-disk raster container, floodscan_pipeline.py:384). Admin set is
-    shifted 0.03 deg so pixel windows are partial and position-sensitive:
-    a decode/reassembly bug in the TIFF path becomes a value divergence,
-    not just a crash. Oracle = the same closed-form pixel-window algebra
-    with the lossy branch dropped (tif is lossless)."""
-    from .operators.raster import zonal_pixel_stats
-
-    images = corpus.footprint_cols_for_images(
-        spark.read.parquet(corpus.materialized_images_fmt(spark, sf_dir, "tif"))
-    )
-    return zonal_pixel_stats(images, corpus.admin_df(spark, offset=0.03), res=6)
-
-
-@register("zonal_pixel_stats_dct", _zps_oracle(offset=0.05, lossless=True))
-def zonal_pixel_stats_dct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pixel-level zonal stats over a corpus stored in the REAL lossy
-    transform codec (codecs.encode_dct: 8x8 orthonormal block DCT, JPEG
-    Annex-K quantization at q=90, zlib entropy stage — the from-scratch
-    JPEG-like path the input_hint's PSNR>=40dB gate refers to). The
-    corpus's smooth gradient tiles survive q=90 quantization BIT-EXACTLY
-    (verified exhaustively over all 97 pixel classes in pytest), so the
-    lossless closed-form oracle applies: any drift in the DCT/quant/
-    zigzag/entropy chain breaks the match."""
-    from .operators.raster import zonal_pixel_stats
-
-    images = corpus.footprint_cols_for_images(
-        spark.read.parquet(corpus.materialized_images_fmt(spark, sf_dir, "dct"))
-    )
-    return zonal_pixel_stats(images, corpus.admin_df(spark, offset=0.05), res=6)
+# The container twins: the canonical corpus stored with every tile in one
+# on-disk format, graded by the lossless closed-form pixel oracle. Each
+# admin set is shifted by a fractional offset so rect edges cut tile
+# interiors: partial pixel windows are position-sensitive, so a decode bug
+# in the container path becomes a value divergence, not just a crash.
+# (fmt, admin offset, why the format is graded)
+_CONTAINER_TWINS = [
+    ("tif", 0.03, "strip-PackBits TIFF (tiff.py) is the reference's on-disk raster "
+                  "container (floodscan_pipeline.py:384)."),
+    ("dct", 0.05, "the lossy 8x8 block-DCT codec at q=90 (codecs.encode_dct) keeps the "
+                  "corpus's smooth gradients bit-exact, so any DCT/quant/zigzag drift shows."),
+    ("nc", 0.03, "classic NetCDF-3 CF single-record files (netcdf.py) are the reference's "
+                 ".nc ingest path (imerg_pipeline.py:78, floodscan_pipeline.py:223)."),
+    ("gif", 0.05, "GIF89a LZW (gif.py) is a string-table compression family distinct from "
+                  "zlib's LZ77+Huffman and TIFF's PackBits."),
+    ("jpg", 0.09, "baseline JFIF JPEG (jpeg.py) parses its own DQT/DHT tables and "
+                  "round-trips the gradients bit-exactly at q=90 through Huffman/DPCM/stuffing."),
+    ("nc4", 0.07, "NetCDF-4/HDF5 (hdf5.py) chunked, shuffled and deflated like real IMERG "
+                  "granules is the format the classic NetCDF codec rejects."),
+    ("nc_packed", 0.04, "CF-packed NC_SHORT with scale_factor/add_offset (netcdf.py) is "
+                        "how real IMERG/ERA5 granules store bands; the unpack is integer-exact."),
+    ("nc4_packed", 0.06, "CF-packed shorts inside NetCDF-4/HDF5 (hdf5.py) are the exact "
+                         "layout of a real IMERG granule."),
+]
 
 
-@register("zonal_pixel_stats_nc", _zps_oracle(offset=0.03, lossless=True))
-def zonal_pixel_stats_nc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pixel-level zonal stats over a corpus stored as REAL classic
-    NetCDF-3 containers (netcdf.py, from-scratch CDF-1 codec — the
-    reference's .nc ingest path, imerg_pipeline.py:78,
-    floodscan_pipeline.py:223,355). Each blob is a CF-style single-record
-    file (time/lat/lon dims, float32 band_data, real coordinate vars);
-    the Arrow kernel parses the container per tile. Same shifted-admin
-    oracle as the tif twin: a header/record-layout bug in the NetCDF
-    decode becomes a value divergence, not just a crash."""
-    from .operators.raster import zonal_pixel_stats
+def _container_twin(fmt: str, offset: float) -> Callable[[SparkSession, str], DataFrame]:
+    def query(spark: SparkSession, sf_dir: str) -> DataFrame:
+        from .operators.raster import zonal_pixel_stats
 
-    images = corpus.footprint_cols_for_images(
-        spark.read.parquet(corpus.materialized_images_fmt(spark, sf_dir, "nc"))
-    )
-    return zonal_pixel_stats(images, corpus.admin_df(spark, offset=0.03), res=6)
+        images = corpus.footprint_cols_for_images(
+            spark.read.parquet(corpus.materialized_images_fmt(spark, sf_dir, fmt))
+        )
+        return zonal_pixel_stats(images, corpus.admin_df(spark, offset=offset), res=6)
+
+    return query
 
 
-@register("zonal_pixel_stats_gif", _zps_oracle(offset=0.05, lossless=True))
-def zonal_pixel_stats_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pixel-level zonal stats over a corpus stored as REAL GIF89a
-    containers (gif.py, from-scratch GIF-variant LZW: growing string
-    table, variable-width LSB-first codes, Clear-code resets) — the
-    browse-image format family next to the reference's published rasters.
-    A distinct compression family from png/zip (LZ77+Huffman) and tiff
-    (PackBits): a string-table bug becomes a value divergence under the
-    same shifted-admin closed-form oracle as the other container twins."""
-    from .operators.raster import zonal_pixel_stats
-
-    images = corpus.footprint_cols_for_images(
-        spark.read.parquet(corpus.materialized_images_fmt(spark, sf_dir, "gif"))
-    )
-    return zonal_pixel_stats(images, corpus.admin_df(spark, offset=0.05), res=6)
-
-
-@register("zonal_pixel_stats_jpg", _zps_oracle(offset=0.09, lossless=True))
-def zonal_pixel_stats_jpg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pixel-level zonal stats over a corpus stored as REAL baseline JFIF
-    JPEG streams (jpeg.py, from-scratch ITU-T T.81 codec: marker
-    segments, Annex-K quantization + standard Huffman tables, DC DPCM +
-    AC run-length entropy coding with byte stuffing). The decoder parses
-    its tables from each stream's own DQT/DHT segments — nothing is
-    assumed from the encoder. The transform stage shares the orthonormal
-    DCT + zigzag of the 'dct' format, so the smooth corpus gradients
-    round-trip BIT-exactly at q=90 (pytest covers all 97 pixel classes
-    exhaustively) and the lossless closed-form oracle applies: any drift
-    in the Huffman/DPCM/stuffing chain becomes a value divergence."""
-    from .operators.raster import zonal_pixel_stats
-
-    images = corpus.footprint_cols_for_images(
-        spark.read.parquet(corpus.materialized_images_fmt(spark, sf_dir, "jpg"))
-    )
-    return zonal_pixel_stats(images, corpus.admin_df(spark, offset=0.09), res=6)
-
-
-@register("zonal_pixel_stats_nc4", _zps_oracle(offset=0.07, lossless=True))
-def zonal_pixel_stats_nc4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pixel-level zonal stats over a corpus stored as REAL NetCDF-4 /
-    HDF5 containers (hdf5.py, from-scratch superblock/object-header/
-    B-tree/filter codec) — the reference's IMERG .nc4 ingest path
-    (imerg_pipeline.py:78, imerg_config.yml), the one input format the
-    classic codec (netcdf.py) rejects. Each blob is chunked + shuffled +
-    deflated like real IMERG granules, with CLASS=DIMENSION_SCALE
-    coordinate variables; the Arrow kernel walks the HDF5 structures per
-    tile. Same shifted-admin oracle family as the nc/tif twins: any
-    B-tree/heap/filter bug becomes a value divergence, not a crash."""
-    from .operators.raster import zonal_pixel_stats
-
-    images = corpus.footprint_cols_for_images(
-        spark.read.parquet(corpus.materialized_images_fmt(spark, sf_dir, "nc4"))
-    )
-    return zonal_pixel_stats(images, corpus.admin_df(spark, offset=0.07), res=6)
-
-
-@register("zonal_pixel_stats_nc_packed", _zps_oracle(offset=0.04, lossless=True))
-def zonal_pixel_stats_nc_packed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pixel-level zonal stats over a corpus stored as CF *packed*
-    classic NetCDF (netcdf.py encode_nc_tile_packed): band_data is
-    NC_SHORT with ``scale_factor``/``add_offset`` attributes, the on-disk
-    convention of real IMERG/ERA5 granules — the reference's xarray open
-    unpacks it implicitly on every `.nc4` read (imerg_pipeline.py:78).
-    The unpack (short·0.25 + 128) is integer-exact by construction, so
-    the same closed-form shifted-admin oracle applies bit-for-bit: a
-    scale/offset bug anywhere in the decode becomes a value divergence."""
-    from .operators.raster import zonal_pixel_stats
-
-    images = corpus.footprint_cols_for_images(
-        spark.read.parquet(corpus.materialized_images_fmt(spark, sf_dir, "nc_packed"))
-    )
-    return zonal_pixel_stats(images, corpus.admin_df(spark, offset=0.04), res=6)
-
-
-@register("zonal_pixel_stats_nc4_packed", _zps_oracle(offset=0.06, lossless=True))
-def zonal_pixel_stats_nc4_packed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CF packed shorts inside the NetCDF-4/HDF5 container
-    (hdf5.py encode_nc4_tile_packed) — byte-plane shuffle + deflate over
-    2-byte elements plus the scale_factor/add_offset unpack, i.e. the
-    exact layout of a real IMERG granule. Same oracle family as the nc4
-    twin at a distinct admin offset."""
-    from .operators.raster import zonal_pixel_stats
-
-    images = corpus.footprint_cols_for_images(
-        spark.read.parquet(corpus.materialized_images_fmt(spark, sf_dir, "nc4_packed"))
-    )
-    return zonal_pixel_stats(images, corpus.admin_df(spark, offset=0.06), res=6)
+for _fmt, _offset, _why in _CONTAINER_TWINS:
+    _twin = _container_twin(_fmt, _offset)
+    _twin.__doc__ = f"Pixel-level zonal stats over the {_fmt} corpus: {_why}"
+    register(f"zonal_pixel_stats_{_fmt}", _zps_oracle(offset=_offset, lossless=True))(_twin)
 
 
 def _zhist_ctes(offset: float) -> str:
@@ -2255,8 +2157,6 @@ def multiband_cube_nc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     cube (floodscan_pipeline.py:405-410 persists and re-opens its baseline
     NetCDF). Write happens once per corpus cache (construction executes
     jobs — excluded from the pure-plan invariant like dedup_components)."""
-    import os
-
     from .operators.climatology import band_merge, multiband_baseline
     from .sinks import read_cube_nc, write_cube_nc
 
@@ -2274,10 +2174,10 @@ def multiband_cube_nc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     cube = multiband_baseline(
         merged, ["click_cents", "view_cents"], key_col="user_id", date_col="d"
     )
-    key = sf_dir.rstrip("/").replace("/", "_").lstrip("_")
-    path = f"/tmp/spark_graft_corpus/{corpus.CORPUS_VERSION}/{key}_cubenc"
-    if not os.path.exists(f"{path}/_SUCCESS"):
-        write_cube_nc(cube, path, part_col="doy", key_col="user_id")
+    path = corpus.stored(
+        corpus.sf_name(sf_dir, "_cubenc"),
+        lambda p: write_cube_nc(cube, p, part_col="doy", key_col="user_id"),
+    )
     out = read_cube_nc(spark, path, key_col="user_id")
     return out.select(
         "doy", "user_id",
@@ -4825,8 +4725,7 @@ def delete_merge_on_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .streaming.incremental import IncrementalRun
 
-    key = sf_dir.rstrip("/").replace("/", "_").lstrip("_")
-    base = f"/tmp/spark_graft_corpus/{corpus.CORPUS_VERSION}/{key}_deltbl"
+    base = f"{corpus.CACHE_ROOT}/{corpus.CORPUS_VERSION}/{corpus.sf_name(sf_dir, '_deltbl')}"
     shutil.rmtree(base, ignore_errors=True)
     run = IncrementalRun(spark, base)
     src = _pq(spark, sf_dir, "orders").select(

@@ -22,7 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .. import ziparchive
+from .. import corpus, ziparchive
 
 
 def build_monthly_archives(months: DataFrame, month_col: str = "m") -> DataFrame:
@@ -99,26 +99,18 @@ def explode_zip_members(
     )
 
 
-def materialized_monthly_archives(
-    spark, sf_dir: str, cache_root: str = "/tmp/spark_graft_corpus"
-) -> str:
+def materialized_monthly_archives(spark, sf_dir: str) -> str:
     """Materialize the per-month zip corpus for ``sf_dir`` once and return
     its parquet path. Mirrors production (archives are STORED objects, not
     generated inline) and keeps archive-consuming queries at exactly ONE
     Python stage — the member-explode kernel (same rule as
     corpus.materialized_images: chaining generate→parse Arrow kernels
     ships the binary column across two JVM↔Python boundaries)."""
-    import os
-
-    from .. import corpus as corpus_mod
-
-    key = sf_dir.rstrip("/").replace("/", "_").lstrip("_")
-    path = f"{cache_root}/{corpus_mod.CORPUS_VERSION}/{key}_ziparch"
-    if not os.path.exists(f"{path}/_SUCCESS"):
-        months = (
+    return corpus.stored(
+        corpus.sf_name(sf_dir, "_ziparch"),
+        lambda p: build_monthly_archives(
             spark.read.parquet(f"{sf_dir}/orders.parquet")
             .select(F.date_trunc("month", "o_orderdate").alias("m"))
             .distinct()
-        )
-        build_monthly_archives(months).write.mode("overwrite").parquet(path)
-    return path
+        ).write.parquet(p),
+    )

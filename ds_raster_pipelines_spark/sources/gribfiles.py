@@ -19,7 +19,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from .. import grib, native
+from .. import corpus, grib, native
 
 GRID_N = 8  # 8x8 grid per message (values fit 10-bit simple packing)
 N_ENS = 5
@@ -310,59 +310,29 @@ def explode_grib_ensemble(
     )
 
 
-def materialized_ensemble_files(
-    spark, sf_dir: str, cache_root: str = "/tmp/spark_graft_corpus"
-) -> str:
+def materialized_ensemble_files(spark, sf_dir: str) -> str:
     """Materialize the per-order GRIB file corpus for ``sf_dir`` once and
     return its parquet path — GRIB downloads are stored blobs in
     production, and scanning them keeps the consuming query at ONE Python
     stage (the scan/filter/decode kernel)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from .. import corpus as corpus_mod
-
-    key = sf_dir.rstrip("/").replace("/", "_").lstrip("_")
-    path = f"{cache_root}/{corpus_mod.CORPUS_VERSION}/{key}_grib"
-    if not os.path.exists(f"{path}/_SUCCESS"):
-        ids = (
-            spark.read.parquet(f"{sf_dir}/orders.parquet")
-            .select(F.col("o_orderkey").alias("i"))
-            .repartition(spark.sparkContext.defaultParallelism, "i")
-        )
-        build_ensemble_files(ids).write.mode("overwrite").parquet(path)
-    return path
+    return corpus.stored_per_order(spark, sf_dir, "_grib", build_ensemble_files)
 
 
-def materialized_complex_files(
-    spark, sf_dir: str, cache_root: str = "/tmp/spark_graft_corpus"
-) -> str:
+def materialized_complex_files(spark, sf_dir: str) -> str:
     """The complex-packed (template 5.3) + bitmapped variant of the
     ensemble corpus — the wire shape real ERA5/SEAS5 downloads use."""
-    import os
-
     from pyspark.sql import functions as F
 
-    from .. import corpus as corpus_mod
-
-    key = sf_dir.rstrip("/").replace("/", "_").lstrip("_")
-    path = f"{cache_root}/{corpus_mod.CORPUS_VERSION}/{key}_grib_cx2"
-    if not os.path.exists(f"{path}/_SUCCESS"):
-        ids = (
-            spark.read.parquet(f"{sf_dir}/orders.parquet")
-            # 1/5 subsample: this corpus grades CODEC correctness (every
-            # template-5.3 + bitmap branch still runs per message); tiny
-            # 8x8 grids make per-message overhead dominate, and the
-            # throughput evidence lives in the production-size corpus
-            .where(F.col("o_orderkey") % 5 == 0)
-            .select(F.col("o_orderkey").alias("i"))
-            .repartition(spark.sparkContext.defaultParallelism, "i")
-        )
-        build_ensemble_files(ids, packing=3, with_bitmap=True).write.mode(
-            "overwrite"
-        ).parquet(path)
-    return path
+    # 1/5 subsample: this corpus grades CODEC correctness (every
+    # template-5.3 + bitmap branch still runs per message); tiny 8x8
+    # grids make per-message overhead dominate, and the throughput
+    # evidence lives in the production-size corpus
+    return corpus.stored_per_order(
+        spark, sf_dir, "_grib_cx2",
+        lambda ids: build_ensemble_files(
+            ids.where(F.col("i") % 5 == 0), packing=3, with_bitmap=True
+        ),
+    )
 
 
 # ------------------------- production-shaped corpus (big messages) ---------
@@ -409,24 +379,13 @@ def build_production_files(ids: DataFrame, id_col: str = "i") -> DataFrame:
     return ids.select(id_col).mapInPandas(kernel, schema="i bigint, grib_bytes binary")
 
 
-def materialized_production_files(
-    spark, sf_dir: str, cache_root: str = "/tmp/spark_graft_corpus"
-) -> str:
-    import os
-
-    from pyspark.sql import functions as F
-
-    from .. import corpus as corpus_mod
-
-    key = sf_dir.rstrip("/").replace("/", "_").lstrip("_")
-    path = f"{cache_root}/{corpus_mod.CORPUS_VERSION}/{key}_grib_prod"
-    if not os.path.exists(f"{path}/_SUCCESS"):
-        ids = (
-            spark.read.parquet(f"{sf_dir}/orders.parquet")
-            .select(F.col("o_orderkey").alias("i"))
+def materialized_production_files(spark, sf_dir: str) -> str:
+    return corpus.stored(
+        corpus.sf_name(sf_dir, "_grib_prod"),
+        lambda p: build_production_files(
+            corpus.order_ids(spark, sf_dir)
             .orderBy("i")
             .limit(PROD_FILES)
             .repartition(PROD_FILES, "i")
-        )
-        build_production_files(ids).write.mode("overwrite").parquet(path)
-    return path
+        ).write.parquet(p),
+    )

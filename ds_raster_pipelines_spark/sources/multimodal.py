@@ -24,6 +24,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from .. import corpus
+
 AUDIO_FEATURES_SCHEMA = "media_id string, n_samples bigint, rms double, peak double"
 FRAME_SAMPLE_SCHEMA = "media_id string, frame_idx int, frame_bytes binary"
 
@@ -464,25 +466,8 @@ def build_mulaw_corpus(ids: DataFrame, id_col: str = "i") -> DataFrame:
     return ids.select(id_col).mapInPandas(kernel, schema="i bigint, bytes binary")
 
 
-def materialized_mulaw_corpus(
-    spark, sf_dir: str, cache_root: str = "/tmp/spark_graft_corpus"
-) -> str:
-    import os
-
-    from pyspark.sql import functions as F
-
-    from .. import corpus as corpus_mod
-
-    key = sf_dir.rstrip("/").replace("/", "_").lstrip("_")
-    path = f"{cache_root}/{corpus_mod.CORPUS_VERSION}/{key}_mulaw"
-    if not os.path.exists(f"{path}/_SUCCESS"):
-        ids = (
-            spark.read.parquet(f"{sf_dir}/orders.parquet")
-            .select(F.col("o_orderkey").alias("i"))
-            .repartition(spark.sparkContext.defaultParallelism, "i")
-        )
-        build_mulaw_corpus(ids).write.mode("overwrite").parquet(path)
-    return path
+def materialized_mulaw_corpus(spark, sf_dir: str) -> str:
+    return corpus.stored_per_order(spark, sf_dir, "_mulaw", build_mulaw_corpus)
 
 
 def flac_samples_for(i: int) -> np.ndarray:
@@ -515,25 +500,8 @@ def build_flac_corpus(ids: DataFrame, id_col: str = "i") -> DataFrame:
     return ids.select(id_col).mapInPandas(kernel, schema="i bigint, bytes binary")
 
 
-def materialized_flac_corpus(
-    spark, sf_dir: str, cache_root: str = "/tmp/spark_graft_corpus"
-) -> str:
-    import os
-
-    from pyspark.sql import functions as F
-
-    from .. import corpus as corpus_mod
-
-    key = sf_dir.rstrip("/").replace("/", "_").lstrip("_")
-    path = f"{cache_root}/{corpus_mod.CORPUS_VERSION}/{key}_flac"
-    if not os.path.exists(f"{path}/_SUCCESS"):
-        ids = (
-            spark.read.parquet(f"{sf_dir}/orders.parquet")
-            .select(F.col("o_orderkey").alias("i"))
-            .repartition(spark.sparkContext.defaultParallelism, "i")
-        )
-        build_flac_corpus(ids).write.mode("overwrite").parquet(path)
-    return path
+def materialized_flac_corpus(spark, sf_dir: str) -> str:
+    return corpus.stored_per_order(spark, sf_dir, "_flac", build_flac_corpus)
 
 
 def flac_stats_exact(media: DataFrame) -> DataFrame:
@@ -556,27 +524,10 @@ def flac_stats_exact(media: DataFrame) -> DataFrame:
     return media.mapInPandas(kernel, schema=AUDIO_EXACT_SCHEMA)
 
 
-def materialized_wav_corpus(
-    spark, sf_dir: str, cache_root: str = "/tmp/spark_graft_corpus"
-) -> str:
+def materialized_wav_corpus(spark, sf_dir: str) -> str:
     """Materialize the per-order WAV corpus once (stored blobs — keeps the
     consuming query at ONE Python stage, the decode kernel)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from .. import corpus as corpus_mod
-
-    key = sf_dir.rstrip("/").replace("/", "_").lstrip("_")
-    path = f"{cache_root}/{corpus_mod.CORPUS_VERSION}/{key}_wav"
-    if not os.path.exists(f"{path}/_SUCCESS"):
-        ids = (
-            spark.read.parquet(f"{sf_dir}/orders.parquet")
-            .select(F.col("o_orderkey").alias("i"))
-            .repartition(spark.sparkContext.defaultParallelism, "i")
-        )
-        build_wav_corpus(ids).write.mode("overwrite").parquet(path)
-    return path
+    return corpus.stored_per_order(spark, sf_dir, "_wav", build_wav_corpus)
 
 
 # ------------------------------------------------ graded video (AVI) path ---
@@ -613,26 +564,11 @@ def build_video_corpus(ids: DataFrame, id_col: str = "i", codec: str = "dct") ->
     return ids.select(id_col).mapInPandas(kernel, schema="i bigint, bytes binary")
 
 
-def materialized_video_corpus(
-    spark, sf_dir: str, cache_root: str = "/tmp/spark_graft_corpus", codec: str = "dct"
-) -> str:
-    import os
-
-    from pyspark.sql import functions as F
-
-    from .. import corpus as corpus_mod
-
-    key = sf_dir.rstrip("/").replace("/", "_").lstrip("_")
-    suffix = "_avi" if codec == "dct" else f"_avi_{codec}"
-    path = f"{cache_root}/{corpus_mod.CORPUS_VERSION}/{key}{suffix}"
-    if not os.path.exists(f"{path}/_SUCCESS"):
-        ids = (
-            spark.read.parquet(f"{sf_dir}/orders.parquet")
-            .select(F.col("o_orderkey").alias("i"))
-            .repartition(spark.sparkContext.defaultParallelism, "i")
-        )
-        build_video_corpus(ids, codec=codec).write.mode("overwrite").parquet(path)
-    return path
+def materialized_video_corpus(spark, sf_dir: str, codec: str = "dct") -> str:
+    return corpus.stored_per_order(
+        spark, sf_dir, "_avi" if codec == "dct" else f"_avi_{codec}",
+        lambda ids: build_video_corpus(ids, codec=codec),
+    )
 
 
 def video_frame_stats(media: DataFrame, every_n: int = 2) -> DataFrame:
@@ -727,25 +663,8 @@ def build_mp2_corpus(ids: DataFrame, id_col: str = "i") -> DataFrame:
     return ids.select(id_col).mapInPandas(kernel, schema="i bigint, bytes binary")
 
 
-def materialized_mp2_corpus(
-    spark, sf_dir: str, cache_root: str = "/tmp/spark_graft_corpus"
-) -> str:
-    import os
-
-    from pyspark.sql import functions as F
-
-    from .. import corpus as corpus_mod
-
-    key = sf_dir.rstrip("/").replace("/", "_").lstrip("_")
-    path = f"{cache_root}/{corpus_mod.CORPUS_VERSION}/{key}_mp2"
-    if not os.path.exists(f"{path}/_SUCCESS"):
-        ids = (
-            spark.read.parquet(f"{sf_dir}/orders.parquet")
-            .select(F.col("o_orderkey").alias("i"))
-            .repartition(spark.sparkContext.defaultParallelism, "i")
-        )
-        build_mp2_corpus(ids).write.mode("overwrite").parquet(path)
-    return path
+def materialized_mp2_corpus(spark, sf_dir: str) -> str:
+    return corpus.stored_per_order(spark, sf_dir, "_mp2", build_mp2_corpus)
 
 
 def mp2_psnr_stats(media: DataFrame) -> DataFrame:

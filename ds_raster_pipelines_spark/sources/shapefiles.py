@@ -48,31 +48,6 @@ def _feature_rows(src: str, shp: bytes, dbf: bytes | None) -> list[dict]:
     return rows
 
 
-def shapefile_features(
-    blobs: DataFrame,
-    src_col: str = "src",
-    shp_col: str = "shp",
-    dbf_col: str = "dbf",
-) -> DataFrame:
-    """(src, shp bytes, dbf bytes|null) → one row per polygon feature."""
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for _, r in pdf.iterrows():
-                out.extend(
-                    _feature_rows(r[src_col], bytes(r[shp_col]),
-                                  bytes(r[dbf_col]) if r[dbf_col] is not None else None)
-                )
-            yield pd.DataFrame(
-                out, columns=["src", "feature_ix", "attrs", "geom_wkb"]
-            )
-
-    return blobs.select(src_col, shp_col, dbf_col).mapInPandas(
-        parse, schema=FEATURE_SCHEMA
-    )
-
-
 def zipped_shapefile_features(
     blobs: DataFrame, src_col: str = "src", zip_col: str = "blob"
 ) -> DataFrame:

@@ -167,39 +167,93 @@ def test_dct_codec_psnr_and_determinism():
 
 
 def test_corpus_chunked_build_resumes(spark, tmp_path, monkeypatch):
-    """Kill/resume of the chunked range-corpus build: a restart must skip
-    manifested chunks, scrub uncommitted staging, and produce the exact
-    row set a clean build produces (ids 0..n-1, no dupes, no holes)."""
+    """Kill/resume of the chunked stored-table build, from both callers
+    (range image corpus, synthetic docs): a restart must skip manifested
+    chunks, scrub uncommitted staging, and produce the exact row set a
+    clean build produces (ids 0..n-1, no dupes, no holes)."""
     import os
 
-    from ds_raster_pipelines_spark import corpus
+    monkeypatch.setattr(corpus, "IMAGES_CHUNK", 100)
+    monkeypatch.setattr(corpus, "DOCS_CHUNK", 100)
+    cases = [
+        # (materializer, n, table name, id column, per-chunk writer it calls)
+        (corpus.materialized_images_n, 350, "range_350", "i", "_write_corpus"),
+        (corpus.materialized_docs_n, 250, "docs_250", "doc_id", "synthetic_docs"),
+    ]
+    for build, n, name, id_col, writer in cases:
+        def ids(path):
+            return sorted(r[0] for r in spark.read.parquet(path).select(id_col).collect())
 
-    monkeypatch.setenv("SPARK_GRAFT_CORPUS_CHUNK", "100")
-    root = str(tmp_path / "cache")
-    n = 350  # 4 chunks of 100
+        # clean build as the golden
+        monkeypatch.setattr(corpus, "CACHE_ROOT", str(tmp_path / "golden"))
+        golden = ids(build(spark, n))
+        assert golden == list(range(n))
 
-    # clean build as the golden
-    p = corpus.materialized_images_n(spark, n, cache_root=root + "_golden")
-    golden = sorted(r.i for r in spark.read.parquet(p).select("i").collect())
-    assert golden == list(range(n))
+        # killed build: the third chunk dies after two chunks committed
+        monkeypatch.setattr(corpus, "CACHE_ROOT", str(tmp_path / "cache"))
+        real, calls = getattr(corpus, writer), []
 
-    # simulated kill: run two chunks by hand, leave manifest + staging junk
-    path = f"{root}/{corpus.CORPUS_VERSION}/range_{n}"
-    tmp = f"{path}.__building__"
-    os.makedirs(tmp)
-    from pyspark.sql import functions as F
+        def dying(*a, real=real, calls=calls, **k):
+            calls.append(1)
+            if len(calls) == 3:
+                raise RuntimeError("killed")
+            return real(*a, **k)
 
-    for lo in (0, 100):
-        ids = spark.range(lo, lo + 100).withColumnRenamed("id", "i")
-        corpus._write_corpus(ids, tmp, n_rows=n, mode="append")
-        with open(f"{tmp}/_CHUNKS_DONE", "a") as f:
-            f.write(f"{lo} {lo + 100}\n")
-    os.makedirs(f"{tmp}/_temporary/0")  # uncommitted staging from the kill
+        monkeypatch.setattr(corpus, writer, dying)
+        with pytest.raises(RuntimeError, match="killed"):
+            build(spark, n)
+        monkeypatch.setattr(corpus, writer, real)
+        tmp = f"{tmp_path}/cache/{corpus.CORPUS_VERSION}/{name}.__building__"
+        with open(f"{tmp}/_CHUNKS_DONE") as f:
+            assert [line.split()[0] for line in f] == ["0", "100"]
+        os.makedirs(f"{tmp}/_temporary/0")  # uncommitted staging from the kill
 
-    p2 = corpus.materialized_images_n(spark, n, cache_root=root)
-    got = sorted(r.i for r in spark.read.parquet(p2).select("i").collect())
-    assert got == golden
-    assert not os.path.exists(tmp)
+        assert ids(build(spark, n)) == golden
+        assert not os.path.exists(tmp)
+
+
+def test_stored_paths_pinned(tmp_path, monkeypatch):
+    """Every materializer returns CACHE_ROOT/CORPUS_VERSION/<name> under the
+    name existing caches use (bench.py hard-codes the default root and the
+    range_<n> name), and never rebuilds a table whose _SUCCESS exists."""
+    import os
+
+    from ds_raster_pipelines_spark.sources import archives, gribfiles, multimodal
+
+    assert corpus.CACHE_ROOT == "/tmp/spark_graft_corpus"
+    monkeypatch.setattr(corpus, "CACHE_ROOT", str(tmp_path))
+    real_stored = corpus.stored
+
+    def never_write(path):
+        pytest.fail(f"stored table rebuilt: {path}")
+
+    monkeypatch.setattr(corpus, "stored", lambda name, write: real_stored(name, never_write))
+    sf, key = "/root/testdata/sf0.001", "root_testdata_sf0.001"
+    cases = [  # spark=None: a write callback that ran would fail on it too
+        (lambda: corpus.materialized_images(None, sf), key),
+        (lambda: corpus.materialized_images(None, sf + "/"), key),
+        (lambda: corpus.materialized_images_flipped(None, sf), f"{key}_flip_lon"),
+        (lambda: corpus.materialized_images_fmt(None, sf), f"{key}_tif"),
+        (lambda: corpus.materialized_images_fmt(None, sf, "nc4_packed"), f"{key}_nc4_packed"),
+        (lambda: corpus.materialized_images_n(None, 350), "range_350"),
+        (lambda: corpus.materialized_docs_n(None, 250), "docs_250"),
+        (lambda: archives.materialized_monthly_archives(None, sf), f"{key}_ziparch"),
+        (lambda: gribfiles.materialized_ensemble_files(None, sf), f"{key}_grib"),
+        (lambda: gribfiles.materialized_complex_files(None, sf), f"{key}_grib_cx2"),
+        (lambda: gribfiles.materialized_production_files(None, sf), f"{key}_grib_prod"),
+        (lambda: multimodal.materialized_mulaw_corpus(None, sf), f"{key}_mulaw"),
+        (lambda: multimodal.materialized_flac_corpus(None, sf), f"{key}_flac"),
+        (lambda: multimodal.materialized_wav_corpus(None, sf), f"{key}_wav"),
+        (lambda: multimodal.materialized_video_corpus(None, sf), f"{key}_avi"),
+        (lambda: multimodal.materialized_video_corpus(None, sf, codec="mjpeg"),
+         f"{key}_avi_mjpeg"),
+        (lambda: multimodal.materialized_mp2_corpus(None, sf), f"{key}_mp2"),
+    ]
+    for materialize, name in cases:
+        expected = f"{tmp_path}/{corpus.CORPUS_VERSION}/{name}"
+        os.makedirs(expected, exist_ok=True)
+        open(f"{expected}/_SUCCESS", "a").close()
+        assert materialize() == expected
 
 
 def test_coarsen_histogram_batched_tally_matches_naive(spark):
