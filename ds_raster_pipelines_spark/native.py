@@ -897,6 +897,70 @@ long seg_sum_min_max(const unsigned char *data, int64_t n, const int64_t *bounds
     return 0;
 }
 
+/* Smallest j in [0, w] whose pixel centre lon0 + (j + 0.5) * dx is >= a
+ * (the centres ascend in j, so the guess is corrected by exact steps). */
+static long first_ge(double a, double lon0, double dx, long w)
+{
+    double g = ceil((a - lon0) / dx - 0.5);
+    long j = !(g > 0) ? 0 : g > w ? w : (long)g;
+    while (j > 0 && lon0 + ((double)(j - 1) + 0.5) * dx >= a)
+        j--;
+    while (j < w && lon0 + ((double)j + 0.5) * dx < a)
+        j++;
+    return j;
+}
+
+/* Scanline zonal reduction (Raptor-style pixel runs) over (tile k,
+ * geometry g) pairs.  Tile k is a w x h uint8 raster at px + px_off[k];
+ * pixel (i, j) has its centre at lon0 + (j + 0.5) * (span / w),
+ * lat_top - (i + 0.5) * (span / h).  Geometry g owns the (x1, y1, x2, y2)
+ * rows [edge_off[g], edge_off[g+1]) of edges: every edge of every ring.
+ * Per centre row the crossings are pip._points_in_rings' expressions in the
+ * same order; a centre is inside when an odd number of crossings lie above
+ * it, so the pixels are bit for bit that half-open ray cast's.  Pair p adds
+ * into out row pair_g[p]: (count, sum) when ncol == 2, else a 256-bin value
+ * histogram.  xs: scratch of the largest per-geometry edge count. */
+long zonal_runs(const unsigned char *px, const int64_t *px_off,
+                const int64_t *ws, const int64_t *hs, const double *lon0,
+                const double *lat_top, const double *span,
+                const double *edges, const int64_t *edge_off,
+                const int64_t *pair_k, const int64_t *pair_g, long npairs,
+                long ncol, double *xs, int64_t *out)
+{
+    long p, i, j, r, e, n, a, b;
+    for (p = 0; p < npairs; p++) {
+        long k = pair_k[p], g = pair_g[p], w = ws[k], h = hs[k];
+        double dx = span[0] / (double)w, dy = span[0] / (double)h;
+        int64_t *o = out + ncol * g, cnt = 0, sum = 0;
+        for (i = 0; i < h; i++) {
+            const unsigned char *row = px + px_off[k] + i * w;
+            double lat = lat_top[k] - ((double)i + 0.5) * dy;
+            for (n = 0, e = edge_off[g]; e < edge_off[g + 1]; e++) {
+                const double *q = edges + 4 * e;
+                if ((q[1] > lat) != (q[3] > lat)) {
+                    double v = q[0] + (lat - q[1]) * (q[2] - q[0]) / (q[3] - q[1]);
+                    for (j = n++; j > 0 && xs[j - 1] > v; j--)
+                        xs[j] = xs[j - 1];
+                    xs[j] = v;
+                }
+            }
+            /* odd n (an unclosed ring): the first run starts at -inf */
+            for (r = n & 1 ? -1 : 0; r < n; r += 2) {
+                a = r < 0 ? 0 : first_ge(xs[r], lon0[k], dx, w);
+                b = first_ge(xs[r + 1], lon0[k], dx, w);
+                for (j = a; j < b; j++)
+                    if (ncol == 2)
+                        cnt++, sum += row[j];
+                    else
+                        o[row[j]]++;
+            }
+        }
+        if (ncol == 2)
+            o[0] += cnt, o[1] += sum;
+    }
+    return 0;
+}
+
 /* ---- MD5 (RFC 1321, from-scratch reference implementation) -------- */
 typedef struct { uint32_t a, b, c, d; } md5st;
 static const uint32_t MD5K[64] = {
@@ -1149,6 +1213,7 @@ _SIGNATURES = {
     "bilinear_stack": "plllppplppplpp",
     "hist_segments": "pplllp",
     "seg_sum_min_max": "pqplppp",
+    "zonal_runs": "pppppppppppllpp",
     "minhash_doc_sigs": "pplpplqp",
     "lm_score_docs": "ppllpplqpp",
     "md5_word_grams": "ppllipppq",
@@ -1497,6 +1562,32 @@ def seg_sum_min_max(data: np.ndarray, bounds: np.ndarray):
     if rc is not None and rc != 0:
         fallbacks["seg_sum_min_max"] += 1
     return (sums, mins, maxs) if rc == 0 else None
+
+
+def zonal_runs(px, px_off, ws, hs, lon0, lat_top, span: float, edges, edge_off,
+               pair_k, pair_g, out: np.ndarray) -> bool:
+    """Add the pixels of each (tile pair_k[p], geometry pair_g[p]) pair
+    whose centre the half-open ray cast of pip._points_in_rings puts
+    inside into ``out`` ([n_geoms, 2] count and sum, or [n_geoms, 256]
+    value histogram); tile k is hs[k] x ws[k] pixels of px from px_off[k].
+    False = library unavailable, the caller runs that ray cast per pixel.
+    Arrays of another dtype or layout, or out of bounds, raise ValueError."""
+    k, g = pair_k, pair_g
+    arrays = (px, px_off, ws, hs, lon0, lat_top, edges, edge_off, k, g, out)
+    if not (all(a.dtype == t and a.flags.c_contiguous
+                for a, t in zip(arrays, "u1 i8 i8 i8 f8 f8 f8 i8 i8 i8 i8".split()))
+            and out.shape[1] in (2, 256)
+            and len(lon0) == len(lat_top) == len(ws) == len(hs) == len(px_off)
+            and edge_off[0] >= 0 and (np.diff(edge_off) >= 0).all() and 4 * edge_off[-1] <= edges.size
+            and ((k >= 0) & (k < len(ws)) & (g >= 0) & (g < min(len(out), len(edge_off) - 1))).all()
+            and ((ws[k] > 0) & (hs[k] > 0) & (px_off[k] >= 0)
+                 & (px_off[k] + ws[k] * hs[k] <= len(px))).all()):
+        raise ValueError("zonal_runs: an array has the wrong dtype, layout or bounds")
+    xs = np.empty(max(1, int(np.diff(edge_off).max(initial=0))))
+    return _call(
+        "zonal_runs", px, px_off, ws, hs, lon0, lat_top, np.array([span]), edges,
+        edge_off, k, g, len(k), out.shape[1], xs, out,
+    ) is not None
 
 
 def minhash_doc_sigs(texts, offs: np.ndarray, pa: np.ndarray, pb: np.ndarray, p: int):

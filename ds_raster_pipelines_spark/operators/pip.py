@@ -205,13 +205,6 @@ def _points_in_rings(
     return inside
 
 
-def _points_in_ring(
-    lon: np.ndarray, lat: np.ndarray, ring: np.ndarray, boundary: str = "half_open"
-) -> np.ndarray:
-    """Single-ring wrapper over :func:`_points_in_rings`."""
-    return _points_in_rings(lon, lat, [ring], boundary)
-
-
 def contains_wkb_udf(boundary: str = "half_open"):
     """Exact PIP refine against a per-row WKB column (POLYGON with holes
     or MULTIPOLYGON). Groups the batch by polygon so the ray cast runs

@@ -10,13 +10,15 @@ Plan shape (scale-first):
      dropped with a broadcast left-semi join on cell_id — the "clip when
      initially reading" move the reference wishes it did
      (era5_cogs.md:174-176).
-  2. One Arrow kernel: decode tile → per-polygon pixel-window reduction
-     (sum/count over the masked block). Pixels never leave the kernel.
+  2. One Arrow kernel: decode tile → per-polygon reduction (count/sum or
+     value histogram) over the pixel runs a scanline finds per centre row
+     (native.zonal_runs). Pixels never leave the kernel.
   3. Integer sums → groupBy(adm_id) exact aggregation.
 
 Geometry dictionary ships via closure (admin tables are broadcast-small).
-For arbitrary (non-rect) rings the kernel falls back to a vectorized
-center-in-polygon ray cast per tile; rectangles use pure window arithmetic.
+Every polygon takes the same path: a pixel counts when its centre is inside
+by the half-open even-odd rule of pip._points_in_rings (pip_join's default),
+which is also the per-pixel fallback when no C compiler is present.
 """
 
 from __future__ import annotations
@@ -25,12 +27,9 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .. import grid
+from .. import grid, native
 from ..corpus import parse_wkb_geometry
-from .pip import _is_axis_rect, _points_in_rings
-
-ZONAL_PIXEL_SCHEMA = "gi int, px_count bigint, px_sum bigint"
-
+from .pip import _points_in_rings
 
 def zonal_pixel_stats(
     images: DataFrame,
@@ -53,8 +52,8 @@ def zonal_pixel_stats(
     ``overview_level`` > 0 reads the tiles' REDUCED-RESOLUTION pages
     instead of full resolution (COG corpora only — the zoomed-out read
     path a COG exists for: each level halves both dims, so level L scans
-    4^-L of the pixels). The geo-transform scales automatically (windows
-    derive from the per-level dims).
+    4^-L of the pixels). The geo-transform scales automatically (pixel
+    centres derive from the per-level dims).
 
     Output: (adm_id, px_count, px_sum, px_mean) — integer-exact sums, so
     bit-identical across engines and parallelism levels.
@@ -74,11 +73,11 @@ def zonal_value_histogram(
     """Per-admin pixel-VALUE histogram over decoded tiles — the
     landcover-fraction / class-composition zonal aggregate (per-zone
     per-class pixel counts; rasterstats' ``categorical=True``). Same
-    prune + masked-kernel machinery as zonal_pixel_stats, but the
-    kernel's per-geometry reduction is a signed uint8 bincount instead
-    of a masked sum: a batch leaves the kernel as <= n_geoms x 256 rows
-    no matter how many pixels it decoded — the map-side-partial shape a
-    100 TB class-composition scan needs.
+    prune + scanline machinery as zonal_pixel_stats, but the kernel's
+    per-geometry reduction is a 256-bin value count instead of a sum: a
+    batch leaves the kernel as <= n_geoms x 256 rows no matter how many
+    pixels it decoded — the map-side-partial shape a 100 TB
+    class-composition scan needs.
 
     Output: (adm_id, value, n_px), only (zone, value) pairs that occur.
     """
@@ -176,56 +175,26 @@ def _zonal_pixel_reduce(
     if "pcell" in images.columns:  # Iceberg-layout partition pruning
         from ..corpus import PCELL_RES
 
-        parents = sorted({int(grid.parent_np(np.asarray([c]), PCELL_RES)[0]) for c in expanded})
+        parents = np.unique(grid.parent_np(np.fromiter(expanded, np.int64), PCELL_RES))
         pts = with_cell(images.where(grid.cell_isin("pcell", parents)).drop("pcell"))
     pruned = pts.join(F.broadcast(cover), "cell_id", "left_semi").drop("cell_id")
 
-    # 2. decode + per-polygon masked reduction in one Arrow kernel
-    #
-    # Geometry specialization: a geometry whose EVERY ring is an axis-
-    # aligned rectangle (incl. holed/multipart rect compositions — admin
-    # fixtures, tiling grids, bbox masks) lowers to SIGNED pixel windows
-    # by inclusion-exclusion: part exteriors contribute +window, holes
-    # -window; the per-gi sum reproduces the even-odd membership exactly
-    # because holes nest inside their exterior (simple-features validity).
-    # This keeps the whole path on the numpy-broadcast window algebra —
-    # measured ~19x over the per-tile ray cast on the holed fixture at
-    # 10x sf0.1. Degenerate caveat (shared with the single-rect path):
-    # window bounds are CLOSED on pixel centers, so a pixel center lying
-    # EXACTLY on a ring edge follows the closed convention here vs
-    # half-open in the ray-cast path.
-    def _all_axis_rects(grings: list) -> bool:
-        return all(_is_axis_rect(r) for r in grings)
-
-    rect_info = []  # (g, sgn, min_lon, min_lat, max_lon, max_lat)
-    for g, grings in enumerate(rings):
-        if _all_axis_rects(grings):
-            for part in geoms[g]:
-                for j, ring in enumerate(part):
-                    rect_info.append(
-                        (g, 1 if j == 0 else -1,
-                         ring[:, 0].min(), ring[:, 1].min(),
-                         ring[:, 0].max(), ring[:, 1].max())
-                    )
-    # generic geometries carry their flat rings + per-PART exterior bboxes
-    # (the tile pre-check must hit any part, not the whole-geometry bbox —
-    # a 2-part geometry spanning the globe would otherwise ray-cast every
-    # tile in between)
-    generic = [
-        (
-            g,
-            rings[g],
-            [
-                (
-                    part[0][:, 0].min(), part[0][:, 1].min(),
-                    part[0][:, 0].max(), part[0][:, 1].max(),
-                )
-                for part in geoms[g]
-            ],
-        )
-        for g in range(len(rings))
-        if not _all_axis_rects(rings[g])
+    # 2. decode + per-polygon reduction in one Arrow kernel. Tiles are
+    # pre-checked against per-PART exterior bboxes: with the geometry bbox a
+    # 2-part geometry spanning the globe would scan every tile in between.
+    g_edges = [np.vstack([np.hstack([r[:-1], r[1:]]) for r in gr]) for gr in rings]
+    edges = np.ascontiguousarray(np.vstack(g_edges + [np.zeros((0, 4))]), dtype=np.float64)
+    edge_off = np.cumsum([0] + [len(e) for e in g_edges], dtype=np.int64)
+    part_bbox = [
+        (g, p[0][:, 0].min(), p[0][:, 1].min(), p[0][:, 0].max(), p[0][:, 1].max())
+        for g, parts in enumerate(geoms)
+        for p in parts
     ]
+    n_geoms = len(rings)
+    schema = "gi int, " + (
+        "value int, n_px bigint" if mode == "hist" else "px_count bigint, px_sum bigint"
+    )
+    out_names = [c.split()[0] for c in schema.split(", ")]
 
     def kernel(batches):
         import pyarrow as pa
@@ -239,12 +208,10 @@ def _zonal_pixel_reduce(
             fmts = np.asarray(col["fmt"].to_pylist(), dtype=object)
             ws = col["w"].to_numpy(zero_copy_only=False).astype(np.int64)
             hs = col["h"].to_numpy(zero_copy_only=False).astype(np.int64)
-            if overview_level:  # window math follows the per-level dims
-                # fail fast with a clear message on misuse: only COG blobs
-                # carry overview pages, and the floor-shift window math is
-                # only exact when the dims divide by 2^level — a mixed or
-                # odd-dim corpus would otherwise die mid-decode (or worse,
-                # silently diverge windows from decoded dims)
+            if overview_level:  # pixel centres follow the per-level dims
+                # fail fast on misuse: only COG blobs carry overview pages,
+                # and the per-level dims are only exact when the dims divide
+                # by 2^level (a mixed or odd-dim corpus would die mid-decode)
                 bad_fmt = fmts[fmts != "cog"]
                 if bad_fmt.size:
                     raise ValueError(
@@ -264,113 +231,50 @@ def _zonal_pixel_reduce(
             off, data = _binary_offsets_data(col["bytes"])
             lon0 = col["lon0"].to_numpy(zero_copy_only=False).astype(np.float64)
             lat_top = col["lat_top"].to_numpy(zero_copy_only=False).astype(np.float64)
-            n = b.num_rows
             # F3 orientation normalization flags (default: canonical)
-            if "lon_ascending" in names:
-                flip_x = ~col["lon_ascending"].to_numpy(zero_copy_only=False).astype(bool)
-            else:
-                flip_x = np.zeros(n, dtype=bool)
-            if "lat_descending" in names:
-                flip_y = ~col["lat_descending"].to_numpy(zero_copy_only=False).astype(bool)
-            else:
-                flip_y = np.zeros(n, dtype=bool)
-            out_gi: list[int] = []
-            out_cnt: list[int] = []
-            out_sum: list[int] = []
-            # hist mode: per-geometry signed bincount — a batch leaves the
-            # kernel as <= n_geoms x 256 rows regardless of pixel count
-            hist2d = (
-                np.zeros((len(rings), 256), dtype=np.int64)
-                if mode == "hist"
-                else None
-            )
-            px_cache: dict[int, np.ndarray] = {}
-
-            def tile(k: int) -> np.ndarray:
-                px = px_cache.get(k)
-                if px is None:
-                    if overview_level:
-                        from ..tiff import decode_tif_overview
-
-                        px = decode_tif_overview(
-                            data[off[k] : off[k + 1]].tobytes(), overview_level
-                        )
-                    else:
-                        px = decode_tile(
-                            data[off[k] : off[k + 1]].tobytes(), fmts[k], int(ws[k]), int(hs[k])
-                        )
-                    if flip_x[k]:
-                        px = px[:, ::-1]
-                    if flip_y[k]:
-                        px = px[::-1, :]
-                    px_cache[k] = px
-                return px
-
-            # axis-rect geometries: SIGNED pixel windows for ALL tiles at
-            # once (numpy broadcast per rect ring; holes carry sgn=-1 and
-            # subtract by inclusion-exclusion); Python touches only
-            # overlapping (tile, ring) pairs.
-            for g, sgn, A, B, C, D in rect_info:
-                x_lo = np.maximum(0, np.ceil((A - lon0) * ws / span_deg - 0.5)).astype(np.int64)
-                x_hi = np.minimum(ws - 1, np.floor((C - lon0) * ws / span_deg - 0.5)).astype(np.int64)
-                y_lo = np.maximum(0, np.ceil((lat_top - D) * hs / span_deg - 0.5)).astype(np.int64)
-                y_hi = np.minimum(hs - 1, np.floor((lat_top - B) * hs / span_deg - 0.5)).astype(np.int64)
-                hit = (x_lo <= x_hi) & (y_lo <= y_hi)
-                for k in np.nonzero(hit)[0]:
-                    block = tile(k)[y_lo[k] : y_hi[k] + 1, x_lo[k] : x_hi[k] + 1]
-                    if hist2d is not None:
-                        # signed bincount: holes (sgn=-1) subtract their
-                        # per-value counts by the same inclusion-exclusion
-                        hist2d[g] += sgn * np.bincount(
-                            block.ravel(), minlength=256
-                        )
-                        continue
-                    out_gi.append(g)
-                    out_cnt.append(sgn * block.size)
-                    out_sum.append(sgn * int(block.sum(dtype=np.int64)))
-            # generic rings: vectorized per-part bbox precheck, per-tile
-            # ray cast over ALL rings (holes subtract by parity)
-            for g, grings, part_bboxes in generic:
-                hit = np.zeros(n, dtype=bool)
-                for rx0, ry0, rx1, ry1 in part_bboxes:
-                    hit |= (
-                        (lon0 <= rx1)
-                        & (lon0 + span_deg >= rx0)
-                        & (lat_top - span_deg <= ry1)
-                        & (lat_top >= ry0)
-                    )
-                for k in np.nonzero(hit)[0]:
-                    w, h = int(ws[k]), int(hs[k])
-                    gx = lon0[k] + (np.arange(w) + 0.5) * (span_deg / w)
-                    gy = lat_top[k] - (np.arange(h) + 0.5) * (span_deg / h)
-                    lon_g, lat_g = np.meshgrid(gx, gy)
-                    mask = _points_in_rings(lon_g.ravel(), lat_g.ravel(), grings).reshape(h, w)
-                    if not mask.any():
-                        continue
-                    if hist2d is not None:
-                        hist2d[g] += np.bincount(tile(k)[mask], minlength=256)
-                        continue
-                    out_gi.append(g)
-                    out_cnt.append(int(mask.sum()))
-                    out_sum.append(int(tile(k)[mask].sum(dtype=np.int64)))
-            if hist2d is not None:
-                gi_nz, val_nz = np.nonzero(hist2d)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(gi_nz.astype(np.int32)),
-                        pa.array(val_nz.astype(np.int32)),
-                        pa.array(hist2d[gi_nz, val_nz]),
-                    ],
-                    names=["gi", "value", "n_px"],
+            flip_x = ~col["lon_ascending"].to_numpy(zero_copy_only=False).astype(bool) \
+                if "lon_ascending" in names else np.zeros(b.num_rows, dtype=bool)
+            flip_y = ~col["lat_descending"].to_numpy(zero_copy_only=False).astype(bool) \
+                if "lat_descending" in names else np.zeros(b.num_rows, dtype=bool)
+            # 1) (tile k, geometry g) pairs whose bboxes meet
+            pairs = [np.zeros(0, dtype=np.int64)]
+            for g, rx0, ry0, rx1, ry1 in part_bbox:
+                hit = (
+                    (lon0 <= rx1) & (lon0 + span_deg >= rx0)
+                    & (lat_top - span_deg <= ry1) & (lat_top >= ry0)
                 )
-                continue
+                pairs.append(np.flatnonzero(hit) * n_geoms + g)
+            pair = np.unique(np.concatenate(pairs))
+            pair_k, pair_g = pair // n_geoms, pair % n_geoms
+            # 2) decode each hit tile once, flips applied, into one buffer
+            hit_k = np.unique(pair_k)
+            tiles = [np.zeros(0, dtype=np.uint8)]
+            for k in hit_k:
+                blob = data[off[k] : off[k + 1]].tobytes()
+                if overview_level:
+                    from ..tiff import decode_tif_overview
+
+                    t = decode_tif_overview(blob, overview_level)
+                else:
+                    t = decode_tile(blob, fmts[k], int(ws[k]), int(hs[k]))
+                if t.shape != (hs[k], ws[k]):
+                    raise ValueError(f"tile decoded to {t.shape}, not {hs[k]}x{ws[k]}")
+                tiles.append(t[:: -1 if flip_y[k] else 1, :: -1 if flip_x[k] else 1].ravel())
+            px_off = np.zeros(b.num_rows, dtype=np.int64)
+            px_off[hit_k] = np.cumsum([t.size for t in tiles[:-1]])
+            px = np.concatenate(tiles)
+            # 3-5) one scanline call over every pair, or the reference
+            out = np.zeros((n_geoms, 256 if mode == "hist" else 2), dtype=np.int64)
+            _reduce_pairs(px, px_off, ws, hs, lon0, lat_top, span_deg, edges, edge_off,
+                          rings, pair_k, pair_g, out)
+            if mode == "hist":
+                gi, val = np.nonzero(out)
+                cols = [val.astype(np.int32), out[gi, val]]
+            else:
+                gi = np.flatnonzero(out[:, 0])
+                cols = [out[gi, 0], out[gi, 1]]
             yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_gi, pa.int32()),
-                    pa.array(out_cnt, pa.int64()),
-                    pa.array(out_sum, pa.int64()),
-                ],
-                names=["gi", "px_count", "px_sum"],
+                [pa.array(c) for c in [gi.astype(np.int32), *cols]], names=out_names
             )
 
     # project to EXACTLY the columns the kernel reads before the Python
@@ -380,11 +284,7 @@ def _zonal_pixel_reduce(
     kernel_cols = ["bytes", "w", "h", "fmt", "lon0", "lat_top"] + [
         c for c in ("lon_ascending", "lat_descending") if c in pruned.columns
     ]
-    pruned = pruned.select(*kernel_cols)
-    if mode == "hist":
-        partial = pruned.mapInArrow(kernel, schema="gi int, value int, n_px bigint")
-    else:
-        partial = pruned.mapInArrow(kernel, schema=ZONAL_PIXEL_SCHEMA)
+    partial = pruned.select(*kernel_cols).mapInArrow(kernel, schema=schema)
 
     # 3. exact integer aggregation + name attach
     import pandas as pd
@@ -399,9 +299,6 @@ def _zonal_pixel_reduce(
         return (
             partial.groupBy("gi", "value")
             .agg(F.sum("n_px").alias("n_px"))
-            # signed hole subtraction can net a (zone, value) to zero —
-            # same "does not occur" as the ray-cast path's absence
-            .where(F.col("n_px") > 0)
             .join(idx_df, "gi")
             # no global orderBy: a range sort adds a sampling pass + extra
             # stage that zonal_majority/zonal_quantiles immediately
@@ -411,10 +308,6 @@ def _zonal_pixel_reduce(
     return (
         partial.groupBy("gi")
         .agg(F.sum("px_count").alias("px_count"), F.sum("px_sum").alias("px_sum"))
-        # a geometry whose only corpus overlap is inside its holes nets to
-        # zero pixels under the signed-window path — same "no pixels" as
-        # the ray-cast path's absence, so drop it (and keep px_mean finite)
-        .where(F.col("px_count") > 0)
         .join(idx_df, "gi")
         .select(
             "adm_id",
@@ -424,6 +317,29 @@ def _zonal_pixel_reduce(
         )
         .orderBy("adm_id")
     )
+
+
+def _reduce_pairs(px, px_off, ws, hs, lon0, lat_top, span_deg, edges, edge_off,
+                  rings, pair_k, pair_g, out) -> None:
+    """Add each (tile pair_k[p], geometry pair_g[p]) pair's pixels into
+    ``out`` (see native.zonal_runs): one scanline call, or without the
+    native library the per-pixel ray cast it reproduces bit for bit."""
+    if not len(pair_k) or native.zonal_runs(
+        px, px_off, ws, hs, lon0, lat_top, span_deg, edges, edge_off, pair_k, pair_g, out
+    ):
+        return
+    for k, g in zip(pair_k, pair_g):
+        w, h = int(ws[k]), int(hs[k])
+        lon, lat = np.meshgrid(
+            lon0[k] + (np.arange(w) + 0.5) * (span_deg / w),
+            lat_top[k] - (np.arange(h) + 0.5) * (span_deg / h),
+        )
+        inside = _points_in_rings(lon.ravel(), lat.ravel(), rings[g])
+        vals = px[px_off[k] : px_off[k] + w * h][inside]
+        if out.shape[1] == 2:
+            out[g] += (vals.size, vals.sum(dtype=np.int64))
+        else:
+            out[g] += np.bincount(vals, minlength=256)
 
 
 def pixel_histogram(images: DataFrame) -> DataFrame:

@@ -403,7 +403,7 @@ def lsh_near_dup_pairs(
         thr = float(threshold) - 1e-9
         chunk = 2048
 
-        def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def kernel(key, pdf):
             pdf = pdf.sort_values("vec_id", kind="mergesort")
             ids = pdf["vec_id"].to_numpy()
             m = len(ids)

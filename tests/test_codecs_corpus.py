@@ -6,7 +6,7 @@ import numpy as np
 import pytest
 
 from ds_raster_pipelines_spark import codecs, corpus
-from ds_raster_pipelines_spark.operators.pip import _points_in_ring
+from ds_raster_pipelines_spark.operators.pip import _points_in_rings
 
 
 @pytest.mark.parametrize("i", [0, 1, 4, 16, 96, 97, 1439, 123456])
@@ -49,7 +49,7 @@ def test_ray_cast_golden():
     ring = corpus.parse_wkb_polygon(corpus.wkb_polygon_rect(0, 0, 10, 10))
     lon = np.array([5.0, -1.0, 10.5, 0.125, 9.875])
     lat = np.array([5.0, 5.0, 5.0, 0.125, 9.875])
-    assert _points_in_ring(lon, lat, ring).tolist() == [True, False, False, True, True]
+    assert _points_in_rings(lon, lat, [ring]).tolist() == [True, False, False, True, True]
     # non-rectangular: triangle
     import struct
 
@@ -58,7 +58,7 @@ def test_ray_cast_golden():
     ring = corpus.parse_wkb_polygon(tri)
     lon = np.array([1.0, 6.0, 4.0])
     lat = np.array([1.0, 6.0, 4.0])
-    assert _points_in_ring(lon, lat, ring).tolist() == [True, False, True]
+    assert _points_in_rings(lon, lat, [ring]).tolist() == [True, False, True]
 
 
 def test_admin_rects_disjoint_and_hot():

@@ -255,9 +255,9 @@ def test_pip_join_distributed_salted_identical(spark):
 def test_zonal_value_histogram_marginals_match_stats(spark):
     """The hist kernel's per-zone marginals (sum of n_px, sum of
     value*n_px) must equal the stats kernel's px_count/px_sum on the
-    SAME holed/multipart fixture — the two reductions share mask
-    machinery but not accumulation code, so drift in either signed path
-    (window algebra vs signed bincount) breaks the identity."""
+    SAME holed/multipart fixture — the two reductions share the scanline
+    runs but not accumulation code, so drift in either (count/sum vs
+    value histogram) breaks the identity."""
     from pyspark.sql import functions as F
 
     from ds_raster_pipelines_spark import corpus
@@ -286,10 +286,12 @@ def test_zonal_value_histogram_marginals_match_stats(spark):
     assert h == s and len(h) > 0
 
 
-# Non-rect zones for the per-pixel ray-cast branch of the zonal kernel:
-# a triangle, a concave (two reflex vertices) polygon, and a hexagon with a
-# triangular hole. Vertices sit off the 0.25 deg tile grid, so edges cut
-# tile interiors.
+# Zones for the zonal kernel against the per-pixel ray cast: a triangle, a
+# concave (two reflex vertices) polygon, and a hexagon with a triangular
+# hole, with vertices off the 0.25 deg tile grid so edges cut tile
+# interiors; and an axis rect whose four edges lie exactly on pixel
+# centres (x = lon0 + (j + 0.5) / 256 on the 64x64 tiles, exact in binary),
+# so the half-open convention decides its edge pixels.
 NON_RECT_ZONES = {
     "tri": [[(-120.03, -35.07), (40.09, -20.05), (-30.07, 60.03), (-120.03, -35.07)]],
     "concave": [[(10.03, -60.07), (150.09, -50.03), (90.05, 0.07), (160.07, 45.09),
@@ -299,12 +301,15 @@ NON_RECT_ZONES = {
          (-60.03, -25.07), (-100.05, -25.07), (-120.07, 10.03)],
         [(-95.03, 0.05), (-65.07, 0.05), (-80.09, 30.07), (-95.03, 0.05)],
     ],
+    "rect_on_centres": [corpus.rect_ring(
+        -46.75 + 5.5 / 256, 18.25 - 60.5 / 256, -17.25 + 40.5 / 256, 57.75 - 3.5 / 256
+    )],
 }
 
 
 def test_zonal_non_rect_matches_per_pixel_reference(spark):
-    """The non-rect branch of the zonal kernel (cover prune, per-part bbox
-    pre-check, per-pixel ray cast) must count and sum exactly the pixels a
+    """The zonal kernel (cover prune, per-part bbox pre-check, scanline
+    runs) must count and sum exactly the pixels a
     driver-side per-pixel reference finds: every tile decoded, every pixel
     center classified by _points_in_rings. Checked for both reductions
     (stats and value histogram)."""

@@ -586,3 +586,106 @@ def test_kernel_cache_keyed_on_cpu_flags(monkeypatch, tmp_path):
     monkeypatch.setattr(native, "_cpu_flags", lambda: here)
     got = native._build()
     assert got is not None and got._name == native._so_path(here)
+
+
+SPAN = 0.25
+
+
+def _zonal_case(dims, seed):
+    """Three tiles of ``dims`` (w, h) side by side and geometries over
+    them: random closed polylines, an axis rect plus a random ring that
+    cuts a hole where they overlap, all with vertices on pixel centres (so
+    centres meet edges and edges run along centre rows), an unclosed ring
+    (odd crossing counts), a two-part geometry, and a 150-tooth comb that
+    crosses each of its rows ~300 times."""
+    w, h = dims
+    rng = np.random.default_rng(seed)
+    lon0 = 10.0 + SPAN * np.arange(3.0)
+    lat_top = np.full(3, 20.0)
+
+    def centre():
+        t = rng.integers(3)
+        return (lon0[t] + (rng.integers(w) + 0.5) * (SPAN / w),
+                lat_top[t] - (rng.integers(h) + 0.5) * (SPAN / h))
+
+    def rect(x0, y0, x1, y1):
+        return np.asarray([(x0, y0), (x1, y0), (x1, y1), (x0, y1), (x0, y0)])
+
+    def poly(n):
+        ring = np.asarray([centre() for _ in range(n)])
+        return np.vstack([ring, ring[:1]])
+
+    (ax, ay), (bx, by) = sorted([centre(), centre()])
+    teeth = np.linspace(10.0, 10.0 + 3 * SPAN, 301)
+    comb = [(teeth[0], 19.95)] + [
+        (x, 19.76 if t % 2 else 19.99) for t, x in enumerate(teeth)
+        for _ in range(2)][1:-1] + [(teeth[-1], 19.95), (teeth[0], 19.95)]
+    geoms = [
+        [poly(rng.integers(3, 12))] for _ in range(6)
+    ] + [
+        [rect(min(ax, bx), min(ay, by), max(ax, bx), max(ay, by)), poly(4)],
+        [poly(8)[:-1]],
+        [rect(10.01, 19.8, 10.1, 19.9), rect(10.3, 19.8, 10.7, 19.99)],
+        [np.asarray(comb, dtype=float)],
+    ]
+    g_edges = [np.vstack([np.hstack([r[:-1], r[1:]]) for r in g]) for g in geoms]
+    edges = np.ascontiguousarray(np.vstack(g_edges))
+    edge_off = np.cumsum([0] + [len(e) for e in g_edges], dtype=np.int64)
+    px = rng.integers(0, 256, 3 * w * h, dtype=np.uint8)
+    px_off = np.arange(3, dtype=np.int64) * w * h
+    ws, hs = np.full(3, w, dtype=np.int64), np.full(3, h, dtype=np.int64)
+    pair_k, pair_g = (a.ravel() for a in np.meshgrid(np.arange(3), np.arange(len(geoms))))
+    return (px, px_off, ws, hs, lon0, lat_top, SPAN, edges, edge_off), geoms, (pair_k, pair_g)
+
+
+def _zonal_reference(args, geoms, pairs, ncol):
+    """Per-pixel pip._points_in_rings over every pixel of every pair."""
+    from ds_raster_pipelines_spark.operators.pip import _points_in_rings
+
+    px, px_off, ws, hs, lon0, lat_top, span = args[:7]
+    out = np.zeros((len(geoms), ncol), dtype=np.int64)
+    for k, g in zip(*pairs):
+        w, h = int(ws[k]), int(hs[k])
+        lon, lat = np.meshgrid(lon0[k] + (np.arange(w) + 0.5) * (span / w),
+                               lat_top[k] - (np.arange(h) + 0.5) * (span / h))
+        vals = px[px_off[k]:px_off[k] + w * h][_points_in_rings(lon.ravel(), lat.ravel(), geoms[g])]
+        out[g] += (vals.size, int(vals.sum())) if ncol == 2 else np.bincount(vals, minlength=256)
+    return out
+
+
+@pytest.mark.parametrize("dims", [(64, 64), (32, 32), (37, 23)])
+def test_zonal_runs_matches_per_pixel_ray_cast(dims, drop_toolchain):
+    """The scanline kernel counts exactly the pixels the half-open ray cast
+    puts inside, in both reductions; without the toolchain the per-pixel
+    fallback gives the same output and is counted."""
+    from ds_raster_pipelines_spark.operators.raster import _reduce_pairs
+
+    for seed in range(4):
+        args, geoms, pairs = _zonal_case(dims, seed)
+        for ncol in (2, 256):
+            ref = _zonal_reference(args, geoms, pairs, ncol)
+            assert ref[:, 0].any() and ref[-1].any()
+            if native.get_lib() is not None:
+                out = np.zeros_like(ref)
+                assert native.zonal_runs(*args, *pairs, out)
+                np.testing.assert_array_equal(out, ref)
+    drop_toolchain()
+    for ncol in (2, 256):
+        out = np.zeros((len(geoms), ncol), dtype=np.int64)
+        _reduce_pairs(*args, geoms, *pairs, out)
+        np.testing.assert_array_equal(out, _zonal_reference(args, geoms, pairs, ncol))
+    assert native.fallbacks["zonal_runs"] == 2
+
+
+def test_zonal_runs_rejects_bad_arrays():
+    """A pixel buffer shorter than its tiles, a float offset array or a
+    pair naming a missing geometry raises before reaching C."""
+    args, geoms, (pair_k, pair_g) = _zonal_case((16, 16), 0)
+    out = np.zeros((len(geoms), 2), dtype=np.int64)
+    for bad in [
+        ((args[0][:-1], *args[1:]), pair_k, pair_g),
+        ((args[0], args[1].astype(float), *args[2:]), pair_k, pair_g),
+        (args, pair_k, pair_g + len(geoms)),
+    ]:
+        with pytest.raises(ValueError):
+            native.zonal_runs(*bad[0], bad[1], bad[2], out)

@@ -9,7 +9,9 @@ regress them silently:
   yardstick for the bucketed paths;
 * at most ONE Python stage (MapInArrow / MapInPandas / EvalPython) —
   bytes cross the JVM<->Python boundary exactly once per query (chaining
-  byte-carrying kernels measured >10x the kernel cost, BASELINE.md).
+  byte-carrying kernels measured >10x the kernel cost, BASELINE.md);
+* no "Cannot infer the eval type" warning while building the plan — a
+  Python UDF whose type hints PySpark cannot read warns on every build.
 
 Plans are BUILT, never executed (dedup_components is skipped: its
 iterative construction runs jobs eagerly by design — its plan shape is
@@ -19,6 +21,7 @@ asserted per-round in the dedup suite).
 from __future__ import annotations
 
 import re
+import warnings
 
 import pytest
 
@@ -54,7 +57,11 @@ def test_every_query_plan_holds_invariants(spark):
     for name, fn in m.queries().items():
         if name in CONSTRUCTION_EXECUTES:
             continue
-        plan = _physical(fn(spark, SF))
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            plan = _physical(fn(spark, SF))
+        if any("Cannot infer the eval type" in str(w.message) for w in caught):
+            failures.append(f"{name}: Cannot infer the eval type from type hints")
         if "CartesianProduct" in plan and name not in SANCTIONED_CARTESIAN:
             failures.append(f"{name}: CartesianProduct")
         # count DISTINCT Python-stage nodes: a persisted relation's cached
