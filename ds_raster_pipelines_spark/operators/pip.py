@@ -228,9 +228,6 @@ def contains_wkb_udf(boundary: str = "half_open"):
     return _contains
 
 
-contains_udf = contains_wkb_udf()  # the default half-open instance
-
-
 def contains_indexed_udf(rings: list, boundary: str = "half_open"):
     """Exact PIP refine against a small geometry dictionary: candidates
     carry only an int geometry index; the parsed geometries (single ring
@@ -355,7 +352,6 @@ def pip_join(
     lon_col: str = "lon_c",
     lat_col: str = "lat_c",
     refine: str = "wkb",
-    broadcast_cover: bool = True,
     cover: DataFrame | None = None,
     rings: list[np.ndarray] | None = None,
     adm_rows: list | None = None,
@@ -399,7 +395,7 @@ def pip_join(
             )
     if refine == "auto":
         refine = "bbox" if all(_is_axis_rect(r) for r in rings) else "wkb"
-    cand = pts.join(F.broadcast(cover) if broadcast_cover else cover, "cell_id")
+    cand = pts.join(F.broadcast(cover), "cell_id")
     if refine == "bbox":
         # exact refine for axis-rect geometries as codegen'd predicates
         # (the bounds travel inside the single cover broadcast) — zero
@@ -438,7 +434,7 @@ def pip_join_distributed(
     Plan: distributed cover (polygon_cover_cells, one Arrow stage over the
     polygon table) → shuffle equi-join points⨝cover on cell_id → shuffle
     join on adm_id to attach each candidate's own WKB → exact ray-cast
-    refine with contains_udf (batches factorized by geometry, so each ring
+    refine with contains_wkb_udf (batches factorized by geometry, so each ring
     parses once per batch, and interior-cell candidates skip the geometry
     entirely). Two shuffles + two Arrow stages — the shape that survives a
     10^6-polygon admin table on 1000 executors, where the broadcast plan

@@ -19,6 +19,12 @@ Geometry dictionary ships via closure (admin tables are broadcast-small).
 Every polygon takes the same path: a pixel counts when its centre is inside
 by the half-open even-odd rule of pip._points_in_rings (pip_join's default),
 which is also the per-pixel fallback when no C compiler is present.
+
+Every tile kernel here (zonal, histogram, coarsen, vectorize, resample,
+reproject) is one ``mapInArrow`` stage that reads its batch through
+``sources.images.TileBatch`` and keeps only its own reduction: decode,
+payload-size and decoded-shape checks, COG overview reads and the F3
+orientation flips all live in the reader.
 """
 
 from __future__ import annotations
@@ -29,6 +35,7 @@ from pyspark.sql import functions as F
 
 from .. import grid, native
 from ..corpus import parse_wkb_geometry
+from ..sources.images import TileBatch
 from .pip import _points_in_rings
 
 def zonal_pixel_stats(
@@ -199,43 +206,10 @@ def _zonal_pixel_reduce(
     def kernel(batches):
         import pyarrow as pa
 
-        from ..codecs import decode_tile
-        from ..sources.images import _binary_offsets_data
-
         for b in batches:
-            names = b.schema.names
-            col = {name: b.column(k) for k, name in enumerate(names)}
-            fmts = np.asarray(col["fmt"].to_pylist(), dtype=object)
-            ws = col["w"].to_numpy(zero_copy_only=False).astype(np.int64)
-            hs = col["h"].to_numpy(zero_copy_only=False).astype(np.int64)
-            if overview_level:  # pixel centres follow the per-level dims
-                # fail fast on misuse: only COG blobs carry overview pages,
-                # and the per-level dims are only exact when the dims divide
-                # by 2^level (a mixed or odd-dim corpus would die mid-decode)
-                bad_fmt = fmts[fmts != "cog"]
-                if bad_fmt.size:
-                    raise ValueError(
-                        f"overview_level={overview_level} requires fmt='cog' "
-                        f"for every tile; got {sorted(set(bad_fmt))[:3]}"
-                    )
-                step = 1 << overview_level
-                odd = (ws % step != 0) | (hs % step != 0)
-                if odd.any():
-                    k = int(np.flatnonzero(odd)[0])
-                    raise ValueError(
-                        f"overview_level={overview_level} needs dims divisible "
-                        f"by {step}; tile {int(ws[k])}x{int(hs[k])} is not"
-                    )
-                ws = ws >> overview_level
-                hs = hs >> overview_level
-            off, data = _binary_offsets_data(col["bytes"])
-            lon0 = col["lon0"].to_numpy(zero_copy_only=False).astype(np.float64)
-            lat_top = col["lat_top"].to_numpy(zero_copy_only=False).astype(np.float64)
-            # F3 orientation normalization flags (default: canonical)
-            flip_x = ~col["lon_ascending"].to_numpy(zero_copy_only=False).astype(bool) \
-                if "lon_ascending" in names else np.zeros(b.num_rows, dtype=bool)
-            flip_y = ~col["lat_descending"].to_numpy(zero_copy_only=False).astype(bool) \
-                if "lat_descending" in names else np.zeros(b.num_rows, dtype=bool)
+            tb = TileBatch(b, overview_level)
+            lon0 = b.column("lon0").to_numpy(zero_copy_only=False).astype(np.float64)
+            lat_top = b.column("lat_top").to_numpy(zero_copy_only=False).astype(np.float64)
             # 1) (tile k, geometry g) pairs whose bboxes meet
             pairs = [np.zeros(0, dtype=np.int64)]
             for g, rx0, ry0, rx1, ry1 in part_bbox:
@@ -248,24 +222,13 @@ def _zonal_pixel_reduce(
             pair_k, pair_g = pair // n_geoms, pair % n_geoms
             # 2) decode each hit tile once, flips applied, into one buffer
             hit_k = np.unique(pair_k)
-            tiles = [np.zeros(0, dtype=np.uint8)]
-            for k in hit_k:
-                blob = data[off[k] : off[k + 1]].tobytes()
-                if overview_level:
-                    from ..tiff import decode_tif_overview
-
-                    t = decode_tif_overview(blob, overview_level)
-                else:
-                    t = decode_tile(blob, fmts[k], int(ws[k]), int(hs[k]))
-                if t.shape != (hs[k], ws[k]):
-                    raise ValueError(f"tile decoded to {t.shape}, not {hs[k]}x{ws[k]}")
-                tiles.append(t[:: -1 if flip_y[k] else 1, :: -1 if flip_x[k] else 1].ravel())
-            px_off = np.zeros(b.num_rows, dtype=np.int64)
+            tiles = [np.zeros(0, dtype=np.uint8)] + [tb.pixels(k).ravel() for k in hit_k]
+            px_off = np.zeros(tb.n, dtype=np.int64)
             px_off[hit_k] = np.cumsum([t.size for t in tiles[:-1]])
             px = np.concatenate(tiles)
             # 3-5) one scanline call over every pair, or the reference
             out = np.zeros((n_geoms, 256 if mode == "hist" else 2), dtype=np.int64)
-            _reduce_pairs(px, px_off, ws, hs, lon0, lat_top, span_deg, edges, edge_off,
+            _reduce_pairs(px, px_off, tb.w, tb.h, lon0, lat_top, span_deg, edges, edge_off,
                           rings, pair_k, pair_g, out)
             if mode == "hist":
                 gi, val = np.nonzero(out)
@@ -281,10 +244,7 @@ def _zonal_pixel_reduce(
     # boundary (guide §4.1): mapInArrow is opaque to column pruning, so
     # without this every tile also ships its caption/phash/id payload
     # through Arrow (and reads them off parquet).
-    kernel_cols = ["bytes", "w", "h", "fmt", "lon0", "lat_top"] + [
-        c for c in ("lon_ascending", "lat_descending") if c in pruned.columns
-    ]
-    partial = pruned.select(*kernel_cols).mapInArrow(kernel, schema=schema)
+    partial = TileBatch.select(pruned, "lon0", "lat_top").mapInArrow(kernel, schema=schema)
 
     # 3. exact integer aggregation + name attach
     import pandas as pd
@@ -360,39 +320,26 @@ def pixel_histogram(images: DataFrame) -> DataFrame:
     def kernel(batches):
         import pyarrow as pa
 
-        from ..codecs import decode_tile
-        from ..sources.images import _binary_offsets_data
-
         for b in batches:
-            names = b.schema.names
-            col = {name: b.column(k) for k, name in enumerate(names)}
-            fmts = np.asarray(col["fmt"].to_pylist(), dtype=object)
-            ws = col["w"].to_numpy(zero_copy_only=False).astype(np.int64)
-            hs = col["h"].to_numpy(zero_copy_only=False).astype(np.int64)
-            off, data = _binary_offsets_data(col["bytes"])
+            tb = TileBatch(b)
             counts = np.zeros(256, dtype=np.int64)
             # fixed-size fmts: ONE bincount over the concatenated payloads
-            # (raw and qnt both store decoded-domain bytes — qnt is
-            # LSB-cleared at encode time, codecs.py:82)
-            fixed = (fmts == "raw") | (fmts == "qnt")
-            if fixed.any():
-                idx = np.nonzero(fixed)[0]
-                segs = [data[off[k] : off[k + 1]] for k in idx]
-                raw = np.concatenate(segs) if len(segs) > 1 else segs[0]
-                counts += np.bincount(raw, minlength=256)
-            for k in np.nonzero(~fixed)[0]:
-                px = decode_tile(
-                    data[off[k] : off[k + 1]].tobytes(), fmts[k], int(ws[k]), int(hs[k])
+            # (raw and qnt both store decoded-domain bytes)
+            idx = np.flatnonzero(tb.fixed)
+            if len(idx):
+                counts += np.bincount(
+                    np.concatenate([tb.data[tb.off[k] : tb.off[k + 1]] for k in idx]),
+                    minlength=256,
                 )
-                counts += np.bincount(px.ravel(), minlength=256)
+            for k in np.flatnonzero(~tb.fixed):
+                counts += np.bincount(tb.pixels(k).ravel(), minlength=256)
             nz = np.nonzero(counts)[0]
             yield pa.RecordBatch.from_arrays(
                 [pa.array(nz.astype(np.int32)), pa.array(counts[nz])],
                 names=["value", "n_px"],
             )
 
-    images = images.select("bytes", "fmt", "w", "h")  # §4.1: opaque kernel
-    partial = images.mapInArrow(kernel, schema="value int, n_px bigint")
+    partial = TileBatch.select(images).mapInArrow(kernel, schema="value int, n_px bigint")
     return partial.groupBy("value").agg(F.sum("n_px").alias("n_px"))
 
 
@@ -429,63 +376,26 @@ def coarsen_histogram(images: DataFrame, factor: int = 2, quant: int = 1000) -> 
     def kernel(batches):
         import pyarrow as pa
 
-        from ..codecs import decode_tile
-        from ..sources.images import _binary_offsets_data
-
         for b in batches:
-            names = b.schema.names
-            col = {name: b.column(k) for k, name in enumerate(names)}
-            fmts = np.asarray(col["fmt"].to_pylist(), dtype=object)
-            ws = col["w"].to_numpy(zero_copy_only=False).astype(np.int64)
-            hs = col["h"].to_numpy(zero_copy_only=False).astype(np.int64)
-            off, data = _binary_offsets_data(col["bytes"])
+            tb = TileBatch(b)
             # per-BATCH tally: r8 measured the old per-tile np.unique
             # (a sort per entropy-coded tile) at >half the kernel — all
             # coarse values accumulate into one array and a single
             # unique/bincount-style pass emits the partial counts
             parts: list[np.ndarray] = []
             scale = quant / (factor * factor)
-
-            # fixed-size fmts, grouped by (w, h): bulk-reshape the whole
-            # group's payload to (n, h, w) and block-reduce in ONE numpy
-            # pass — no per-tile Python on the hot path
-            fixed = (fmts == "raw") | (fmts == "qnt")
-            done = np.zeros(b.num_rows, dtype=bool)
-            if fixed.any():
-                for w, h in {(int(ws[k]), int(hs[k])) for k in np.nonzero(fixed)[0]}:
-                    grp = np.nonzero(fixed & (ws == w) & (hs == h))[0]
-                    lens = off[grp + 1] - off[grp]
-                    grp = grp[lens == w * h]  # defensive: malformed rows fall through
-                    if not len(grp):
-                        continue
-                    stack = np.concatenate(
-                        [data[off[k] : off[k + 1]] for k in grp]
-                    ).reshape(len(grp), h, w)
+            # block-reduce same-shape tiles as small stacked chunks (chunk
+            # 8 per the measured cache ceiling, same as the IDCT/resample
+            # kernels; stacking a whole shape group at once measured ~10 %
+            # slower) and defer ALL counting to the batch tally (r8)
+            groups: dict[tuple[int, int], list[int]] = {}
+            for k in range(tb.n):
+                groups.setdefault((int(tb.h[k]), int(tb.w[k])), []).append(k)
+            for idxs in groups.values():
+                for c0 in range(0, len(idxs), 8):
+                    stack = np.stack([tb.pixels(k) for k in idxs[c0 : c0 + 8]])
                     blocks = _block_sum(stack, factor)
                     parts.append(np.rint(blocks * scale).astype(np.int64).ravel())
-                    done[grp] = True
-            # entropy-coded fmts: decode per tile (unavoidable), but
-            # block-reduce same-shape tiles as small stacked chunks and
-            # defer ALL counting to the batch tally (r8; chunk 8 per the
-            # measured cache ceiling, same as the IDCT/resample kernels)
-            rest = np.nonzero(~done)[0]
-            if len(rest):
-                pxs = [
-                    decode_tile(
-                        data[off[k] : off[k + 1]].tobytes(), fmts[k],
-                        int(ws[k]), int(hs[k]),
-                    )
-                    for k in rest
-                ]
-                groups: dict[tuple[int, int], list[int]] = {}
-                for j, px in enumerate(pxs):
-                    groups.setdefault(px.shape, []).append(j)
-                for (h, w), idxs in groups.items():
-                    for c0 in range(0, len(idxs), 8):
-                        sub = idxs[c0 : c0 + 8]
-                        stack = np.stack([pxs[j] for j in sub])
-                        blocks = _block_sum(stack, factor)
-                        parts.append(np.rint(blocks * scale).astype(np.int64).ravel())
             if parts:
                 # values are bounded (block means of uint8 pixels times
                 # quant: 0..255*quant), so a bincount + nonzero replaces
@@ -502,8 +412,7 @@ def coarsen_histogram(images: DataFrame, factor: int = 2, quant: int = 1000) -> 
                 names=["value_milli", "n_px"],
             )
 
-    images = images.select("bytes", "fmt", "w", "h")  # §4.1: opaque kernel
-    partial = images.mapInArrow(kernel, schema="value_milli bigint, n_px bigint")
+    partial = TileBatch.select(images).mapInArrow(kernel, schema="value_milli bigint, n_px bigint")
     return partial.groupBy("value_milli").agg(F.sum("n_px").alias("n_px"))
 
 
@@ -523,36 +432,16 @@ def vectorize_mask(images: DataFrame, threshold: int, span_deg: float = 0.25) ->
     def kernel(batches):
         import pyarrow as pa
 
-        from ..codecs import decode_tile
-        from ..sources.images import _binary_offsets_data
-
         for b in batches:
-            names = b.schema.names
-            col = {name: b.column(k) for k, name in enumerate(names)}
-            ii = col["i"].to_numpy(zero_copy_only=False)
-            fmts = np.asarray(col["fmt"].to_pylist(), dtype=object)
-            ws = col["w"].to_numpy(zero_copy_only=False)
-            hs = col["h"].to_numpy(zero_copy_only=False)
-            off, data = _binary_offsets_data(col["bytes"])
-            lon0s = col["lon0"].to_numpy(zero_copy_only=False)
-            lat_tops = col["lat_top"].to_numpy(zero_copy_only=False)
-            if "lon_ascending" in names:
-                flip_x = ~col["lon_ascending"].to_numpy(zero_copy_only=False).astype(bool)
-            else:
-                flip_x = np.zeros(b.num_rows, dtype=bool)
-            if "lat_descending" in names:
-                flip_y = ~col["lat_descending"].to_numpy(zero_copy_only=False).astype(bool)
-            else:
-                flip_y = np.zeros(b.num_rows, dtype=bool)
+            tb = TileBatch(b)
+            ii = b.column("i").to_numpy(zero_copy_only=False)
+            lon0s = b.column("lon0").to_numpy(zero_copy_only=False)
+            lat_tops = b.column("lat_top").to_numpy(zero_copy_only=False)
             o_i, o_minlon, o_minlat, o_maxlon, o_maxlat, o_npx = [], [], [], [], [], []
-            for k in range(b.num_rows):
+            for k in range(tb.n):
                 i = int(ii[k])
-                w, h = int(ws[k]), int(hs[k])
-                px = decode_tile(data[off[k] : off[k + 1]].tobytes(), fmts[k], w, h)
-                if flip_x[k]:
-                    px = px[:, ::-1]
-                if flip_y[k]:
-                    px = px[::-1, :]
+                w, h = int(tb.w[k]), int(tb.h[k])
+                px = tb.pixels(k)
                 mask = px >= threshold
                 if not mask.any():
                     continue
@@ -577,7 +466,7 @@ def vectorize_mask(images: DataFrame, threshold: int, span_deg: float = 0.25) ->
                 names=["i", "min_lon", "min_lat", "max_lon", "max_lat", "n_px_masked"],
             )
 
-    return images.mapInArrow(
+    return TileBatch.select(images, "i", "lon0", "lat_top").mapInArrow(
         kernel,
         schema="i bigint, min_lon double, min_lat double, max_lon double, max_lat double, n_px_masked bigint",
     )
@@ -641,18 +530,12 @@ def resample_bilinear_stats(
     the kernel, so downstream aggregation is order-independent."""
 
     def kernel(batches):
-        import pandas as pd
+        import pyarrow as pa
 
-        from ..codecs import decode_tile
-
-        for pdf in batches:
-            n = len(pdf)
-            pxs = [
-                decode_tile(bytes(blob), fmt, int(w), int(h))
-                for blob, fmt, w, h in zip(
-                    pdf["bytes"], pdf["fmt"], pdf["w"], pdf["h"]
-                )
-            ]
+        for b in batches:
+            tb = TileBatch(b)
+            n = tb.n
+            pxs = [tb.pixels(k) for k in range(n)]
             # group same-shape tiles and run ONE stacked separable interp
             # per group: the lerp is elementwise, so stacked results are
             # bit-identical to per-tile calls while the ~20 numpy ops per
@@ -663,8 +546,6 @@ def resample_bilinear_stats(
             groups: dict[tuple[int, int], list[int]] = {}
             for k, px in enumerate(pxs):
                 groups.setdefault(px.shape, []).append(k)
-            from .. import native as _native
-
             for shape, idxs in groups.items():
                 # native path (r8 s4): C replays the gather/lerp passes
                 # elementwise with tables computed by the SAME numpy
@@ -683,21 +564,22 @@ def resample_bilinear_stats(
                         np.stack([pxs[k] for k in sub])
                     )
                     rs = np.empty((len(sub), out_h, out_w), dtype=np.float64)
-                    if stack.dtype != np.uint8 or not _native.bilinear_stack(
+                    if stack.dtype != np.uint8 or not native.bilinear_stack(
                         stack, tabs, rs, tmp
                     ):
                         rs = bilinear_resample(stack, out_h, out_w)
                     means[sub] = rs.reshape(len(sub), -1).mean(axis=1)
-            yield pd.DataFrame(
-                {
-                    "i": pdf["i"],
-                    "w2": np.full(n, out_w, dtype=np.int32),
-                    "h2": np.full(n, out_h, dtype=np.int32),
-                    "rs_mean_q": np.rint(means * quant).astype(np.int64),
-                }
+            yield pa.RecordBatch.from_arrays(
+                [
+                    b.column("i"),
+                    pa.array(np.full(n, out_w, dtype=np.int32)),
+                    pa.array(np.full(n, out_h, dtype=np.int32)),
+                    pa.array(np.rint(means * quant).astype(np.int64)),
+                ],
+                names=["i", "w2", "h2", "rs_mean_q"],
             )
 
-    return images.select("i", "bytes", "fmt", "w", "h").mapInPandas(
+    return TileBatch.select(images, "i").mapInArrow(
         kernel, schema="i bigint, w2 int, h2 int, rs_mean_q bigint"
     )
 
@@ -794,22 +676,20 @@ def reproject_webmercator_sum256(images: DataFrame, quant_bits: int = 8) -> Data
     ONE Arrow stage (decode + transpose + warp + sum fused)."""
 
     def kernel(batches):
-        import pandas as pd
+        import pyarrow as pa
 
-        from ..codecs import decode_tile
+        for b in batches:
+            tb = TileBatch(b)
+            lat_top = b.column("lat_top").to_numpy(zero_copy_only=False)
+            out_s = [
+                int(np.rint(reproject_webmercator(tb.pixels(k).T, float(lat_top[k])).sum() * 256.0))
+                for k in range(tb.n)
+            ]
+            yield pa.RecordBatch.from_arrays(
+                [b.column("i"), pa.array(out_s, pa.int64())], names=["i", "rp_sum_256"]
+            )
 
-        for pdf in batches:
-            out_i, out_s = [], []
-            for i, blob, fmt, w, h, lat_top in zip(
-                pdf["i"], pdf["bytes"], pdf["fmt"], pdf["w"], pdf["h"], pdf["lat_top"]
-            ):
-                px = decode_tile(bytes(blob), fmt, int(w), int(h)).T
-                rp = reproject_webmercator(px, float(lat_top))
-                out_i.append(int(i))
-                out_s.append(int(np.rint(rp.sum() * 256.0)))
-            yield pd.DataFrame({"i": out_i, "rp_sum_256": out_s})
-
-    return images.select("i", "bytes", "fmt", "w", "h", "lat_top").mapInPandas(
+    return TileBatch.select(images, "i", "lat_top").mapInArrow(
         kernel, schema="i bigint, rp_sum_256 bigint"
     )
 

@@ -4,10 +4,11 @@ The reference validates each processed raster and then writes it as a
 ``driver="COG"`` GeoTIFF (``/root/reference/src/pipelines/pipeline.py:262-293``,
 write at ``:277``). The distributed analog here:
 
-* ``reencode_cog`` — one Arrow-batched kernel that decodes every tile
-  (any supported fmt) and re-encodes it as a tiled TIFF with a reduced-
-  resolution overview IFD (``tiff.encode_cog``) — bytes+fmt columns are
-  replaced, everything else passes through untouched;
+* ``reencode_cog`` — one Arrow-batched kernel that reads every tile (any
+  supported fmt) through ``sources.images.TileBatch`` and re-encodes it as
+  a tiled TIFF with a reduced-resolution overview IFD
+  (``tiff.encode_cog``) — the bytes+fmt arrays are swapped, every other
+  column passes through untouched;
 * ``write_cog_corpus`` — gates the write on a validation report
   (``operators.validate.validated_write_gate`` — the distributed form of
   raising before the COG write at pipeline.py:275-277), then writes the
@@ -24,7 +25,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from . import codecs, tiff
+from . import tiff
+from .sources.images import TILE_COLUMNS, TileBatch
 
 # Storage-tier / content-type rules of the reference
 # (azure_utils.py:75-98: COOL + application/octet-stream default;
@@ -54,29 +56,31 @@ def with_storage_properties(df: DataFrame, processed: bool = False) -> DataFrame
 def reencode_cog(images: DataFrame, tile: int = 32, overviews: int = 1) -> DataFrame:
     """Decode each tile and re-encode as COG bytes (fmt='cog').
 
-    Single mapInPandas stage; column set and order preserved. The decode→
+    Single mapInArrow stage; column set and order preserved. The decode→
     encode round-trip is lossless for lossless inputs and re-encodes the
     already-lossy pixels bit-exactly for lossy ones — downstream stats are
     identical to the pre-sink corpus either way (pytest-gated).
     """
-    cols = images.columns
     schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in images.schema.fields
     )
 
     def kernel(batches):
-        for pdf in batches:
-            blobs = []
-            for data, fmt, w, h in zip(pdf["bytes"], pdf["fmt"], pdf["w"], pdf["h"]):
-                px = codecs.decode_tile(bytes(data), fmt, int(w), int(h))
-                blobs.append(tiff.encode_cog(px, tile=tile, overviews=overviews))
-            pdf = pdf.assign(
-                bytes=pd.Series(blobs, index=pdf.index, dtype=object),
-                fmt="cog",
-            )
-            yield pdf[cols]
+        import pyarrow as pa
 
-    return images.mapInPandas(kernel, schema=schema)
+        for b in batches:
+            # the orientation flags pass through, so the reader sees only
+            # the tile columns and the pixels keep their stored order
+            tb = TileBatch(b.select(list(TILE_COLUMNS)))
+            blobs = [tiff.encode_cog(tb.pixels(k), tile=tile, overviews=overviews)
+                     for k in range(tb.n)]
+            cols = b.columns
+            names = b.schema.names
+            cols[names.index("bytes")] = pa.array(blobs, b.schema.field("bytes").type)
+            cols[names.index("fmt")] = pa.array(["cog"] * tb.n, b.schema.field("fmt").type)
+            yield pa.RecordBatch.from_arrays(cols, names=names)
+
+    return images.mapInArrow(kernel, schema=schema)
 
 
 def write_cog_corpus(

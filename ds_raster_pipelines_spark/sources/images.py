@@ -1,27 +1,32 @@
 """Tile decode kernels — the distributed analog of the reference's raster
 scan + normalize stage (S1/S3/S4 + F1-F5 in SURVEY.md §2).
 
-All pixel math is inside ``mapInPandas`` over Arrow batches (input_hint: no
-per-row Python in the relational plan; inside a batch the per-image loop is
-over *blobs*, each decoded with vectorized numpy). Decode emits per-tile
-statistics rather than raw pixels so the downstream relational plan stays
-columnar and shuffle-light — pixels never cross a shuffle boundary.
+Every tile kernel in the engine (here, in operators/raster.py and in
+sinks.py) runs inside ``mapInArrow`` and reads its Arrow batch through
+ONE reader, ``TileBatch``: the tile columns, the fixed-size payloads that
+reduce straight off the Arrow buffer, the canonical errors for a malformed
+row, and the F3 orientation flips live there and nowhere else (input_hint:
+no per-row Python in the relational plan; inside a batch the per-image
+loop is over *blobs*, each decoded with vectorized numpy). Decode emits
+per-tile statistics rather than raw pixels so the downstream relational
+plan stays columnar and shuffle-light — pixels never cross a shuffle
+boundary.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from .. import codecs, corpus, native
+from .. import codecs, corpus, native, tiff
 
 DECODE_STATS_SCHEMA = (
     "i bigint, image_id string, caption string, fmt string, phash bigint,"
     " mean_value double, min_value double, max_value double, n_px bigint"
 )
+
+TILE_COLUMNS = ("bytes", "fmt", "w", "h")
+FLIP_COLUMNS = ("lon_ascending", "lat_descending")
 
 
 def _binary_offsets_data(arr) -> tuple[np.ndarray, np.ndarray]:
@@ -57,57 +62,133 @@ def seg_sum_min_max_reference(data: np.ndarray, bounds: np.ndarray):
     return sums, mn, mx
 
 
+class TileBatch:
+    """One Arrow record batch of image tiles, read the one way every tile
+    kernel reads it. The only code that knows the tile columns
+    (``TILE_COLUMNS`` plus the optional F3 flags ``FLIP_COLUMNS``, reference
+    raster_utils.py:42-73), and the only place a malformed row is caught:
+
+    * ``fixed`` — raw/qnt rows whose payload is exactly ``w*h`` bytes. qnt
+      is LSB-cleared at encode time (codecs.py:84), so for both the payload
+      bytes ARE the pixels and a kernel may reduce them straight off
+      ``data`` (``bounds(idx)`` gives the segment table).
+    * ``bad`` — null or wrong-size raw/qnt rows, which a ``tolerant``
+      reader leaves for the caller to null out; otherwise they raise here
+      ("payload size mismatch ...", never a silent mis-count).
+    * ``pixels(k)`` — the (h, w) uint8 tile in canonical orientation (flips
+      applied as views); a decoded shape other than the row's raises.
+
+    ``overview_level`` > 0 reads each tile's reduced-resolution COG page;
+    ``w``/``h`` are then the per-level dims.
+    """
+
+    def __init__(self, b, overview_level: int = 0, tolerant: bool = False):
+        self.n = b.num_rows
+        self.level = overview_level
+        self.fmt = np.asarray(b.column("fmt").to_pylist(), dtype=object)
+        ws = b.column("w").to_numpy(zero_copy_only=False).astype(np.int64)
+        hs = b.column("h").to_numpy(zero_copy_only=False).astype(np.int64)
+        if overview_level:  # pixel centres follow the per-level dims
+            # fail fast on misuse: only COG blobs carry overview pages, and
+            # the per-level dims are only exact when the dims divide by
+            # 2^level (a mixed or odd-dim corpus would die mid-decode)
+            bad_fmt = self.fmt[self.fmt != "cog"]
+            if bad_fmt.size:
+                raise ValueError(
+                    f"overview_level={overview_level} requires fmt='cog' "
+                    f"for every tile; got {sorted(set(bad_fmt))[:3]}"
+                )
+            step = 1 << overview_level
+            odd = (ws % step != 0) | (hs % step != 0)
+            if odd.any():
+                k = int(np.flatnonzero(odd)[0])
+                raise ValueError(
+                    f"overview_level={overview_level} needs dims divisible "
+                    f"by {step}; tile {int(ws[k])}x{int(hs[k])} is not"
+                )
+            ws, hs = ws >> overview_level, hs >> overview_level
+        self.w, self.h = ws, hs
+        arr = b.column("bytes")
+        if arr.null_count and not tolerant:
+            raise ValueError("null bytes in images table")
+        self.off, self.data = _binary_offsets_data(arr)
+        fixed = (self.fmt == "raw") | (self.fmt == "qnt")
+        self.bad = fixed & (self.off[1:] - self.off[:-1] != ws * hs)
+        if self.bad.any() and not tolerant:
+            k = int(np.flatnonzero(self.bad)[0])
+            raise ValueError(
+                f"payload size mismatch for fixed-size fmt at row {k}: "
+                f"{self.off[k + 1] - self.off[k]} bytes for {ws[k] * hs[k]} pixels"
+            )
+        if arr.null_count:
+            self.bad |= arr.is_null().to_numpy(zero_copy_only=False)
+        self.fixed = fixed & ~self.bad
+        names = b.schema.names
+        self.flip_x, self.flip_y = (
+            ~b.column(c).to_numpy(zero_copy_only=False).astype(bool)
+            if c in names else np.zeros(self.n, dtype=bool)
+            for c in FLIP_COLUMNS
+        )
+
+    @staticmethod
+    def select(df: DataFrame, *extra: str) -> DataFrame:
+        """``df`` projected to ``extra`` plus the tile columns and whichever
+        orientation flags it carries: mapInArrow is opaque to column
+        pruning, so a kernel must ship exactly what it reads (guide §4.1)."""
+        return df.select(*extra, *TILE_COLUMNS, *(c for c in FLIP_COLUMNS if c in df.columns))
+
+    def bounds(self, idx: np.ndarray) -> np.ndarray:
+        """Interleaved (start, end) offsets into ``data`` of rows ``idx`` —
+        the segment table of native.seg_sum_min_max / hist_segments."""
+        out = np.empty(2 * len(idx), dtype=np.int64)
+        out[0::2] = self.off[idx]
+        out[1::2] = self.off[idx + 1]
+        return out
+
+    def pixels(self, k: int) -> np.ndarray:
+        h, w = int(self.h[k]), int(self.w[k])
+        seg = self.data[self.off[k] : self.off[k + 1]]
+        if self.fixed[k]:
+            px = seg.reshape(h, w)  # a view of the Arrow buffer
+        else:
+            blob = seg.tobytes()
+            if self.level:
+                px = tiff.decode_tif_overview(blob, self.level)
+            else:
+                px = codecs.decode_tile(blob, self.fmt[k], w, h)
+            if px.shape != (h, w):
+                raise ValueError(f"tile {k} decoded to {px.shape}, not {h}x{w}")
+        if self.flip_x[k] or self.flip_y[k]:  # a no-op slice still builds a view
+            px = px[:: -1 if self.flip_y[k] else 1, :: -1 if self.flip_x[k] else 1]
+        return px
+
+
 def _decode_stats_batch(b, tolerant: bool):
     """decode_stats on one Arrow record batch (see there)."""
     import pyarrow as pa
 
-    n = b.num_rows
-    names = b.schema.names
-    col = {name: b.column(i) for i, name in enumerate(names)}
-    fmts = np.asarray(col["fmt"].to_pylist(), dtype=object)
-    ws = col["w"].to_numpy(zero_copy_only=False)
-    hs = col["h"].to_numpy(zero_copy_only=False)
-    arr = col["bytes"]
-    if arr.null_count and not tolerant:
-        raise ValueError("null bytes in images table")
-    off, data = _binary_offsets_data(arr)
-    mean = np.full(n, np.nan)
-    mn = np.full(n, np.nan)
-    mx = np.full(n, np.nan)
-    ok = np.ones(n, dtype=bool)
-    npx = (ws.astype(np.int64)) * hs.astype(np.int64)
-    seg_len = off[1:] - off[:-1]
-    # vectorized fast path: fixed-size uncompressed payloads reduce per
-    # segment straight off the Arrow data buffer — the C kernel in one
-    # pass, or the numpy reference
-    fixed = (fmts == "raw") | (fmts == "qnt")
-    bad_size = fixed & (seg_len != npx)
-    if bad_size.any():
-        if not tolerant:
-            k = int(np.nonzero(bad_size)[0][0])
-            raise ValueError(
-                f"payload size mismatch for fixed-size fmt at row {k}: "
-                f"{seg_len[k]} bytes for {npx[k]} pixels"
-            )
-        ok[bad_size] = False
-    good_fixed = fixed & ~bad_size
-    if good_fixed.any():
-        idx = np.nonzero(good_fixed)[0]
-        bounds = np.empty(2 * len(idx), dtype=np.int64)
-        bounds[0::2] = off[idx]
-        bounds[1::2] = off[idx + 1]
-        stats = native.seg_sum_min_max(data, bounds)
+    tb = TileBatch(b, tolerant=tolerant)
+    npx = tb.w * tb.h
+    mean = np.full(tb.n, np.nan)
+    mn = np.full(tb.n, np.nan)
+    mx = np.full(tb.n, np.nan)
+    ok = ~tb.bad
+    # vectorized fast path: fixed-size payloads reduce per segment straight
+    # off the Arrow data buffer — the C kernel in one pass, or the numpy
+    # reference
+    idx = np.flatnonzero(tb.fixed)
+    if len(idx):
+        bounds = tb.bounds(idx)
+        stats = native.seg_sum_min_max(tb.data, bounds)
         if stats is None:
-            stats = seg_sum_min_max_reference(data, bounds)
+            stats = seg_sum_min_max_reference(tb.data, bounds)
         sums, lo, hi = stats
         mean[idx] = sums / npx[idx]
         mn[idx] = lo
         mx[idx] = hi
-    for k in np.nonzero(~fixed)[0]:
+    for k in np.flatnonzero(ok & ~tb.fixed):
         try:
-            px = codecs.decode_tile(
-                data[off[k] : off[k + 1]].tobytes(), fmts[k], int(ws[k]), int(hs[k])
-            )
+            px = tb.pixels(k)
         except Exception:
             if not tolerant:
                 raise
@@ -117,11 +198,11 @@ def _decode_stats_batch(b, tolerant: bool):
         mn[k] = float(px.min())
         mx[k] = float(px.max())
     arrays = [
-        col["i"],
-        col["image_id"],
-        col["caption"],
-        col["fmt"],
-        col["phash"],
+        b.column("i"),
+        b.column("image_id"),
+        b.column("caption"),
+        b.column("fmt"),
+        b.column("phash"),
         pa.array(mean, pa.float64(), from_pandas=True),
         pa.array(mn, pa.float64(), from_pandas=True),
         pa.array(mx, pa.float64(), from_pandas=True),
@@ -189,14 +270,8 @@ def decode_features(images: DataFrame, bins: int = 16) -> DataFrame:
         import pyarrow as pa
 
         for b in batches:
-            n = b.num_rows
-            names = b.schema.names
-            col = {name: b.column(i) for i, name in enumerate(names)}
-            fmts = np.asarray(col["fmt"].to_pylist(), dtype=object)
-            ws = col["w"].to_numpy(zero_copy_only=False).astype(np.int64)
-            hs = col["h"].to_numpy(zero_copy_only=False).astype(np.int64)
-            off, data = _binary_offsets_data(col["bytes"])
-            seg_len = off[1:] - off[:-1]
+            tb = TileBatch(b)
+            n = tb.n
             hists = np.zeros((n, bins), dtype=np.int64)
             # fixed-size payloads bin STRAIGHT off the data buffer (r8
             # s4): bin = byte >> shift, and qnt's decode (LSB clear) is
@@ -204,31 +279,15 @@ def decode_features(images: DataFrame, bins: int = 16) -> DataFrame:
             # pixels bin identically; one bincount per chunk with
             # (row << log2(bins)) | bin keys replaces the per-blob
             # decode + bincount loop (pytest-pinned equal).
-            fixed = (
-                ((fmts == "raw") | (fmts == "qnt"))
-                & (seg_len == ws * hs)
-                & (shift >= 1)
-            )
-            idx = np.nonzero(fixed)[0]
-            if len(idx):
-                from .. import native as _native
-
-                bounds = np.empty(2 * len(idx), dtype=np.int64)
-                bounds[0::2] = off[idx]
-                bounds[1::2] = off[idx + 1]
-                sub_h = np.zeros((len(idx), bins), dtype=np.int64)
-                if _native.hist_segments(data, bounds, shift, bins, sub_h):
-                    hists[idx] = sub_h
-                else:  # no toolchain: per-segment numpy bincount twin
-                    for j, k in enumerate(idx):
-                        hists[k] = np.bincount(
-                            data[off[k] : off[k + 1]] >> shift, minlength=bins
-                        )
-            for k in np.nonzero(~fixed)[0]:
-                px = codecs.decode_tile(
-                    data[off[k] : off[k + 1]].tobytes(), fmts[k], int(ws[k]), int(hs[k])
-                )
-                hists[k] = np.bincount(px.ravel() >> shift, minlength=bins)
+            done = tb.fixed & (shift >= 1)
+            idx = np.flatnonzero(done)
+            sub_h = np.zeros((len(idx), bins), dtype=np.int64)
+            if len(idx) and native.hist_segments(tb.data, tb.bounds(idx), shift, bins, sub_h):
+                hists[idx] = sub_h
+            else:  # no toolchain: every row takes the per-tile bincount twin
+                done[:] = False
+            for k in np.flatnonzero(~done):
+                hists[k] = np.bincount(tb.pixels(k).ravel() >> shift, minlength=bins)
             # center + L2-normalize, vectorized: row means and pairwise
             # row sums reduce 16 contiguous f64 exactly like the old
             # per-vector calls (norm's BLAS dot vs the pairwise row sum
@@ -245,12 +304,10 @@ def decode_features(images: DataFrame, bins: int = 16) -> DataFrame:
                 pa.array(flat.ravel(), pa.float32()),
             )
             yield pa.RecordBatch.from_arrays(
-                [col["i"], emb], names=["vec_id", "embedding"]
+                [b.column("i"), emb], names=["vec_id", "embedding"]
             )
 
-    return images.select("i", "bytes", "fmt", "w", "h").mapInArrow(
-        kernel, schema=FEATURES_SCHEMA
-    )
+    return TileBatch.select(images, "i").mapInArrow(kernel, schema=FEATURES_SCHEMA)
 
 
 VERIFY_SCHEMA = "i bigint, fmt string, psnr double, caption_ok boolean, lossless_exact boolean"
@@ -263,33 +320,29 @@ def decode_verify(images: DataFrame) -> DataFrame:
     style of the reference's validate_dataset gate
     (/root/reference/src/pipelines/pipeline.py:275-276)."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
-            ii = pdf["i"].to_numpy()
-            fmts = pdf["fmt"].to_numpy()
-            blobs = pdf["bytes"].to_numpy()
-            ws = pdf["w"].to_numpy()
-            hs = pdf["h"].to_numpy()
-            caps = pdf["caption"].to_numpy()
-            psnr_v = np.empty(n)
-            cap_ok = np.empty(n, dtype=bool)
-            exact = np.empty(n, dtype=object)
-            for k in range(n):
+    def kernel(batches):
+        import pyarrow as pa
+
+        for b in batches:
+            tb = TileBatch(b)
+            ii = b.column("i").to_numpy(zero_copy_only=False)
+            caps = b.column("caption").to_pylist()
+            psnr_v = np.empty(tb.n)
+            cap_ok = np.empty(tb.n, dtype=bool)
+            exact = []
+            for k in range(tb.n):
                 i = int(ii[k])
                 truth = corpus.pixels_for(i)
-                px = codecs.decode_tile(blobs[k], fmts[k], int(ws[k]), int(hs[k]))
+                px = tb.pixels(k)
                 psnr_v[k] = codecs.psnr(truth, px)
                 cap_ok[k] = caps[k] == corpus.caption_for(i)
-                exact[k] = bool(np.array_equal(truth, px)) if fmts[k] in codecs.LOSSLESS_FMTS else None
-            yield pd.DataFrame(
-                {
-                    "i": ii,
-                    "fmt": fmts,
-                    "psnr": psnr_v,
-                    "caption_ok": cap_ok,
-                    "lossless_exact": exact,
-                }
+                exact.append(
+                    bool(np.array_equal(truth, px)) if tb.fmt[k] in codecs.LOSSLESS_FMTS else None
+                )
+            yield pa.RecordBatch.from_arrays(
+                [b.column("i"), b.column("fmt"), pa.array(psnr_v), pa.array(cap_ok),
+                 pa.array(exact, pa.bool_())],
+                names=["i", "fmt", "psnr", "caption_ok", "lossless_exact"],
             )
 
-    return images.mapInPandas(kernel, schema=VERIFY_SCHEMA)
+    return TileBatch.select(images, "i", "caption").mapInArrow(kernel, schema=VERIFY_SCHEMA)

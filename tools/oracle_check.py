@@ -125,15 +125,19 @@ def main() -> int:
     import __spark_entry__ as entry_mod
     from ds_raster_pipelines_spark.session import get_spark
 
+    qs = entry_mod.queries()
+    unknown = sorted(only - set(qs))
+    if unknown:
+        print(f"not registered: {', '.join(unknown)}", file=sys.stderr)
+        return 2
+    run = [name for name in qs if not only or name in only]
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
     spark = get_spark("oracle_check", cpus=cpus, shuffle_partitions=cpus)
     con = duck_con(sf_dir)
-    qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
     failures = 0
-    for name, fn in qs.items():
-        if only and name not in only:
-            continue
+    for name in run:
+        fn = qs[name]
         t0 = time.time()
         try:
             sdf = fn(spark, sf_dir).toPandas()
@@ -160,7 +164,7 @@ def main() -> int:
                 print(f"     {e}")
         else:
             print(f"ok   {name}: rows={len(sdf)} MATCH [{time.time()-t0:.1f}s]")
-    print(f"\n{failures} failures / {len(qs)} queries")
+    print(f"\n{failures} failures / {len(run)} queries")
     return 1 if failures else 0
 
 
