@@ -492,8 +492,9 @@ def parse_wkb_geometry(data: bytes) -> list[list[np.ndarray]]:
     """WKB POLYGON or MULTIPOLYGON (little-endian) -> list of parts, each
     part a list of (n, 2) float64 rings [exterior, hole, ...].
 
-    This is the full-fidelity parser the PIP family refines against
-    (reference consumes admin shapefiles — routinely MultiPolygons with
+    This output ("parts") is the one geometry form of the PIP layer
+    (operators/pip.py), parsed there and here only (reference consumes
+    admin shapefiles — routinely MultiPolygons with
     holes, ``examples/era5_cogs.md:164-172``). Even-odd ray-cast parity
     across ALL rings of all parts classifies holed/multipart geometries
     correctly as long as parts are disjoint and holes nest once (the
@@ -520,20 +521,6 @@ def parse_wkb_geometry(data: bytes) -> list[list[np.ndarray]]:
             raise ValueError("WKB MULTIPOLYGON with zero parts")
         return parts
     raise ValueError(f"unsupported WKB geometry type {typ}")
-
-
-def parse_wkb_polygon(data: bytes) -> np.ndarray:
-    """WKB POLYGON, SINGLE exterior ring only -> (n, 2) float64 ring.
-
-    Raises on interior rings or MULTIPOLYGON instead of silently dropping
-    holes (that produced wrong zonal answers pre-r7); full-fidelity
-    callers use :func:`parse_wkb_geometry`."""
-    parts = parse_wkb_geometry(data)
-    if len(parts) != 1 or len(parts[0]) != 1:
-        raise ValueError(
-            "geometry has holes or multiple parts; use parse_wkb_geometry"
-        )
-    return parts[0][0]
 
 
 def admin_rects(offset: float = 0.0) -> list[dict]:

@@ -1,8 +1,8 @@
 """Point-in-polygon spatial join — filter-refine, the core new operator.
 
 Distributed form of the reference's polygon clip
-(``/root/reference/examples/era5_cogs.md:177,210`` — ``rio.clip`` with and
-without ``all_touched``), SURVEY.md §2.3 J5:
+(``examples/era5_cogs.md:177,210`` — ``rio.clip`` with and without
+``all_touched``), SURVEY.md §2.3 J5:
 
   1. COVER   : polygons explode to the H3/S2-style cells intersecting them
                (coarse, integer keys).
@@ -13,8 +13,20 @@ without ``all_touched``), SURVEY.md §2.3 J5:
                ray-cast over WKB rings, Arrow-batched (no per-row Python);
                or a JVM-only bbox predicate for axis-aligned geometries.
 
-Semantics flag mirrors the reference: ``centroid`` (default clip: a tile
-belongs iff its centroid is inside) vs ``all_touched`` (any intersection).
+One geometry form: "parts", the output of ``corpus.parse_wkb_geometry`` —
+a list of polygon parts, each a list of (n, 2) float64 rings, exterior
+first, then holes. Every function here takes geometries in that form.
+
+One edge rule: half-open, the bare even-odd ray cast of
+:func:`_points_in_rings`. For an axis-aligned rectangle the left/bottom
+edges are inside and the right/top edges are out, so a point on the edge
+shared by two abutting polygons joins exactly one. The bbox refine, the
+per-row-WKB refine and the scanline zonal kernel (operators/raster.py)
+all reproduce it.
+
+Tiles join by centroid (the reference's default clip: a tile belongs iff
+its centroid is inside); ``pip_all_touched`` in the query registry is the
+``all_touched`` form.
 """
 
 from __future__ import annotations
@@ -31,45 +43,15 @@ from .. import grid
 from ..corpus import parse_wkb_geometry
 
 # ----------------------------------------------------------- cover stage ---
-#
-# Geometry representations (r7: holes + MULTIPOLYGON, VERDICT r6 item 1):
-#   * parts  : list[list[ndarray]] — parse_wkb_geometry output; part[0] is
-#              the exterior ring, the rest are interior rings (holes).
-#   * flat   : list[ndarray] — all rings of all parts concatenated; the
-#              even-odd refine only needs parity across ALL rings, so the
-#              part structure is irrelevant there (disjoint parts + simply
-#              nested holes, per simple-features validity).
-# Legacy single-ring ndarrays are normalized by the helpers below.
 
 
-def _as_parts(g) -> list:
-    """Normalize to parts structure. A flat ring list becomes one part
-    PER RING — a superset cover (hole bboxes sit inside their exterior's
-    bbox anyway) that keeps genuine multiparts covered."""
-    if isinstance(g, np.ndarray):
-        return [[g]]
-    if g and isinstance(g[0], np.ndarray):
-        return [[r] for r in g]
-    return g
-
-
-def _as_flat_rings(g) -> list:
-    if isinstance(g, np.ndarray):
-        return [g]
-    if g and isinstance(g[0], np.ndarray):
-        return list(g)
-    return [r for part in g for r in part]
-
-
-def _is_axis_rect(ring) -> bool:
-    """True if the geometry is a single axis-aligned rectangle ring (exact
-    refine is then a pure-JVM between-predicate — no Python stage)."""
-    if isinstance(ring, list):
-        return len(ring) == 1 and _is_axis_rect(ring[0])
-    if len(ring) != 5:
+def _is_axis_rect(parts: list) -> bool:
+    """True if the geometry is one part of one axis-aligned rectangle ring
+    (exact refine is then a pure-JVM between-predicate — no Python stage)."""
+    if len(parts) != 1 or len(parts[0]) != 1 or len(parts[0][0]) != 5:
         return False
-    xs, ys = set(ring[:, 0].tolist()), set(ring[:, 1].tolist())
-    return len(xs) == 2 and len(ys) == 2
+    ring = parts[0][0]
+    return len(set(ring[:, 0].tolist())) == 2 and len(set(ring[:, 1].tolist())) == 2
 
 
 def _cover_geometry(parts: list, res: int) -> tuple[np.ndarray, np.ndarray]:
@@ -84,24 +66,20 @@ def _cover_geometry(parts: list, res: int) -> tuple[np.ndarray, np.ndarray]:
     its edges in the cell bbox, so that cell can never be 'full'. Full
     cells skip the exact refine — Raptor-style interior shortcut (at
     scale interior cells dominate)."""
-    parts = _as_parts(parts)
-    rings = [r for part in parts for r in part]
-    covers = []
-    for part in parts:
-        ext = part[0]
-        covers.append(
-            grid.cover_rect_np(
-                float(ext[:, 0].min()), float(ext[:, 1].min()),
-                float(ext[:, 0].max()), float(ext[:, 1].max()), res,
-            )
+    covers = [
+        grid.cover_rect_np(
+            float(ext[:, 0].min()), float(ext[:, 1].min()),
+            float(ext[:, 0].max()), float(ext[:, 1].max()), res,
         )
+        for ext, *_ in parts
+    ]
     cells = np.unique(np.concatenate(covers)) if covers else np.array([], np.int64)
     a, b, c, d = grid.cell_bounds_np(cells)
     inside = np.ones(len(cells), dtype=bool)
     for cx, cy in ((a, b), (a, d), (c, b), (c, d)):
-        inside &= _points_in_rings(cx, cy, rings)
+        inside &= _points_in_rings(cx, cy, parts)
     near_edge = np.zeros(len(cells), dtype=bool)
-    for ring in rings:
+    for ring in (r for part in parts for r in part):
         x, y = ring[:, 0], ring[:, 1]
         for e in range(len(ring) - 1):
             ex0, ex1 = min(x[e], x[e + 1]), max(x[e], x[e + 1])
@@ -113,73 +91,51 @@ def _cover_geometry(parts: list, res: int) -> tuple[np.ndarray, np.ndarray]:
 def polygon_cover_cells(admin: DataFrame, res: int) -> DataFrame:
     """(adm_id, cell_id, full) covering triples at ``res``.
 
-    Runs distributed (mapInPandas over the polygon table) so it scales to
-    large polygon sets; the bbox of each WKB ring bounds the cover. For a
-    1000-executor cluster the output is what gets broadcast — cap cell
-    explosion by choosing ``res`` so |cells per polygon| stays ~1e2-1e3
-    (SURVEY.md §7 risk register).
+    Runs distributed (mapInPandas over the polygon table's ``adm_id`` and
+    ``geom_wkb``) so it scales to large polygon sets; the per-part bbox of
+    each WKB geometry bounds the cover. For a 1000-executor cluster the
+    output is what gets broadcast — cap cell explosion by choosing ``res``
+    so |cells per polygon| stays ~1e2-1e3 (SURVEY.md §7 risk register).
     """
-    cols = admin.columns
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..corpus import wkb_polygon_rect
-
         for pdf in batches:
-            adm_ids: list[str] = []
-            cells: list[np.ndarray] = []
-            fulls: list[np.ndarray] = []
-            has_wkb = "geom_wkb" in cols
-            wkbs = pdf["geom_wkb"] if has_wkb else [None] * len(pdf)
-            bounds = (
-                zip(pdf["min_lon"], pdf["min_lat"], pdf["max_lon"], pdf["max_lat"])
-                if {"min_lon", "min_lat", "max_lon", "max_lat"} <= set(pdf.columns)
-                else [(None,) * 4] * len(pdf)
-            )
-            # per-row loop is over GEOMETRIES (blobs) — plain column zip
-            for adm_id, wkb, bb in zip(pdf["adm_id"], wkbs, bounds):
-                parts = parse_wkb_geometry(
-                    wkb if wkb is not None else wkb_polygon_rect(*bb)
-                )
-                cc, full = _cover_geometry(parts, res)
-                adm_ids.append(adm_id)
-                cells.append(cc)
-                fulls.append(full)
-            counts = [len(c) for c in cells]
+            # per-row loop is over GEOMETRIES (blobs), not points
+            covers = [_cover_geometry(parse_wkb_geometry(w), res) for w in pdf["geom_wkb"]]
             yield pd.DataFrame(
                 {
-                    "adm_id": np.repeat(np.array(adm_ids, dtype=object), counts),
-                    "cell_id": np.concatenate(cells) if cells else np.array([], np.int64),
-                    "full": np.concatenate(fulls) if fulls else np.array([], bool),
+                    "adm_id": np.repeat(
+                        pdf["adm_id"].to_numpy(dtype=object), [len(c) for c, _ in covers]
+                    ),
+                    "cell_id": np.concatenate([c for c, _ in covers] + [np.zeros(0, np.int64)]),
+                    "full": np.concatenate([f for _, f in covers] + [np.zeros(0, bool)]),
                 }
             )
 
-    return admin.mapInPandas(kernel, schema="adm_id string, cell_id bigint, full boolean")
+    return admin.select("adm_id", "geom_wkb").mapInPandas(
+        kernel, schema="adm_id string, cell_id bigint, full boolean"
+    )
 
 
 # ---------------------------------------------------------- refine stage ---
 
 
-def _points_in_rings(
-    lon: np.ndarray, lat: np.ndarray, rings: list, boundary: str = "half_open"
-) -> np.ndarray:
-    """Vectorized even-odd ray cast over ALL rings of a (multi)polygon
-    (edge loops are over the few polygon vertices; points are the
-    vectorized axis). Parity across exterior + interior rings classifies
-    holes for free: a point inside a hole crosses both rings ⇒ even ⇒
-    outside; a point in any disjoint part crosses only that part's
-    exterior ⇒ odd ⇒ inside.
+def _points_in_rings(lon: np.ndarray, lat: np.ndarray, parts: list) -> np.ndarray:
+    """Half-open even-odd ray cast of points against one geometry, over
+    every ring of every part (edge loops are over the few polygon
+    vertices; points are the vectorized axis). Parity across exterior +
+    interior rings classifies holes for free: a point inside a hole
+    crosses both rings ⇒ even ⇒ outside; a point in any disjoint part
+    crosses only that part's exterior ⇒ odd ⇒ inside.
 
-    ``boundary`` pins the on-edge convention (see pip_join):
-    * ``half_open`` — the bare ray cast: for an axis-aligned rectangle,
-      left/bottom edges are inside, right/top are out. For a hole the
-      convention MIRRORS: a point on the hole's left/bottom edge is
-      inside-the-hole, hence OUTSIDE the polygon. Points strictly
-      interior/exterior are unaffected.
-    * ``closed`` — an explicit on-segment test forces every point on ANY
-      ring (hole edges included) inside the polygon (rio.clip-style).
+    On-edge points follow the bare ray cast: for an axis-aligned
+    rectangle, left/bottom edges are inside, right/top are out. For a hole
+    the rule mirrors: a point on the hole's left/bottom edge is
+    inside-the-hole, hence OUTSIDE the polygon. Points strictly
+    interior/exterior are unaffected.
     """
     inside = np.zeros(lon.shape, dtype=bool)
-    for ring in rings:
+    for ring in (r for part in parts for r in part):
         x, y = ring[:, 0], ring[:, 1]
         for e in range(len(ring) - 1):  # closed ring
             x1, y1, x2, y2 = x[e], y[e], x[e + 1], y[e + 1]
@@ -187,25 +143,10 @@ def _points_in_rings(
             with np.errstate(divide="ignore", invalid="ignore"):
                 xint = x1 + (lat - y1) * (x2 - x1) / (y2 - y1)
             inside ^= crosses & (lon < xint)
-    if boundary == "closed":
-        on_edge = np.zeros(lon.shape, dtype=bool)
-        for ring in rings:
-            x, y = ring[:, 0], ring[:, 1]
-            for e in range(len(ring) - 1):
-                x1, y1, x2, y2 = x[e], y[e], x[e + 1], y[e + 1]
-                collinear = (x2 - x1) * (lat - y1) == (y2 - y1) * (lon - x1)
-                in_seg = (
-                    (lon >= min(x1, x2)) & (lon <= max(x1, x2))
-                    & (lat >= min(y1, y2)) & (lat <= max(y1, y2))
-                )
-                on_edge |= collinear & in_seg
-        inside |= on_edge
-    elif boundary != "half_open":
-        raise ValueError(f"boundary={boundary!r} (want 'half_open' or 'closed')")
     return inside
 
 
-def contains_wkb_udf(boundary: str = "half_open"):
+def contains_wkb_udf():
     """Exact PIP refine against a per-row WKB column (POLYGON with holes
     or MULTIPOLYGON). Groups the batch by polygon so the ray cast runs
     vectorized once per distinct geometry per batch. NOTE: prefer
@@ -221,21 +162,18 @@ def contains_wkb_udf(boundary: str = "half_open"):
         codes, uniques = pd.factorize(wkb, use_na_sentinel=True)
         for g, blob in enumerate(uniques):
             mask = codes == g
-            rings = _as_flat_rings(parse_wkb_geometry(blob))
-            out[mask] = _points_in_rings(lon_v[mask], lat_v[mask], rings, boundary)
+            out[mask] = _points_in_rings(lon_v[mask], lat_v[mask], parse_wkb_geometry(blob))
         return pd.Series(out)
 
     return _contains
 
 
-def contains_indexed_udf(rings: list, boundary: str = "half_open"):
+def contains_indexed_udf(geoms: list):
     """Exact PIP refine against a small geometry dictionary: candidates
-    carry only an int geometry index; the parsed geometries (single ring
-    or flat ring-lists incl. holes/multiparts) ship to executors once
-    (closure/broadcast), not per row. Right-sized for admin-boundary
-    workloads (1e2-1e5 polygons); for 1e7+ polygons switch to the
-    per-row-WKB form with dictionary-encoded geometry batches."""
-    flats = [_as_flat_rings(g) for g in rings]
+    carry only an int geometry index; the parsed geometries ship to
+    executors once (closure/broadcast), not per row. Right-sized for
+    admin-boundary workloads (1e2-1e5 polygons); for 1e7+ polygons switch
+    to the per-row-WKB form with dictionary-encoded geometry batches."""
 
     @F.pandas_udf(T.BooleanType())
     def _contains(lon: pd.Series, lat: pd.Series, gi: pd.Series) -> pd.Series:
@@ -248,9 +186,7 @@ def contains_indexed_udf(rings: list, boundary: str = "half_open"):
             if g < 0:  # interior-cell shortcut: inside by construction
                 out[mask] = True
             else:
-                out[mask] = _points_in_rings(
-                    lon_v[mask], lat_v[mask], flats[g], boundary
-                )
+                out[mask] = _points_in_rings(lon_v[mask], lat_v[mask], geoms[g])
         return pd.Series(out)
 
     return _contains
@@ -259,13 +195,13 @@ def contains_indexed_udf(rings: list, boundary: str = "half_open"):
 # ------------------------------------------------------------- full join ---
 
 
-def cover_cells_driver(rings: list, res: int) -> list[int]:
-    """Distinct covering cell ids at ``res`` for a list of geometries
-    (single rings, flat ring-lists, or parts structures), computed
-    driver-side (no Spark job) — used for partition-pruning isin lists."""
+def cover_cells_driver(geoms: list, res: int) -> list[int]:
+    """Distinct covering cell ids at ``res`` for a list of geometries,
+    computed driver-side (no Spark job) — used for partition-pruning isin
+    lists."""
     out: set[int] = set()
-    for g in rings:
-        cells, _ = _cover_geometry(g, res)
+    for parts in geoms:
+        cells, _ = _cover_geometry(parts, res)
         out.update(cells.tolist())
     return sorted(out)
 
@@ -276,9 +212,9 @@ COVER_SCHEMA = (
 )
 
 
-# Above this many polygons the driver-side cover build refuses (the
-# collect + ring parse would silently funnel the whole geometry table
-# through the driver) and pip_join switches to the distributed plan.
+# Above this many polygons the driver-side readers refuse (the collect +
+# ring parse would silently funnel the whole geometry table through the
+# driver); pip_join and the flagship switch to the distributed plan.
 MAX_LOCAL_POLYGONS = 10_000
 
 
@@ -286,34 +222,40 @@ class PolygonSetTooLarge(ValueError):
     pass
 
 
-def cover_local_pdf(admin: DataFrame, res: int, max_polygons: int | None = None):
-    """Driver-side cover build for broadcast-small polygon tables: one
-    collect, zero extra Spark jobs (the distributed polygon_cover_cells
-    costs a python stage + broadcast per query — measurable serial time
-    when the parallel part is seconds).
+def local_geometries(admin: DataFrame) -> tuple[list, list]:
+    """(rows, geoms): the ``adm_id``/``geom_wkb`` rows of a broadcast-small
+    polygon table, collected to the driver, and each row's geometry in
+    parts form. The one driver-side reader of a polygon table.
 
-    GUARDED: collects at most ``max_polygons``+1 rows and raises
-    PolygonSetTooLarge beyond that — a million-polygon admin table must
-    go through the distributed cover (polygon_cover_cells), never the
-    driver. pip_join auto-switches on this signal.
-
-    Returns (adm_rows, rings, cover_pdf): the cover as a pandas frame with
-    the COVER_SCHEMA columns — every cover cell of every geometry, plus
-    what a downstream refine needs (geometry index + bbox bounds)."""
-    if max_polygons is None:
-        max_polygons = MAX_LOCAL_POLYGONS  # read at call time (testable)
-    rows = admin.select("adm_id", "geom_wkb").limit(max_polygons + 1).collect()
-    if len(rows) > max_polygons:
+    GUARDED: collects at most MAX_LOCAL_POLYGONS + 1 rows (read at call
+    time) and raises PolygonSetTooLarge beyond that — a million-polygon
+    admin table must go through the distributed cover
+    (polygon_cover_cells), never the driver."""
+    limit = MAX_LOCAL_POLYGONS
+    rows = admin.select("adm_id", "geom_wkb").limit(limit + 1).collect()
+    if len(rows) > limit:
         raise PolygonSetTooLarge(
-            f"admin table exceeds {max_polygons} polygons; use the "
-            "distributed cover (polygon_cover_cells / pip_join auto-switch)"
+            f"admin table exceeds {limit} polygons; use the distributed cover "
+            "(polygon_cover_cells / pip_join auto-switch), or pre-partition "
+            "the admin table (e.g. per region) and union the results"
         )
-    parts_list = [parse_wkb_geometry(r["geom_wkb"]) for r in rows]
-    # refine representation: flat ring list per geometry (holes included —
-    # even-odd parity handles them); cover keeps the parts structure
-    rings = [[rg for part in parts for rg in part] for parts in parts_list]
+    return rows, [parse_wkb_geometry(r["geom_wkb"]) for r in rows]
+
+
+def cover_local_pdf(admin: DataFrame, res: int):
+    """Driver-side cover build for broadcast-small polygon tables: one
+    guarded collect (:func:`local_geometries`), zero extra Spark jobs (the
+    distributed polygon_cover_cells costs a python stage + broadcast per
+    query — measurable serial time when the parallel part is seconds).
+    pip_join auto-switches on PolygonSetTooLarge.
+
+    Returns (adm_rows, geoms, cover_pdf): the geometries in parts form and
+    the cover as a pandas frame with the COVER_SCHEMA columns — every
+    cover cell of every geometry, plus what a downstream refine needs
+    (geometry index + bbox bounds)."""
+    rows, geoms = local_geometries(admin)
     recs = []
-    for gi, (r, parts) in enumerate(zip(rows, parts_list)):
+    for gi, (r, parts) in enumerate(zip(rows, geoms)):
         cells, full = _cover_geometry(parts, res)
         allv = np.vstack([rg for part in parts for rg in part])
         mnx, mny = float(allv[:, 0].min()), float(allv[:, 1].min())
@@ -325,24 +267,24 @@ def cover_local_pdf(admin: DataFrame, res: int, max_polygons: int | None = None)
     cover = pd.DataFrame(
         recs, columns=["adm_id", "cell_id", "full", "_gi", "_mnx", "_mny", "_mxx", "_mxy"]
     )
-    return rows, rings, cover
+    return rows, geoms, cover
 
 
-def cover_local(spark, admin: DataFrame, res: int, max_polygons: int | None = None):
+def cover_local(spark, admin: DataFrame, res: int):
     """:func:`cover_local_pdf` with the cover as a Spark DataFrame.
 
-    Returns (adm_rows, rings, cover_df). The cover carries everything a
+    Returns (adm_rows, geoms, cover_df). The cover carries everything a
     downstream refine needs, so ONE broadcast serves the whole PIP join —
     every extra tiny broadcast is a full defaultParallelism-task job
     (~0.3 s on this box). The cover DataFrame is single-slice (tiny local
     relation)."""
-    rows, rings, cover = cover_local_pdf(admin, res, max_polygons)
+    rows, geoms, cover = cover_local_pdf(admin, res)
     # Arrow local relation, NOT createDataFrame(python_list): the pickled-
     # row RDD path costs ~7 s PER EVALUATION on this box (python worker
     # deserialization) even coalesced to 1 slice, and the cover is
     # re-evaluated by every broadcast — measured as the entire fixed
     # overhead of the sf0.1 flagship. The pandas→Arrow path is ~0.25 s.
-    return rows, rings, spark.createDataFrame(cover, schema=COVER_SCHEMA)
+    return rows, geoms, spark.createDataFrame(cover, schema=COVER_SCHEMA)
 
 
 def pip_join(
@@ -353,13 +295,12 @@ def pip_join(
     lat_col: str = "lat_c",
     refine: str = "wkb",
     cover: DataFrame | None = None,
-    rings: list[np.ndarray] | None = None,
+    rings: list | None = None,
     adm_rows: list | None = None,
-    boundary: str = "half_open",
 ) -> DataFrame:
     """points (with lon/lat) ⨝ admin polygons. Returns points + adm_id.
 
-    ``refine='auto'`` : geometry specialization — if every ring is an
+    ``refine='auto'`` : geometry specialization — if every geometry is an
                         axis-aligned rectangle the exact refine lowers to a
                         pure-JVM between-predicate (zero extra Python
                         stages in the task pipeline); otherwise the generic
@@ -367,20 +308,13 @@ def pip_join(
     ``refine='wkb'``  : force the generic exact ray-cast kernel.
     ``refine='bbox'`` : force the JVM between-predicate (rects only).
 
-    ``boundary`` pins the on-edge convention, CONSISTENTLY across every
-    refine mode and the distributed path (r4 ADVICE: the modes used to
-    diverge on edge points — bbox was closed while the ray cast was
-    half-open):
-    * ``half_open`` (default) — a point on a rectangle's left/bottom edge
-      is inside, right/top is out (the bare even-odd ray-cast convention;
-      matches raster windowing, where a pixel belongs to exactly one
-      abutting polygon — no double-count, no drop).
-    * ``closed`` — every on-edge point is inside (rio.clip-style; a point
-      on a shared edge of two abutting polygons joins BOTH).
-    Interior/exterior points classify identically under both.
+    ``cover``, ``rings`` and ``adm_rows`` are a prebuilt
+    :func:`cover_local` result (``rings`` is its geometry list, parts
+    form); without them the cover is built here.
+
+    Every refine mode and the distributed path classify on-edge points by
+    the one half-open rule of :func:`_points_in_rings`.
     """
-    if boundary not in ("half_open", "closed"):
-        raise ValueError(f"boundary={boundary!r} (want 'half_open' or 'closed')")
     helper_cols = ["full", "_gi", "_mnx", "_mny", "_mxx", "_mxy"]
     lon, lat = f"`{lon_col}`", f"`{lat_col}`"
     pts = points.withColumn("cell_id", grid.encode_col(lon, lat, res))
@@ -390,28 +324,22 @@ def pip_join(
         except PolygonSetTooLarge:
             # large-geometry regime: nothing may pass through the driver —
             # switch to the fully distributed cover + per-row-WKB refine
-            return pip_join_distributed(
-                points, admin, res, lon_col, lat_col, boundary=boundary
-            )
+            return pip_join_distributed(points, admin, res, lon_col, lat_col)
     if refine == "auto":
-        refine = "bbox" if all(_is_axis_rect(r) for r in rings) else "wkb"
+        refine = "bbox" if all(_is_axis_rect(g) for g in rings) else "wkb"
     cand = pts.join(F.broadcast(cover), "cell_id")
     if refine == "bbox":
-        # exact refine for axis-rect geometries as codegen'd predicates
-        # (the bounds travel inside the single cover broadcast) — zero
-        # extra Python stages in the task pipeline. The interval shape
-        # follows ``boundary`` so bbox and ray-cast agree on edge points.
-        if boundary == "closed":
-            in_rect = f"{lon} BETWEEN _mnx AND _mxx AND {lat} BETWEEN _mny AND _mxy"
-        else:
-            in_rect = f"{lon} >= _mnx AND {lon} < _mxx AND {lat} >= _mny AND {lat} < _mxy"
+        # exact refine for axis-rect geometries as codegen'd half-open
+        # interval predicates (the bounds travel inside the single cover
+        # broadcast) — zero extra Python stages in the task pipeline
+        in_rect = f"{lon} >= _mnx AND {lon} < _mxx AND {lat} >= _mny AND {lat} < _mxy"
         return cand.where(F.expr(f"`full` OR ({in_rect})")).drop(*helper_cols)
     # interior shortcut: candidates in 'full' cells are inside by
     # construction (the UDF gets -1 and short-circuits them vectorized).
     # Kept as ONE plan branch: splitting full/edge into a union would
     # re-execute everything upstream of the candidates — including the
     # decode kernel — twice.
-    refine_udf = contains_indexed_udf(rings, boundary)
+    refine_udf = contains_indexed_udf(rings)
     gi = F.when(F.col("full"), F.lit(-1)).otherwise(F.col("_gi"))
     return cand.where(refine_udf(F.col(lon_col), F.col(lat_col), gi)).drop(*helper_cols)
 
@@ -423,7 +351,6 @@ def pip_join_distributed(
     lon_col: str = "lon_c",
     lat_col: str = "lat_c",
     cover: DataFrame | None = None,
-    boundary: str = "half_open",
     n_salt: int | None = None,
     hot_cells: DataFrame | None = None,
     hot_threshold: int | None = None,
@@ -511,6 +438,6 @@ def pip_join_distributed(
     else:
         cand = pts.join(cover, "cell_id")
         withwkb = cand.join(admin.select("adm_id", "geom_wkb"), "adm_id")
-    refine = contains_wkb_udf(boundary)
+    refine = contains_wkb_udf()
     keep = F.col("full") | refine(F.col(lon_col), F.col(lat_col), F.col("geom_wkb"))
     return withwkb.where(keep).drop("full", "geom_wkb")

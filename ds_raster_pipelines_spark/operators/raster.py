@@ -17,7 +17,7 @@ Plan shape (scale-first):
 
 Geometry dictionary ships via closure (admin tables are broadcast-small).
 Every polygon takes the same path: a pixel counts when its centre is inside
-by the half-open even-odd rule of pip._points_in_rings (pip_join's default),
+by the half-open even-odd rule of pip._points_in_rings (pip_join's one rule),
 which is also the per-pixel fallback when no C compiler is present.
 
 Every tile kernel here (zonal, histogram, coarsen, vectorize, resample,
@@ -34,9 +34,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import grid, native
-from ..corpus import parse_wkb_geometry
 from ..sources.images import TileBatch
-from .pip import _points_in_rings
+from .pip import _points_in_rings, cover_cells_driver, local_geometries
+
 
 def zonal_pixel_stats(
     images: DataFrame,
@@ -131,21 +131,9 @@ def _zonal_pixel_reduce(
     if missing:
         raise ValueError(f"images needs footprint columns {sorted(missing)}")
     spark = images.sparkSession
-    from .pip import MAX_LOCAL_POLYGONS, PolygonSetTooLarge
-
-    rows = admin.select("adm_id", "geom_wkb").limit(MAX_LOCAL_POLYGONS + 1).collect()
-    if len(rows) > MAX_LOCAL_POLYGONS:
-        # the per-pixel masked kernel ships the ring dictionary in its
-        # closure — refuse beyond the broadcast-small regime instead of
-        # silently funneling the geometry table through the driver
-        raise PolygonSetTooLarge(
-            f"zonal_pixel_stats supports <= {MAX_LOCAL_POLYGONS} polygons; "
-            "pre-partition the admin table (e.g. per region) and union the "
-            "per-partition results"
-        )
-    # parts structure (holes + multiparts, r7); "rings" below = flattened
-    geoms = [parse_wkb_geometry(r["geom_wkb"]) for r in rows]
-    rings = [[rg for part in parts for rg in part] for parts in geoms]
+    # the kernel ships the geometry dictionary in its closure: the guarded
+    # reader refuses beyond the broadcast-small regime
+    rows, geoms = local_geometries(admin)
     adm_ids = [r["adm_id"] for r in rows]
     half = span_deg / 2.0
 
@@ -165,8 +153,6 @@ def _zonal_pixel_reduce(
     # silently drops contributing tiles once span_deg exceeds the cell
     # width at ``res`` (5.625 deg at res 6).
     # All driver-side (admin is broadcast-small): zero planning-time jobs.
-    from .pip import cover_cells_driver
-
     cell_width = 360.0 / grid.nx_ny(res)[0]
     n_rings = max(1, int(np.ceil(span_deg / cell_width)))
     expanded: set[int] = set()
@@ -189,7 +175,7 @@ def _zonal_pixel_reduce(
     # 2. decode + per-polygon reduction in one Arrow kernel. Tiles are
     # pre-checked against per-PART exterior bboxes: with the geometry bbox a
     # 2-part geometry spanning the globe would scan every tile in between.
-    g_edges = [np.vstack([np.hstack([r[:-1], r[1:]]) for r in gr]) for gr in rings]
+    g_edges = [np.vstack([np.hstack([r[:-1], r[1:]]) for p in g for r in p]) for g in geoms]
     edges = np.ascontiguousarray(np.vstack(g_edges + [np.zeros((0, 4))]), dtype=np.float64)
     edge_off = np.cumsum([0] + [len(e) for e in g_edges], dtype=np.int64)
     part_bbox = [
@@ -197,7 +183,7 @@ def _zonal_pixel_reduce(
         for g, parts in enumerate(geoms)
         for p in parts
     ]
-    n_geoms = len(rings)
+    n_geoms = len(geoms)
     schema = "gi int, " + (
         "value int, n_px bigint" if mode == "hist" else "px_count bigint, px_sum bigint"
     )
@@ -229,7 +215,7 @@ def _zonal_pixel_reduce(
             # 3-5) one scanline call over every pair, or the reference
             out = np.zeros((n_geoms, 256 if mode == "hist" else 2), dtype=np.int64)
             _reduce_pairs(px, px_off, tb.w, tb.h, lon0, lat_top, span_deg, edges, edge_off,
-                          rings, pair_k, pair_g, out)
+                          geoms, pair_k, pair_g, out)
             if mode == "hist":
                 gi, val = np.nonzero(out)
                 cols = [val.astype(np.int32), out[gi, val]]
@@ -280,7 +266,7 @@ def _zonal_pixel_reduce(
 
 
 def _reduce_pairs(px, px_off, ws, hs, lon0, lat_top, span_deg, edges, edge_off,
-                  rings, pair_k, pair_g, out) -> None:
+                  geoms, pair_k, pair_g, out) -> None:
     """Add each (tile pair_k[p], geometry pair_g[p]) pair's pixels into
     ``out`` (see native.zonal_runs): one scanline call, or without the
     native library the per-pixel ray cast it reproduces bit for bit."""
@@ -294,7 +280,7 @@ def _reduce_pairs(px, px_off, ws, hs, lon0, lat_top, span_deg, edges, edge_off,
             lon0[k] + (np.arange(w) + 0.5) * (span_deg / w),
             lat_top[k] - (np.arange(h) + 0.5) * (span_deg / h),
         )
-        inside = _points_in_rings(lon.ravel(), lat.ravel(), rings[g])
+        inside = _points_in_rings(lon.ravel(), lat.ravel(), geoms[g])
         vals = px[px_off[k] : px_off[k] + w * h][inside]
         if out.shape[1] == 2:
             out[g] += (vals.size, vals.sum(dtype=np.int64))
@@ -303,9 +289,10 @@ def _reduce_pairs(px, px_off, ws, hs, lon0, lat_top, span_deg, edges, edge_off,
 
 
 def pixel_histogram(images: DataFrame) -> DataFrame:
-    """Corpus-wide pixel-value histogram: decode each tile, per-batch
-    uint8 bincount (one numpy pass, no per-pixel Python), emit per-batch
-    partial counts, exact integer groupBy(value) aggregation.
+    """Corpus-wide pixel-value histogram: per-row value counts
+    (TileBatch.histograms — one C pass over the raw/qnt payloads in place,
+    a bincount per decoded tile), summed into per-batch partial counts,
+    then an exact integer groupBy(value) aggregation.
 
     The map-side bincount is the partial-aggregate trick at kernel level:
     a batch of B 64x64 tiles leaves the kernel as ≤256 rows, so the
@@ -321,18 +308,7 @@ def pixel_histogram(images: DataFrame) -> DataFrame:
         import pyarrow as pa
 
         for b in batches:
-            tb = TileBatch(b)
-            counts = np.zeros(256, dtype=np.int64)
-            # fixed-size fmts: ONE bincount over the concatenated payloads
-            # (raw and qnt both store decoded-domain bytes)
-            idx = np.flatnonzero(tb.fixed)
-            if len(idx):
-                counts += np.bincount(
-                    np.concatenate([tb.data[tb.off[k] : tb.off[k + 1]] for k in idx]),
-                    minlength=256,
-                )
-            for k in np.flatnonzero(~tb.fixed):
-                counts += np.bincount(tb.pixels(k).ravel(), minlength=256)
+            counts = TileBatch(b).histograms().sum(axis=0)
             nz = np.nonzero(counts)[0]
             yield pa.RecordBatch.from_arrays(
                 [pa.array(nz.astype(np.int32)), pa.array(counts[nz])],

@@ -33,7 +33,6 @@ def flagship(
     images: DataFrame,
     admin: DataFrame,
     res: int = FLAGSHIP_RES,
-    refine: str = "auto",
 ) -> DataFrame:
     """PRUNE → DECODE → JOIN → AGG.
 
@@ -59,7 +58,7 @@ def flagship(
 
     spark = images.sparkSession
     try:
-        adm_rows, rings, cover_pdf = cover_local_pdf(admin, res)
+        adm_rows, geoms, cover_pdf = cover_local_pdf(admin, res)
     except PolygonSetTooLarge:
         # huge polygon set: no driver collect is allowed — the whole plan
         # switches to distributed cover + join-based pruning
@@ -83,7 +82,7 @@ def flagship(
     )
     tiles = corpus.centroid_cols_for_images(decode_stats(pruned), "i")
     joined = pip_join(
-        tiles, admin, res=res, refine=refine, cover=cover_full, rings=rings, adm_rows=adm_rows
+        tiles, admin, res=res, refine="auto", cover=cover_full, rings=geoms, adm_rows=adm_rows
     )
     # no global orderBy: sorting the 32-row zonal output costs a range-
     # sampling job per run; the driver compare is order-insensitive and
@@ -93,12 +92,12 @@ def flagship(
     return zonal_stats(joined, "mean_value", fixed_scale=2)
 
 
-def flagship_from_orders(spark: SparkSession, sf_dir: str, refine: str = "auto") -> DataFrame:
+def flagship_from_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship over the materialized corpus table (one-time synth write,
     then a pure scan → single decode kernel → join → agg: the
     BASELINE.json metric path)."""
     images = spark.read.parquet(corpus.materialized_images(spark, sf_dir))
-    return flagship(images, corpus.admin_df(spark), refine=refine)
+    return flagship(images, corpus.admin_df(spark))
 
 
 def _flagship_distributed(images: DataFrame, admin: DataFrame, res: int) -> DataFrame:

@@ -76,12 +76,8 @@ def pruned_scan(
     ``cell_col`` (Iceberg layout), prepend the coarse bbox cell-prefilter
     so partition pruning, not row filtering, removes the bulk."""
     if spec.bbox is not None and cell_col is not None and cell_col in df.columns:
-        from ..corpus import parse_wkb_polygon, wkb_polygon_rect
-        from ..operators.pip import cover_cells_driver
-
         w, s, e, n = spec.bbox
-        ring = parse_wkb_polygon(wkb_polygon_rect(w, s, e, n))
-        df = df.where(grid.cell_isin(cell_col, cover_cells_driver([ring], spec.grid_res)))
+        df = df.where(grid.cell_isin(cell_col, grid.cover_rect_np(w, s, e, n, spec.grid_res)))
     return df.where(request_predicates(spec, date_col, leadtime_col, lon_col, lat_col))
 
 

@@ -163,7 +163,7 @@ def flagship_zonal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle verifies the decoded per-tile means analytically."""
     from .plans.flagship import flagship_from_orders
 
-    return flagship_from_orders(spark, sf_dir, refine="auto")
+    return flagship_from_orders(spark, sf_dir)
 
 
 @register("pip_zonal_bbox", _FLAGSHIP_ORACLE)
@@ -361,8 +361,6 @@ def cell_encode_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("cell_id")
     )
 
-
-_PARENT_SQL = grid.parent_sql(_CELL_SQL, 2, _RES_H)
 
 _ROLLUP_ORACLE = f"""
 WITH cells AS (
@@ -2418,12 +2416,8 @@ WHERE lon_c BETWEEN 60 AND 75 AND lat_c BETWEEN 29 AND 38
 def bbox_prune_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P8: the SEAS5 dev bbox [60,29,75,38] as a cell-range prefilter +
     exact predicate (seas5_pipeline.py:32)."""
-    from .operators.pip import cover_cells_driver
-    from .corpus import wkb_polygon_rect, parse_wkb_polygon
-
     res = 6
-    ring = parse_wkb_polygon(wkb_polygon_rect(60.0, 29.0, 75.0, 38.0))
-    cells = cover_cells_driver([ring], res)
+    cells = grid.cover_rect_np(60.0, 29.0, 75.0, 38.0, res)
     pts = corpus.centroid_cols_for_images(
         _pq(spark, sf_dir, "orders").select(F.col("o_orderkey").alias("i"))
     ).withColumn("cell_id", grid.encode_col("lon_c", "lat_c", res))

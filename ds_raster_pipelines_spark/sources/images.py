@@ -162,6 +162,24 @@ class TileBatch:
             px = px[:: -1 if self.flip_y[k] else 1, :: -1 if self.flip_x[k] else 1]
         return px
 
+    def histograms(self, shift: int = 0, bins: int = 256) -> np.ndarray:
+        """(n, bins) int64 per-row counts of ``pixel >> shift``. The fixed
+        rows count in one native.hist_segments pass straight off ``data``
+        (their payload bytes are the pixels; no copy, no int64 upcast);
+        every other row, and every row when no toolchain is present, takes
+        a bincount of ``pixels(k)``."""
+        out = np.zeros((self.n, bins), dtype=np.int64)
+        done = self.fixed.copy()
+        idx = np.flatnonzero(done)
+        sub = np.zeros((len(idx), bins), dtype=np.int64)
+        if len(idx) and native.hist_segments(self.data, self.bounds(idx), shift, bins, sub):
+            out[idx] = sub
+        else:
+            done[:] = False
+        for k in np.flatnonzero(~done):
+            out[k] = np.bincount(self.pixels(k).ravel() >> shift, minlength=bins)
+        return out
+
 
 def _decode_stats_batch(b, tolerant: bool):
     """decode_stats on one Arrow record batch (see there)."""
@@ -255,8 +273,8 @@ def decode_features(images: DataFrame, bins: int = 16) -> DataFrame:
     (vec_id, embedding array<float>) — so every ANN / embedding-near-dup
     operator (operators/similarity.py) composes directly on image content:
     decode → features → sign-LSH/IVF near-dup is the whole image pipeline
-    with no new join machinery. One Arrow stage; per-blob decode + one
-    bincount per image (vectorized, no per-pixel Python).
+    with no new join machinery. One Arrow stage; the per-row histograms
+    come from TileBatch.histograms (no per-pixel Python).
 
     Features are MEAN-CENTERED before normalization: raw histograms are
     all-nonnegative, which would put every vector on the same side of
@@ -270,24 +288,8 @@ def decode_features(images: DataFrame, bins: int = 16) -> DataFrame:
         import pyarrow as pa
 
         for b in batches:
-            tb = TileBatch(b)
-            n = tb.n
-            hists = np.zeros((n, bins), dtype=np.int64)
-            # fixed-size payloads bin STRAIGHT off the data buffer (r8
-            # s4): bin = byte >> shift, and qnt's decode (LSB clear) is
-            # invisible to any shift >= 1, so payload bytes and decoded
-            # pixels bin identically; one bincount per chunk with
-            # (row << log2(bins)) | bin keys replaces the per-blob
-            # decode + bincount loop (pytest-pinned equal).
-            done = tb.fixed & (shift >= 1)
-            idx = np.flatnonzero(done)
-            sub_h = np.zeros((len(idx), bins), dtype=np.int64)
-            if len(idx) and native.hist_segments(tb.data, tb.bounds(idx), shift, bins, sub_h):
-                hists[idx] = sub_h
-            else:  # no toolchain: every row takes the per-tile bincount twin
-                done[:] = False
-            for k in np.flatnonzero(~done):
-                hists[k] = np.bincount(tb.pixels(k).ravel() >> shift, minlength=bins)
+            hists = TileBatch(b).histograms(shift, bins)
+            n = len(hists)
             # center + L2-normalize, vectorized: row means and pairwise
             # row sums reduce 16 contiguous f64 exactly like the old
             # per-vector calls (norm's BLAS dot vs the pairwise row sum

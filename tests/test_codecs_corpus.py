@@ -40,25 +40,25 @@ def test_expected_decoded_mean_closed_form():
 
 def test_wkb_roundtrip():
     blob = corpus.wkb_polygon_rect(-10, -5, 20, 15)
-    ring = corpus.parse_wkb_polygon(blob)
+    [[ring]] = corpus.parse_wkb_geometry(blob)
     assert ring.shape == (5, 2)
     assert ring[0].tolist() == [-10, -5] and ring[2].tolist() == [20, 15]
 
 
 def test_ray_cast_golden():
-    ring = corpus.parse_wkb_polygon(corpus.wkb_polygon_rect(0, 0, 10, 10))
+    rect = corpus.parse_wkb_geometry(corpus.wkb_polygon_rect(0, 0, 10, 10))
     lon = np.array([5.0, -1.0, 10.5, 0.125, 9.875])
     lat = np.array([5.0, 5.0, 5.0, 0.125, 9.875])
-    assert _points_in_rings(lon, lat, [ring]).tolist() == [True, False, False, True, True]
+    assert _points_in_rings(lon, lat, rect).tolist() == [True, False, False, True, True]
     # non-rectangular: triangle
     import struct
 
     tri_pts = [(0, 0), (10, 0), (0, 10), (0, 0)]
     tri = struct.pack("<BIII", 1, 3, 1, 4) + b"".join(struct.pack("<dd", x, y) for x, y in tri_pts)
-    ring = corpus.parse_wkb_polygon(tri)
     lon = np.array([1.0, 6.0, 4.0])
     lat = np.array([1.0, 6.0, 4.0])
-    assert _points_in_rings(lon, lat, [ring]).tolist() == [True, False, True]
+    tri_parts = corpus.parse_wkb_geometry(tri)
+    assert _points_in_rings(lon, lat, tri_parts).tolist() == [True, False, True]
 
 
 def test_admin_rects_disjoint_and_hot():

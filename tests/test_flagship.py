@@ -45,11 +45,21 @@ def _sorted(pdf):
 
 
 def test_flagship_wkb_equals_bbox_refine(spark, images):
+    """The flagship's two exact refines agree: over the same 2,000 tile
+    centroids, pip_join's JVM bbox predicate and its ray-cast UDF join the
+    same (tile, zone) pairs."""
+    from ds_raster_pipelines_spark.operators.pip import pip_join
+    from ds_raster_pipelines_spark.plans.flagship import FLAGSHIP_RES
+
     adm = corpus.admin_df(spark)
-    a = _sorted(flagship(images, adm, refine="wkb").toPandas())
-    b = _sorted(flagship(images, adm, refine="bbox").toPandas())
+    pts = corpus.centroid_cols_for_images(images.select("i"), "i")
+    a, b = (
+        pip_join(pts, adm, res=FLAGSHIP_RES, refine=mode)
+        .select("i", "adm_id").orderBy("i", "adm_id").toPandas()
+        for mode in ("wkb", "bbox")
+    )
     assert a.equals(b)
-    assert len(a) > 0 and (a["n_tiles"] > 0).all()
+    assert len(a) > 0
 
 
 def test_flagship_deterministic_across_parallelism(spark):
@@ -151,20 +161,20 @@ def test_large_polygon_set_switches_to_distributed(spark, images, monkeypatch):
         pip.pip_join(pts, adm, res=6, refine="wkb")
         .select("i", "adm_id").orderBy("i", "adm_id").toPandas()
     )
-    base_flag = _sorted(flagship(images, adm, refine="wkb").toPandas())
+    base_flag = _sorted(flagship(images, adm).toPandas())
 
     # guard raises on its own
+    monkeypatch.setattr(pip, "MAX_LOCAL_POLYGONS", 5)
     with pytest.raises(pip.PolygonSetTooLarge):
-        pip.cover_local(spark, adm, 6, max_polygons=5)
+        pip.cover_local(spark, adm, 6)
 
     # auto-switch: same results through the distributed plan
-    monkeypatch.setattr(pip, "MAX_LOCAL_POLYGONS", 5)
     dist_join = (
         pip.pip_join(pts, adm, res=6, refine="wkb")
         .select("i", "adm_id").orderBy("i", "adm_id").toPandas()
     )
     assert base_join.equals(dist_join)
-    dist_flag = _sorted(flagship(images, adm, refine="wkb").toPandas())
+    dist_flag = _sorted(flagship(images, adm).toPandas())
     assert base_flag.equals(dist_flag)
 
 
@@ -212,9 +222,8 @@ def test_pip_distributed_parity_non_rect(spark, monkeypatch):
 def test_pip_boundary_semantics_consistent_on_edges(spark, monkeypatch):
     """VERDICT r4 item 9: points exactly ON polygon edges must classify
     IDENTICALLY under every refine mode (bbox fast path, indexed ray
-    cast, distributed per-row-WKB) for each documented boundary
-    convention — half_open (left/bottom in, right/top out) and closed
-    (every edge point in)."""
+    cast, distributed per-row-WKB) by the one half-open rule (left/bottom
+    in, right/top out)."""
     import pandas as pd
 
     from ds_raster_pipelines_spark.operators import pip
@@ -239,28 +248,29 @@ def test_pip_boundary_semantics_consistent_on_edges(spark, monkeypatch):
         }
     )
     pts = spark.createDataFrame(probes)
-    expected = {
-        # half_open: [min_lon, max_lon) x [min_lat, max_lat)
-        "half_open": {0, 2, 4, 6},
-        # closed: every on-edge probe is inside
-        "closed": {0, 2, 3, 4, 5, 6, 7, 8, 9},
-    }
 
-    for boundary, want in expected.items():
-        results = {}
-        for mode in ("bbox", "wkb"):
-            got = (
-                pip.pip_join(pts, adm, res=4, refine=mode, boundary=boundary)
-                .select("i").toPandas()["i"]
-            )
-            results[mode] = set(got.tolist())
-        with monkeypatch.context() as mp:
-            mp.setattr(pip, "MAX_LOCAL_POLYGONS", 0)
-            got = (
-                pip.pip_join(pts, adm, res=4, refine="wkb", boundary=boundary)
-                .select("i").toPandas()["i"]
-            )
-            results["distributed"] = set(got.tolist())
-        assert results["bbox"] == results["wkb"] == results["distributed"] == want, (
-            boundary, results,
-        )
+    def joined(mode):
+        return set(pip.pip_join(pts, adm, res=4, refine=mode).select("i").toPandas()["i"])
+
+    results = {mode: joined(mode) for mode in ("bbox", "wkb")}
+    monkeypatch.setattr(pip, "MAX_LOCAL_POLYGONS", 0)
+    results["distributed"] = joined("wkb")
+    # [min_lon, max_lon) x [min_lat, max_lat)
+    assert results["bbox"] == results["wkb"] == results["distributed"] == {0, 2, 4, 6}, results
+
+
+def test_zonal_pixel_stats_refuses_large_polygon_set(spark, monkeypatch):
+    """The zonal kernel ships its geometry dictionary in the task closure,
+    so it reads the admin table through the same guarded reader as the
+    PIP cover: above MAX_LOCAL_POLYGONS it refuses while building the
+    plan."""
+    from ds_raster_pipelines_spark.operators import pip
+    from ds_raster_pipelines_spark.operators.raster import zonal_pixel_stats
+
+    images = corpus.footprint_cols_for_images(corpus.images_from_range(spark, 10, partitions=1))
+    adm = corpus.admin_df(spark)  # 32 polygons
+    monkeypatch.setattr(pip, "MAX_LOCAL_POLYGONS", 31)
+    with pytest.raises(pip.PolygonSetTooLarge, match="exceeds 31 polygons"):
+        zonal_pixel_stats(images, adm, res=5)
+    monkeypatch.setattr(pip, "MAX_LOCAL_POLYGONS", 32)
+    zonal_pixel_stats(images, adm, res=5)

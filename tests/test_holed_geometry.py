@@ -3,7 +3,7 @@
 The reference's real consumption input is admin shapefiles
 (``examples/era5_cogs.md:164-172``) — routinely MultiPolygons with holes.
 These tests pin WKB parse fidelity, even-odd parity classification across
-interior rings, BOTH on-edge conventions on hole edges, the interior-cell
+interior rings, the half-open edge rule on hole edges, the interior-cell
 ('full') shortcut's hole-awareness, and engine-vs-naive-oracle agreement
 on the holed fixture corpus.
 """
@@ -44,35 +44,23 @@ def test_parse_wkb_geometry_multipolygon():
     assert np.allclose(parts[1][0], np.asarray(PART2))
 
 
-def test_parse_wkb_polygon_rejects_holes_and_multiparts():
-    # the legacy single-ring API must refuse rather than silently drop
-    with pytest.raises(ValueError):
-        corpus.parse_wkb_polygon(WKB_HOLED)
-    with pytest.raises(ValueError):
-        corpus.parse_wkb_polygon(WKB_MULTI)
-    ring = corpus.parse_wkb_polygon(corpus.wkb_polygon_rect(0, 0, 10, 10))
-    assert ring.shape == (5, 2)
+def _cls(lon, lat, parts):
+    return _points_in_rings(np.asarray([lon], float), np.asarray([lat], float), parts)[0]
 
 
-def _cls(lon, lat, rings, boundary="half_open"):
-    return _points_in_rings(
-        np.asarray([lon], float), np.asarray([lat], float), rings, boundary
-    )[0]
-
-
-RINGS_HOLED = [np.asarray(OUTER, float), np.asarray(HOLE, float)]
-RINGS_MULTI = RINGS_HOLED + [np.asarray(PART2, float)]
+PARTS_HOLED = [[np.asarray(OUTER, float), np.asarray(HOLE, float)]]
+PARTS_MULTI = PARTS_HOLED + [[np.asarray(PART2, float)]]
 
 
 def test_parity_interior_hole_part():
     # strictly inside outer, away from hole -> inside
-    assert _cls(2.0, 2.0, RINGS_MULTI)
+    assert _cls(2.0, 2.0, PARTS_MULTI)
     # strictly inside the hole -> outside (parity: crosses both rings)
-    assert not _cls(5.0, 5.0, RINGS_MULTI)
+    assert not _cls(5.0, 5.0, PARTS_MULTI)
     # inside the disjoint second part -> inside
-    assert _cls(21.0, 21.0, RINGS_MULTI)
+    assert _cls(21.0, 21.0, PARTS_MULTI)
     # between the parts -> outside
-    assert not _cls(15.0, 15.0, RINGS_MULTI)
+    assert not _cls(15.0, 15.0, PARTS_MULTI)
 
 
 def test_hole_edge_half_open_mirrors():
@@ -80,29 +68,23 @@ def test_hole_edge_half_open_mirrors():
     # convention mirrors — a point on the hole's left/bottom edge is
     # inside-the-hole, hence OUTSIDE the polygon, while the hole's
     # right/top edge belongs to the polygon.
-    assert not _cls(4.0, 5.0, RINGS_HOLED)  # hole left edge
-    assert not _cls(5.0, 4.0, RINGS_HOLED)  # hole bottom edge
-    assert _cls(6.0, 5.0, RINGS_HOLED)  # hole right edge
-    assert _cls(5.0, 6.0, RINGS_HOLED)  # hole top edge
+    assert not _cls(4.0, 5.0, PARTS_HOLED)  # hole left edge
+    assert not _cls(5.0, 4.0, PARTS_HOLED)  # hole bottom edge
+    assert _cls(6.0, 5.0, PARTS_HOLED)  # hole right edge
+    assert _cls(5.0, 6.0, PARTS_HOLED)  # hole top edge
     # outer ring unchanged by the hole
-    assert _cls(0.0, 5.0, RINGS_HOLED)  # outer left edge in
-    assert not _cls(10.0, 5.0, RINGS_HOLED)  # outer right edge out
-
-
-def test_hole_edge_closed_everything_on_boundary_inside():
-    for lon, lat in [(4.0, 5.0), (5.0, 4.0), (6.0, 5.0), (5.0, 6.0),
-                     (4.0, 4.0), (6.0, 6.0), (10.0, 5.0), (20.0, 21.0)]:
-        assert _cls(lon, lat, RINGS_MULTI, "closed"), (lon, lat)
+    assert _cls(0.0, 5.0, PARTS_HOLED)  # outer left edge in
+    assert not _cls(10.0, 5.0, PARTS_HOLED)  # outer right edge out
 
 
 def test_cover_full_flag_hole_aware():
     res = 7  # cell width 360/2^8 = 1.40625 deg — hole spans multiple cells
-    cells, full = _cover_geometry([[np.asarray(r, float) for r in (OUTER, HOLE)]], res)
+    cells, full = _cover_geometry(PARTS_HOLED, res)
     a, b, c, d = grid.cell_bounds_np(cells)
     for k in np.nonzero(full)[0]:
         # every corner of a 'full' cell must be parity-inside (not in hole)
         for lon, lat in ((a[k], b[k]), (a[k], d[k]), (c[k], b[k]), (c[k], d[k])):
-            assert _cls(float(lon), float(lat), RINGS_HOLED), (lon, lat)
+            assert _cls(float(lon), float(lat), PARTS_HOLED), (lon, lat)
     # there must BE full cells (interior shortcut is live), and no cell
     # overlapping the hole may be full
     assert full.any()
@@ -112,9 +94,7 @@ def test_cover_full_flag_hole_aware():
 
 def test_cover_multipart_covers_both_parts():
     res = 7
-    parts = [[np.asarray(OUTER, float), np.asarray(HOLE, float)],
-             [np.asarray(PART2, float)]]
-    cells, _ = _cover_geometry(parts, res)
+    cells, _ = _cover_geometry(PARTS_MULTI, res)
     cellset = set(cells.tolist())
     assert int(grid.encode_np(np.array([21.0]), np.array([21.0]), res)[0]) in cellset
     assert int(grid.encode_np(np.array([5.0]), np.array([5.0]), res)[0]) in cellset
@@ -160,11 +140,6 @@ def test_pip_join_holed_half_open(spark, holed_points, multi_admin):
     assert _pids(out) == ["hole_top_edge", "in_outer", "in_part2"]
 
 
-def test_pip_join_holed_closed(spark, holed_points, multi_admin):
-    out = pip_join(holed_points, multi_admin, res=5, refine="wkb", boundary="closed")
-    assert _pids(out) == ["hole_left_edge", "hole_top_edge", "in_outer", "in_part2"]
-
-
 def test_pip_join_distributed_holed_matches(spark, holed_points, multi_admin):
     out = pip_join_distributed(holed_points, multi_admin, res=5)
     assert _pids(out) == ["hole_top_edge", "in_outer", "in_part2"]
@@ -173,7 +148,7 @@ def test_pip_join_distributed_holed_matches(spark, holed_points, multi_admin):
 def test_contains_wkb_udf_holed(spark, holed_points):
     import pyspark.sql.functions as F
 
-    udf = contains_wkb_udf("half_open")
+    udf = contains_wkb_udf()
     df = holed_points.withColumn("wkb", F.lit(WKB_MULTI))
     got = {
         r["pid"]: r["inside"]
@@ -211,9 +186,7 @@ def test_holed_fixture_engine_vs_naive_oracle(spark):
     got = {r["adm_id"]: r["n"] for r in out}
     want: dict[str, int] = {}
     for rec in corpus.admin_holed_rects():
-        rings = [np.asarray(r, float) for r in
-                 [rr for part in corpus.parse_wkb_geometry(rec["geom_wkb"]) for rr in part]]
-        n = int(_points_in_rings(lon, lat, rings).sum())
+        n = int(_points_in_rings(lon, lat, corpus.parse_wkb_geometry(rec["geom_wkb"])).sum())
         if n:
             want[rec["adm_id"]] = n
     assert got == want
@@ -342,7 +315,7 @@ def test_zonal_non_rect_matches_per_pixel_reference(spark):
         )
         for adm_id, rings in NON_RECT_ZONES.items():
             mask = _points_in_rings(
-                lon.ravel(), lat.ravel(), [np.asarray(r) for r in rings]
+                lon.ravel(), lat.ravel(), [[np.asarray(r) for r in rings]]
             ).reshape(h, w)
             if not mask.any():
                 continue
@@ -402,3 +375,22 @@ def test_pip_join_distributed_salted_hot_cells_only(spark):
     plain = agg(pip_join_distributed(pts, adm, res=5))
     salted = agg(pip_join_distributed(pts, adm, res=5, n_salt=8, hot_cells=hot))
     pd.testing.assert_frame_equal(plain, salted)
+
+
+def test_wkb_is_parsed_only_by_corpus_and_pip():
+    """Inside the package only corpus.py and operators/pip.py parse WKB:
+    every other module takes its geometries, in parts form, from pip's one
+    guarded reader (local_geometries)."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(corpus.__file__).resolve().parent
+    callers = set()
+    for p in sorted(pkg.rglob("*.py")):
+        for node in ast.walk(ast.parse(p.read_text())):
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+                if name == "parse_wkb_geometry":
+                    callers.add(p.relative_to(pkg).as_posix())
+    assert callers == {"corpus.py", "operators/pip.py"}, callers

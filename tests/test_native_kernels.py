@@ -455,6 +455,36 @@ def test_decode_features_vectorized_bitexact():
             )
 
 
+@pytest.mark.parametrize("bins", [256, 16])
+def test_tile_batch_histograms_match_per_tile_bincount(bins, drop_toolchain):
+    """TileBatch.histograms at pixel_histogram's 256 bins and decode_features'
+    16 equals a bincount of each decoded tile: with the native segment
+    histogram over the raw/qnt rows, and without the toolchain, where every
+    row takes the bincount."""
+    import pyarrow as pa
+
+    from ds_raster_pipelines_spark import codecs, corpus
+    from ds_raster_pipelines_spark.sources.images import TileBatch
+
+    shift = int(np.log2(256 // bins))
+    rows = [(codecs.encode_tile(corpus.pixels_for(i), fmt), fmt)
+            for i, fmt in enumerate(["raw", "qnt", "png", "tif", "dct"] * 3)]
+    b = pa.RecordBatch.from_arrays(
+        [pa.array([blob for blob, _ in rows], pa.binary()), pa.array([f for _, f in rows]),
+         pa.array([64] * len(rows), pa.int32()), pa.array([64] * len(rows), pa.int32())],
+        names=["bytes", "fmt", "w", "h"],
+    )
+    ref = np.stack([
+        np.bincount(codecs.decode_tile(blob, fmt, 64, 64).ravel() >> shift, minlength=bins)
+        for blob, fmt in rows
+    ])
+    if native.get_lib() is not None:
+        np.testing.assert_array_equal(TileBatch(b).histograms(shift, bins), ref)
+    drop_toolchain()
+    np.testing.assert_array_equal(TileBatch(b).histograms(shift, bins), ref)
+    assert native.fallbacks["hist_segments"] == 1
+
+
 def _raw_tiles_batch(sizes, seed):
     """Arrow batch in the decode_stats input shape: raw tiles of ``sizes``
     pixels each (w=size, h=1), random bytes."""
@@ -635,7 +665,8 @@ def _zonal_case(dims, seed):
     px_off = np.arange(3, dtype=np.int64) * w * h
     ws, hs = np.full(3, w, dtype=np.int64), np.full(3, h, dtype=np.int64)
     pair_k, pair_g = (a.ravel() for a in np.meshgrid(np.arange(3), np.arange(len(geoms))))
-    return (px, px_off, ws, hs, lon0, lat_top, SPAN, edges, edge_off), geoms, (pair_k, pair_g)
+    parts = [[g] for g in geoms]  # each geometry one part: parity is over all its rings
+    return (px, px_off, ws, hs, lon0, lat_top, SPAN, edges, edge_off), parts, (pair_k, pair_g)
 
 
 def _zonal_reference(args, geoms, pairs, ncol):

@@ -68,9 +68,9 @@ def test_flagship_plan_build_py4j_budget(spark, tiles, monkeypatch):
 def test_prune_parents_from_cover_cells(spark, admin_df):
     """The flagship's partition-prune list — the pcell parents of the cover
     cells — equals covering every geometry again at PCELL_RES."""
-    _, rings, cover = cover_local_pdf(admin_df(spark), FLAGSHIP_RES)
+    _, geoms, cover = cover_local_pdf(admin_df(spark), FLAGSHIP_RES)
     parents = np.unique(grid.parent_np(cover["cell_id"].to_numpy(), corpus.PCELL_RES))
-    assert parents.tolist() == cover_cells_driver(rings, corpus.PCELL_RES)
+    assert parents.tolist() == cover_cells_driver(geoms, corpus.PCELL_RES)
 
 
 def test_flagship_scan_keeps_pcell_inset_filter(spark, tiles):
@@ -96,8 +96,7 @@ def test_flagship_matches_closed_form(spark, tiles, admin_df, rects):
     mean = np.array([corpus.expected_decoded_mean(int(k)) for k in i])
     want = {}
     for rec in rects():
-        rings = [r for part in corpus.parse_wkb_geometry(rec["geom_wkb"]) for r in part]
-        inside = _points_in_rings(lon, lat, rings)
+        inside = _points_in_rings(lon, lat, corpus.parse_wkb_geometry(rec["geom_wkb"]))
         if inside.any():
             want[rec["adm_id"]] = (int(inside.sum()), float(mean[inside].sum()))
     rows = flagship(spark.read.parquet(tiles), admin_df(spark)).collect()
