@@ -194,6 +194,8 @@ def images_from_ids(
             pdf = pdf.assign(bytes=pd.Series(blobs, index=pdf.index, dtype=object))
             yield pdf[out_cols]
 
+    # pandas frame on purpose: the generator carries the caller's extra
+    # columns through unchanged (pdf.assign + projection)
     return meta.mapInPandas(gen_bytes, schema=out_schema)
 
 

@@ -95,6 +95,9 @@ class _BitWriter:
 
 
 class _BitReader:
+    """MSB-first bit reader shared by the FLAC and MPEG audio decoders, so
+    its errors name no codec."""
+
     def __init__(self, data: bytes, pos: int = 0) -> None:
         self.data = data
         self.bytepos = pos
@@ -104,7 +107,7 @@ class _BitReader:
         v = 0
         while bits > 0:
             if self.bytepos >= len(self.data):
-                raise ValueError("FLAC: truncated bitstream")
+                raise ValueError("truncated bitstream")
             avail = 8 - self.bitpos
             take = min(bits, avail)
             cur = self.data[self.bytepos]
@@ -121,7 +124,7 @@ class _BitReader:
         while self.read(1) == 0:
             q += 1
             if q > 1 << 24:
-                raise ValueError("FLAC: runaway unary code")
+                raise ValueError("runaway unary code")
         return q
 
     def align(self) -> None:

@@ -112,6 +112,8 @@ def polygon_cover_cells(admin: DataFrame, res: int) -> DataFrame:
                 }
             )
 
+    # pandas frame on purpose: one row per polygon (a small table); the
+    # cost is each geometry's cover walk, not the conversion
     return admin.select("adm_id", "geom_wkb").mapInPandas(
         kernel, schema="adm_id string, cell_id bigint, full boolean"
     )

@@ -186,6 +186,8 @@ def cosine_topk(
                      for c, v in out.items()}
                 )
 
+        # pandas frame on purpose: no blob column — each batch is a stack of
+        # small int vectors, and the cost is the int64 GEMM, not the conversion
         cand = corpus.select(
             "vec_id", quantize(F.col("embedding")).alias("ne")
         ).mapInPandas(
@@ -444,6 +446,8 @@ def lsh_near_dup_pairs(
             }
             return pd.DataFrame(cat)
 
+        # pandas frame on purpose: a grouped map hands over one whole LSH
+        # bucket, and the all-pairs GEMM needs the bucket at once
         found = parts.groupBy("_t", "_bk").applyInPandas(
             kernel, schema="id_a long, id_b long, _dot long, _na long, _nb long"
         )
@@ -651,6 +655,8 @@ def semdedup_prune(
                 is_dropped |= passing.any(axis=0)
             return pd.DataFrame({"vec_id": ids[is_dropped]})
 
+        # pandas frame on purpose: a grouped map hands over one whole cluster,
+        # and the pairwise prune needs the cluster at once
         dropped = (
             e.groupBy("cid")
             .applyInPandas(kernel, schema="vec_id long")

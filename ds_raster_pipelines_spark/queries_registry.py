@@ -3331,7 +3331,7 @@ def bilinear_resample_means(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     images = spark.read.parquet(corpus.materialized_images(spark, sf_dir)).select(
         "i", "bytes", "fmt", "w", "h"
-    )  # explicit projection: pruning cannot reach through mapInPandas
+    )  # explicit projection: pruning cannot reach through mapInArrow
     # no global orderBy: a range sort SAMPLES its map-only child,
     # re-running the whole decode kernel a second time (r7 s3 lesson,
     # measured 2x on the mjpeg twin; r8 measured the same shape here).
@@ -3701,14 +3701,14 @@ def flac_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed-form sample algebra bit-for-bit. Plan at 100 TB: one Arrow
     decode stage over stored blobs, partial agg before the per-file
     exchange — identical shape to the wav/mulaw twins."""
-    from .sources.multimodal import flac_stats_exact, materialized_flac_corpus
+    from .sources.multimodal import audio_stats_exact, materialized_flac_corpus
 
     media = spark.read.parquet(materialized_flac_corpus(spark, sf_dir))
     # no global orderBy: a range sort SAMPLES its map-only child,
     # re-running the whole decode kernel a second time (r7 s3 lesson,
     # measured 2x on the mjpeg twin; r8 measured the same shape here).
     # The driver compare row-sorts before hashing, so order is free.
-    return flac_stats_exact(media)
+    return audio_stats_exact(media)
 
 
 # Count-min heavy hitters: the ENTIRE sketch pipeline replicated in SQL —
@@ -4394,7 +4394,7 @@ def shapefile_zonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle (= pip_zonal_holed's) catches any winding/nesting/DBF mistake
     as a value divergence: a codec that misreads winding turns holes
     into islands and over-counts every holed zone.  The parse runs
-    distributed (mapInPandas over blob rows) — at corpus scale this is
+    distributed (a mapInArrow kernel over BlobBatch rows) — at corpus scale this is
     10k country archives exploding map-side with no shuffle."""
     import pandas as pd
 

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import tiff
-from .sources.images import TILE_COLUMNS, TileBatch
+from .sources.images import TILE_COLUMNS, BlobBatch, TileBatch
 
 # Storage-tier / content-type rules of the reference
 # (azure_utils.py:75-98: COOL + application/octet-stream default;
@@ -168,6 +168,8 @@ def write_cube_nc(
         )
         return pd.DataFrame({part_col: [part], "nc_bytes": [blob]})
 
+    # pandas frame on purpose: a grouped map hands over one whole part_col
+    # group, and one group is exactly one NetCDF file
     cube.groupBy(part_col).applyInPandas(encode, schema=out_schema).write.mode(
         "overwrite"
     ).parquet(path)
@@ -176,8 +178,10 @@ def write_cube_nc(
 def read_cube_nc(spark, path: str, key_col: str = "cell_id") -> DataFrame:
     """Re-read the per-partition NetCDF shards back into the flat cube
     table (inverse of write_cube_nc; bit-exact round-trip pytest-gated).
-    One Arrow stage: each task parses its shard blobs with the classic
-    decoder and emits the rows."""
+    One Arrow stage: each task takes its shard blobs from BlobBatch,
+    parses them with the classic decoder and emits the rows."""
+    import numpy as np
+
     from . import netcdf as nc_mod
 
     blobs = spark.read.parquet(path)
@@ -187,28 +191,31 @@ def read_cube_nc(spark, path: str, key_col: str = "cell_id") -> DataFrame:
     sample = blobs.limit(1).collect()[0]["nc_bytes"]
     f0 = nc_mod.decode_nc(bytes(sample))
     band_names = f0.attrs["bands"].split()
-    parts = [f"{part_col} int", f"{key_col} bigint"]
+    types = {part_col: "int", key_col: "bigint"}
     for b in band_names:
-        kind = f0.variables[b].data.dtype.kind
-        parts.append(f"{b} {'double' if kind == 'f' else 'bigint'}")
-    out_schema = ", ".join(parts)
+        types[b] = "double" if f0.variables[b].data.dtype.kind == "f" else "bigint"
+    dtypes = [{"int": np.int32, "bigint": np.int64, "double": np.float64}[t] for t in types.values()]
+
+    def shard(blob, part) -> list[np.ndarray]:
+        f = nc_mod.decode_nc(bytes(blob))
+        hi = f.variables[f"{key_col}_hi"].data.astype(np.int64)
+        lo = f.variables[f"{key_col}_lo"].data.view(np.uint32).astype(np.int64)
+        keys = (hi << 32) | lo
+        return [np.full(len(keys), part, np.int32), keys,
+                *(f.variables[b].data for b in band_names)]
 
     def decode(batches):
-        import numpy as np
+        import pyarrow as pa
 
-        for pdf in batches:
-            frames = []
-            for part, blob in zip(pdf[part_col], pdf["nc_bytes"]):
-                f = nc_mod.decode_nc(bytes(blob))
-                hi = f.variables[f"{key_col}_hi"].data.astype(np.int64)
-                lo = f.variables[f"{key_col}_lo"].data.view(np.uint32).astype(np.int64)
-                d = {part_col: int(part), key_col: (hi << 32) | lo}
-                for b in band_names:
-                    a = f.variables[b].data
-                    d[b] = a if a.dtype.kind == "f" else a.astype(np.int64)
-                frames.append(pd.DataFrame(d))
-            yield pd.concat(frames) if frames else pd.DataFrame(
-                {c.split()[0]: [] for c in parts}
+        for b in batches:
+            shards = BlobBatch(b, "nc_bytes").map(shard, b.column(part_col).to_pylist())
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(np.concatenate([np.zeros(0, dt)] + [s[j] for s in shards]).astype(dt))
+                    for j, dt in enumerate(dtypes)
+                ],
+                names=list(types),
             )
 
-    return blobs.mapInPandas(decode, schema=out_schema)
+    out_schema = ", ".join(f"{c} {t}" for c, t in types.items())
+    return blobs.select(part_col, "nc_bytes").mapInArrow(decode, schema=out_schema)

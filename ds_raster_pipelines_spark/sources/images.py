@@ -11,6 +11,10 @@ loop is over *blobs*, each decoded with vectorized numpy). Decode emits
 per-tile statistics rather than raw pixels so the downstream relational
 plan stays columnar and shuffle-light — pixels never cross a shuffle
 boundary.
+
+Every other container kernel (audio, AVI video, GRIB, zip, shapefile,
+NetCDF) reads its blob column through ``BlobBatch``, the non-tile twin,
+and every generated container corpus is built by ``blob_table``.
 """
 
 from __future__ import annotations
@@ -44,6 +48,77 @@ def _binary_offsets_data(arr) -> tuple[np.ndarray, np.ndarray]:
     off = off[arr.offset : arr.offset + len(arr) + 1]
     data = np.frombuffer(bufs[2], np.uint8) if bufs[2] is not None else np.zeros(1, np.uint8)
     return off.astype(np.int64, copy=False), data
+
+
+class BlobBatch:
+    """One Arrow record batch of opaque container blobs (audio, video,
+    GRIB, zip, shapefile, NetCDF), read the one way every blob kernel reads
+    it — the non-tile twin of ``TileBatch``, and the only place a bad blob
+    is caught:
+
+    * a null ``col`` raises ``null <col> in blob table at row k``;
+    * a blob its decoder rejects raises ``<col> row k: <decoder message>``,
+      chained from the decoder's own exception (a ``struct.error`` on a
+      short buffer included).
+
+    ``map`` hands a decoder each row's payload as a zero-copy memoryview of
+    the Arrow data buffer; ``whole`` hands a batched kernel the column's
+    ``(off, data)`` views for one native call over every blob."""
+
+    def __init__(self, b, col: str = "bytes"):
+        arr = b.column(col)
+        if arr.null_count:
+            k = int(np.flatnonzero(arr.is_null().to_numpy(zero_copy_only=False))[0])
+            raise ValueError(f"null {col} in blob table at row {k}")
+        self.col = col
+        self.n = b.num_rows
+        self.off, self.data = _binary_offsets_data(arr)
+        self._view = memoryview(self.data)
+
+    def _error(self, k: int, e: Exception) -> ValueError:
+        return ValueError(f"{self.col} row {k}: {e}")
+
+    def map(self, decode, *cols, rows=None) -> list:
+        """``[decode(payload_k, *(c[k] for c in cols)) for k in rows]``
+        (every row by default), each failure reported as its row's
+        canonical error."""
+        off, out = self.off.tolist(), []  # int offsets: numpy scalars slice slower
+        for k in range(self.n) if rows is None else rows:
+            try:
+                out.append(decode(self._view[off[k] : off[k + 1]], *[c[k] for c in cols]))
+            except Exception as e:
+                raise self._error(k, e) from e
+        return out
+
+    def whole(self, kernel):
+        """``kernel(off, data)`` over the whole batch in one call. Only when
+        it raises is each row re-run alone, to name the first row that
+        fails by itself; the error path pays for that, the normal path
+        pays nothing."""
+        try:
+            return kernel(self.off, self.data)
+        except Exception:
+            for k in range(self.n):
+                try:
+                    kernel(self.off[k : k + 2], self.data)
+                except Exception as e:
+                    raise self._error(k, e) from e
+            raise
+
+
+def blob_table(ids: DataFrame, encode_one, col: str = "bytes") -> DataFrame:
+    """``(i bigint, <col> binary)``: one ``encode_one(i)`` blob per id of
+    ``ids.i`` — the builder behind every generated container corpus."""
+
+    def kernel(batches):
+        import pyarrow as pa
+
+        for b in batches:
+            ids_ = b.column("i").to_numpy(zero_copy_only=False).astype(np.int64)
+            blobs = pa.array([encode_one(int(i)) for i in ids_], pa.binary())
+            yield pa.RecordBatch.from_arrays([pa.array(ids_), blobs], names=["i", col])
+
+    return ids.select("i").mapInArrow(kernel, schema=f"i bigint, {col} binary")
 
 
 def seg_sum_min_max_reference(data: np.ndarray, bounds: np.ndarray):

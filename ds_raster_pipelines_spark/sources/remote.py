@@ -118,6 +118,8 @@ def fetch_blobs(
                 out["ref"].append(ref)
             yield pd.DataFrame(out)
 
+    # pandas frame on purpose: the input is refs, not blobs, and the batch
+    # is bound by fetch I/O; a failed fetch becomes an error row
     return refs.mapInPandas(kernel, schema=FETCH_SCHEMA)
 
 

@@ -218,28 +218,36 @@ def test_session_window_stream_matches_batch(spark):
 
 
 def test_multimodal_plumbing(spark):
-    from ds_raster_pipelines_spark.sources.multimodal import audio_features, sample_frames
-
-    media = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "media_id": ["a", "b"],
-                "bytes": [bytes(range(256)) * 8, b"\x00\x01" * 500],
-                "mod": ["wav", "wav"],
-            }
-        )
+    from ds_raster_pipelines_spark import avi
+    from ds_raster_pipelines_spark.sources.multimodal import (
+        audio_features,
+        sample_frames,
+        video_frames_for,
     )
-    # real codec path: wav decode is real now, so junk bytes fail the RIFF
-    # parse (not silently fake); compressed codecs stay gated (see
-    # test_wav_decode_real_path for the NotImplementedError stub check)
+
+    blobs = [bytes(range(256)) * 8, b"\x00\x01" * 500]
+    media = spark.createDataFrame(
+        pd.DataFrame({"media_id": ["a", "b"], "bytes": blobs, "mod": ["wav", "wav"]})
+    )
+    # wav decode is real, so these raw streams fail the RIFF parse
     with pytest.raises(Exception, match="RIFF"):
         audio_features(media).collect()
-    feats = audio_features(media, use_fake_codec=True).orderBy("media_id").toPandas()
+    # the same bytes are a valid raw int16 stream
+    pcm16 = media.withColumn("mod", F.lit("pcm16"))
+    feats = audio_features(pcm16).orderBy("media_id").toPandas()
     assert feats["n_samples"].tolist() == [1024, 500]
     assert (feats["rms"] > 0).all()
-    frames = sample_frames(media, every_n=4, use_fake_codec=True).toPandas()
-    assert set(frames["media_id"]) == {"a", "b"}
-    assert (frames.groupby("media_id")["frame_idx"].min() == 0).all()
+    videos = [avi.encode_avi_dct(video_frames_for(i)) for i in (0, 3)]  # 8 and 11 frames
+    clips = spark.createDataFrame(
+        pd.DataFrame({"media_id": ["a", "b"], "bytes": videos, "mod": ["avi", "avi"]})
+    )
+    frames = sample_frames(clips, every_n=4).toPandas()
+    assert frames.groupby("media_id")["frame_idx"].apply(list).to_dict() == {
+        "a": [0, 1], "b": [0, 1, 2]
+    }
+    want = [p for v in videos for p in avi.frame_payloads(v, 4)]
+    got = frames.sort_values(["media_id", "frame_idx"])["frame_bytes"].map(bytes).tolist()
+    assert got == want
 
 
 def test_vectorize_mask_golden(spark):
