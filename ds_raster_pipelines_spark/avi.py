@@ -294,37 +294,60 @@ def decode_avi_frames(buf: bytes, every_n: int = 1, offset: int = 0) -> list[np.
     return [dec(bytes(buf[d : d + s])) for d, s in meta.frames[offset::every_n]]
 
 
-def frame_stats_arrow(
-    off: "np.ndarray", data: "np.ndarray", every_n: int = 1, offset: int = 0
-) -> list[list[tuple[int, int]]]:
-    """Per-blob ``[(n_px, sum_px), ...]`` for the sampled frames of an
-    Arrow binary column's zero-copy (offsets, data) views — equal to
-    ``[(px.size, int(px.sum())) for px in decode_avi_frames(...)]``
-    (pytest-pinned).  The container walk runs via the native scan's
-    pointer form (no per-blob bytes object is ever created; only the
-    sampled frames' payload bytes are copied), and MJPG sums accumulate
-    inside the native IDCT (jpeg.decode_jpeg_batch_stats).  Python
-    fallback per blob on any native anomaly — exact errors."""
+def _walk(data: np.ndarray, o0: int, o1: int) -> tuple[bytes, list[tuple[int, int]]]:
+    """(handler, frames) of the blob ``data[o0:o1]``: the native walk over
+    a pointer into the buffer, else parse_avi's (canonical errors)."""
     from . import native
 
-    base = data.ctypes.data
+    r = native.avi_scan((data.ctypes.data + o0, o1 - o0))
+    if r is None:
+        meta = parse_avi(bytes(data[o0:o1]))
+        return meta.handler, meta.frames
+    return r[3], r[4]
+
+
+def _batch_header(off, data, every_n: int, offset: int, walked: dict):
+    """``(prefix, parsed)`` of the first sampled MJPG frame whose header
+    jpeg._segment_sums can take — usually blob 0's — or None.  prefix is
+    the frame's bytes up to its entropy data.  Every blob walked on the
+    way is kept in ``walked`` for the per-blob path; a blob that fails
+    here is skipped and raises on that path instead, in blob order."""
+    from . import jpeg
+
+    for k in range(len(off) - 1):
+        o0 = int(off[k])
+        try:
+            handler, frames = walked[k] = _walk(data, o0, int(off[k + 1]))
+            sel = frames[offset::every_n]
+            if handler != _FOURCC_MJPG or not sel:
+                continue
+            raw = data[o0 + sel[0][0] : o0 + sel[0][0] + sel[0][1]].tobytes()
+            hdr = jpeg._parse_header(raw)
+        except Exception:
+            continue
+        if jpeg._fast_header(hdr):
+            return raw[: hdr[8]], hdr
+    return None
+
+
+def _per_blob_stats(off, data, every_n: int, offset: int, rows: list[int],
+                    walked: dict) -> list[list[tuple[int, int]]]:
+    """``[(n_px, sum_px), ...]`` of the sampled frames of each blob in
+    ``rows``, one blob at a time: walk, then DCT0 frames decoded one by
+    one and MJPG frames through jpeg.decode_jpeg_batch_stats.  Raises the
+    decoders' canonical errors, walk and DCT0 errors first in blob order."""
     out: list[list] = []
     mj_payloads: list[bytes] = []
     mj_slots: list[tuple[int, int]] = []
-    for idx in range(len(off) - 1):
-        o0, o1 = int(off[idx]), int(off[idx + 1])
-        r = native.avi_scan((base + o0, o1 - o0))
-        if r is None:
-            meta = parse_avi(bytes(data[o0:o1]))  # canonical errors
-            handler, frames = meta.handler, meta.frames
-        else:
-            _w, _h, _usec, handler, frames = r
+    for pos, idx in enumerate(rows):
+        o0 = int(off[idx])
+        handler, frames = walked.get(idx) or _walk(data, o0, int(off[idx + 1]))
         sel = frames[offset::every_n]
         if handler == _FOURCC_MJPG:
             out.append([None] * len(sel))
             for j, (d, s) in enumerate(sel):
                 mj_payloads.append(data[o0 + d : o0 + d + s].tobytes())
-                mj_slots.append((idx, j))
+                mj_slots.append((pos, j))
         elif handler == _FOURCC_HANDLER:
             from . import codecs
 
@@ -340,6 +363,74 @@ def frame_stats_arrow(
     if mj_payloads:
         from . import jpeg
 
-        for (idx, j), st in zip(mj_slots, jpeg.decode_jpeg_batch_stats(mj_payloads)):
-            out[idx][j] = st
+        for (pos, j), st in zip(mj_slots, jpeg.decode_jpeg_batch_stats(mj_payloads)):
+            out[pos][j] = st
     return out
+
+
+def frame_stats_columns(
+    off: "np.ndarray", data: "np.ndarray", every_n: int = 1, offset: int = 0
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """``(counts, n_px, sum_px)`` int64 arrays for the sampled frames of an
+    Arrow binary column's zero-copy (offsets, data) views: blob k has
+    counts[k] sampled frames, and n_px / sum_px list every sampled frame
+    in blob order — the columns of ``frame_stats_arrow``.
+
+    MJPG blobs take one native pass for the whole batch: Python parses the
+    first sampled frame's header once; native.avi_mjpeg_segments walks
+    every blob, samples its frames, checks each against that header and
+    unstuffs its entropy data; jpeg._segment_sums then runs one entropy
+    scan and one sums-only IDCT.  A blob that does not fit — another
+    handler or header, a restart interval, dimensions that are not
+    multiples of 8, an AVI anomaly, a scan error — re-runs alone on the
+    per-blob path (``_per_blob_stats``), so results and errors are those
+    of decode_avi_frames; so does every blob when the library is missing.
+    The other blobs of the batch stay native."""
+    from . import jpeg, native
+
+    n = len(off) - 1
+    nkept = np.full(n, -1, dtype=np.int64)  # -1: the per-blob path
+    walked: dict = {}
+    fast = None
+    found = _batch_header(off, data, every_n, offset, walked) if every_n >= 1 and offset >= 0 else None
+    if found is None:  # no header to check the frames against
+        native.fallbacks["avi_mjpeg_segments"] += n
+    segs = None if found is None else native.avi_mjpeg_segments(off, data, every_n, offset, found[0])
+    if segs is not None:
+        hdr = found[1]
+        nkept, bodies, seg_off = segs
+        sums, ok = jpeg._segment_sums(bodies, seg_off, hdr)
+        if not ok.all():  # the blobs of malformed segments re-run alone
+            seg_blob = np.repeat(np.arange(n), np.maximum(nkept, 0))
+            bad = np.unique(seg_blob[~ok])
+            native.fallbacks["avi_mjpeg_segments"] += len(bad)
+            sums = sums[~np.isin(seg_blob, bad)]
+            nkept[bad] = -1
+        fast = (hdr[0] * hdr[1], sums)
+    slow = np.flatnonzero(nkept < 0).tolist()
+    slow_stats = _per_blob_stats(off, data, every_n, offset, slow, walked)
+    counts = nkept.copy()
+    counts[slow] = [len(x) for x in slow_stats]
+    is_slow = np.repeat(nkept < 0, counts)
+    npx = np.empty(len(is_slow), dtype=np.int64)
+    spx = np.empty(len(is_slow), dtype=np.int64)
+    if fast is not None:
+        npx[~is_slow], spx[~is_slow] = fast
+    flat = [x for st in slow_stats for x in st]
+    npx[is_slow] = [x[0] for x in flat]
+    spx[is_slow] = [x[1] for x in flat]
+    return counts, npx, spx
+
+
+def frame_stats_arrow(
+    off: "np.ndarray", data: "np.ndarray", every_n: int = 1, offset: int = 0
+) -> list[list[tuple[int, int]]]:
+    """Per-blob ``[(n_px, sum_px), ...]`` for the sampled frames of an
+    Arrow binary column's zero-copy (offsets, data) views — equal to
+    ``[(px.size, int(px.sum())) for px in decode_avi_frames(...)]``
+    (pytest-pinned).  The list form of ``frame_stats_columns``: one native
+    pass for the MJPG blobs of the batch, the per-blob path for the rest."""
+    counts, npx, spx = frame_stats_columns(off, data, every_n, offset)
+    pairs = list(zip(npx.tolist(), spx.tolist()))
+    ends = np.cumsum(counts).tolist()
+    return [pairs[e - c : e] for e, c in zip(ends, counts.tolist())]

@@ -47,6 +47,7 @@ import numpy as np
 
 _C_SRC = r"""
 #include <stdint.h>
+#include <string.h>
 
 /* Baseline-JPEG entropy-coded scan walk: decode `nblocks` 8x8 blocks'
  * zigzag coefficients from an UNSTUFFED entropy segment.  Mirrors
@@ -228,7 +229,8 @@ long jpeg_idct_blocks(const int32_t *zz, long nblocks,
                       const double *basis,       /* 64*64, row-major */
                       const unsigned char *zz2r, /* zigzag k -> raster r */
                       long nbx, long bpf,        /* blocks per row / frame */
-                      unsigned char *out,        /* nblocks*64, frame layout */
+                      unsigned char *out,        /* nblocks*64, frame layout,
+                                                    or NULL: sums only */
                       int64_t *frame_sums)       /* per-frame pixel sums
                                                     (PADDED frame!), or NULL */
 {
@@ -237,8 +239,6 @@ long jpeg_idct_blocks(const int32_t *zz, long nblocks,
     for (bi = 0; bi < nblocks; bi++) {
         const int32_t *row = zz + bi * 64;
         long f = bi / bpf, b = bi % bpf;
-        unsigned char *px =
-            out + f * bpf * 64 + (b / nbx) * 8 * wpx + (b % nbx) * 8;
         double acc[64];
         int k, m, r2, c2;
         for (m = 0; m < 64; m++)
@@ -266,9 +266,13 @@ long jpeg_idct_blocks(const int32_t *zz, long nblocks,
             unsigned char blk[64];
             for (m = 0; m < 64; m++)
                 blk[m] = (unsigned char)acc[m];
-            for (r2 = 0; r2 < 8; r2++)
-                for (c2 = 0; c2 < 8; c2++)
-                    px[r2 * wpx + c2] = blk[r2 * 8 + c2];
+            if (out) {
+                unsigned char *px =
+                    out + f * bpf * 64 + (b / nbx) * 8 * wpx + (b % nbx) * 8;
+                for (r2 = 0; r2 < 8; r2++)
+                    for (c2 = 0; c2 < 8; c2++)
+                        px[r2 * wpx + c2] = blk[r2 * 8 + c2];
+            }
             if (frame_sums) {
                 long bs = 0;
                 for (m = 0; m < 64; m++)
@@ -790,6 +794,69 @@ long avi_scan(const unsigned char *d, int64_t n,
     return nf;
 }
 
+/* MJPEG-in-AVI front end for a whole Arrow binary column (off: nblobs+1
+ * offsets into data): per blob, the avi_scan walk, then every every_n-th
+ * frame from `offset`.  A kept frame must start with the caller's batch
+ * header hdr[0, hdr_len) -- the JPEG prefix up to the entropy data, which
+ * alone decides jpeg.py's header parse, so the comparison is exact.  Its
+ * entropy data runs from hdr_len to the LAST ff d9 (raw.rfind), and is
+ * unstuffed (ff 00 -> ff, left to right, == bytes.replace) into `bodies`;
+ * seg_off[s], seg_off[s+1] bound segment s.  nkept[k] is blob k's kept
+ * frame count, or -1 when the blob must take the per-blob Python path:
+ * an AVI anomaly, a handler other than MJPG, more frames than `cap`, or a
+ * kept frame with another header or no EOI after it.  frame_off /
+ * frame_size are avi_scan's `cap`-sized scratch.  Returns the segment
+ * count, or AVIERR when bodies_cap or seg_cap is too small. */
+long avi_mjpeg_segments(const unsigned char *data, const int64_t *off, long nblobs,
+                        long every_n, long offset,
+                        const unsigned char *hdr, long hdr_len,
+                        int64_t *frame_off, int64_t *frame_size, long cap,
+                        int64_t *nkept, unsigned char *bodies, int64_t bodies_cap,
+                        int64_t *seg_off, long seg_cap)
+{
+    int64_t meta[4];
+    int64_t nb = 0;
+    long nseg = 0, k, j;
+    seg_off[0] = 0;
+    for (k = 0; k < nblobs; k++) {
+        const unsigned char *d = data + off[k];
+        long nf = avi_scan(d, off[k + 1] - off[k], meta, frame_off, frame_size, cap);
+        long seg0 = nseg;
+        int64_t nb0 = nb;
+        nkept[k] = -1;
+        if (nf < 0 || meta[3] != ('M' | 'J' << 8 | 'P' << 16 | (int64_t)'G' << 24))
+            continue;
+        for (j = offset; j < nf; j += every_n) {
+            const unsigned char *f = d + frame_off[j];
+            int64_t fs = frame_size[j], end = -1, p;
+            if (fs < hdr_len + 2 || memcmp(f, hdr, hdr_len) != 0)
+                break;
+            for (p = fs - 2; p >= hdr_len; p--)
+                if (f[p] == 0xFF && f[p + 1] == 0xD9) {
+                    end = p;
+                    break;
+                }
+            if (end < 0)
+                break;
+            if (nseg >= seg_cap || nb + (end - hdr_len) > bodies_cap)
+                return AVIERR;
+            for (p = hdr_len; p < end; p++) {
+                bodies[nb++] = f[p];
+                if (f[p] == 0xFF && p + 1 < end && f[p + 1] == 0x00)
+                    p++;
+            }
+            seg_off[++nseg] = nb;
+        }
+        if (j < nf) { /* a kept frame left the fast path: drop the blob */
+            nseg = seg0;
+            nb = nb0;
+            continue;
+        }
+        nkept[k] = nseg - seg0;
+    }
+    return nseg;
+}
+
 /* Separable bilinear resample over a stack of same-shape uint8 tiles:
  * the gather/lerp passes of operators/raster.bilinear_resample with the
  * index/fraction tables PRECOMPUTED BY THE CALLER from the exact numpy
@@ -1210,6 +1277,7 @@ _SIGNATURES = {
     "grib_scan": "pllpp",
     "grib_files_sum": "pplppplplp",
     "avi_scan": "pqpppl",
+    "avi_mjpeg_segments": "pplllplpplppqpl",
     "bilinear_stack": "plllppplppplpp",
     "hist_segments": "pplllp",
     "seg_sum_min_max": "pqplppp",
@@ -1346,7 +1414,7 @@ def jpeg_idct_blocks(
     zz_to_raster: bytes,
     nbx: int,
     blocks_per_frame: int,
-    out: np.ndarray,
+    out: np.ndarray | None,
     frame_sums: np.ndarray | None = None,
 ) -> bool:
     """Dequant + IDCT + (+128, rint, clip) for a (N, 64) int32 zigzag
@@ -1354,11 +1422,14 @@ def jpeg_idct_blocks(
     frame layout (no numpy reshape/swapaxes pass needed).  When
     ``frame_sums`` (int64, zeroed, one slot per frame) is given, the
     kernel also accumulates each PADDED frame's pixel sum — callers must
-    only use it when h, w are multiples of 8 (no crop).  Returns False
+    only use it when h, w are multiples of 8 (no crop); with ``out`` None
+    it computes the sums alone and writes no pixels.  Returns False
     when the native library is unavailable — callers run the numpy
     matmul path instead.  ``basis`` must be the 64x64 float64 outer-
     product expansion of the SAME DCT matrix the numpy path uses (the
     parity pytest pins byte-equality between the two paths)."""
+    if out is None and frame_sums is None:
+        raise ValueError("jpeg_idct_blocks: needs out, frame_sums or both")
     return _call(
         "jpeg_idct_blocks", zz, zz.shape[0], _addr(q_raster), _addr(basis),
         zz_to_raster, nbx, blocks_per_frame, out, frame_sums,
@@ -1500,6 +1571,52 @@ def avi_scan(buf):
         handler,
         list(zip(off[:rc].tolist(), size[:rc].tolist())),
     )
+
+
+_SOI, _SOS = b"\xff\xd8", b"\xff\xda"
+
+
+def avi_mjpeg_segments(off: np.ndarray, data: np.ndarray, every_n: int, offset: int,
+                       header: bytes):
+    """One native pass over an Arrow binary column of MJPEG AVIs (``off``
+    int64 offsets into the ``data`` uint8 buffer): the AVI walk, the
+    ``offset::every_n`` frame sample, the check that each kept frame starts
+    with ``header`` (a JPEG prefix from SOI through SOS, as
+    jpeg._parse_header reads it), and the unstuffed entropy data of
+    every kept frame.  Returns ``(nkept, bodies, seg_off)``: nkept[k] is
+    blob k's kept frame count, or -1 when blob k must take the per-blob
+    path (counted in ``fallbacks``); segment s is
+    ``bodies[seg_off[s]:seg_off[s + 1]]``, in blob order.  None when the
+    library is unavailable.  Arrays of another dtype or layout, offsets
+    out of bounds, a bad sample or a header that is not such a prefix
+    raise ValueError.
+
+    Single-threaded only: it shares avi_scan's scratch buffers."""
+    if not (off.dtype == np.int64 and data.dtype == np.uint8 and off.ndim == data.ndim == 1
+            and off.flags.c_contiguous and data.flags.c_contiguous and len(off) >= 1
+            and off[0] >= 0 and (np.diff(off) >= 0).all() and off[-1] <= len(data)
+            and every_n >= 1 and offset >= 0
+            and header.startswith(_SOI) and _SOS in header):
+        raise ValueError("avi_mjpeg_segments: an array, the sample or the header is out of bounds")
+    n = len(off) - 1
+    span = int(off[-1] - off[0])
+    nkept = np.empty(n, dtype=np.int64)
+    # unstuffing only shrinks, and kept frames are disjoint chunks of at
+    # least 8 + len(header) bytes, so neither buffer can overflow
+    bodies = np.empty(max(span, 1), dtype=np.uint8)
+    seg_cap = span // (8 + len(header)) + 1
+    seg_off = np.empty(seg_cap + 1, dtype=np.int64)
+    cap, _meta, _off, _size, _meta_p, off_p, size_p = _AVI_SCRATCH or _avi_scratch(_AVI_FRAME_CAP)
+    rc = _call(
+        "avi_mjpeg_segments", data, off, n, every_n, offset, header, len(header),
+        off_p, size_p, cap, nkept, bodies, len(bodies), seg_off, seg_cap,
+    )
+    if rc is None:
+        return None
+    if rc < 0:
+        raise RuntimeError("avi_mjpeg_segments: output buffers sized too small")
+    fallbacks["avi_mjpeg_segments"] += int((nkept < 0).sum())
+    return nkept, bodies, seg_off[: rc + 1]
 
 
 def md5_word_grams(texts, offs: np.ndarray, n: int):

@@ -64,7 +64,11 @@ def flagship(
         # switches to distributed cover + join-based pruning
         return _flagship_distributed(images, admin, res)
     cover_full = spark.createDataFrame(cover_pdf, schema=COVER_SCHEMA)
-    cover_b = F.broadcast(cover_full)  # ONE broadcast, reused by both joins
+    # Both joins broadcast the cover, but not as one exchange: column
+    # pruning cuts the semi-join's side to a scan of cell_id alone, which
+    # cannot be reused for the PIP join's 7-column cover, so each job runs
+    # two broadcast jobs (two BroadcastExchanges, no ReusedExchange).
+    cover_b = F.broadcast(cover_full)
     # Iceberg-layout partition pruning: restrict the scan to the corpus
     # partitions (parent cells) that intersect any polygon — pruned
     # partitions' bytes are never read. The parents of the cover cells are

@@ -124,14 +124,20 @@ def explode_grib_ensemble(
         "perturbationNumber": (7, "perturbation"),
     }
     attr_alts = [[(key_map.get(k, (None, None))[1], v) for k, v in alt.items()] for alt in alts]
-    # the CSR (slot, value) probes grib_files_sum takes; slot -1 never
-    # matches — the Python semantics for unknown keys and non-integer
-    # values (int attribute == non-int is always False)
-    probes = [
-        [(key_map[k][0], int(v)) if k in key_map and isinstance(v, int) else (-1, 0)
-         for k, v in alt.items()]
-        for alt in alts
-    ]
+    # the CSR (slot, value) probes grib_files_sum takes.  A value equal
+    # to an int64 (52, 52.0, np.int32(52)) probes as that int, because the
+    # Python path's int attribute == 52.0 holds; slot -1 never matches —
+    # the Python semantics for unknown keys and for values no int equals
+    # (52.5, "52", nan)
+    def probe(k, v):
+        try:
+            iv = int(v)
+        except (TypeError, ValueError, OverflowError):
+            return -1, 0
+        ok = k in key_map and iv == v and -(2**63) <= iv < 2**63
+        return (key_map[k][0], iv) if ok else (-1, 0)
+
+    probes = [[probe(k, v) for k, v in alt.items()] for alt in alts]
     alt_off = np.cumsum([0] + [len(p) for p in probes], dtype=np.int64)
     probe_slot = np.array([sl for p in probes for sl, _ in p], dtype=np.int64)
     probe_val = np.array([v for p in probes for _, v in p], dtype=np.int64)

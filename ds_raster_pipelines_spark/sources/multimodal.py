@@ -547,38 +547,31 @@ def materialized_video_corpus(spark, sf_dir: str, codec: str = "dct") -> str:
 def video_frame_stats(media: DataFrame, every_n: int = 2) -> DataFrame:
     """Integer-exact per-sampled-frame pixel stats over REAL AVI decode:
     container walk (headers + idx1) → payload slice for every Nth frame
-    only → DCT frame decode → (i, frame_idx, n_px, sum_px). frame_idx is
+    only → frame decode → (i, frame_idx, n_px, sum_px). frame_idx is
     the ORIGINAL frame number (0, N, 2N, ...) so downstream consumers can
     line results up with the source timeline. ONE Python stage, flatMap
-    shape (one blob row → k frame rows)."""
+    shape (one blob row → k frame rows).
+
+    Each Arrow batch is one ``avi.frame_stats_columns`` call: the MJPG
+    blobs of the batch go through one native walk + unstuff pass, one
+    entropy scan and one sums-only IDCT, with no Python per blob or per
+    frame; a blob that does not fit that path (DCT0 frames, another JPEG
+    header, a malformed file) re-runs alone on the per-blob path."""
     from .. import avi
 
-    # mapInArrow, not mapInPandas (r8 s4): the pandas conversion built a
-    # Python bytes object per blob before the kernel even ran; the Arrow
-    # form hands the container walk zero-copy (offsets, data) views and
-    # only the sampled frames' payloads are ever copied.  Output columns
-    # are assembled as numpy arrays (repeat + cumcount), no per-frame
-    # Python appends.
+    # mapInArrow, not mapInPandas: the Arrow form hands the kernel the
+    # column's zero-copy (offsets, data) views, and the output columns
+    # come back as numpy arrays (repeat + cumcount).
     def kernel(batches):
         import pyarrow as pa
 
         for b in batches:
             ids = b.column("i").to_numpy(zero_copy_only=False)
-            stats = BlobBatch(b).whole(
-                lambda off, data: avi.frame_stats_arrow(off, data, every_n)
+            counts, npx, spx = BlobBatch(b).whole(
+                lambda off, data: avi.frame_stats_columns(off, data, every_n)
             )
-            counts = np.fromiter(
-                (len(s) for s in stats), dtype=np.int64, count=len(stats)
-            )
-            total = int(counts.sum())
             starts = np.repeat(np.cumsum(counts) - counts, counts)
-            frame_idx = (np.arange(total, dtype=np.int64) - starts) * every_n
-            npx = np.fromiter(
-                (x[0] for s in stats for x in s), dtype=np.int64, count=total
-            )
-            spx = np.fromiter(
-                (x[1] for s in stats for x in s), dtype=np.int64, count=total
-            )
+            frame_idx = (np.arange(len(npx), dtype=np.int64) - starts) * every_n
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array(np.repeat(ids, counts)),

@@ -8,6 +8,25 @@ import pytest
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
+@pytest.fixture
+def drop_toolchain(monkeypatch, tmp_path):
+    """Calling it loses the toolchain for the rest of the test: no ``cc``
+    on PATH, an empty kernel cache and a build not yet tried."""
+    import collections
+
+    from ds_raster_pipelines_spark import native
+
+    def drop():
+        monkeypatch.setenv("PATH", str(tmp_path))
+        monkeypatch.setattr(native, "_CACHE_ROOT", str(tmp_path / "kernels"))
+        monkeypatch.setattr(native, "_lib", None)
+        monkeypatch.setattr(native, "_lib_tried", False)
+        monkeypatch.setattr(native, "build_error", None)
+        monkeypatch.setattr(native, "fallbacks", collections.Counter())
+
+    return drop
+
+
 @pytest.fixture(scope="session")
 def spark():
     from ds_raster_pipelines_spark.session import get_spark

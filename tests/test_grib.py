@@ -522,3 +522,42 @@ def test_grib_files_sum_unknown_key_never_matches(spark):
         assert q.count() == 0
     finally:
         native._lib = saved
+
+
+class _Kernel:
+    """Stands in for a DataFrame: ``mapInArrow`` hands back the kernel
+    itself, so it runs on hand-built Arrow batches in this process."""
+
+    def select(self, *cols):
+        return self
+
+    def mapInArrow(self, kernel, schema):
+        return kernel
+
+
+@pytest.mark.parametrize("value", [52, 52.0, 52.5])
+def test_grib_filter_value_matches_like_python_eq(value, drop_toolchain):
+    """``parameterNumber`` 52, 52.0 and 52.5 keep the same rows with and
+    without a toolchain: a value an int equals probes as that int on the
+    native path, as the Python path's ``==`` has it."""
+    import pyarrow as pa
+
+    from ds_raster_pipelines_spark.sources.gribfiles import (
+        ENSEMBLE_PARAM,
+        build_ensemble_files,
+        explode_grib_ensemble,
+    )
+
+    ids = pa.record_batch({"i": pa.array([3, 4], pa.int64())})
+    files = list(build_ensemble_files(_Kernel())([ids]))
+    kernel = explode_grib_ensemble(_Kernel(), filter_keys={"parameterNumber": value})
+
+    def rows():
+        return sorted(pa.Table.from_batches(list(kernel(files))).to_pylist(),
+                      key=lambda r: tuple(r.values()))
+
+    with_lib = rows()
+    drop_toolchain()
+    assert rows() == with_lib
+    assert len(with_lib) == (0 if value == 52.5 else 2 * 2 * 5)
+    assert ENSEMBLE_PARAM == 52

@@ -9,7 +9,6 @@ trivially pass (both runs use Python) and the build test records why.
 
 from __future__ import annotations
 
-import collections
 import re
 import shutil
 
@@ -361,6 +360,161 @@ def test_frame_stats_arrow_equals_multi():
             native._lib = saved
 
 
+def _dri_frame(px: np.ndarray) -> bytes:
+    """A 64x64 baseline JFIF of ``px`` with a restart interval: DRI=32
+    blocks, the halves' scans joined by RST0 (each half restarts its DC
+    predictor, as an encoder with restart markers writes it)."""
+    import struct
+
+    def split(b: bytes) -> tuple[bytes, bytes]:
+        s = b.index(b"\xff\xda")
+        end = s + 2 + struct.unpack_from(">H", b, s + 2)[0]
+        return b[:end], b[end:-2]
+
+    head, _ = split(jpeg.encode_jpeg(px, 90))
+    sos = head.index(b"\xff\xda")
+    dri = b"\xff\xdd" + struct.pack(">HH", 4, 32)
+    return (head[:sos] + dri + head[sos:] + split(jpeg.encode_jpeg(px[:32], 90))[1]
+            + b"\xff\xd0" + split(jpeg.encode_jpeg(px[32:], 90))[1] + b"\xff\xd9")
+
+
+def _arrow_blobs(blobs):
+    import pyarrow as pa
+
+    from ds_raster_pipelines_spark.sources.images import _binary_offsets_data
+
+    return _binary_offsets_data(pa.array(blobs, type=pa.binary()))
+
+
+def _reference_stats(blob: bytes, every_n: int) -> list:
+    from ds_raster_pipelines_spark import avi
+
+    return [(px.size, int(px.sum(dtype=np.int64))) for px in avi.decode_avi_frames(blob, every_n)]
+
+
+def test_frame_stats_batch_isolates_odd_blobs(monkeypatch):
+    """Healthy MJPEG AVIs mixed with a DCT0 blob, a blob whose frames use a
+    restart interval, one with another DQT and a 60x60 one: the batch path
+    equals the per-blob reference in row order, exactly the four odd blobs
+    re-run alone, and the healthy blobs stay on the one native pass."""
+    from ds_raster_pipelines_spark import avi
+    from ds_raster_pipelines_spark.sources.multimodal import video_frames_for
+
+    healthy = [avi.encode_avi_mjpeg(video_frames_for(i)) for i in range(7)]
+    odd = {
+        1: avi.encode_avi_dct(video_frames_for(20)),
+        3: avi.encode_avi([_dri_frame(f) for f in video_frames_for(21)], 64, 64,
+                          handler=b"MJPG"),
+        4: avi.encode_avi_mjpeg(video_frames_for(22), quality=50),
+        6: avi.encode_avi_mjpeg([f[:60, :60].copy() for f in video_frames_for(23)]),
+    }
+    blobs = list(healthy)
+    for k in sorted(odd):
+        blobs.insert(k, odd[k])
+    off, data = _arrow_blobs(blobs)
+    rows = []
+    real = avi._per_blob_stats
+    monkeypatch.setattr(avi, "_per_blob_stats",
+                        lambda o, d, e, s, r, w: rows.extend(r) or real(o, d, e, s, r, w))
+    for every_n in (1, 2, 3):
+        rows.clear()
+        before = native.fallbacks["avi_mjpeg_segments"]
+        got = avi.frame_stats_arrow(off, data, every_n)
+        if native.get_lib() is not None:
+            assert native.fallbacks["avi_mjpeg_segments"] - before == len(odd)
+            assert rows == sorted(odd)
+        assert got == [_reference_stats(b, every_n) for b in blobs]
+        assert got == [avi.frame_stats_arrow(off[k : k + 2], data, every_n)[0]
+                       for k in range(len(blobs))]
+
+
+def _outcome(fn):
+    try:
+        return fn()
+    except Exception as e:  # noqa: BLE001 — comparing the exact surface
+        return f"{type(e).__name__}: {e}"
+
+
+@pytest.mark.parametrize("toolchain", [True, False])
+def test_frame_stats_batch_sweep_equals_per_blob_path(toolchain, drop_toolchain):
+    """One blob of a healthy three-blob batch cut at every prefix and with
+    each single byte flipped: the batch kernel under BlobBatch equals the
+    per-blob path over the same batch, or raises its ``bytes row k: ...``
+    error, with and without a toolchain."""
+    import pyarrow as pa
+
+    from ds_raster_pipelines_spark import avi
+    from ds_raster_pipelines_spark.sources.images import BlobBatch
+
+    rng = np.random.default_rng(5)
+    blobs = [
+        avi.encode_avi_mjpeg([rng.integers(0, 256, (16, 16), dtype=np.uint8)
+                              for _ in range(3)])
+        for _ in range(3)
+    ]
+    if not toolchain:
+        drop_toolchain()
+    victim = blobs[1]
+    variants = [victim[:cut] for cut in range(len(victim))]
+    variants += [victim[:p] + bytes([victim[p] ^ (0xFF if p % 2 else 0x01)]) + victim[p + 1 :]
+                 for p in range(len(victim))]
+    native_rows = 0
+    for v in variants:
+        b = pa.record_batch({"bytes": pa.array([blobs[0], v, blobs[2]], pa.binary())})
+        want = _outcome(lambda: BlobBatch(b).whole(
+            lambda o, d: avi._per_blob_stats(o, d, 2, 0, range(len(o) - 1), {})))
+        before = native.fallbacks["avi_mjpeg_segments"]
+        got = _outcome(lambda: BlobBatch(b).whole(lambda o, d: avi.frame_stats_arrow(o, d, 2)))
+        assert got == want, len(v)
+        native_rows += native.fallbacks["avi_mjpeg_segments"] == before
+    assert (native_rows > 0) == toolchain
+
+
+def test_avi_mjpeg_segments_rejects_bad_arrays():
+    """Offsets out of the data buffer, a float offset array, a bad sample
+    and a header that is not a JPEG prefix through SOS raise before C."""
+    from ds_raster_pipelines_spark import avi
+    from ds_raster_pipelines_spark.sources.multimodal import video_frames_for
+
+    blob = avi.encode_avi_mjpeg(video_frames_for(0))
+    off, data = _arrow_blobs([blob, blob])
+    frame = blob[avi.parse_avi(blob).frames[0][0]:]
+    header = frame[: jpeg._parse_header(frame)[8]]
+    good = native.avi_mjpeg_segments(off, data, 2, 0, header)
+    if good is not None:
+        assert good[0].tolist() == [len(video_frames_for(0)[::2])] * 2
+    for bad in [
+        (off + len(blob), data, 2, 0, header),
+        (off[::-1].copy(), data, 2, 0, header),
+        (off - 1, data, 2, 0, header),
+        (off.astype(float), data, 2, 0, header),
+        (off, data.astype(np.int16), 2, 0, header),
+        (off, data, 0, 0, header),
+        (off, data, 2, -1, header),
+        (off, data, 2, 0, header[: header.index(b"\xff\xda")]),
+        (off, data, 2, 0, header[:1]),
+        (off, data, 2, 0, header[1:]),
+    ]:
+        with pytest.raises(ValueError):
+            native.avi_mjpeg_segments(*bad)
+
+
+def test_jpeg_idct_blocks_sums_only_equals_pixel_sums():
+    """With no pixel buffer the IDCT returns the same per-frame sums as
+    with one; with neither it raises."""
+    rng = np.random.default_rng(9)
+    zz = rng.integers(-40, 40, size=(6 * 4, 64)).astype(np.int32)
+    q = jpeg._q_raster(np.full((8, 8), 3, dtype=np.int32))
+    px = np.empty((6, 16, 16), dtype=np.uint8)
+    with_px, only = np.zeros(6, np.int64), np.zeros(6, np.int64)
+    if not native.jpeg_idct_blocks(zz, q, jpeg._IDCT_BASIS, jpeg._ZZ2R, 2, 4, px, with_px):
+        pytest.skip("no toolchain: the numpy IDCT is the only path")
+    assert native.jpeg_idct_blocks(zz, q, jpeg._IDCT_BASIS, jpeg._ZZ2R, 2, 4, None, only)
+    assert with_px.tolist() == only.tolist() == px.reshape(6, -1).sum(axis=1).tolist()
+    with pytest.raises(ValueError):
+        native.jpeg_idct_blocks(zz, q, jpeg._IDCT_BASIS, jpeg._ZZ2R, 2, 4, None, None)
+
+
 def test_native_bilinear_stack_bitexact():
     """C bilinear_stack == numpy bilinear_resample bit-for-bit on random
     uint8 stacks across shapes/ratios (upsample, downsample, identity,
@@ -499,22 +653,6 @@ def _raw_tiles_batch(sizes, seed):
          pa.array(blobs, pa.binary()), pa.array(sizes, pa.int32()), pa.array([1] * k, pa.int32())],
         names=["i", "image_id", "caption", "fmt", "phash", "bytes", "w", "h"],
     )
-
-
-@pytest.fixture
-def drop_toolchain(monkeypatch, tmp_path):
-    """Calling it loses the toolchain for the rest of the test: no ``cc``
-    on PATH, an empty kernel cache and a build not yet tried."""
-
-    def drop():
-        monkeypatch.setenv("PATH", str(tmp_path))
-        monkeypatch.setattr(native, "_CACHE_ROOT", str(tmp_path / "kernels"))
-        monkeypatch.setattr(native, "_lib", None)
-        monkeypatch.setattr(native, "_lib_tried", False)
-        monkeypatch.setattr(native, "build_error", None)
-        monkeypatch.setattr(native, "fallbacks", collections.Counter())
-
-    return drop
 
 
 def _decode_both_paths(batch, drop_toolchain, caplog):
