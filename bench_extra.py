@@ -23,7 +23,6 @@ import os
 import time
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 ITERATIVE_QUERIES = {"dedup_components"}
 
@@ -41,7 +40,8 @@ def main() -> None:
     from ds_raster_pipelines_spark.session import get_spark
     import __spark_entry__ as entry_mod
 
-    spark = get_spark(f"bench_extra_{CPUS}", cpus=CPUS)
+    # cores: $SPARK_GRAFT_CPUS, else every core of the host (session.get_spark)
+    spark = get_spark("bench_extra")
     qs = entry_mod.queries()
     names = [n.strip() for n in args.queries.split(",") if n.strip()]
 

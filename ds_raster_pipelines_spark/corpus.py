@@ -731,17 +731,25 @@ def images_meta_sql(i_expr: str = "o_orderkey") -> dict[str, str]:
     }
 
 
-def centroid_cols_for_images(df: DataFrame, i_col: str = "i") -> DataFrame:
-    """Attach the tile-centroid lon/lat (JVM exprs, matches images_meta_sql;
-    one ``F.expr`` per column, DOUBLE literals so both stay DOUBLE)."""
+def centroid_sql_for_images(i_col: str = "i") -> tuple[str, str]:
+    """The tile-centroid (lon, lat) as Spark-SQL text over the id column
+    (matches images_meta_sql; DOUBLE literals so both stay DOUBLE)."""
     from .grid import dbl_sql as d
 
     i = f"`{i_col}`"
+    return (
+        f"({d(-180)} + {d(0.25)} * (({i} * 13) % 1440) + {d(0.125)})",
+        f"({d(90)} - {d(0.25)} * (({i} * 7) % 720) - {d(0.125)})",
+    )
+
+
+def centroid_cols_for_images(df: DataFrame, i_col: str = "i") -> DataFrame:
+    """Attach the tile-centroid lon/lat (:func:`centroid_sql_for_images`,
+    one ``F.expr`` per column)."""
+    lon, lat = centroid_sql_for_images(i_col)
     # chained withColumn: one JVM call each (withColumns converts its
     # name and Column lists element by element)
-    return df.withColumn(
-        "lon_c", F.expr(f"{d(-180)} + {d(0.25)} * (({i} * 13) % 1440) + {d(0.125)}")
-    ).withColumn("lat_c", F.expr(f"{d(90)} - {d(0.25)} * (({i} * 7) % 720) - {d(0.125)}"))
+    return df.withColumn("lon_c", F.expr(lon)).withColumn("lat_c", F.expr(lat))
 
 
 def footprint_cols_for_images(df: DataFrame, i_col: str = "i") -> DataFrame:

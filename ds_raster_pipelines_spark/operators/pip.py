@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import grid
-from ..corpus import parse_wkb_geometry
+from ..corpus import PCELL_RES, parse_wkb_geometry
 
 # ----------------------------------------------------------- cover stage ---
 
@@ -206,6 +206,21 @@ def cover_cells_driver(geoms: list, res: int) -> list[int]:
         cells, _ = _cover_geometry(parts, res)
         out.update(cells.tolist())
     return sorted(out)
+
+
+def prune_tiles(images: DataFrame, cells, lon_sql: str, lat_sql: str, res: int) -> DataFrame:
+    """The rows of ``images`` whose point (``lon_sql``, ``lat_sql``, Spark-
+    SQL text) lies in one of ``cells`` (cell ids at ``res``, computed on
+    the driver). The filter step of filter-refine, run before any pixel is
+    decoded: a table stored with a ``pcell`` column first loses every
+    partition that holds none of the cells' parents (those files are never
+    read), then one ``IN`` filter on the point's cell drops the rest. No
+    join, so no exchange and no extra Spark job."""
+    cells = np.unique(np.asarray(cells, dtype=np.int64))
+    if "pcell" in images.columns:
+        parents = np.unique(grid.parent_np(cells, PCELL_RES))
+        images = images.where(grid.cell_isin("pcell", parents)).drop("pcell")
+    return images.where(grid.cell_isin(grid.encode_sql(lon_sql, lat_sql, res), cells))
 
 
 COVER_SCHEMA = (

@@ -6,13 +6,15 @@ granularity (``all_touched``-style: every pixel whose *center* falls inside
 the geometry contributes, matching rasterio's default clip semantics).
 
 Plan shape (scale-first):
-  1. PRUNE before decode: tiles whose cell intersects no polygon are
-     dropped with a broadcast left-semi join on cell_id — the "clip when
+  1. PRUNE before decode: tiles whose centre cell is in no polygon's
+     ring-expanded cover are dropped by pip.prune_tiles, a filter on
+     driver-computed cells (no join, no broadcast) — the "clip when
      initially reading" move the reference wishes it did
      (era5_cogs.md:174-176).
   2. One Arrow kernel: decode tile → per-polygon reduction (count/sum or
      value histogram) over the pixel runs a scanline finds per centre row
-     (native.zonal_runs). Pixels never leave the kernel.
+     (native.zonal_runs). Pixels never leave the kernel; its rows carry
+     the adm_id itself.
   3. Integer sums → groupBy(adm_id) exact aggregation.
 
 Geometry dictionary ships via closure (admin tables are broadcast-small).
@@ -35,7 +37,7 @@ from pyspark.sql import functions as F
 
 from .. import grid, native
 from ..sources.images import TileBatch
-from .pip import _points_in_rings, cover_cells_driver, local_geometries
+from .pip import _points_in_rings, cover_cells_driver, local_geometries, prune_tiles
 
 
 def zonal_pixel_stats(
@@ -130,47 +132,30 @@ def _zonal_pixel_reduce(
     missing = {"lon0", "lat_top"} - set(images.columns)
     if missing:
         raise ValueError(f"images needs footprint columns {sorted(missing)}")
-    spark = images.sparkSession
     # the kernel ships the geometry dictionary in its closure: the guarded
     # reader refuses beyond the broadcast-small regime
     rows, geoms = local_geometries(admin)
-    adm_ids = [r["adm_id"] for r in rows]
+    adm_ids = np.array([r["adm_id"] for r in rows], dtype=object)
     half = span_deg / 2.0
 
-    # 1. prune tiles before decode (broadcast semi-join on covering cells)
-    def with_cell(df: DataFrame) -> DataFrame:
-        return df.withColumn(
-            "cell_id",
-            grid.encode_col(
-                f"lon0 + {grid.dbl_sql(half)}", f"lat_top - {grid.dbl_sql(half)}", res
-            ),
-        )
-
-    pts = with_cell(images)
-    # cover expanded by straddle rings: a tile can straddle a cell edge,
-    # putting pixels in a covered cell while its centroid cell is outside.
-    # The ring count scales with the tile span — a fixed one-ring disk
-    # silently drops contributing tiles once span_deg exceeds the cell
-    # width at ``res`` (5.625 deg at res 6).
-    # All driver-side (admin is broadcast-small): zero planning-time jobs.
+    # 1. prune tiles before decode, on the tile centre's cell. The cover is
+    # expanded by straddle rings: a tile can straddle a cell edge, putting
+    # pixels in a covered cell while its centre cell is outside. The ring
+    # count scales with the tile span — a fixed one-ring disk silently
+    # drops contributing tiles once span_deg exceeds the cell width at
+    # ``res`` (5.625 deg at res 6). All driver-side: zero Spark jobs.
     cell_width = 360.0 / grid.nx_ny(res)[0]
     n_rings = max(1, int(np.ceil(span_deg / cell_width)))
     expanded: set[int] = set()
     for c in cover_cells_driver(geoms, res):
         expanded.update(grid.grid_disk_np(c, n_rings))
-    # pandas→Arrow local relation (the pickled-list path costs ~7 s per
-    # evaluation on this box — see cover_local in pip.py)
-    import pandas as pd
-
-    cover = spark.createDataFrame(
-        pd.DataFrame({"cell_id": sorted(int(c) for c in expanded)}), schema="cell_id bigint"
+    pruned = prune_tiles(
+        images,
+        np.fromiter(expanded, np.int64),
+        f"`lon0` + {grid.dbl_sql(half)}",
+        f"`lat_top` - {grid.dbl_sql(half)}",
+        res,
     )
-    if "pcell" in images.columns:  # Iceberg-layout partition pruning
-        from ..corpus import PCELL_RES
-
-        parents = np.unique(grid.parent_np(np.fromiter(expanded, np.int64), PCELL_RES))
-        pts = with_cell(images.where(grid.cell_isin("pcell", parents)).drop("pcell"))
-    pruned = pts.join(F.broadcast(cover), "cell_id", "left_semi").drop("cell_id")
 
     # 2. decode + per-polygon reduction in one Arrow kernel. Tiles are
     # pre-checked against per-PART exterior bboxes: with the geometry bbox a
@@ -184,7 +169,7 @@ def _zonal_pixel_reduce(
         for p in parts
     ]
     n_geoms = len(geoms)
-    schema = "gi int, " + (
+    schema = "adm_id string, " + (
         "value int, n_px bigint" if mode == "hist" else "px_count bigint, px_sum bigint"
     )
     out_names = [c.split()[0] for c in schema.split(", ")]
@@ -223,7 +208,7 @@ def _zonal_pixel_reduce(
                 gi = np.flatnonzero(out[:, 0])
                 cols = [out[gi, 0], out[gi, 1]]
             yield pa.RecordBatch.from_arrays(
-                [pa.array(c) for c in [gi.astype(np.int32), *cols]], names=out_names
+                [pa.array(adm_ids[gi], pa.string()), *map(pa.array, cols)], names=out_names
             )
 
     # project to EXACTLY the columns the kernel reads before the Python
@@ -232,29 +217,15 @@ def _zonal_pixel_reduce(
     # through Arrow (and reads them off parquet).
     partial = TileBatch.select(pruned, "lon0", "lat_top").mapInArrow(kernel, schema=schema)
 
-    # 3. exact integer aggregation + name attach
-    import pandas as pd
-
-    idx_df = F.broadcast(
-        spark.createDataFrame(
-            pd.DataFrame({"gi": range(len(adm_ids)), "adm_id": adm_ids}),
-            schema="gi int, adm_id string",
-        )
-    )
+    # 3. exact integer aggregation
     if mode == "hist":
-        return (
-            partial.groupBy("gi", "value")
-            .agg(F.sum("n_px").alias("n_px"))
-            .join(idx_df, "gi")
-            # no global orderBy: a range sort adds a sampling pass + extra
-            # stage that zonal_majority/zonal_quantiles immediately
-            # re-shuffle away, and the correctness gate row-sorts anyway
-            .select("adm_id", "value", "n_px")
-        )
+        # no global orderBy: a range sort adds a sampling pass + extra
+        # stage that zonal_majority/zonal_quantiles immediately re-shuffle
+        # away, and the correctness gate row-sorts anyway
+        return partial.groupBy("adm_id", "value").agg(F.sum("n_px").alias("n_px"))
     return (
-        partial.groupBy("gi")
+        partial.groupBy("adm_id")
         .agg(F.sum("px_count").alias("px_count"), F.sum("px_sum").alias("px_sum"))
-        .join(idx_df, "gi")
         .select(
             "adm_id",
             "px_count",

@@ -134,26 +134,18 @@ def tfidf_top_terms(
 FP_P = (1 << 31) - 1  # keep term products ≤ ~2^41: no int64 overflow
 
 
-def fingerprint(
-    df: DataFrame, text_col: str = "text", out: str = "fp", hash: str = "md5"
-) -> Column:
+def fingerprint(df: DataFrame, text_col: str = "text", out: str = "fp") -> Column:
     """Order-sensitive document fingerprint: polynomial rolling hash over
     per-word hashes with positional weights, mod a Mersenne prime. Pure
     relational (posexplode + sum) — an order-insensitive-sum encoding of
     an order-sensitive quantity (each position gets a distinct weight).
 
-    ``hash="md5"`` (default) is oracle-replicable (functions/hashing.py);
-    ``xxhash64`` is cheaper per byte but has no DuckDB twin. Both are
-    stateless map-side hashes — plan shape is identical."""
-    words = df.select("doc_id", F.posexplode(F.split(F.col(text_col), " ")).alias("pos", "w"))
-    if hash == "md5":
-        from ..functions.hashing import md5_int
+    The per-word hash is md5_int, a stateless map-side hash the DuckDB
+    oracle replicates (functions/hashing.py)."""
+    from ..functions.hashing import md5_int
 
-        h = md5_int(F.col("w"))  # 28-bit: already < FP_P
-    elif hash == "xxhash64":
-        h = F.pmod(F.xxhash64("w"), F.lit(FP_P))
-    else:
-        raise ValueError(hash)
+    words = df.select("doc_id", F.posexplode(F.split(F.col(text_col), " ")).alias("pos", "w"))
+    h = md5_int(F.col("w"))  # 28-bit: already < FP_P
     term = (h * ((F.col("pos") + 17) % 997 + 1)) % FP_P
     return words.groupBy("doc_id").agg(F.sum(term).alias(out))
 

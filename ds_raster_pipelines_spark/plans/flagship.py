@@ -5,19 +5,20 @@ form of the reference's consumption notebook
 (``/root/reference/examples/era5_cogs.md`` §3.3 of SURVEY.md):
 
     images (Iceberg-layout corpus)
+      → cell prune (pip.prune_tiles)     # pcell partitions + centroid-cell IN
       → decode kernel (Arrow)            # scan + normalize
       → centroid → cell_id (JVM bit ops) # H3/S2 encode, no UDF
       → PIP join vs admin polygons       # broadcast filter + exact refine
       → groupBy(adm_id).agg(...)         # zonal stats
 
 Plan properties at scale: the only wide exchange is the final 32-key
-aggregate (partial agg map-side); polygon side is broadcast; decode is
-pipelined with the scan (no materialization of pixels).
+aggregate (partial agg map-side); the polygon cover is broadcast once, for
+the PIP join (the prune is a filter, not a join); decode is pipelined with
+the scan (no materialization of pixels).
 """
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import corpus
@@ -36,57 +37,40 @@ def flagship(
 ) -> DataFrame:
     """PRUNE → DECODE → JOIN → AGG.
 
-    The spatial prune (broadcast left-semi on covering cells) runs BEFORE
-    the decode kernel, on JVM-computed centroids: tiles outside every
-    polygon never cross the JVM→Python boundary. This is the distributed
-    form of the reference's 'do the clipping when initially reading'
-    (examples/era5_cogs.md:174-176) — at 1e12 images the byte shipment is
-    the dominant cost, and the prune cuts it to the covered fraction.
+    The spatial prune (pip.prune_tiles: the pcell partition prune, then
+    one ``IN`` filter of the centroid cell against the cover cells) runs
+    BEFORE the decode kernel, on JVM-computed centroids: tiles outside
+    every polygon never cross the JVM→Python boundary. This is the
+    distributed form of the reference's 'do the clipping when initially
+    reading' (examples/era5_cogs.md:174-176) — at 1e12 images the byte
+    shipment is the dominant cost, and the prune cuts it to the covered
+    fraction.
 
     Building the plan on the driver is a measured per-job cost, paid on
     every call. A Column builder makes one Python→JVM (py4j) round trip
     per literal and operator, plus one more when Python frees it: built
     that way, with its 427-cell prune list, this plan took ~3,050 round
     trips and 0.7 s to build (4-core VM, 20k-tile corpus). Every
-    expression here is one ``F.expr`` over SQL text and the prune list is
-    one ``IN (...)``: ~210 round trips and 0.4 s. tests/test_plan_build.py
-    pins a budget.
+    expression here is one ``F.expr`` over SQL text and each prune list
+    is one ``IN (...)``. tests/test_plan_build.py pins a budget.
     """
-    from .. import grid
-    from ..operators.pip import PolygonSetTooLarge, cover_local_pdf
-    from pyspark.sql import functions as F
+    from ..operators.pip import PolygonSetTooLarge, cover_local_pdf, prune_tiles
 
-    spark = images.sparkSession
     try:
         adm_rows, geoms, cover_pdf = cover_local_pdf(admin, res)
     except PolygonSetTooLarge:
         # huge polygon set: no driver collect is allowed — the whole plan
         # switches to distributed cover + join-based pruning
         return _flagship_distributed(images, admin, res)
-    cover_full = spark.createDataFrame(cover_pdf, schema=COVER_SCHEMA)
-    # Both joins broadcast the cover, but not as one exchange: column
-    # pruning cuts the semi-join's side to a scan of cell_id alone, which
-    # cannot be reused for the PIP join's 7-column cover, so each job runs
-    # two broadcast jobs (two BroadcastExchanges, no ReusedExchange).
-    cover_b = F.broadcast(cover_full)
-    # Iceberg-layout partition pruning: restrict the scan to the corpus
-    # partitions (parent cells) that intersect any polygon — pruned
-    # partitions' bytes are never read. The parents of the cover cells are
-    # exactly the partitions a tile surviving the fine semi-join below can
-    # sit in (driver-side, no Spark job).
-    if "pcell" in images.columns:
-        parents = np.unique(grid.parent_np(cover_pdf["cell_id"].to_numpy(), corpus.PCELL_RES))
-        images = images.where(grid.cell_isin("pcell", parents)).drop("pcell")
-    # fine prune (still before decode): semi-join on exact covering cells
-    pts = corpus.centroid_cols_for_images(images, "i").withColumn(
-        "cell_id", grid.encode_col("lon_c", "lat_c", res)
-    )
-    pruned = pts.join(cover_b, "cell_id", "left_semi").drop(
-        "cell_id", "lon_c", "lat_c"
+    # The cover is broadcast once, for the PIP join; the prune reads its
+    # cells on the driver, so it needs no exchange of its own.
+    cover = images.sparkSession.createDataFrame(cover_pdf, schema=COVER_SCHEMA)
+    pruned = prune_tiles(
+        images, cover_pdf["cell_id"].to_numpy(), *corpus.centroid_sql_for_images("i"), res
     )
     tiles = corpus.centroid_cols_for_images(decode_stats(pruned), "i")
     joined = pip_join(
-        tiles, admin, res=res, refine="auto", cover=cover_full, rings=geoms, adm_rows=adm_rows
+        tiles, admin, res=res, refine="auto", cover=cover, rings=geoms, adm_rows=adm_rows
     )
     # no global orderBy: sorting the 32-row zonal output costs a range-
     # sampling job per run; the driver compare is order-insensitive and

@@ -1131,7 +1131,7 @@ def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     stateless map-side hash, one shuffle, full DuckDB oracle."""
     from .operators.dedup import simhash
 
-    return simhash(_pq(spark, sf_dir, "documents"), hash="md5").orderBy("doc_id")
+    return simhash(_pq(spark, sf_dir, "documents")).orderBy("doc_id")
 
 
 _FP_ORACLE = f"""
@@ -1156,7 +1156,7 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     word hashes — full DuckDB oracle; zipped-unnest gives positions)."""
     from .operators.text import fingerprint
 
-    return fingerprint(_pq(spark, sf_dir, "documents"), hash="md5").orderBy("doc_id")
+    return fingerprint(_pq(spark, sf_dir, "documents")).orderBy("doc_id")
 
 
 _SAMPLE_ORACLE = f"""
@@ -2416,14 +2416,16 @@ WHERE lon_c BETWEEN 60 AND 75 AND lat_c BETWEEN 29 AND 38
 def bbox_prune_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P8: the SEAS5 dev bbox [60,29,75,38] as a cell-range prefilter +
     exact predicate (seas5_pipeline.py:32)."""
+    from .operators.pip import prune_tiles
+
     res = 6
     cells = grid.cover_rect_np(60.0, 29.0, 75.0, 38.0, res)
     pts = corpus.centroid_cols_for_images(
         _pq(spark, sf_dir, "orders").select(F.col("o_orderkey").alias("i"))
-    ).withColumn("cell_id", grid.encode_col("lon_c", "lat_c", res))
+    )
     exact = F.col("lon_c").between(60.0, 75.0) & F.col("lat_c").between(29.0, 38.0)
     return (
-        pts.where(grid.cell_isin("cell_id", cells))  # coarse prune
+        prune_tiles(pts, cells, "lon_c", "lat_c", res)  # coarse prune
         .where(exact)
         .agg(
             F.count(F.lit(1)).alias("n_in_bbox"),

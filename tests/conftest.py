@@ -27,6 +27,25 @@ def drop_toolchain(monkeypatch, tmp_path):
     return drop
 
 
+class _Kernel:
+    """Stands in for a DataFrame: ``mapInArrow`` hands back the kernel
+    itself, so it runs on hand-built Arrow batches in this process."""
+
+    def select(self, *cols):
+        return self
+
+    def mapInArrow(self, kernel, schema):
+        return kernel
+
+
+@pytest.fixture
+def kernel_frame():
+    """A DataFrame stand-in that turns an operator into its Arrow kernel:
+    the kernel then runs in the test process, where ``drop_toolchain``
+    reaches it (a Spark worker loads the native library again)."""
+    return _Kernel()
+
+
 @pytest.fixture(scope="session")
 def spark():
     from ds_raster_pipelines_spark.session import get_spark

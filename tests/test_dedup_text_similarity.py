@@ -69,9 +69,6 @@ def test_minhash_lsh_finds_near_dups(spark, docs):
     got = set(zip(out["doc_a"], out["doc_b"]))
     assert (0, 1) in got and (0, 2) in got and (1, 2) in got
     assert all(a < b for a, b in got)
-    # xxhash64 strategy: same exact-dup guarantees (identical sets collide)
-    out2 = minhash_dedup_pairs(docs, strategy="xxhash64", threshold=0.99, rows_per_band=1).toPandas()
-    assert (0, 1) in set(zip(out2["doc_a"], out2["doc_b"]))
 
 
 def _plan(df) -> str:
@@ -88,9 +85,9 @@ def test_md5_strategy_semantics(spark, docs):
     jac = out.set_index(["doc_a", "doc_b"])["jaccard"]
     assert jac[(0, 1)] == 1.0
     assert abs(jac[(0, 2)] - 5 / 6) < 1e-6  # candidate-scoped verify is exact
-    sh = simhash(docs, hash="md5").toPandas().set_index("doc_id")["simhash"]
+    sh = simhash(docs).toPandas().set_index("doc_id")["simhash"]
     assert sh[0] == sh[1] and 0 <= sh[0] < (1 << 16)
-    fp = fingerprint(docs, hash="md5").toPandas().set_index("doc_id")["fp"]
+    fp = fingerprint(docs).toPandas().set_index("doc_id")["fp"]
     assert fp[0] == fp[1] and fp[0] != fp[2]  # order/content sensitive
 
 

@@ -111,14 +111,47 @@ def test_char_ngrams_multiset_keeps_repeats(docs):
     assert counts["abc"] == 3 and counts["bca"] == 2 and counts["cab"] == 2
 
 
+def _kernel_legs(kernel, native_name, drop_toolchain):
+    """Run an Arrow text kernel in this process and name the path each
+    batch took: the hashlib twin on a batch holding the null text (any
+    null sends the whole batch there), the native call on a null-free
+    batch when the library loads, and the hashlib twin on the null-free
+    batch once the toolchain is gone. On a host without a toolchain only
+    the two twin legs run. Returns the row sets, each sorted."""
+    import pyarrow as pa
+
+    from ds_raster_pipelines_spark import native
+
+    def batch(with_null):
+        rows = [(i, t) for i, t in enumerate(TEXTS) if with_null or t is not None]
+        return pa.record_batch({
+            "doc_id": pa.array([i for i, _ in rows], pa.int64()),
+            "text": pa.array([t for _, t in rows], pa.string()),
+        })
+
+    def run(b):
+        return sorted(tuple(r.values()) for r in pa.Table.from_batches(list(kernel([b]))).to_pylist())
+
+    before = native.fallbacks[native_name]
+    legs = [run(batch(with_null=True))]
+    if native.get_lib() is not None:
+        legs.append(run(batch(with_null=False)))
+        assert native.fallbacks[native_name] == before, native.fallbacks
+        drop_toolchain()  # also empties native.fallbacks
+        before = 0
+    legs.append(run(batch(with_null=False)))
+    assert native.get_lib() is None
+    assert native.fallbacks[native_name] == before + 1, native.fallbacks
+    return legs
+
+
 @pytest.mark.parametrize("n", [2, 8])
-def test_positional_gram_hashes_matches_expression(docs, n):
+def test_positional_gram_hashes_matches_expression(docs, n, kernel_frame, drop_toolchain):
     """The C/Arrow gram-hash kernel (_positional_gram_hashes) must equal
     the Column-expression form positional_word_ngrams + md5_int on every
     adversarial text (empties, doubled/leading/trailing spaces, repeats,
-    multi-byte UTF-8, nulls) — and again with the native library forced
-    off (hashlib twin)."""
-    from ds_raster_pipelines_spark import native
+    multi-byte UTF-8, nulls) — on the native path and on its hashlib twin,
+    both for a batch with a null text and without the toolchain."""
     from ds_raster_pipelines_spark.functions.hashing import md5_int
     from ds_raster_pipelines_spark.operators.dedup import (
         _positional_gram_hashes,
@@ -130,20 +163,16 @@ def test_positional_gram_hashes_matches_expression(docs, n):
             "doc_id", "pos", md5_int(F.col("gram")).alias("h")
         )
     )
-    assert _sorted(_positional_gram_hashes(docs, n)) == expected
-    saved = native._lib
-    native._lib = None
-    try:
-        assert _sorted(_positional_gram_hashes(docs, n)) == expected
-    finally:
-        native._lib = saved
+    kernel = _positional_gram_hashes(kernel_frame, n)
+    for rows in _kernel_legs(kernel, "md5_word_grams", drop_toolchain):
+        assert rows == expected
 
 
-def test_minhash_kernel_matches_expression(docs):
+def test_minhash_kernel_matches_expression(docs, kernel_frame, drop_toolchain):
     """The C/Arrow MinHash signature kernel == the word-explode +
-    md5_int + grouped-min expression chain on adversarial texts, and
-    again with the native library forced off (hashlib twin)."""
-    from ds_raster_pipelines_spark import native
+    md5_int + grouped-min expression chain on adversarial texts — on the
+    native path and on its hashlib twin, both for a batch with a null text
+    and without the toolchain."""
     from ds_raster_pipelines_spark.operators.dedup import (
         _signatures_from_words,
         _signatures_kernel_md5,
@@ -153,13 +182,9 @@ def test_minhash_kernel_matches_expression(docs):
     expected = _sorted(
         _signatures_from_words(tokenize(docs, distinct=True), "md5")
     )
-    assert _sorted(_signatures_kernel_md5(docs)) == expected
-    saved = native._lib
-    native._lib = None
-    try:
-        assert _sorted(_signatures_kernel_md5(docs)) == expected
-    finally:
-        native._lib = saved
+    kernel = _signatures_kernel_md5(kernel_frame)
+    for rows in _kernel_legs(kernel, "minhash_doc_sigs", drop_toolchain):
+        assert rows == expected
 
 
 def test_lm_score_kernel_matches_join(docs):

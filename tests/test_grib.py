@@ -461,82 +461,70 @@ def test_native_grib_scan_parity_and_error_fallback():
     assert e_native == e_python is not None or e_native == e_python
 
 
-def test_grib_files_sum_matches_python_fallback(spark):
+def _ensemble_rows(frame, ids, filter_keys, packing=0, with_bitmap=False):
+    """The rows explode_grib_ensemble yields for hand-built files, run in
+    this process on Arrow batches (``frame`` is the DataFrame stand-in)."""
+    import pyarrow as pa
+
+    from ds_raster_pipelines_spark.sources.gribfiles import (
+        build_ensemble_files,
+        explode_grib_ensemble,
+    )
+
+    batch = pa.record_batch({"i": pa.array(ids, pa.int64())})
+    files = list(build_ensemble_files(frame, packing=packing, with_bitmap=with_bitmap)([batch]))
+    kernel = explode_grib_ensemble(frame, filter_keys=filter_keys)
+    return sorted(tuple(r.values()) for r in pa.Table.from_batches(list(kernel(files))).to_pylist())
+
+
+def test_grib_files_sum_matches_python_fallback(kernel_frame, drop_toolchain):
     """The whole-batch native walk (grib_files_sum) must produce the same
     relational rows as the pure-Python scan/filter/decode path — same
     filter semantics (decoys dropped), same sums/counts with and without
-    bitmap, across simple and complex+spatial-diff packings."""
-    import pandas as pd
-
+    bitmap, across simple and complex+spatial-diff packings. Each leg
+    must take the path it names: no file falls back on the native leg,
+    and the native call is refused without the toolchain."""
     from ds_raster_pipelines_spark import native
-    from ds_raster_pipelines_spark.sources.gribfiles import (
-        ENSEMBLE_PARAM,
-        build_ensemble_files,
-        explode_grib_ensemble,
-    )
+    from ds_raster_pipelines_spark.sources.gribfiles import ENSEMBLE_PARAM
 
     if native.get_lib() is None:
         pytest.skip("no native lib")
-    ids = spark.createDataFrame(pd.DataFrame({"i": [5, 10, 11, 20]}))
-    for packing, with_bitmap in ((0, False), (3, True), (2, False)):
-        files = build_ensemble_files(ids, packing=packing, with_bitmap=with_bitmap)
-        q = explode_grib_ensemble(
-            files,
-            filter_keys={
-                "parameterNumber": ENSEMBLE_PARAM,
-                "productDefinitionTemplateNumber": 1,
-            },
-        )
-        got = sorted(tuple(r) for r in q.collect())
-        saved = native._lib
-        native._lib = None
-        try:
-            want = sorted(tuple(r) for r in q.collect())
-        finally:
-            native._lib = saved
-        assert got == want, f"packing={packing} bitmap={with_bitmap}"
+    keys = {"parameterNumber": ENSEMBLE_PARAM, "productDefinitionTemplateNumber": 1}
+    cases = ((0, False), (3, True), (2, False))
+
+    def run():
+        return [_ensemble_rows(kernel_frame, [5, 10, 11, 20], keys, p, bm) for p, bm in cases]
+
+    before = native.fallbacks["grib_files_sum"]
+    got = run()
+    assert native.fallbacks["grib_files_sum"] == before, native.fallbacks
+    drop_toolchain()
+    want = run()
+    assert native.get_lib() is None
+    assert native.fallbacks["grib_files_sum"] == len(cases), native.fallbacks
+    for (packing, bitmap), g, w in zip(cases, got, want):
+        assert g == w, f"packing={packing} bitmap={bitmap}"
         # decoys must have been dropped on both paths
-        assert len(got) == 4 * 2 * 5
+        assert len(g) == 4 * 2 * 5
 
 
-def test_grib_files_sum_unknown_key_never_matches(spark):
+def test_grib_files_sum_unknown_key_never_matches(kernel_frame, drop_toolchain):
     """An unknown cfgrib key in the filter makes the alt never match on
     BOTH paths (the None-sentinel semantics)."""
-    import pandas as pd
-
     from ds_raster_pipelines_spark import native
-    from ds_raster_pipelines_spark.sources.gribfiles import (
-        build_ensemble_files,
-        explode_grib_ensemble,
-    )
 
     if native.get_lib() is None:
         pytest.skip("no native lib")
-    ids = spark.createDataFrame(pd.DataFrame({"i": [3]}))
-    files = build_ensemble_files(ids)
-    q = explode_grib_ensemble(files, filter_keys={"noSuchKey": 1})
-    assert q.count() == 0
-    saved = native._lib
-    native._lib = None
-    try:
-        assert q.count() == 0
-    finally:
-        native._lib = saved
-
-
-class _Kernel:
-    """Stands in for a DataFrame: ``mapInArrow`` hands back the kernel
-    itself, so it runs on hand-built Arrow batches in this process."""
-
-    def select(self, *cols):
-        return self
-
-    def mapInArrow(self, kernel, schema):
-        return kernel
+    before = native.fallbacks["grib_files_sum"]
+    assert _ensemble_rows(kernel_frame, [3], {"noSuchKey": 1}) == []
+    assert native.fallbacks["grib_files_sum"] == before, native.fallbacks
+    drop_toolchain()
+    assert _ensemble_rows(kernel_frame, [3], {"noSuchKey": 1}) == []
+    assert native.fallbacks["grib_files_sum"] == 1, native.fallbacks
 
 
 @pytest.mark.parametrize("value", [52, 52.0, 52.5])
-def test_grib_filter_value_matches_like_python_eq(value, drop_toolchain):
+def test_grib_filter_value_matches_like_python_eq(value, kernel_frame, drop_toolchain):
     """``parameterNumber`` 52, 52.0 and 52.5 keep the same rows with and
     without a toolchain: a value an int equals probes as that int on the
     native path, as the Python path's ``==`` has it."""
@@ -549,8 +537,8 @@ def test_grib_filter_value_matches_like_python_eq(value, drop_toolchain):
     )
 
     ids = pa.record_batch({"i": pa.array([3, 4], pa.int64())})
-    files = list(build_ensemble_files(_Kernel())([ids]))
-    kernel = explode_grib_ensemble(_Kernel(), filter_keys={"parameterNumber": value})
+    files = list(build_ensemble_files(kernel_frame)([ids]))
+    kernel = explode_grib_ensemble(kernel_frame, filter_keys={"parameterNumber": value})
 
     def rows():
         return sorted(pa.Table.from_batches(list(kernel(files))).to_pylist(),

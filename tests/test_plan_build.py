@@ -1,5 +1,6 @@
 """The flagship plan as the driver builds it: JVM round trips per plan, the
-partition-prune list, the pushed scan filter, and results on a stored
+partition-prune list, the pushed scan filter, the broadcasts left in the
+final plans of the flagship and the zonal kernel, and results on a stored
 pcell corpus against closed forms of the tile ids."""
 
 from __future__ import annotations
@@ -17,6 +18,7 @@ from ds_raster_pipelines_spark.operators.pip import (
     cover_cells_driver,
     cover_local_pdf,
 )
+from ds_raster_pipelines_spark.operators.raster import zonal_pixel_stats, zonal_value_histogram
 from ds_raster_pipelines_spark.plans.flagship import FLAGSHIP_RES, flagship
 
 N_TILES = 6000
@@ -43,9 +45,11 @@ def _drain_py4j_deletes(spark) -> None:
 
 
 def test_flagship_plan_build_py4j_budget(spark, tiles, monkeypatch):
-    """Building the flagship plan takes a few hundred Python→JVM round
-    trips. A builder that makes one JVM object per literal (the prune
-    list's Column.isin made ~1,800 on its own) blows the budget."""
+    """Building the flagship plan takes under two hundred Python→JVM round
+    trips (180 with the cell-filter prune; 205 when the prune was a
+    broadcast semi-join). A builder that makes one JVM object per literal
+    (the prune list's Column.isin made ~1,800 on its own) blows the
+    budget."""
     import py4j.clientserver as cs
 
     images = spark.read.parquet(tiles)
@@ -61,7 +65,34 @@ def test_flagship_plan_build_py4j_budget(spark, tiles, monkeypatch):
     monkeypatch.setattr(cs.ClientServerConnection, "send_command", counting)
     flagship(images, admin)
     monkeypatch.undo()
-    assert 0 < len(calls) < 300, len(calls)
+    assert 0 < len(calls) < 200, len(calls)
+
+
+def _final_plan(df) -> str:
+    """The final adaptive plan of a collected DataFrame. The executed
+    plan's text prints the final plan, then the initial one."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan, plan
+    return plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+
+
+def test_flagship_final_plan_broadcasts_the_cover_once(spark, tiles):
+    """The cell prune is a filter: the only broadcast left is the PIP
+    join's cover, and no semi-join runs."""
+    plan = _final_plan(flagship(spark.read.parquet(tiles), corpus.admin_df(spark)))
+    assert plan.count("BroadcastExchange") == 1, plan
+    assert "LeftSemi" not in plan, plan
+
+
+@pytest.mark.parametrize("reduce", [zonal_pixel_stats, zonal_value_histogram])
+def test_zonal_final_plan_has_no_broadcast(spark, tiles, reduce):
+    """The zonal kernel prunes by a filter and emits ``adm_id`` itself, so
+    its plan needs no broadcast and no join at all."""
+    images = corpus.footprint_cols_for_images(spark.read.parquet(tiles))
+    plan = _final_plan(reduce(images, corpus.admin_df(spark), res=6))
+    assert "BroadcastExchange" not in plan, plan
+    assert "Join" not in plan, plan
 
 
 @pytest.mark.parametrize("admin_df", [corpus.admin_df, corpus.admin_holed_df])
