@@ -26,7 +26,8 @@ Every tile kernel here (zonal, histogram, coarsen, vectorize, resample,
 reproject) is one ``mapInArrow`` stage that reads its batch through
 ``sources.images.TileBatch`` and keeps only its own reduction: decode,
 payload-size and decoded-shape checks, COG overview reads and the F3
-orientation flips all live in the reader.
+orientation flips all live in the reader. Coarsen, vectorize, resample and
+reproject reduce (n, h, w) stacks from ``TileBatch.stacks``.
 """
 
 from __future__ import annotations
@@ -193,6 +194,7 @@ def _zonal_pixel_reduce(
             pair_k, pair_g = pair // n_geoms, pair % n_geoms
             # 2) decode each hit tile once, flips applied, into one buffer
             hit_k = np.unique(pair_k)
+            # per tile on purpose: only hit tiles, ragged, at their offsets
             tiles = [np.zeros(0, dtype=np.uint8)] + [tb.pixels(k).ravel() for k in hit_k]
             px_off = np.zeros(tb.n, dtype=np.int64)
             px_off[hit_k] = np.cumsum([t.size for t in tiles[:-1]])
@@ -217,11 +219,10 @@ def _zonal_pixel_reduce(
     # through Arrow (and reads them off parquet).
     partial = TileBatch.select(pruned, "lon0", "lat_top").mapInArrow(kernel, schema=schema)
 
-    # 3. exact integer aggregation
+    # 3. exact integer aggregation. No global orderBy: a range sort adds a
+    # sampling job and an exchange for one row per zone, and consumers
+    # re-shuffle (zonal_majority/_quantiles) or row-sort (the oracle).
     if mode == "hist":
-        # no global orderBy: a range sort adds a sampling pass + extra
-        # stage that zonal_majority/zonal_quantiles immediately re-shuffle
-        # away, and the correctness gate row-sorts anyway
         return partial.groupBy("adm_id", "value").agg(F.sum("n_px").alias("n_px"))
     return (
         partial.groupBy("adm_id")
@@ -232,7 +233,6 @@ def _zonal_pixel_reduce(
             "px_sum",
             (F.col("px_sum").cast("double") / F.col("px_count")).alias("px_mean"),
         )
-        .orderBy("adm_id")
     )
 
 
@@ -324,38 +324,23 @@ def coarsen_histogram(images: DataFrame, factor: int = 2, quant: int = 1000) -> 
         import pyarrow as pa
 
         for b in batches:
-            tb = TileBatch(b)
             # per-BATCH tally: r8 measured the old per-tile np.unique
             # (a sort per entropy-coded tile) at >half the kernel — all
             # coarse values accumulate into one array and a single
             # unique/bincount-style pass emits the partial counts
-            parts: list[np.ndarray] = []
             scale = quant / (factor * factor)
-            # block-reduce same-shape tiles as small stacked chunks (chunk
-            # 8 per the measured cache ceiling, same as the IDCT/resample
-            # kernels; stacking a whole shape group at once measured ~10 %
-            # slower) and defer ALL counting to the batch tally (r8)
-            groups: dict[tuple[int, int], list[int]] = {}
-            for k in range(tb.n):
-                groups.setdefault((int(tb.h[k]), int(tb.w[k])), []).append(k)
-            for idxs in groups.values():
-                for c0 in range(0, len(idxs), 8):
-                    stack = np.stack([tb.pixels(k) for k in idxs[c0 : c0 + 8]])
-                    blocks = _block_sum(stack, factor)
-                    parts.append(np.rint(blocks * scale).astype(np.int64).ravel())
-            if parts:
-                # values are bounded (block means of uint8 pixels times
-                # quant: 0..255*quant), so a bincount + nonzero replaces
-                # the sort-based np.unique (r8 measured 83 -> 7 ms per
-                # 2M-value batch); identical (value, count) pairs.
-                allv = np.concatenate(parts)
-                cnt_full = np.bincount(allv, minlength=255 * quant + 1)
-                vals = np.nonzero(cnt_full)[0].astype(np.int64)
-                cnts = cnt_full[vals]
-            else:
-                vals = cnts = np.array([], dtype=np.int64)
+            parts = [np.zeros(0, dtype=np.int64)] + [
+                np.rint(_block_sum(stack, factor) * scale).astype(np.int64).ravel()
+                for _, stack in TileBatch(b).stacks()
+            ]
+            # values are bounded (block means of uint8 pixels times quant:
+            # 0..255*quant), so a bincount + nonzero replaces the sort-based
+            # np.unique (r8 measured 83 -> 7 ms per 2M-value batch);
+            # identical (value, count) pairs.
+            cnt_full = np.bincount(np.concatenate(parts), minlength=255 * quant + 1)
+            vals = np.nonzero(cnt_full)[0].astype(np.int64)
             yield pa.RecordBatch.from_arrays(
-                [pa.array(vals, pa.int64()), pa.array(cnts.astype(np.int64), pa.int64())],
+                [pa.array(vals, pa.int64()), pa.array(cnt_full[vals], pa.int64())],
                 names=["value_milli", "n_px"],
             )
 
@@ -381,34 +366,29 @@ def vectorize_mask(images: DataFrame, threshold: int, span_deg: float = 0.25) ->
 
         for b in batches:
             tb = TileBatch(b)
-            ii = b.column("i").to_numpy(zero_copy_only=False)
-            lon0s = b.column("lon0").to_numpy(zero_copy_only=False)
-            lat_tops = b.column("lat_top").to_numpy(zero_copy_only=False)
-            o_i, o_minlon, o_minlat, o_maxlon, o_maxlat, o_npx = [], [], [], [], [], []
-            for k in range(tb.n):
-                i = int(ii[k])
-                w, h = int(tb.w[k]), int(tb.h[k])
-                px = tb.pixels(k)
-                mask = px >= threshold
-                if not mask.any():
+            ii = b.column("i").to_numpy(zero_copy_only=False).astype(np.int64)
+            lon0 = b.column("lon0").to_numpy(zero_copy_only=False).astype(np.float64)
+            lat_top = b.column("lat_top").to_numpy(zero_copy_only=False).astype(np.float64)
+            # per tile: first masked row/column, one past the last, count
+            y0, y1, x0, x1, npx = (np.zeros(tb.n, dtype=np.int64) for _ in range(5))
+            for rows, stack in tb.stacks():
+                if not stack.size:  # zero-pixel tiles mask nothing
                     continue
-                ys, xs = np.nonzero(mask)
-                lon0 = float(lon0s[k])
-                lat_top = float(lat_tops[k])
-                o_i.append(i)
-                o_minlon.append(lon0 + xs.min() * span_deg / w)
-                o_maxlon.append(lon0 + (xs.max() + 1) * span_deg / w)
-                o_maxlat.append(lat_top - ys.min() * span_deg / h)
-                o_minlat.append(lat_top - (ys.max() + 1) * span_deg / h)
-                o_npx.append(int(mask.sum()))
+                mask = stack >= threshold
+                for lo, hi, hit in ((y0, y1, mask.any(axis=2)), (x0, x1, mask.any(axis=1))):
+                    lo[rows] = hit.argmax(axis=1)
+                    hi[rows] = hit.shape[1] - hit[:, ::-1].argmax(axis=1)
+                npx[rows] = mask.sum(axis=(1, 2))
+            k = np.flatnonzero(npx)
+            w, h = tb.w[k], tb.h[k]
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(o_i, pa.int64()),
-                    pa.array(o_minlon, pa.float64()),
-                    pa.array(o_minlat, pa.float64()),
-                    pa.array(o_maxlon, pa.float64()),
-                    pa.array(o_maxlat, pa.float64()),
-                    pa.array(o_npx, pa.int64()),
+                    pa.array(ii[k]),
+                    pa.array(lon0[k] + x0[k] * span_deg / w),
+                    pa.array(lat_top[k] - y1[k] * span_deg / h),
+                    pa.array(lon0[k] + x1[k] * span_deg / w),
+                    pa.array(lat_top[k] - y0[k] * span_deg / h),
+                    pa.array(npx[k]),
                 ],
                 names=["i", "min_lon", "min_lat", "max_lon", "max_lat", "n_px_masked"],
             )
@@ -439,12 +419,7 @@ def bilinear_resample(px: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
         # axis is -2 (rows) or -1 (cols): arbitrary leading batch dims are
         # supported — the math is pure elementwise lerp + gather, so a
         # stacked call is bit-identical to per-tile calls (pytest-pinned)
-        n_in = arr.shape[axis]
-        u = (np.arange(n_out) + 0.5) * (n_in / n_out) - 0.5
-        u = np.clip(u, 0.0, n_in - 1.0)
-        lo = np.floor(u).astype(np.int64)
-        hi = np.minimum(lo + 1, n_in - 1)
-        frac = u - lo
+        lo, hi, frac = _interp_tables(arr.shape[axis], n_out)
         lo_v = np.take(arr, lo, axis=axis)
         hi_v = np.take(arr, hi, axis=axis)
         if axis == -2:
@@ -455,9 +430,9 @@ def bilinear_resample(px: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
 
 
 def _interp_tables(n_in: int, n_out: int):
-    """(lo, hi, frac) gather tables — the EXACT numpy expressions from
-    bilinear_resample.axis_interp, shared with the native kernel so the
-    C lerp consumes bit-identical inputs."""
+    """(lo, hi, frac) gather tables of one axis (see bilinear_resample),
+    shared by bilinear_resample and the native kernel so the C lerp
+    consumes bit-identical inputs."""
     u = (np.arange(n_out) + 0.5) * (n_in / n_out) - 0.5
     u = np.clip(u, 0.0, n_in - 1.0)
     lo = np.floor(u).astype(np.int64)
@@ -482,40 +457,20 @@ def resample_bilinear_stats(
         for b in batches:
             tb = TileBatch(b)
             n = tb.n
-            pxs = [tb.pixels(k) for k in range(n)]
-            # group same-shape tiles and run ONE stacked separable interp
-            # per group: the lerp is elementwise, so stacked results are
-            # bit-identical to per-tile calls while the ~20 numpy ops per
-            # tile amortize across the batch.  Row means reduce the same
-            # contiguous 2304 floats in the same pairwise order as
-            # rs.mean() did per tile.
+            # one separable interp per stack, in C (r8 s4: 37.6 -> ~7
+            # us/tile at sf1.0) or numpy; both are elementwise over the same
+            # tables, so bit-identical to per-tile calls (pytest-pinned).
+            # Row means reduce each tile's floats in the same pairwise
+            # order as rs.mean() per tile.
             means = np.empty(n, dtype=np.float64)
-            groups: dict[tuple[int, int], list[int]] = {}
-            for k, px in enumerate(pxs):
-                groups.setdefault(px.shape, []).append(k)
-            for shape, idxs in groups.items():
-                # native path (r8 s4): C replays the gather/lerp passes
-                # elementwise with tables computed by the SAME numpy
-                # expressions (bit-identical, pytest-pinned); the mean
-                # stays in numpy so its pairwise order is untouched.
-                # Measured 37.6 -> ~7 us/tile on the sf1.0 corpus.
-                th, tw = shape
-                tabs = (
-                    *_interp_tables(th, out_h),
-                    *_interp_tables(tw, out_w),
-                )
+            for rows, stack in tb.stacks():
+                _, th, tw = stack.shape
+                tabs = (*_interp_tables(th, out_h), *_interp_tables(tw, out_w))
+                rs = np.empty((len(rows), out_h, out_w), dtype=np.float64)
                 tmp = np.empty(out_h * tw, dtype=np.float64)
-                for c0 in range(0, len(idxs), 128):
-                    sub = idxs[c0 : c0 + 128]
-                    stack = np.ascontiguousarray(
-                        np.stack([pxs[k] for k in sub])
-                    )
-                    rs = np.empty((len(sub), out_h, out_w), dtype=np.float64)
-                    if stack.dtype != np.uint8 or not native.bilinear_stack(
-                        stack, tabs, rs, tmp
-                    ):
-                        rs = bilinear_resample(stack, out_h, out_w)
-                    means[sub] = rs.reshape(len(sub), -1).mean(axis=1)
+                if not native.bilinear_stack(stack, tabs, rs, tmp):
+                    rs = bilinear_resample(stack, out_h, out_w)
+                means[rows] = rs.reshape(len(rows), -1).mean(axis=1)
             yield pa.RecordBatch.from_arrays(
                 [
                     b.column("i"),
@@ -584,13 +539,10 @@ def warp_rows(px: np.ndarray, u: np.ndarray, subpix: int = 256) -> np.ndarray:
     return a[lo] + (a[hi] - a[lo]) * frac
 
 
-def reproject_webmercator(
-    px: np.ndarray, lat_top: float, span_deg: float = 0.25, out_h: int | None = None
-) -> np.ndarray:
+def reproject_webmercator(px: np.ndarray, lat_top: float, span_deg: float = 0.25) -> np.ndarray:
     """Equirectangular (EPSG:4326) tile → Web-Mercator (EPSG:3857) grid
     over the same footprint. Separable closed form: row warp only."""
-    out_h = out_h or px.shape[0]
-    return warp_rows(px, webmercator_row_map(lat_top, span_deg, px.shape[0], out_h))
+    return warp_rows(px, webmercator_row_map(lat_top, span_deg, px.shape[0], px.shape[0]))
 
 
 def webmercator_inverse_row_map(
@@ -611,7 +563,7 @@ def webmercator_inverse_row_map(
     return np.clip(u, 0.0, src_h - 1.0)
 
 
-def reproject_webmercator_sum256(images: DataFrame, quant_bits: int = 8) -> DataFrame:
+def reproject_webmercator_sum256(images: DataFrame) -> DataFrame:
     """Graded reprojection surface: decode each tile, TRANSPOSE it (the
     corpus gradient runs along x; the transpose makes pixel values vary
     with the warped axis, so a row-map bug becomes a value divergence —
@@ -620,20 +572,36 @@ def reproject_webmercator_sum256(images: DataFrame, quant_bits: int = 8) -> Data
     pixel sum in exact 1/256 fixed-point units as a bigint. With 1/256
     subpixel snapping every warped value is dyadic, so the ×256 sum is an
     exact integer — bit-reproducible across engines and partitionings.
-    ONE Arrow stage (decode + transpose + warp + sum fused)."""
+    ONE Arrow stage (decode + transpose + warp + sum fused). The warp runs
+    in integers on the tiles of a stack that share a latitude band, one
+    row map per band and batch: with uq = rint(u·256), lo = uq >> 8 and
+    F = uq & 255, output ×256 is (256−F)·a[lo] + F·a[hi] ≤ 255·256, exactly
+    ``warp_rows`` ×256, in uint16. ``reproject_webmercator`` per tile is
+    its test twin."""
 
     def kernel(batches):
         import pyarrow as pa
 
         for b in batches:
             tb = TileBatch(b)
-            lat_top = b.column("lat_top").to_numpy(zero_copy_only=False)
-            out_s = [
-                int(np.rint(reproject_webmercator(tb.pixels(k).T, float(lat_top[k])).sum() * 256.0))
-                for k in range(tb.n)
-            ]
+            lat_top = b.column("lat_top").to_numpy(zero_copy_only=False).astype(np.float64)
+            out_s = np.zeros(tb.n, dtype=np.int64)
+            maps = {}  # (lat_top, width) -> (lo, hi, F): one row map per band
+            for rows, stack in tb.stacks():
+                # rows of the transpose are columns: warp along x in place
+                n_x = stack.shape[2]
+                bands, band = np.unique(lat_top[rows], return_inverse=True)
+                for j, lat in enumerate(bands):
+                    if (lat, n_x) not in maps:
+                        uq = np.rint(webmercator_row_map(lat, 0.25, n_x, n_x) * 256).astype(np.int64)
+                        lo = uq >> 8
+                        maps[lat, n_x] = lo, np.minimum(lo + 1, n_x - 1), (uq & 255).astype(np.uint16)
+                    lo, hi, f = maps[lat, n_x]
+                    a = stack[band == j]
+                    warped = (256 - f) * a[:, :, lo] + f * a[:, :, hi]
+                    out_s[rows[band == j]] = warped.sum(axis=(1, 2), dtype=np.int64)
             yield pa.RecordBatch.from_arrays(
-                [b.column("i"), pa.array(out_s, pa.int64())], names=["i", "rp_sum_256"]
+                [b.column("i"), pa.array(out_s)], names=["i", "rp_sum_256"]
             )
 
     return TileBatch.select(images, "i", "lat_top").mapInArrow(

@@ -6,7 +6,7 @@ form of the reference's consumption notebook
 
     images (Iceberg-layout corpus)
       → cell prune (pip.prune_tiles)     # pcell partitions + centroid-cell IN
-      → decode kernel (Arrow)            # scan + normalize
+      → decode kernel (Arrow)            # scan + normalize; ships i + tile cols
       → centroid → cell_id (JVM bit ops) # H3/S2 encode, no UDF
       → PIP join vs admin polygons       # broadcast filter + exact refine
       → groupBy(adm_id).agg(...)         # zonal stats
@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from .. import corpus
 from ..operators.pip import COVER_SCHEMA, pip_join
 from ..operators.zonal import zonal_stats
-from ..sources.images import decode_stats
+from ..sources.images import TileBatch, decode_stats
 
 FLAGSHIP_RES = 6  # cell ~2.8 deg: finer cover = tighter prune + more
                   # interior-'full' cells (refine UDF sees fewer rows)
@@ -68,7 +68,7 @@ def flagship(
     pruned = prune_tiles(
         images, cover_pdf["cell_id"].to_numpy(), *corpus.centroid_sql_for_images("i"), res
     )
-    tiles = corpus.centroid_cols_for_images(decode_stats(pruned), "i")
+    tiles = corpus.centroid_cols_for_images(decode_stats(TileBatch.select(pruned, "i")), "i")
     joined = pip_join(
         tiles, admin, res=res, refine="auto", cover=cover, rings=geoms, adm_rows=adm_rows
     )
@@ -124,6 +124,6 @@ def _flagship_distributed(images: DataFrame, admin: DataFrame, res: int) -> Data
     pruned = pts.join(cover.select("cell_id").distinct(), "cell_id", "left_semi").drop(
         "cell_id", "lon_c", "lat_c"
     )
-    tiles = corpus.centroid_cols_for_images(decode_stats(pruned), "i")
+    tiles = corpus.centroid_cols_for_images(decode_stats(TileBatch.select(pruned, "i")), "i")
     joined = pip_join_distributed(tiles, admin, res=res, cover=cover)
     return zonal_stats(joined, "mean_value", fixed_scale=2)

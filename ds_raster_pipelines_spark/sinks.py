@@ -72,6 +72,7 @@ def reencode_cog(images: DataFrame, tile: int = 32, overviews: int = 1) -> DataF
             # the orientation flags pass through, so the reader sees only
             # the tile columns and the pixels keep their stored order
             tb = TileBatch(b.select(list(TILE_COLUMNS)))
+            # per tile on purpose: the COG encoder takes one tile at a time
             blobs = [tiff.encode_cog(tb.pixels(k), tile=tile, overviews=overviews)
                      for k in range(tb.n)]
             cols = b.columns

@@ -6,8 +6,9 @@ sinks.py) runs inside ``mapInArrow`` and reads its Arrow batch through
 ONE reader, ``TileBatch``: the tile columns, the fixed-size payloads that
 reduce straight off the Arrow buffer, the canonical errors for a malformed
 row, and the F3 orientation flips live there and nowhere else (input_hint:
-no per-row Python in the relational plan; inside a batch the per-image
-loop is over *blobs*, each decoded with vectorized numpy). Decode emits
+no per-row Python in the relational plan; inside a batch a kernel reduces
+same-shape tile stacks or the payloads in place, never loops per tile
+unless it must). Decode emits
 per-tile statistics rather than raw pixels so the downstream relational
 plan stays columnar and shuffle-light — pixels never cross a shuffle
 boundary.
@@ -24,12 +25,8 @@ from pyspark.sql import DataFrame
 
 from .. import codecs, corpus, native, tiff
 
-DECODE_STATS_SCHEMA = (
-    "i bigint, image_id string, caption string, fmt string, phash bigint,"
-    " mean_value double, min_value double, max_value double, n_px bigint"
-)
-
 TILE_COLUMNS = ("bytes", "fmt", "w", "h")
+_DECODED_COLUMNS = ("bytes", "w", "h")  # decode_stats consumes these
 FLIP_COLUMNS = ("lon_ascending", "lat_descending")
 
 
@@ -152,10 +149,16 @@ class TileBatch:
       ("payload size mismatch ...", never a silent mis-count).
     * ``pixels(k)`` — the (h, w) uint8 tile in canonical orientation (flips
       applied as views); a decoded shape other than the row's raises.
+    * ``stacks()`` — every row as (n, h, w) uint8 stacks of one shape, for
+      kernels whose reduction vectorizes over a leading tile axis.
 
     ``overview_level`` > 0 reads each tile's reduced-resolution COG page;
     ``w``/``h`` are then the per-level dims.
     """
+
+    # rows per stack: block sums ran as fast per tile at 8, 32 or 128 rows,
+    # and slower as one 4,096-row stack (out of cache)
+    STACK_ROWS = 128
 
     def __init__(self, b, overview_level: int = 0, tolerant: bool = False):
         self.n = b.num_rows
@@ -209,8 +212,10 @@ class TileBatch:
     def select(df: DataFrame, *extra: str) -> DataFrame:
         """``df`` projected to ``extra`` plus the tile columns and whichever
         orientation flags it carries: mapInArrow is opaque to column
-        pruning, so a kernel must ship exactly what it reads (guide §4.1)."""
-        return df.select(*extra, *TILE_COLUMNS, *(c for c in FLIP_COLUMNS if c in df.columns))
+        pruning, so a kernel must ship exactly what it reads (guide §4.1).
+        Names go as SQL text: one JVM round trip each, not three."""
+        cols = [*extra, *TILE_COLUMNS, *(c for c in FLIP_COLUMNS if c in df.columns)]
+        return df.selectExpr(*(f"`{c}`" for c in cols))
 
     def bounds(self, idx: np.ndarray) -> np.ndarray:
         """Interleaved (start, end) offsets into ``data`` of rows ``idx`` —
@@ -237,6 +242,30 @@ class TileBatch:
             px = px[:: -1 if self.flip_y[k] else 1, :: -1 if self.flip_x[k] else 1]
         return px
 
+    def stacks(self):
+        """Yield ``(rows, stack)`` over every row: ``stack`` is the (n, h, w)
+        uint8 C-contiguous array of rows ``rows`` (ascending, one shape,
+        at most STACK_ROWS) in canonical orientation. Adjacent unflipped
+        fixed rows are a zero-copy, read-only view of ``data``; every other
+        row is copied in once through ``pixels(k)``, so the size, shape and
+        null errors are the ones ``pixels`` raises."""
+        shape = self.h << 32 | self.w
+        moved = ~self.fixed | self.flip_x | self.flip_y  # not a plain view
+        for key in np.unique(shape):
+            same = np.flatnonzero(shape == key)
+            h, w = divmod(int(key), 1 << 32)
+            for c0 in range(0, len(same), self.STACK_ROWS):
+                rows = same[c0 : c0 + self.STACK_ROWS]
+                start, end = self.off[rows[0]], self.off[rows[-1] + 1]
+                if not moved[rows].any() and end - start == len(rows) * h * w:
+                    yield rows, self.data[start:end].reshape(len(rows), h, w)
+                    continue
+                stack = np.empty((len(rows), h, w), dtype=np.uint8)
+                for j, k in enumerate(rows):
+                    # per tile on purpose: the reader's own copy or decode
+                    stack[j] = self.pixels(k)
+                yield rows, stack
+
     def histograms(self, shift: int = 0, bins: int = 256) -> np.ndarray:
         """(n, bins) int64 per-row counts of ``pixel >> shift``. The fixed
         rows count in one native.hist_segments pass straight off ``data``
@@ -252,6 +281,7 @@ class TileBatch:
         else:
             done[:] = False
         for k in np.flatnonzero(~done):
+            # per tile on purpose: entropy-coded rows, or no toolchain
             out[k] = np.bincount(self.pixels(k).ravel() >> shift, minlength=bins)
         return out
 
@@ -262,9 +292,7 @@ def _decode_stats_batch(b, tolerant: bool):
 
     tb = TileBatch(b, tolerant=tolerant)
     npx = tb.w * tb.h
-    mean = np.full(tb.n, np.nan)
-    mn = np.full(tb.n, np.nan)
-    mx = np.full(tb.n, np.nan)
+    mean, mn, mx = (np.full(tb.n, np.nan) for _ in range(3))
     ok = ~tb.bad
     # vectorized fast path: fixed-size payloads reduce per segment straight
     # off the Arrow data buffer — the C kernel in one pass, or the numpy
@@ -280,6 +308,7 @@ def _decode_stats_batch(b, tolerant: bool):
         mn[idx] = lo
         mx[idx] = hi
     for k in np.flatnonzero(ok & ~tb.fixed):
+        # per tile on purpose: entropy-coded rows, each caught alone
         try:
             px = tb.pixels(k)
         except Exception:
@@ -290,28 +319,20 @@ def _decode_stats_batch(b, tolerant: bool):
         mean[k] = px.mean(dtype=np.float64)
         mn[k] = float(px.min())
         mx[k] = float(px.max())
-    arrays = [
-        b.column("i"),
-        b.column("image_id"),
-        b.column("caption"),
-        b.column("fmt"),
-        b.column("phash"),
-        pa.array(mean, pa.float64(), from_pandas=True),
-        pa.array(mn, pa.float64(), from_pandas=True),
-        pa.array(mx, pa.float64(), from_pandas=True),
-        pa.array(npx),
-    ]
-    names_out = ["i", "image_id", "caption", "fmt", "phash",
-                 "mean_value", "min_value", "max_value", "n_px"]
+    cols = {c: b.column(c) for c in b.schema.names if c not in _DECODED_COLUMNS}
+    for name, v in (("mean_value", mean), ("min_value", mn), ("max_value", mx)):
+        cols[name] = pa.array(v, pa.float64(), from_pandas=True)  # NaN -> null
+    cols["n_px"] = pa.array(npx)
     if tolerant:
-        arrays.append(pa.array(ok))
-        names_out.append("decode_ok")
-    return pa.RecordBatch.from_arrays(arrays, names=names_out)
+        cols["decode_ok"] = pa.array(ok)
+    return pa.RecordBatch.from_arrays(list(cols.values()), names=list(cols))
 
 
 def decode_stats(images: DataFrame, on_error: str = "raise") -> DataFrame:
-    """images -> per-tile decoded stats. Columns preserved: i, image_id,
-    caption (byte-exact propagation — input_hint invariant), fmt, phash.
+    """images -> per-tile decoded stats: every input column but ``bytes``,
+    ``w`` and ``h`` passes through (captions byte-exact — input_hint
+    invariant), then mean_value, min_value, max_value and n_px. A caller
+    that reads fewer columns projects first (``TileBatch.select``).
 
     mapInArrow kernel: string/int columns pass through as Arrow arrays
     (zero conversion); the binary column is sliced from the Arrow buffers
@@ -330,7 +351,12 @@ def decode_stats(images: DataFrame, on_error: str = "raise") -> DataFrame:
     if on_error not in ("raise", "null"):
         raise ValueError(on_error)
     tolerant = on_error == "null"
-    schema = DECODE_STATS_SCHEMA + (", decode_ok boolean" if tolerant else "")
+    schema = ", ".join(
+        [f"`{f.name}` {f.dataType.simpleString()}"
+         for f in images.schema.fields if f.name not in _DECODED_COLUMNS]
+        + ["mean_value double, min_value double, max_value double, n_px bigint"]
+        + (["decode_ok boolean"] if tolerant else [])
+    )
 
     def kernel(batches):
         for b in batches:
@@ -410,6 +436,7 @@ def decode_verify(images: DataFrame) -> DataFrame:
             for k in range(tb.n):
                 i = int(ii[k])
                 truth = corpus.pixels_for(i)
+                # per tile on purpose: each row against its id's ground truth
                 px = tb.pixels(k)
                 psnr_v[k] = codecs.psnr(truth, px)
                 cap_ok[k] = caps[k] == corpus.caption_for(i)

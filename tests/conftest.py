@@ -28,14 +28,31 @@ def drop_toolchain(monkeypatch, tmp_path):
 
 
 class _Kernel:
-    """Stands in for a DataFrame: ``mapInArrow`` hands back the kernel
-    itself, so it runs on hand-built Arrow batches in this process."""
+    """Stands in for a DataFrame: after ``mapInArrow`` it is callable as the
+    kernel, so the kernel runs on hand-built Arrow batches in this process.
+    A ``groupBy().agg()`` after the kernel (the final aggregate of a
+    map-side partial) is left out: over one batch the partial is the
+    answer."""
+
+    columns: tuple = ()
 
     def select(self, *cols):
         return self
 
+    selectExpr = select
+
     def mapInArrow(self, kernel, schema):
-        return kernel
+        self.kernel = kernel
+        return self
+
+    def groupBy(self, *cols):
+        return self
+
+    def agg(self, *aggs):
+        return self
+
+    def __call__(self, batches):
+        return self.kernel(batches)
 
 
 @pytest.fixture

@@ -113,9 +113,9 @@ def test_char_ngrams_multiset_keeps_repeats(docs):
 
 def _kernel_legs(kernel, native_name, drop_toolchain):
     """Run an Arrow text kernel in this process and name the path each
-    batch took: the hashlib twin on a batch holding the null text (any
+    batch took: the Python twin on a batch holding the null text (any
     null sends the whole batch there), the native call on a null-free
-    batch when the library loads, and the hashlib twin on the null-free
+    batch when the library loads, and the Python twin on the null-free
     batch once the toolchain is gone. On a host without a toolchain only
     the two twin legs run. Returns the row sets, each sorted."""
     import pyarrow as pa
@@ -187,22 +187,20 @@ def test_minhash_kernel_matches_expression(docs, kernel_frame, drop_toolchain):
         assert rows == expected
 
 
-def test_lm_score_kernel_matches_join(docs):
+def test_lm_score_kernel_matches_join(docs, kernel_frame, drop_toolchain):
     """ngram_lm_scores' packed-table kernel == the gram-explode +
-    broadcast-join form on adversarial texts (astral chars, nulls,
-    short docs), and again with native forced off (python twin)."""
-    from ds_raster_pipelines_spark import native
+    broadcast-join form on adversarial texts (astral chars, nulls, short
+    docs): through Spark, and in this process on the native path and on
+    its Python twin, both for a batch with a null text and without the
+    toolchain."""
+    from ds_raster_pipelines_spark.functions.hashing import md5_int
     from ds_raster_pipelines_spark.operators.text import (
+        _lm_score_kernel,
         char_ngrams,
         ngram_lm_scores,
     )
 
-    got = _sorted(ngram_lm_scores(docs))
-
-    # reference: force the join path by pretending n > 3 is... simplest:
-    # rebuild the join form inline with the same LM derivation
-    from ds_raster_pipelines_spark.functions.hashing import md5_int
-
+    # the join form, with the LM derived as ngram_lm_scores derives it
     train = docs.where(
         md5_int(F.concat(F.lit("lm"), F.col("doc_id").cast("string"))) % 100 < 50
     )
@@ -227,17 +225,12 @@ def test_lm_score_kernel_matches_join(docs):
             F.sum(F.coalesce(F.col("logp_micro"), logp0)).alias("logp_micro"),
         )
     )
-    assert got == expect
-    saved = native._lib
-    native._lib = None
-    try:
-        # kernel plan already built requires... rebuild: the plan decision
-        # happens at build time, so this exercises the python twin only
-        # if the driver lib is still present; force-building the join
-        # path instead: lib None -> ngram_lm_scores uses the join form
-        assert _sorted(ngram_lm_scores(docs)) == expect
-    finally:
-        native._lib = saved
+    assert _sorted(ngram_lm_scores(docs)) == expect
+    lm_pairs = [(r["g"], r["logp_micro"]) for r in lm2.collect()]
+    logp0_int = docs.sparkSession.range(1).select(logp0).collect()[0][0]
+    kernel = _lm_score_kernel(kernel_frame, "text", 3, lm_pairs, logp0_int)
+    for rows in _kernel_legs(kernel, "lm_score_docs", drop_toolchain):
+        assert rows == expect
 
 
 def test_lm_collect_bound_takes_join_form(docs, monkeypatch, caplog):

@@ -88,11 +88,13 @@ def test_flagship_final_plan_broadcasts_the_cover_once(spark, tiles):
 @pytest.mark.parametrize("reduce", [zonal_pixel_stats, zonal_value_histogram])
 def test_zonal_final_plan_has_no_broadcast(spark, tiles, reduce):
     """The zonal kernel prunes by a filter and emits ``adm_id`` itself, so
-    its plan needs no broadcast and no join at all."""
+    its plan needs no broadcast and no join at all; and no sort, so the one
+    exchange is the aggregate's."""
     images = corpus.footprint_cols_for_images(spark.read.parquet(tiles))
     plan = _final_plan(reduce(images, corpus.admin_df(spark), res=6))
     assert "BroadcastExchange" not in plan, plan
     assert "Join" not in plan, plan
+    assert len(re.findall(r"\bExchange ", plan)) == 1, plan
 
 
 @pytest.mark.parametrize("admin_df", [corpus.admin_df, corpus.admin_holed_df])
@@ -106,12 +108,16 @@ def test_prune_parents_from_cover_cells(spark, admin_df):
 
 def test_flagship_scan_keeps_pcell_inset_filter(spark, tiles):
     """The one-expression prune list still lowers to an INSET filter that
-    is pushed to the parquet scan."""
+    is pushed to the parquet scan, and the final plan's scan reads only
+    what the decode kernel and the join need: no caption, phash or
+    image_id crosses the Arrow boundary."""
     df = flagship(spark.read.parquet(tiles), corpus.admin_df(spark))
     plan = df._jdf.queryExecution().executedPlan().toString()
     scan = next(line for line in plan.splitlines() if "FileScan parquet" in line)
     assert re.search(r"pcell#\d+L INSET", scan), scan
     assert "PushedFilters: [In(pcell," in scan, scan
+    scan = next(line for line in _final_plan(df).splitlines() if "FileScan parquet" in line)
+    assert not re.search(r"\b(caption|phash|image_id)#", scan), scan
 
 
 @pytest.mark.parametrize("admin_df,rects", [

@@ -87,7 +87,7 @@ def test_cog_sink_write_rescan_identical(spark, tmp_path):
     adm = corpus.admin_df(spark, offset=0.07)
     before = zonal_pixel_stats(
         corpus.footprint_cols_for_images(images), adm, res=6
-    ).toPandas()
+    ).orderBy("adm_id").toPandas()
 
     # green report -> write happens
     ok_report = images.agg(
@@ -116,7 +116,7 @@ def test_cog_sink_write_rescan_identical(spark, tmp_path):
     }
     after = zonal_pixel_stats(
         corpus.footprint_cols_for_images(rescanned), adm, res=6
-    ).toPandas()
+    ).orderBy("adm_id").toPandas()
     assert before.equals(after)
 
     # every written blob is a real multi-IFD TIFF whose overview matches

@@ -9,6 +9,8 @@ must instead return them as ``decode_ok=false`` rows.
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import numpy as np
 import pandas as pd
 import pyarrow as pa
@@ -109,12 +111,15 @@ def test_tolerant_decode_stats_nulls_both_malformed_rows(spark):
     assert got[2]["mean_value"] == TILE.mean()
 
 
-def _batch(rows, flags=False):
+def _batch(rows, flags=False, dims=None):
+    """A tile batch of ``rows`` (blob, fmt[, lon_ascending, lat_descending]),
+    each 64x64 unless ``dims`` gives its (h, w)."""
+    dims = dims or [(64, 64)] * len(rows)
     cols = {
         "bytes": pa.array([blob for blob, *_ in rows], pa.binary()),
         "fmt": pa.array([fmt for _, fmt, *_ in rows]),
-        "w": pa.array([64] * len(rows), pa.int32()),
-        "h": pa.array([64] * len(rows), pa.int32()),
+        "w": pa.array([w for _, w in dims], pa.int32()),
+        "h": pa.array([h for h, _ in dims], pa.int32()),
     }
     if flags:
         cols["lon_ascending"] = pa.array([r[2] for r in rows])
@@ -152,43 +157,211 @@ def test_tolerant_reader_leaves_bad_rows_to_the_caller():
     assert tb.fixed.tolist() == [True, False]
 
 
-READERS = {"decode_tile", "decode_tif_overview"}
+def _mixed_batch():
+    """(batch, canonical tiles): 64x64 and 32x32 rows interleaved, raw, qnt
+    and png rows interleaved, and rows stored mirrored with their flags."""
+    rng = np.random.default_rng(7)
+    rows, dims, tiles = [], [], []
+    for k in range(40):
+        h = w = 32 if k % 3 == 1 else 64
+        px = rng.integers(0, 256, (h, w), dtype=np.uint8)
+        fmt = ("raw", "png", "qnt", "raw")[k % 4]
+        lon_asc, lat_desc = k % 5 != 2, k % 7 != 3
+        stored = px[:: 1 if lat_desc else -1, :: 1 if lon_asc else -1]
+        rows.append((codecs.encode_tile(np.ascontiguousarray(stored), fmt), fmt, lon_asc, lat_desc))
+        dims.append((h, w))
+        tiles.append(px & 0xFE if fmt == "qnt" else px)
+    return _batch(rows, flags=True, dims=dims), tiles
 
 
-def _reader_calls(path):
-    """(line, enclosing class) of every call to a READERS name in ``path``."""
+def test_stacks_read_every_row_once_as_its_canonical_tile(monkeypatch):
+    """Mixed shapes, fixed and png rows interleaved and flipped rows: every
+    row comes back once, in a uint8 C-contiguous stack of its own shape, as
+    its canonical tile."""
+    monkeypatch.setattr(TileBatch, "STACK_ROWS", 8)
+    batch, tiles = _mixed_batch()
+    seen = []
+    for rows, stack in TileBatch(batch).stacks():
+        assert stack.dtype == np.uint8 and stack.flags.c_contiguous
+        assert 0 < len(rows) <= 8 and stack.shape[0] == len(rows)
+        assert list(rows) == sorted(rows)
+        for j, k in enumerate(rows):
+            assert np.array_equal(stack[j], tiles[k])
+        seen += list(rows)
+    assert sorted(seen) == list(range(len(tiles)))
+
+
+def test_adjacent_fixed_rows_stack_without_a_copy():
+    """Adjacent unflipped raw rows are stacked as a view of the Arrow data
+    buffer, STACK_ROWS at a time."""
+    n = TileBatch.STACK_ROWS + 2
+    tb = TileBatch(_batch([(codecs.encode_tile(corpus.pixels_for(i), "raw"), "raw")
+                           for i in range(n)]))
+    got = list(tb.stacks())
+    assert [len(rows) for rows, _ in got] == [n - 2, 2]
+    for rows, stack in got:
+        assert np.shares_memory(stack, tb.data)
+        assert all(np.array_equal(stack[j], corpus.pixels_for(k)) for j, k in enumerate(rows))
+
+
+def test_stacks_raise_the_canonical_errors():
+    """A truncated raw row fails as the reader does; a png that decodes to
+    the wrong shape fails when its stack is read."""
+    blob, fmt, message = MALFORMED["truncated_raw"]
+    good = (codecs.encode_tile(TILE, "raw"), "raw")
+    with pytest.raises(ValueError, match=message.replace("row 0", "row 1")):
+        list(TileBatch(_batch([good, (blob, fmt), good])).stacks())
+    blob, fmt, message = MALFORMED["short_png"]
+    with pytest.raises(ValueError, match=message.replace("tile 0", "tile 1")):
+        list(TileBatch(_batch([good, (blob, fmt), good])).stacks())
+
+
+def _footprint_batch(n=300):
+    """Corpus tiles with footprint columns: a first run of adjacent raw rows
+    (a zero-copy stack), then corpus formats, 32x32 rows and flipped rows;
+    seven latitude bands."""
+    batch, _ = _mixed_batch()
+    head = _batch([(codecs.encode_tile(corpus.pixels_for(i).T.copy(), "raw"), "raw", True, True)
+                   for i in range(TileBatch.STACK_ROWS)], flags=True)
+    tail = _batch([(codecs.encode_tile(corpus.pixels_for(i), corpus.fmt_for(i)),
+                    corpus.fmt_for(i), True, True) for i in range(n)], flags=True)
+    t = pa.Table.from_batches([head, batch, tail])
+    k = np.arange(t.num_rows)
+    t = (
+        t.append_column("i", pa.array(k + 1000, pa.int64()))
+        .append_column("lon0", pa.array(-20.0 + 0.25 * (k % 11)))
+        .append_column("lat_top", pa.array(60.0 - 0.25 * (k % 7)))
+    )
+    return t.combine_chunks().to_batches()[0]
+
+
+def _per_tile(kernel: str, b):
+    """The per-tile reference of each stacked kernel over batch ``b``."""
+    from ds_raster_pipelines_spark.operators import raster
+
+    tb = TileBatch(b)
+    pxs = [tb.pixels(k) for k in range(tb.n)]
+    cols = b.to_pydict()
+    if kernel == "reproject_webmercator_sum256":
+        return [(i, int(np.rint(raster.reproject_webmercator(px.T, lat).sum() * 256.0)))
+                for i, px, lat in zip(cols["i"], pxs, cols["lat_top"])]
+    if kernel == "resample_bilinear_stats":
+        return [(i, 48, 40, int(np.rint(raster.bilinear_resample(px, 40, 48).mean() * 1e6)))
+                for i, px in zip(cols["i"], pxs)]
+    if kernel == "coarsen_histogram":
+        counts: dict[int, int] = {}
+        for px in pxs:
+            h, w = px.shape
+            blocks = px.reshape(h // 2, 2, w // 2, 2).sum(axis=(1, 3), dtype=np.int64)
+            for v in np.rint(blocks * (1000 / 4)).astype(np.int64).ravel().tolist():
+                counts[v] = counts.get(v, 0) + 1
+        return sorted(counts.items())
+    out = []
+    for i, px, lon0, lat_top in zip(cols["i"], pxs, cols["lon0"], cols["lat_top"]):
+        ys, xs = np.nonzero(px >= 100)
+        if len(ys):
+            h, w = px.shape
+            out.append((i, lon0 + xs.min() * 0.25 / w, lat_top - (ys.max() + 1) * 0.25 / h,
+                        lon0 + (xs.max() + 1) * 0.25 / w, lat_top - ys.min() * 0.25 / h,
+                        len(ys)))
+    return out
+
+
+STACKED = {
+    "reproject_webmercator_sum256": lambda raster, df: raster.reproject_webmercator_sum256(df),
+    "resample_bilinear_stats": lambda raster, df: raster.resample_bilinear_stats(df, 48, 40),
+    "coarsen_histogram": lambda raster, df: raster.coarsen_histogram(df, factor=2),
+    "vectorize_mask": lambda raster, df: raster.vectorize_mask(df, threshold=100),
+}
+
+
+@pytest.mark.parametrize("toolchain", [True, False])
+@pytest.mark.parametrize("kernel", list(STACKED))
+def test_stacked_kernel_equals_its_per_tile_reference(spark, kernel, toolchain, kernel_frame,
+                                                      drop_toolchain):
+    """Each kernel ported to ``stacks()`` returns exactly what its per-tile
+    reference returns, with the native library and without a toolchain.
+    (``spark`` only lets coarsen_histogram build its final aggregate's
+    Column.)"""
+    from ds_raster_pipelines_spark import native
+    from ds_raster_pipelines_spark.operators import raster
+
+    if not toolchain:
+        drop_toolchain()
+    b = _footprint_batch()
+    kernel_frame.columns = b.schema.names
+    run = STACKED[kernel](raster, kernel_frame)
+    before = native.fallbacks["bilinear_stack"]
+    got = [tuple(r.values()) for r in pa.Table.from_batches(list(run([b]))).to_pylist()]
+    assert sorted(got) == sorted(_per_tile(kernel, b))
+    if kernel == "resample_bilinear_stats":  # the one native call among them
+        assert (native.fallbacks["bilinear_stack"] > before) == (native.get_lib() is None)
+    assert toolchain or native.get_lib() is None
+
+
+def _call_sites(path, names):
+    """(line, scope) of every call to ``names`` in ``path``: the scope is
+    the top-level function, or ``Class.method``."""
     import ast
 
     found = []
-
-    def visit(node, cls):
-        if isinstance(node, ast.ClassDef):
-            cls = node.name
-        if isinstance(node, ast.Call):
-            f = node.func
-            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
-            if name in READERS:
-                found.append((node.lineno, cls))
-        for child in ast.iter_child_nodes(node):
-            visit(child, cls)
-
-    visit(ast.parse(path.read_text()), None)
+    for top in ast.parse(path.read_text()).body:
+        scopes = [(top, getattr(top, "name", None))]
+        if isinstance(top, ast.ClassDef):
+            scopes = [(m, f"{top.name}.{getattr(m, 'name', '')}") for m in top.body]
+        for node, scope in scopes:
+            for n in ast.walk(node):
+                if isinstance(n, ast.Call):
+                    f = n.func
+                    if (f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)) in names:
+                        found.append((n.lineno, scope))
     return found
+
+
+PKG = Path(__file__).resolve().parent.parent / "ds_raster_pipelines_spark"
+PKG_FILES = sorted(PKG.rglob("*.py"))
+
+
+def _rel(p):
+    return p.relative_to(PKG).as_posix()
 
 
 def test_tile_decoders_are_called_only_by_the_reader():
     """Inside the package, a tile is decoded by codecs.py/tiff.py themselves
     or by TileBatch — a kernel with its own decode loop would bring back its
     own size checks and orientation handling."""
-    from pathlib import Path
-
-    pkg = Path(__file__).resolve().parent.parent / "ds_raster_pipelines_spark"
-    callers = []
-    for p in sorted(pkg.rglob("*.py")):
-        rel = p.relative_to(pkg).as_posix()
-        if rel in ("codecs.py", "tiff.py"):
-            continue
-        callers += [f"{rel}:{line} ({cls})" for line, cls in _reader_calls(p)]
+    callers = [
+        f"{_rel(p)}:{line} ({scope})"
+        for p in PKG_FILES if _rel(p) not in ("codecs.py", "tiff.py")
+        for line, scope in _call_sites(p, {"decode_tile", "decode_tif_overview"})
+    ]
     assert callers and all(
-        c.startswith("sources/images.py:") and c.endswith("(TileBatch)") for c in callers
+        c.startswith("sources/images.py:") and "(TileBatch." in c for c in callers
     ), callers
+
+
+PER_TILE = "# per tile on purpose:"
+# (module, scope) of every TileBatch.pixels call in the package; every other
+# kernel reads its rows through TileBatch.stacks
+PIXELS_SITES = {
+    ("operators/raster.py", "_zonal_pixel_reduce"),  # the hit tiles only
+    ("sinks.py", "reencode_cog"),  # the COG encoder takes one tile
+    ("sources/images.py", "TileBatch.histograms"),  # entropy-coded rows
+    ("sources/images.py", "TileBatch.stacks"),  # the reader itself
+    ("sources/images.py", "_decode_stats_batch"),  # entropy-coded rows
+    ("sources/images.py", "decode_verify"),  # per-id ground truth
+}
+
+
+def test_per_tile_pixel_reads_are_the_sanctioned_ones():
+    """A new per-tile loop over ``pixels(k)`` fails here: the sanctioned
+    sites are listed, and each carries a comment that says why."""
+    found, unmarked = set(), []
+    for p in PKG_FILES:
+        lines = p.read_text().splitlines()
+        for line, scope in _call_sites(p, {"pixels"}):
+            found.add((_rel(p), scope))
+            if not any(PER_TILE in ln for ln in lines[max(0, line - 4) : line]):
+                unmarked.append(f"{_rel(p)}:{line} ({scope})")
+    assert found == PIXELS_SITES, sorted(found ^ PIXELS_SITES)
+    assert not unmarked, f"pixels() calls without a '{PER_TILE}' comment: {unmarked}"
