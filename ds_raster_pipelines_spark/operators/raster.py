@@ -573,11 +573,14 @@ def reproject_webmercator_sum256(images: DataFrame) -> DataFrame:
     subpixel snapping every warped value is dyadic, so the ×256 sum is an
     exact integer — bit-reproducible across engines and partitionings.
     ONE Arrow stage (decode + transpose + warp + sum fused). The warp runs
-    in integers on the tiles of a stack that share a latitude band, one
-    row map per band and batch: with uq = rint(u·256), lo = uq >> 8 and
-    F = uq & 255, output ×256 is (256−F)·a[lo] + F·a[hi] ≤ 255·256, exactly
-    ``warp_rows`` ×256, in uint16. ``reproject_webmercator`` per tile is
-    its test twin."""
+    in integers on the tiles of a stack that share a latitude band, with
+    one row map per band and batch: with uq = rint(u·256), lo = uq >> 8
+    and F = uq & 255, output ×256 is (256−F)·a[lo] + F·a[hi] ≤ 255·256,
+    exactly ``warp_rows`` ×256, in uint16. On the stored corpora a
+    128-row stack in storage order holds about one tile per band, so the
+    band loop runs about once per tile; the saving is the cached row map
+    and the integer warp, not work shared across tiles.
+    ``reproject_webmercator`` per tile is its test twin."""
 
     def kernel(batches):
         import pyarrow as pa

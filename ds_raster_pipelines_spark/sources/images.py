@@ -245,21 +245,15 @@ class TileBatch:
     def stacks(self):
         """Yield ``(rows, stack)`` over every row: ``stack`` is the (n, h, w)
         uint8 C-contiguous array of rows ``rows`` (ascending, one shape,
-        at most STACK_ROWS) in canonical orientation. Adjacent unflipped
-        fixed rows are a zero-copy, read-only view of ``data``; every other
-        row is copied in once through ``pixels(k)``, so the size, shape and
-        null errors are the ones ``pixels`` raises."""
+        at most STACK_ROWS) in canonical orientation. Every row is copied
+        in once through ``pixels(k)``, so the size, shape and null errors
+        are the ones ``pixels`` raises."""
         shape = self.h << 32 | self.w
-        moved = ~self.fixed | self.flip_x | self.flip_y  # not a plain view
         for key in np.unique(shape):
             same = np.flatnonzero(shape == key)
             h, w = divmod(int(key), 1 << 32)
             for c0 in range(0, len(same), self.STACK_ROWS):
                 rows = same[c0 : c0 + self.STACK_ROWS]
-                start, end = self.off[rows[0]], self.off[rows[-1] + 1]
-                if not moved[rows].any() and end - start == len(rows) * h * w:
-                    yield rows, self.data[start:end].reshape(len(rows), h, w)
-                    continue
                 stack = np.empty((len(rows), h, w), dtype=np.uint8)
                 for j, k in enumerate(rows):
                     # per tile on purpose: the reader's own copy or decode

@@ -191,19 +191,6 @@ def test_stacks_read_every_row_once_as_its_canonical_tile(monkeypatch):
     assert sorted(seen) == list(range(len(tiles)))
 
 
-def test_adjacent_fixed_rows_stack_without_a_copy():
-    """Adjacent unflipped raw rows are stacked as a view of the Arrow data
-    buffer, STACK_ROWS at a time."""
-    n = TileBatch.STACK_ROWS + 2
-    tb = TileBatch(_batch([(codecs.encode_tile(corpus.pixels_for(i), "raw"), "raw")
-                           for i in range(n)]))
-    got = list(tb.stacks())
-    assert [len(rows) for rows, _ in got] == [n - 2, 2]
-    for rows, stack in got:
-        assert np.shares_memory(stack, tb.data)
-        assert all(np.array_equal(stack[j], corpus.pixels_for(k)) for j, k in enumerate(rows))
-
-
 def test_stacks_raise_the_canonical_errors():
     """A truncated raw row fails as the reader does; a png that decodes to
     the wrong shape fails when its stack is read."""
@@ -217,9 +204,9 @@ def test_stacks_raise_the_canonical_errors():
 
 
 def _footprint_batch(n=300):
-    """Corpus tiles with footprint columns: a first run of adjacent raw rows
-    (a zero-copy stack), then corpus formats, 32x32 rows and flipped rows;
-    seven latitude bands."""
+    """Corpus tiles with footprint columns: a first full stack of raw rows,
+    then corpus formats, 32x32 rows and flipped rows; seven latitude
+    bands."""
     batch, _ = _mixed_batch()
     head = _batch([(codecs.encode_tile(corpus.pixels_for(i).T.copy(), "raw"), "raw", True, True)
                    for i in range(TileBatch.STACK_ROWS)], flags=True)
