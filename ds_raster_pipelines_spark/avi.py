@@ -244,20 +244,6 @@ def encode_avi_dct(frames_px: list[np.ndarray], fps: int = 10, quality: int = 90
     return encode_avi([codecs.encode_dct(f, quality) for f in frames_px], w, h, fps)
 
 
-def decode_avi_dct(buf: bytes, every_n: int = 1, offset: int = 0) -> list[np.ndarray]:
-    """Sampled decode: uint8 (h, w) pixel arrays for every Nth frame."""
-    from . import codecs
-
-    meta = parse_avi(buf)
-    if meta.handler != _FOURCC_HANDLER:
-        raise NotImplementedError(
-            f"AVI stream handler {meta.handler!r} not available in this environment"
-        )
-    return [
-        codecs.decode_dct(bytes(buf[d : d + s])) for d, s in meta.frames[offset::every_n]
-    ]
-
-
 def encode_avi_mjpeg(frames_px: list[np.ndarray], fps: int = 10, quality: int = 90) -> bytes:
     """uint8 (h, w) frames -> REAL Motion-JPEG AVI: each frame is a
     complete baseline JFIF stream (jpeg.py from-scratch ITU-T T.81 codec)
@@ -276,8 +262,8 @@ def encode_avi_mjpeg(frames_px: list[np.ndarray], fps: int = 10, quality: int = 
 def decode_avi_frames(buf: bytes, every_n: int = 1, offset: int = 0) -> list[np.ndarray]:
     """Handler-dispatched sampled decode: uint8 (h, w) arrays for every
     Nth frame. DCT0 -> repo transform codec; MJPG -> baseline JFIF
-    (jpeg.py). Skipped frames' payload bytes are never sliced or decoded
-    (same O(sampled pixels) contract as decode_avi_dct)."""
+    (jpeg.py). Skipped frames' payload bytes are never sliced or decoded:
+    the work is O(sampled pixels)."""
     meta = parse_avi(buf)
     if meta.handler == _FOURCC_HANDLER:
         from . import codecs
@@ -374,7 +360,7 @@ def frame_stats_columns(
     """``(counts, n_px, sum_px)`` int64 arrays for the sampled frames of an
     Arrow binary column's zero-copy (offsets, data) views: blob k has
     counts[k] sampled frames, and n_px / sum_px list every sampled frame
-    in blob order — the columns of ``frame_stats_arrow``.
+    in blob order.
 
     MJPG blobs take one native pass for the whole batch: Python parses the
     first sampled frame's header once; native.avi_mjpeg_segments walks
@@ -421,16 +407,3 @@ def frame_stats_columns(
     spx[is_slow] = [x[1] for x in flat]
     return counts, npx, spx
 
-
-def frame_stats_arrow(
-    off: "np.ndarray", data: "np.ndarray", every_n: int = 1, offset: int = 0
-) -> list[list[tuple[int, int]]]:
-    """Per-blob ``[(n_px, sum_px), ...]`` for the sampled frames of an
-    Arrow binary column's zero-copy (offsets, data) views — equal to
-    ``[(px.size, int(px.sum())) for px in decode_avi_frames(...)]``
-    (pytest-pinned).  The list form of ``frame_stats_columns``: one native
-    pass for the MJPG blobs of the batch, the per-blob path for the rest."""
-    counts, npx, spx = frame_stats_columns(off, data, every_n, offset)
-    pairs = list(zip(npx.tolist(), spx.tolist()))
-    ends = np.cumsum(counts).tolist()
-    return [pairs[e - c : e] for e, c in zip(ends, counts.tolist())]

@@ -75,13 +75,6 @@ def expected_decoded_mean(i: int) -> float:
     return c + (31.0 if fmt_for(i) == "qnt" else 31.5)
 
 
-def footprint(i: int) -> tuple[float, float, float, float]:
-    """(min_lon, min_lat, max_lon, max_lat) of image i's 0.25 deg tile."""
-    lon0 = -180.0 + 0.25 * ((i * 13) % 1440)
-    lat_top = 90.0 - 0.25 * ((i * 7) % 720)
-    return lon0, lat_top - 0.25, lon0 + 0.25, lat_top
-
-
 # ------------------------------------------------------------- spark gen ---
 
 IMAGES_SCHEMA = (
@@ -197,11 +190,6 @@ def images_from_ids(
     # pandas frame on purpose: the generator carries the caller's extra
     # columns through unchanged (pdf.assign + projection)
     return meta.mapInPandas(gen_bytes, schema=out_schema)
-
-
-def images_from_range(spark: SparkSession, n: int, partitions: int | None = None) -> DataFrame:
-    ids = spark.range(0, n, 1, partitions or spark.sparkContext.defaultParallelism)
-    return images_from_ids(ids.withColumnRenamed("id", "i"), partitions=0)
 
 
 # Generator version — bump when the corpus definition changes so stale

@@ -67,16 +67,6 @@ class GribMessage:
         "_data_offset", "_data_len",
     )
 
-    def key(self) -> dict:
-        """cfgrib-style filter keys (the filter_by_keys vocabulary)."""
-        return {
-            "discipline": self.discipline,
-            "parameterCategory": self.param_category,
-            "parameterNumber": self.param_number,
-            "productDefinitionTemplateNumber": self.template,
-            "forecastTime": self.forecast_time,
-            "perturbationNumber": self.perturbation,
-        }
 
 
 def _sect(n: int, body: bytes) -> bytes:

@@ -16,12 +16,11 @@ Implementations, cross-checked in tests/test_grid.py:
   * numpy (vectorized, for Arrow kernels and goldens);
   * SQL text (``encode_sql``, ``centroid_sql``, ``parent_sql`` ...), the
     single text form of each formula: the DuckDB oracle runs it as is and
-    Spark runs it through ``encode_col`` / ``centroid_cols`` as ONE
-    ``F.expr`` — JVM arithmetic in whole-stage codegen, NO Python UDF, and
-    built in a fixed few driver→JVM round trips, where a Column builder
-    pays one per literal and operator (plus one more when Python frees it);
-  * Column builders for the bit-field helpers (``parent_col``, ``ix_col``,
-    ``iy_col``, ``grid_disk_col``).
+    Spark runs it through ``encode_col`` / ``centroid_cols`` /
+    ``parent_col`` / ``grid_disk_col`` as ONE ``F.expr`` — JVM arithmetic
+    in whole-stage codegen, NO Python UDF, and built in a fixed few
+    Python→JVM round trips, where composing Column objects pays one per
+    literal and operator (plus one more when Python frees it).
 """
 
 from __future__ import annotations
@@ -156,25 +155,14 @@ def _sql_text(x: str | Column) -> str:
     return "`" + x._jc.toString().replace("`", "``") + "`"
 
 
-def ix_col(cell: Column) -> Column:
-    return cell.bitwiseAND(F.lit(IX_MASK))
-
-
-def iy_col(cell: Column) -> Column:
-    return F.shiftright(cell, IY_SHIFT).bitwiseAND(F.lit(IY_MASK))
-
-
-def parent_col(cell: Column, parent_res: int, res: int) -> Column:
-    """Parent cell at ``parent_res`` (caller states the child res so the
-    shift is a literal — keeps the expression foldable)."""
-    dr = res - parent_res
-    if dr < 0:
+def parent_col(cell: str | Column, parent_res: int, res: int) -> Column:
+    """Parent cell at ``parent_res``, one ``F.expr`` over :func:`parent_sql`
+    (caller states the child res so the shift is a literal — keeps the
+    expression foldable). ``cell`` is Spark-SQL text, as in
+    :func:`encode_col`."""
+    if res - parent_res < 0:
         raise ValueError("parent_res must be <= res")
-    return (
-        F.lit(parent_res << RES_SHIFT).cast("long")
-        .bitwiseOR(F.shiftleft(F.shiftright(iy_col(cell), dr), IY_SHIFT))
-        .bitwiseOR(F.shiftright(ix_col(cell), dr))
-    )
+    return F.expr(parent_sql(_sql_text(cell), parent_res, res))
 
 
 def centroid_cols(cell: str | Column, res: int) -> tuple[Column, Column]:
@@ -184,28 +172,21 @@ def centroid_cols(cell: str | Column, res: int) -> tuple[Column, Column]:
     return F.expr(lon), F.expr(lat)
 
 
-def grid_disk_col(cell: Column, k: int, res: int) -> Column:
+def grid_disk_col(cell: str | Column, k: int, res: int) -> Column:
     """Array column of the k-ring neighbour cell ids (row-major, lon-wrap,
-    lat-clip) — built from sequence/transform/filter/flatten: pure JVM,
-    no UDF, exactly mirrors grid_disk_np."""
+    lat-clip), one ``F.expr`` over sequence/transform/flatten: pure JVM,
+    no UDF, exactly mirrors grid_disk_np. ``cell`` is Spark-SQL text, as
+    in :func:`encode_col`."""
     nx, ny = nx_ny(res)
-    ix, iy = ix_col(cell), iy_col(cell)
-    res_bits = F.lit(int(res) << RES_SHIFT).cast("long")
-    dys = F.sequence(F.lit(-k), F.lit(k))
-    dxs = F.sequence(F.lit(-k), F.lit(k))
-    rows = F.transform(
-        dys,
-        lambda dy: F.when(
-            (iy + dy >= 0) & (iy + dy < ny),
-            F.transform(
-                dxs,
-                lambda dx: res_bits
-                .bitwiseOR(F.shiftleft(iy + dy, IY_SHIFT))
-                .bitwiseOR(F.pmod(ix + dx, F.lit(nx)).cast("long")),
-            ),
-        ).otherwise(F.array().cast("array<bigint>")),
+    c = _sql_text(cell)
+    ix, iy = ix_sql(c), iy_sql(c)
+    return F.expr(
+        f"flatten(transform(sequence({-k}, {k}), dy -> CASE"
+        f" WHEN {iy} + dy >= 0 AND {iy} + dy < {ny}"
+        f" THEN transform(sequence({-k}, {k}), dx -> cast({int(res) << RES_SHIFT} as bigint)"
+        f" | (({iy} + dy) << {IY_SHIFT}) | cast(pmod({ix} + dx, {nx}) as bigint))"
+        f" ELSE cast(array() as array<bigint>) END))"
     )
-    return F.flatten(rows)
 
 
 # ------------------------------------------------------------------ sql ---
@@ -290,7 +271,7 @@ def compact_cells(cells, res: int, min_res: int = 0, cell_col: str = "cell_id"):
             F.array(
                 *[
                     F.struct(
-                        parent_col(F.col("c"), r, res).alias("c"),
+                        parent_col("c", r, res).alias("c"),
                         F.lit(r).alias("res"),
                     )
                     for r in range(min_res, res + 1)
@@ -305,11 +286,10 @@ def compact_cells(cells, res: int, min_res: int = 0, cell_col: str = "cell_id"):
         .select("c", "res")
     )
     # dynamic one-level parent: res field (r-1) | iy>>1 | ix>>1 — the
-    # per-row analog of parent_col(c, r-1, r)
-    parent_dyn = (
-        F.expr(f"shiftleft(cast(res - 1 as bigint), {RES_SHIFT})")
-        .bitwiseOR(F.shiftleft(F.shiftright(iy_col(F.col("c")), 1), IY_SHIFT))
-        .bitwiseOR(F.shiftright(ix_col(F.col("c")), 1))
+    # per-row analog of parent_sql(c, r-1, r)
+    parent_dyn = F.expr(
+        f"(shiftleft(cast(res - 1 as bigint), {RES_SHIFT})"
+        f" | (({iy_sql('c')} >> 1) << {IY_SHIFT}) | ({ix_sql('c')} >> 1))"
     )
     parents = comp.where(F.col("res") < res).select(F.col("c").alias("_p"))
     out = comp.join(parents, parent_dyn == F.col("_p"), "left_anti")

@@ -1,66 +1,17 @@
-"""Climatology / temporal aggregation operators (SURVEY A1/A2/A4/A5, J1).
+"""Climatology operators (SURVEY J1, S13): the FloodScan band merge and
+multi-band baseline cube
+(the reference's ``src/pipelines/floodscan_pipeline.py:369-411``).
 
-Distributed forms of the FloodScan baseline computation
-(``/root/reference/src/pipelines/floodscan_pipeline.py:405-411``) and the
-SEAS5 ensemble collapse (``seas5_pipeline.py:128``):
-
-* rolling 11-day centered mean  → window avg, rowsBetween(-5, 5)
-* day-of-year climatology       → groupBy(dayofyear, key).avg
-* ensemble mean                 → groupBy(key, date, lead).avg over members
-* band merge                    → full outer equi-join on (key, date)
-
-At scale: the rolling window and the day-of-year agg both shuffle on
-``cell_id`` — pre-partitioning the table by cell_id (bucketing) makes the
-second shuffle free; the window itself is per-cell sequential, which is
-exactly how it parallelizes (cells ≫ cores).
+The rolling mean, day-of-year climatology and ensemble mean (SURVEY
+A5/A4/A1) are the registry's exact-cents queries ``window_rolling_centered``,
+``doy_climatology`` and ``ensemble_mean``; the cube is persisted through
+``sinks.write_cube_nc``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def rolling_mean(
-    df: DataFrame,
-    value_col: str,
-    key_col: str = "cell_id",
-    order_col: str = "date",
-    window: int = 11,
-    out_col: str = "rolling_mean",
-) -> DataFrame:
-    """A5: centered rolling mean over ``window`` rows per key
-    (floodscan_pipeline.py:406 — rolling(date=11, center=True))."""
-    half = window // 2
-    w = Window.partitionBy(key_col).orderBy(order_col).rowsBetween(-half, half)
-    return df.withColumn(out_col, F.avg(value_col).over(w))
-
-
-def day_of_year_mean(
-    df: DataFrame,
-    value_col: str,
-    key_col: str = "cell_id",
-    date_col: str = "date",
-) -> DataFrame:
-    """A4: groupby(dayofyear).mean (floodscan_pipeline.py:407)."""
-    return (
-        df.groupBy(F.dayofyear(F.col(date_col)).alias("doy"), key_col)
-        .agg(F.avg(value_col).alias("doy_mean"))
-    )
-
-
-def ensemble_mean(
-    df: DataFrame,
-    value_col: str,
-    keys: list[str],
-    member_col: str = "member",
-) -> DataFrame:
-    """A1: collapse the ensemble dimension (seas5_pipeline.py:128 —
-    mean over 25/51 members). Partial aggregation is map-side."""
-    return df.groupBy(*keys).agg(
-        F.avg(value_col).alias("ens_mean"),
-        F.count(member_col).alias("n_members"),
-    )
 
 
 def band_merge(
@@ -93,19 +44,3 @@ def multiband_baseline(
     return merged.groupBy(
         F.dayofyear(F.col(date_col)).alias("doy"), key_col
     ).agg(*aggs)
-
-
-def write_cube(df: DataFrame, path: str) -> None:
-    """Persist the baseline cube (reference writes the NetCDF at
-    floodscan_pipeline.py:410; here a parquet table — same columns,
-    doubles stored bit-exactly)."""
-    df.write.mode("overwrite").parquet(path)
-
-
-def read_cube(spark, path: str, like: DataFrame | None = None) -> DataFrame:
-    """Re-read the cube for the baseline-update pipeline. With ``like``,
-    the stored schema is pinned to the in-memory plan's schema (dtype
-    drift on re-read becomes an error at plan time, not silent casts)."""
-    if like is not None:
-        return spark.read.schema(like.schema).parquet(path).select(like.columns)
-    return spark.read.parquet(path)

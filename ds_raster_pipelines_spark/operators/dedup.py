@@ -40,65 +40,29 @@ MINHASH_PARAMS = [
 ]
 
 
-# Persisted shared intermediates (words / band_sig) must stay cached until
-# the caller materializes the returned plan, so they cannot be unpersisted
-# inside the operator that created them. Lifetime is owned by a CacheScope:
-# pass one explicitly (`with CacheScope() as s: minhash_dedup_pairs(df,
-# scope=s); out.collect()`) to control exactly when blocks are freed, e.g.
-# when building several dedup plans before materializing any of them. With
-# no scope, each top-level invocation uses a THREAD-LOCAL default scope and
-# releases the previous default-scope blocks first — bounding cache growth
-# to one plan per thread (bench reps and 70-query oracle sweeps in a single
-# session never accumulate blocks for the session lifetime).
+# Persisted shared intermediates (band_sig) must stay cached until the
+# caller materializes the returned plan, so they cannot be unpersisted
+# inside the operator that created them. Each top-level invocation first
+# releases what the previous one on the same THREAD cached, bounding cache
+# growth to one plan per thread (bench reps and 70-query oracle sweeps in a
+# single session never accumulate blocks for the session lifetime).
 import threading
-
-
-class CacheScope:
-    """Owns the persisted intermediates of one dedup plan build."""
-
-    def __init__(self) -> None:
-        self._dfs: list[DataFrame] = []
-
-    def persist(self, df: DataFrame) -> DataFrame:
-        self._dfs.append(df.persist())
-        return self._dfs[-1]
-
-    def release(self) -> None:
-        while self._dfs:
-            self._dfs.pop().unpersist()
-
-    def __enter__(self) -> "CacheScope":
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self.release()
-
 
 _DEFAULT = threading.local()
 
 
-def _scope(scope: CacheScope | None, fresh: bool) -> CacheScope:
-    """Resolve the cache scope for a top-level invocation. Explicit scope:
-    caller owns the lifetime, nothing is implicitly released. No scope:
-    rotate this thread's default scope (release previous plan's blocks)."""
-    if scope is not None:
-        return scope
-    if fresh:
-        release_cached()
-        _DEFAULT.scope = CacheScope()
-    cur = getattr(_DEFAULT, "scope", None)
-    if cur is None:
-        cur = _DEFAULT.scope = CacheScope()
-    return cur
+def _persist_fresh(df: DataFrame) -> DataFrame:
+    """Release this thread's cached intermediates, then persist ``df`` as
+    the only one."""
+    release_cached()
+    _DEFAULT.dfs = [df.persist()]
+    return _DEFAULT.dfs[0]
 
 
 def release_cached() -> None:
-    """Unpersist intermediates cached by this THREAD's default scope (plans
-    built with an explicit CacheScope are unaffected — release those via
-    the scope)."""
-    cur = getattr(_DEFAULT, "scope", None)
-    if cur is not None:
-        cur.release()
+    """Unpersist the intermediates cached by this thread's last dedup plan."""
+    while getattr(_DEFAULT, "dfs", None):
+        _DEFAULT.dfs.pop().unpersist()
 
 
 def tokenize(
@@ -338,8 +302,6 @@ def lsh_candidate_pairs(
     sigs: DataFrame,
     rows_per_band: int = 2,
     max_bucket: int | None = None,
-    scope: CacheScope | None = None,
-    _fresh: bool = True,
 ) -> DataFrame:
     """Band the signatures and bucket-join: docs sharing any full band are
     candidates. Band signature packed as an integer (order-free sum of
@@ -352,7 +314,6 @@ def lsh_candidate_pairs(
     exact dedup / union-find on a sample than via all-pairs."""
     if rows_per_band not in (1, 2):
         raise ValueError("packed band signature implemented for rows_per_band in {1, 2}")
-    sc = _scope(scope, _fresh)
     banded = sigs.withColumn("band", F.floor(F.col("j") / rows_per_band)).withColumn(
         "_term",
         F.col("mh")
@@ -362,7 +323,7 @@ def lsh_candidate_pairs(
     # with different downstream partitionings, so Spark cannot reuse the
     # exchange — persist it once (docs x bands rows, tiny vs the corpus)
     # instead of re-deriving the whole tokenize->minhash pipeline 3x.
-    band_sig = sc.persist(banded.groupBy("doc_id", "band").agg(F.sum("_term").alias("sig")))
+    band_sig = _persist_fresh(banded.groupBy("doc_id", "band").agg(F.sum("_term").alias("sig")))
     if max_bucket is not None:
         hot = (
             band_sig.groupBy("band", "sig")
@@ -404,7 +365,6 @@ def minhash_dedup_pairs(
     threshold: float = 0.5,
     rows_per_band: int = 2,
     max_bucket: int | None = None,
-    scope: CacheScope | None = None,
 ) -> DataFrame:
     """Full MinHash-LSH near-dup: candidates from LSH, verified with exact
     Jaccard (filter-refine — same shape as the PIP join). rows_per_band
@@ -422,11 +382,9 @@ def minhash_dedup_pairs(
     it (persist wrote + read the exploded word strings: 3.3 vs 2.4 s at
     the sf1.0 replica). At warehouse scale with an expensive source
     scan, stage the word set as an intermediate table instead."""
-    sc = _scope(scope, fresh=True)
     words = tokenize(df, text_col)
     cand = lsh_candidate_pairs(
-        minhash_signatures(df, text_col, strategy), rows_per_band, max_bucket,
-        scope=sc, _fresh=False,
+        minhash_signatures(df, text_col, strategy), rows_per_band, max_bucket
     )
     sizes = word_set_sizes(df, text_col)
     wa = words.select(F.col("doc_id").alias("doc_a"), "w")

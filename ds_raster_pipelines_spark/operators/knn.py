@@ -31,7 +31,7 @@ def knn_ring_join(
     ring payload...). Ring membership includes the centre cell."""
     left = tiles.select(
         F.col(cell_col),
-        F.explode(grid.grid_disk_col(F.col(cell_col), k, res)).alias("neighbor_cell_id"),
+        F.explode(grid.grid_disk_col(cell_col, k, res)).alias("neighbor_cell_id"),
     )
     right_cols = [F.col(cell_col).alias("neighbor_cell_id")] + [
         F.col(c).alias(f"neighbor_{c}") for c in (payload_cols or [])

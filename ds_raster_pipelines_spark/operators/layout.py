@@ -6,9 +6,9 @@ Why it exists at 100 TB: file skipping works off per-file min/max column
 stats. Writing tiles in row-major cell order gives a 2-D bbox query
 ``height`` distinct file ranges; writing in Morton order folds both axes
 into ONE key whose ranges align with axis-aligned rectangles, so the
-same bbox touches a handful of files. The cluster key is pure Column
-bit algebra (JVM codegen, no UDF), with synchronized numpy and ANSI-SQL
-twins in the grid.py tradition.
+same bbox touches a handful of files. The cluster key is one SQL text
+(``zorder_sql``, run by Spark and DuckDB alike: JVM codegen, no UDF) with
+a numpy twin, in the grid.py tradition.
 
 Reference analog: none (the reference writes one COG per date); this is
 the table-layout discipline its Databricks production jobs would rely
@@ -21,6 +21,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..grid import _sql_text
+
 # magic-number bit spread: 16-bit value -> even bit positions of 32 bits
 _SPREAD = [
     (8, 0x00FF00FF),
@@ -30,16 +32,12 @@ _SPREAD = [
 ]
 
 
-def _spread_col(x: Column) -> Column:
-    x = x.cast("long")
-    for sh, mask in _SPREAD:
-        x = x.bitwiseOR(F.shiftleft(x, sh)).bitwiseAND(F.lit(mask))
-    return x
-
-
-def zorder_key(ix: Column, iy: Column) -> Column:
-    """Morton-interleave two 16-bit grid indices into one cluster key."""
-    return _spread_col(ix).bitwiseOR(F.shiftleft(_spread_col(iy), 1))
+def zorder_key(ix: str | Column, iy: str | Column) -> Column:
+    """Morton-interleave two 16-bit grid indices into one cluster key: one
+    ``F.expr`` over :func:`zorder_sql`. ``ix``/``iy`` are Spark-SQL text,
+    as in :func:`grid.encode_col` (a plain ``F.col(name)`` is taken as its
+    name)."""
+    return F.expr(zorder_sql(_sql_text(ix), _sql_text(iy)))
 
 
 def zorder_np(ix: np.ndarray, iy: np.ndarray) -> np.ndarray:
@@ -58,21 +56,8 @@ def _spread_sql(e: str) -> str:
 
 
 def zorder_sql(ix_expr: str, iy_expr: str) -> str:
-    """ANSI-SQL twin (DuckDB-ready) of :func:`zorder_key`."""
+    """The Morton key as SQL text, valid in Spark SQL and DuckDB alike."""
     return f"({_spread_sql(f'cast({ix_expr} as bigint)')} | ({_spread_sql(f'cast({iy_expr} as bigint)')} << 1))"
-
-
-def cluster_by_zorder(
-    df: DataFrame, ix: str, iy: str, key_col: str = "zkey", partitions: int | None = None
-) -> DataFrame:
-    """Materialization helper: range-partition + sort by the Morton key
-    so each output file covers one contiguous key range (tight min/max
-    stats -> bbox file skipping). Range partitioning samples the key to
-    balance file sizes under ANY density skew — the key is data-
-    independent, the split points are not."""
-    out = df.withColumn(key_col, zorder_key(F.col(ix), F.col(iy)))
-    n = partitions or df.sparkSession.sparkContext.defaultParallelism
-    return out.repartitionByRange(n, key_col).sortWithinPartitions(key_col)
 
 
 # ------------------------------------------------ bucketed co-location ---

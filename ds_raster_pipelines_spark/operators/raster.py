@@ -545,24 +545,6 @@ def reproject_webmercator(px: np.ndarray, lat_top: float, span_deg: float = 0.25
     return warp_rows(px, webmercator_row_map(lat_top, span_deg, px.shape[0], px.shape[0]))
 
 
-def webmercator_inverse_row_map(
-    lat_top: float, span_deg: float, src_h: int, out_h: int
-) -> np.ndarray:
-    """The opposite direction (EPSG:3857-gridded source → uniform-latitude
-    output rows): fractional MERCATOR-grid row for each latitude-uniform
-    output row. Composing the two maps round-trips (pytest gate)."""
-    lat_bot = lat_top - span_deg
-    if lat_top > WEBMERC_MAX_LAT or lat_bot < -WEBMERC_MAX_LAT:
-        raise ValueError("tile outside the Web-Mercator domain (|lat| > 85.0511)")
-    y_t = merc_y(np.float64(lat_top))
-    y_b = merc_y(np.float64(lat_bot))
-    r = np.arange(out_h, dtype=np.float64)
-    lat_r = lat_top - (r + 0.5) * (span_deg / out_h)
-    y_r = merc_y(lat_r)
-    u = (src_h / (y_t - y_b)) * (y_t - y_r) - 0.5
-    return np.clip(u, 0.0, src_h - 1.0)
-
-
 def reproject_webmercator_sum256(images: DataFrame) -> DataFrame:
     """Graded reprojection surface: decode each tile, TRANSPOSE it (the
     corpus gradient runs along x; the transpose makes pixel values vary

@@ -185,29 +185,6 @@ def repetition_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def repetition_filter(
-    df: DataFrame,
-    text_col: str = "text",
-    max_top_frac: float = 0.2,
-    max_dup_bigram_frac: float = 0.05,
-) -> DataFrame:
-    """Drop docs whose modal-token mass or duplicate-bigram mass exceeds
-    the Gopher-style thresholds. Integer cross-multiplication (no float
-    division) so keep/drop decisions are bit-identical across engines."""
-    from fractions import Fraction
-
-    d = repetition_features(df, text_col)
-    # a/b <= num/den  <=>  a*den <= b*num — integer cross-multiplication,
-    # exact for ANY rational threshold (0.3 is exactly 3/10 here, not the
-    # silently-distorted 1/round(1/0.3)=1/3 a reciprocal round would give)
-    ft = Fraction(max_top_frac).limit_denominator(1_000_000)
-    fb = Fraction(max_dup_bigram_frac).limit_denominator(1_000_000)
-    return d.where(
-        (F.col("top_cnt") * ft.denominator <= F.col("n_tok") * ft.numerator)
-        & (F.col("dup_bi") * fb.denominator <= F.col("n_bi") * fb.numerator)
-    ).drop("n_tok", "top_cnt", "n_bi", "dup_bi")
-
-
 def char_ngrams(df: DataFrame, n: int = 3, text_col: str = "text") -> DataFrame:
     """Explode each document into its character n-grams, zero Python, zero
     shuffle: the explode happens map-side at the scan partition.  Short
@@ -401,27 +378,6 @@ def _lm_score_kernel(
     return df.select("doc_id", text_col).mapInArrow(
         kernel, schema="doc_id long, n_grams bigint, logp_micro bigint"
     )
-
-
-def perplexity_filter(
-    df: DataFrame,
-    max_avg_neg_logp: float = 8.0,
-    n: int = 3,
-    text_col: str = "text",
-    train_rate_pct: int = 50,
-    salt: str = "lm",
-) -> DataFrame:
-    """Keep docs whose average per-gram negative log-prob under the
-    corpus n-gram LM is ≤ the threshold (low perplexity = in-distribution
-    text; gibberish scores far below the LM and is dropped). The decision
-    is an integer cross-multiplication — -logp_micro ≤ thr_micro·n_grams —
-    so keep/drop is bit-identical across engines (no float division)."""
-    thr_micro = round(max_avg_neg_logp * 1e6)
-    s = ngram_lm_scores(df, n, text_col, train_rate_pct, salt)
-    keep = s.where(
-        (F.col("n_grams") > 0) & (-F.col("logp_micro") <= thr_micro * F.col("n_grams"))
-    )
-    return df.join(keep.select("doc_id"), "doc_id", "leftsemi")
 
 
 # Conservative PII patterns valid with IDENTICAL semantics in Java regex

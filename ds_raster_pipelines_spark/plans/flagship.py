@@ -115,7 +115,7 @@ def _flagship_distributed(images: DataFrame, admin: DataFrame, res: int) -> Data
     cover = polygon_cover_cells(admin, res)
     if "pcell" in images.columns:
         parents = cover.select(
-            grid.parent_col(F.col("cell_id"), corpus.PCELL_RES, res).alias("pcell")
+            grid.parent_col("cell_id", corpus.PCELL_RES, res).alias("pcell")
         ).distinct()
         images = images.join(parents, "pcell", "left_semi").drop("pcell")
     pts = corpus.centroid_cols_for_images(images, "i").withColumn(

@@ -384,7 +384,7 @@ def cell_parent_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cells = pts.withColumn("cell_id", grid.encode_col("lon_c", "lat_c", _RES_H))
     return (
-        cells.withColumn("parent_id", grid.parent_col(F.col("cell_id"), 2, _RES_H))
+        cells.withColumn("parent_id", grid.parent_col("cell_id", 2, _RES_H))
         .groupBy("parent_id")
         .agg(
             F.count(F.lit(1)).alias("n_points"),
@@ -2819,7 +2819,7 @@ def pip_all_touched(spark: SparkSession, sf_dir: str) -> DataFrame:
     _, _, cover = cover_local(spark, adm, res)
     expanded = cover.select(
         "adm_id", "_mnx", "_mny", "_mxx", "_mxy",
-        F.explode(grid.grid_disk_col(F.col("cell_id"), 1, res)).alias("cell_id"),
+        F.explode(grid.grid_disk_col("cell_id", 1, res)).alias("cell_id"),
     ).dropDuplicates(["adm_id", "cell_id"])
     pts = corpus.footprint_cols_for_images(
         corpus.centroid_cols_for_images(
@@ -4195,7 +4195,7 @@ def zorder_layout_locality(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = _pq(spark, sf_dir, "lineitem").select(
         (F.col("l_partkey") % 64).alias("ix"), (F.col("l_suppkey") % 64).alias("iy")
     )
-    k = g.withColumn("zkey", zorder_key(F.col("ix"), F.col("iy"))).withColumn(
+    k = g.withColumn("zkey", zorder_key("ix", "iy")).withColumn(
         "rmkey", F.col("iy") * 64 + F.col("ix")
     )
     in_bbox = F.col("ix").between(8, 15) & F.col("iy").between(16, 23)

@@ -239,19 +239,6 @@ def read_shp(data: bytes) -> list:
     return out
 
 
-def read_shx(data: bytes) -> list[tuple[int, int]]:
-    """.shx bytes → [(byte_offset, content_byte_len), ...]."""
-    (code,) = struct.unpack_from(">i", data, 0)
-    if code != _FILE_CODE:
-        raise ValueError(f"shx: bad file code {code}")
-    (flen_words,) = struct.unpack_from(">i", data, 24)
-    out = []
-    for off in range(100, min(flen_words * 2, len(data)), 8):
-        o, n = struct.unpack_from(">ii", data, off)
-        out.append((o * 2, n * 2))
-    return out
-
-
 # ----------------------------------------------------------------- .dbf ---
 
 

@@ -108,7 +108,7 @@ def explode_grib_ensemble(
     """One row per SURVIVING message of each ``(i, grib_bytes)`` file:
     (i, fc_month, member, grid_sum, n_present). ``filter_keys`` (one dict,
     or a list of alternative dicts — e.g. request_filter_keys output) is
-    matched against each message's header keys (grib.GribMessage.key())
+    matched against each message's header keys (cfgrib's filter_by_keys names)
     BEFORE the data section is unpacked — the S2 filter_by_keys semantics;
     non-matching messages cost one header parse and zero decode work."""
     alts = [filter_keys] if isinstance(filter_keys, dict) else list(filter_keys or [])

@@ -1,2 +1,2 @@
 """Incremental execution: per-partition lineage manifests (checkpoint /
-resume) and Structured-Streaming event aggregation."""
+resume) and event-time window aggregation."""

@@ -1,15 +1,14 @@
-"""Structured Streaming over the events table (SURVEY §2.9).
+"""Event-time windows over the events table (SURVEY §2.9).
 
-The reference is batch with incremental run modes; true streams map to
-Structured Streaming. Here: a watermarked tumbling-window aggregation
-driven to completion from parquet (the harness's smoke pattern), plus the
-equivalent batch form — the two produce identical finals, which is the
-test's assertion (streaming/batch consistency).
+The reference is batch with incremental run modes, and so is this engine
+(checkpointed incremental batch, ``streaming/incremental.py``, not
+Structured Streaming state): the tumbling-window aggregate below is a
+batch plan.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -29,146 +28,3 @@ def windowed_agg_batch(events: DataFrame, width: str = "1 hour") -> DataFrame:
             "sum_cents",
         )
     )
-
-
-def session_agg_batch(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
-    """Per-user gap-based session census via Spark's native session_window
-    (batch form). Same semantics as operators/timeseries.sessionize with
-    half-open windows: a new session starts when the gap to the previous
-    event REACHES ``gap`` (session_window treats [start, start+gap) as
-    one window, so an exact-gap event begins a new session — sessionize's
-    strict '>' keeps it; use this twin where streaming parity matters
-    more than closed-gap semantics)."""
-    events = events.withColumn("ts", F.col("ts").cast("timestamp"))
-    return (
-        events.groupBy(F.session_window("ts", gap).alias("win"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_sessions"),
-            F.max("n_events").alias("max_session_events"),
-            F.sum("n_events").alias("n_events"),
-        )
-    )
-
-
-def session_agg_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    gap: str = "30 minutes",
-    watermark: str = "12 hours",
-    query_name: str = "events_sessions",
-) -> DataFrame:
-    """The same session census as a STREAM: session_window is Structured
-    Streaming's merging-session state machine (late events extend/merge
-    sessions until the watermark closes them) — the true streaming form
-    of the reference's incremental run modes for event feeds."""
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", watermark)
-    )
-    agg = stream.groupBy(F.session_window("ts", gap).alias("win"), "user_id").agg(
-        F.count(F.lit(1)).alias("n_events")
-    )
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return (
-        spark.sql(f"SELECT user_id, n_events FROM {query_name}")
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_sessions"),
-            F.max("n_events").alias("max_session_events"),
-            F.sum("n_events").alias("n_events"),
-        )
-    )
-
-
-def dedup_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    keys: list[str] | None = None,
-    watermark: str = "24 hours",
-    query_name: str = "events_dedup",
-) -> DataFrame:
-    """Streaming EXACT dedup: duplicate deliveries dropped by key with
-    bounded state (``dropDuplicatesWithinWatermark`` — state for a key is
-    evicted once the watermark passes it, so an at-least-once upstream
-    feed dedups with O(window) memory instead of O(stream)). The batch
-    twin is a plain ``dropDuplicates`` — the test asserts equality. Each
-    input row is doubled in-stream first, modeling the re-delivery."""
-    keys = keys or ["event_id"]
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        # model at-least-once delivery: every event arrives twice
-        .withColumn("_copy", F.explode(F.array(F.lit(1), F.lit(2))))
-        .drop("_copy")
-        .withWatermark("ts", watermark)
-        .dropDuplicatesWithinWatermark(keys)
-    )
-    q = (
-        stream.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
-
-
-def windowed_agg_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    width: str = "1 hour",
-    watermark: str = "2 hours",
-    query_name: str = "events_windowed",
-) -> DataFrame:
-    """Run the same aggregation as a stream (file source → memory sink,
-    processAllAvailable) and return the final result table."""
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(schema)
-        # the file source needs a directory; glob-filter to the events file
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-        # parquet stores TIMESTAMP_NTZ; watermarks need TIMESTAMP (UTC session)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", watermark)
-    )
-    agg = (
-        stream.groupBy(F.window("ts", width).alias("win"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.round(F.col("value") * 100, 0).cast("long")).alias("sum_cents"),
-        )
-        .select(F.col("win.start").alias("win_start"), "event_type", "n", "sum_cents")
-    )
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")

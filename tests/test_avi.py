@@ -21,7 +21,7 @@ def test_avi_roundtrip_bit_exact():
     meta = avi.parse_avi(blob)
     assert (meta.w, meta.h, meta.fps, meta.n_frames) == (64, 64, 10, 9)
     assert meta.handler == b"DCT0"
-    out = avi.decode_avi_dct(blob)
+    out = avi.decode_avi_frames(blob)
     assert all(np.array_equal(a, b) for a, b in zip(out, frames))
 
 
@@ -38,7 +38,7 @@ def test_avi_word_alignment_with_odd_payloads():
 def test_avi_frame_sampling_slices_only_kept_frames():
     frames = _gradient_frames(n=10)
     blob = avi.encode_avi_dct(frames, fps=5)
-    s = avi.decode_avi_dct(blob, every_n=3)
+    s = avi.decode_avi_frames(blob, every_n=3)
     assert len(s) == 4  # frames 0, 3, 6, 9
     assert np.array_equal(s[2], frames[6])
     p = avi.frame_payloads(blob, every_n=3, offset=1)
@@ -76,7 +76,7 @@ def test_avi_noise_frames_clear_psnr_gate():
     rng = np.random.default_rng(5)
     frames = [rng.integers(0, 256, size=(64, 64), dtype=np.uint8) for _ in range(3)]
     blob = avi.encode_avi([codecs.encode_dct(f, 95) for f in frames], 64, 64)
-    for got, want in zip(avi.decode_avi_dct(blob), frames):
+    for got, want in zip(avi.decode_avi_frames(blob), frames):
         assert codecs.psnr(want, got) >= 40.0
 
 
@@ -84,7 +84,7 @@ def test_unknown_handler_raises():
     blob = avi.encode_avi([b"\x00" * 10], 8, 8)
     hacked = blob.replace(b"vidsDCT0", b"vidsH264")
     with pytest.raises(NotImplementedError, match="H264"):
-        avi.decode_avi_dct(hacked)
+        avi.decode_avi_frames(hacked)
 
 
 def test_video_frame_stats_kernel(spark):

@@ -14,9 +14,15 @@ from ds_raster_pipelines_spark.sources.images import decode_stats, decode_verify
 SF = "/root/testdata/sf0.001"
 
 
+def _images(spark, n, partitions):
+    """Corpus tiles 0..n-1 over ``partitions`` partitions."""
+    ids = spark.range(0, n, 1, partitions).withColumnRenamed("id", "i")
+    return corpus.images_from_ids(ids, partitions=0)
+
+
 @pytest.fixture(scope="module")
 def images(spark):
-    return corpus.images_from_range(spark, 2000, partitions=4)
+    return _images(spark, 2000, partitions=4)
 
 
 def test_decode_stats_matches_closed_form(spark, images):
@@ -65,8 +71,8 @@ def test_flagship_wkb_equals_bbox_refine(spark, images):
 def test_flagship_deterministic_across_parallelism(spark):
     """BASELINE.md gate: identical results regardless of partitioning."""
     adm = corpus.admin_df(spark)
-    a = _sorted(flagship(corpus.images_from_range(spark, 1500, partitions=1), adm).toPandas())
-    b = _sorted(flagship(corpus.images_from_range(spark, 1500, partitions=13), adm).toPandas())
+    a = _sorted(flagship(_images(spark, 1500, partitions=1), adm).toPandas())
+    b = _sorted(flagship(_images(spark, 1500, partitions=13), adm).toPandas())
     assert a.equals(b)
 
 
@@ -87,7 +93,7 @@ def test_decode_stats_error_as_data(spark):
 
     from ds_raster_pipelines_spark.sources.images import decode_stats
 
-    images = corpus.images_from_range(spark, 60, partitions=2)
+    images = _images(spark, 60, partitions=2)
 
     def poison(pdf_iter):
         for pdf in pdf_iter:
@@ -267,7 +273,7 @@ def test_zonal_pixel_stats_refuses_large_polygon_set(spark, monkeypatch):
     from ds_raster_pipelines_spark.operators import pip
     from ds_raster_pipelines_spark.operators.raster import zonal_pixel_stats
 
-    images = corpus.footprint_cols_for_images(corpus.images_from_range(spark, 10, partitions=1))
+    images = corpus.footprint_cols_for_images(_images(spark, 10, partitions=1))
     adm = corpus.admin_df(spark)  # 32 polygons
     monkeypatch.setattr(pip, "MAX_LOCAL_POLYGONS", 31)
     with pytest.raises(pip.PolygonSetTooLarge, match="exceeds 31 polygons"):

@@ -113,23 +113,6 @@ def test_missing_dates_and_coverage(spark):
     assert cov["n_expected"] == 6 and cov["n_present"] == 3 and cov["coverage_pct"] == 50.0
 
 
-def test_rolling_and_doy(spark):
-    from ds_raster_pipelines_spark.operators.climatology import day_of_year_mean, rolling_mean
-
-    pdf = pd.DataFrame(
-        {
-            "cell_id": [1] * 6,
-            "date": pd.to_datetime(["2020-01-01", "2020-01-02", "2020-01-03", "2021-01-01", "2021-01-02", "2021-01-03"]),
-            "v": [1.0, 2.0, 3.0, 5.0, 6.0, 7.0],
-        }
-    )
-    df = spark.createDataFrame(pdf)
-    rm = rolling_mean(df, "v", window=3).orderBy("date").toPandas()["rolling_mean"].tolist()
-    assert rm == [1.5, 2.0, 3.0 + 1 / 3, 14 / 3, 6.0, 6.5]  # centered, partial at edges
-    doy = day_of_year_mean(df, "v").orderBy("doy").toPandas()
-    assert doy["doy_mean"].tolist() == [3.0, 4.0, 5.0]
-
-
 def test_validation_report_and_gate(spark):
     from ds_raster_pipelines_spark.operators.validate import (
         assert_schema,
@@ -330,11 +313,10 @@ def test_asof_join_matches_bruteforce(spark):
 
 def test_webmercator_reprojection_properties():
     """Cross-CRS warp kernel: monotone row map, brute-force agreement,
-    round-trip fidelity, domain guard."""
+    domain guard."""
     import numpy as np
     import pytest
 
-    from ds_raster_pipelines_spark.codecs import psnr
     from ds_raster_pipelines_spark.operators import raster
 
     for lat_top in (85.0, 45.0, 10.0, 0.125, -30.0, -84.8):
@@ -362,19 +344,11 @@ def test_webmercator_reprojection_properties():
             brute[r, x] = px[lo, x] + (float(px[hi, x]) - px[lo, x]) * f
     assert np.array_equal(got, brute)
 
-    # round-trip 4326 -> 3857 -> 4326 on smooth data: high fidelity
-    smooth = (np.arange(64)[:, None] + 7.0).repeat(64, axis=1)
-    fwd = raster.reproject_webmercator(smooth, lat_top)
-    back = raster.warp_rows(
-        fwd, raster.webmercator_inverse_row_map(lat_top, 0.25, 64, 64)
-    )
-    assert psnr(smooth, back) >= 60.0
-
     # domain guard: poleward of the Web-Mercator clip raises
     with pytest.raises(ValueError, match="Web-Mercator domain"):
         raster.webmercator_row_map(89.0, 0.25, 64, 64)
     with pytest.raises(ValueError, match="Web-Mercator domain"):
-        raster.webmercator_inverse_row_map(-85.3, 0.25, 64, 64)
+        raster.webmercator_row_map(-85.0, 0.25, 64, 64)
 
 
 def test_decode_wav_multichannel_mulaw_averages():

@@ -292,24 +292,3 @@ def test_zorder_aligned_block_is_contiguous():
     z = zorder_np(xs.ravel(), ys.ravel())
     assert len(np.unique(z)) == 64
     assert z.max() - z.min() == 63  # aligned 8x8 block = one contiguous range
-
-
-def test_cluster_by_zorder_partition_ranges_disjoint(spark):
-    import pandas as pd
-
-    from ds_raster_pipelines_spark.operators.layout import cluster_by_zorder
-
-    rng = np.random.default_rng(4)
-    df = spark.createDataFrame(
-        pd.DataFrame({"ix": rng.integers(0, 64, 5000), "iy": rng.integers(0, 64, 5000)})
-    )
-    out = cluster_by_zorder(df, "ix", "iy", partitions=8).withColumn(
-        "pid", F.spark_partition_id()
-    )
-    stats = (
-        out.groupBy("pid").agg(F.min("zkey").alias("lo"), F.max("zkey").alias("hi"))
-        .orderBy("lo")
-        .collect()
-    )
-    for a, b in zip(stats, stats[1:]):
-        assert a["hi"] <= b["lo"]  # contiguous non-overlapping key ranges

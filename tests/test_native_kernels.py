@@ -274,10 +274,19 @@ def test_native_avi_scan_flag_byte_corruption():
             assert (w, h, fps, handler, fr) == (m.w, m.h, m.fps, m.handler, m.frames)
 
 
+def _frame_stats(off, data, every_n=1, offset=0):
+    """avi.frame_stats_columns regrouped per blob: [[(n_px, sum_px), ...], ...]."""
+    from ds_raster_pipelines_spark import avi
+
+    counts, npx, spx = avi.frame_stats_columns(off, data, every_n, offset)
+    pairs = iter(zip(npx.tolist(), spx.tolist()))
+    return [[next(pairs) for _ in range(c)] for c in counts.tolist()]
+
+
 def test_native_avi_scan_truncated_strh_falls_back():
     """A buffer that ends inside a ``vids`` stream header: Python slices a
     short handler, so the native walk must fall back instead of reporting
-    ``handler=b""``, and frame_stats_arrow raises parse_avi's error.  The
+    ``handler=b""``, and frame_stats_columns raises parse_avi's error.  The
     movi list comes first so the walk gets that far."""
     import struct
 
@@ -299,7 +308,7 @@ def test_native_avi_scan_truncated_strh_falls_back():
     assert repr(b"MJ") in str(want.value)
     off, data = _binary_offsets_data(pa.array([blob], type=pa.binary()))
     with pytest.raises(NotImplementedError) as got:
-        avi.frame_stats_arrow(off, data)
+        _frame_stats(off, data)
     assert str(got.value) == str(want.value)
 
 
@@ -325,7 +334,7 @@ def test_native_avi_scan_grows_past_frame_cap(monkeypatch):
 
 
 def test_frame_stats_arrow_equals_multi():
-    """frame_stats_arrow over Arrow (offsets, data) views == (px.size,
+    """frame_stats_columns over Arrow (offsets, data) views == (px.size,
     px.sum()) over decode_avi_frames, for MJPG and DCT handlers, 16x24
     frames and 64x64 ones (MJPG sums inside the native IDCT), all
     sampling phases, and with the native library forced off."""
@@ -351,11 +360,11 @@ def test_frame_stats_arrow_equals_multi():
             [(px.size, int(px.sum(dtype=np.int64))) for px in avi.decode_avi_frames(b, every_n, offset)]
             for b in blobs
         ]
-        assert avi.frame_stats_arrow(off, data, every_n, offset) == expect
+        assert _frame_stats(off, data, every_n, offset) == expect
         saved = native._lib
         native._lib = None
         try:
-            assert avi.frame_stats_arrow(off, data, every_n, offset) == expect
+            assert _frame_stats(off, data, every_n, offset) == expect
         finally:
             native._lib = saved
 
@@ -419,12 +428,12 @@ def test_frame_stats_batch_isolates_odd_blobs(monkeypatch):
     for every_n in (1, 2, 3):
         rows.clear()
         before = native.fallbacks["avi_mjpeg_segments"]
-        got = avi.frame_stats_arrow(off, data, every_n)
+        got = _frame_stats(off, data, every_n)
         if native.get_lib() is not None:
             assert native.fallbacks["avi_mjpeg_segments"] - before == len(odd)
             assert rows == sorted(odd)
         assert got == [_reference_stats(b, every_n) for b in blobs]
-        assert got == [avi.frame_stats_arrow(off[k : k + 2], data, every_n)[0]
+        assert got == [_frame_stats(off[k : k + 2], data, every_n)[0]
                        for k in range(len(blobs))]
 
 
@@ -464,7 +473,7 @@ def test_frame_stats_batch_sweep_equals_per_blob_path(toolchain, drop_toolchain)
         want = _outcome(lambda: BlobBatch(b).whole(
             lambda o, d: avi._per_blob_stats(o, d, 2, 0, range(len(o) - 1), {})))
         before = native.fallbacks["avi_mjpeg_segments"]
-        got = _outcome(lambda: BlobBatch(b).whole(lambda o, d: avi.frame_stats_arrow(o, d, 2)))
+        got = _outcome(lambda: BlobBatch(b).whole(lambda o, d: _frame_stats(o, d, 2)))
         assert got == want, len(v)
         native_rows += native.fallbacks["avi_mjpeg_segments"] == before
     assert (native_rows > 0) == toolchain

@@ -112,8 +112,6 @@ def test_multiband_cube_roundtrip(spark, tmp_path):
     from ds_raster_pipelines_spark.operators.climatology import (
         band_merge,
         multiband_baseline,
-        read_cube,
-        write_cube,
     )
 
     n = 3000
@@ -129,8 +127,10 @@ def test_multiband_cube_roundtrip(spark, tmp_path):
     merged = band_merge(sfed, mfed, ["cell_id", "date"])
     cube = multiband_baseline(merged, ["sfed", "mfed"])
     path = str(tmp_path / "cube")
-    write_cube(cube, path)
-    reread = read_cube(spark, path, like=cube)
+    cube.write.mode("overwrite").parquet(path)
+    # the stored schema pinned to the plan's: dtype drift on re-read is an
+    # error at plan time, not a silent cast
+    reread = spark.read.schema(cube.schema).parquet(path).select(cube.columns)
     # file sources are always nullable in Spark; names + dtypes must match
     assert [(f.name, f.dataType) for f in reread.schema.fields] == [
         (f.name, f.dataType) for f in cube.schema.fields
@@ -161,60 +161,6 @@ def test_checksum_order_insensitive(spark):
     m1 = partition_manifest(df1, "p").orderBy("part").toPandas()
     m2 = partition_manifest(df2.repartition(7), "p").orderBy("part").toPandas()
     assert m1[["part", "n_rows", "checksum"]].equals(m2[["part", "n_rows", "checksum"]])
-
-
-def test_streaming_matches_batch(spark):
-    from ds_raster_pipelines_spark.streaming.events import (
-        windowed_agg_batch,
-        windowed_agg_stream,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    batch = windowed_agg_batch(spark.read.parquet(f"{sf}/events.parquet")).orderBy(
-        "win_start", "event_type"
-    ).toPandas()
-    stream = windowed_agg_stream(spark, sf).orderBy("win_start", "event_type").toPandas()
-    assert batch.equals(stream)
-    assert len(batch) > 0
-
-
-def test_dedup_stream_matches_batch(spark):
-    """Streaming exact dedup with bounded state: doubled (at-least-once)
-    deliveries collapse back to exactly the batch-distinct row set."""
-    from ds_raster_pipelines_spark.streaming.events import dedup_stream
-
-    sf = "/root/testdata/sf0.001"
-    batch = spark.read.parquet(f"{sf}/events.parquet")
-    got = dedup_stream(spark, sf)
-    assert got.count() == batch.count()  # every duplicate dropped
-    a = got.select("event_id", "user_id", "event_type").orderBy("event_id").toPandas()
-    b = (
-        batch.select("event_id", "user_id", "event_type").orderBy("event_id").toPandas()
-    )
-    assert a.equals(b)
-
-
-def test_session_window_stream_matches_batch(spark):
-    """Native session_window: the streaming merging-session state machine
-    must converge to the batch session census exactly; and the per-user
-    event totals must agree with the window-free sessionize operator."""
-    from ds_raster_pipelines_spark.operators.timeseries import sessionize
-    from ds_raster_pipelines_spark.streaming.events import (
-        session_agg_batch,
-        session_agg_stream,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    ev = spark.read.parquet(f"{sf}/events.parquet")
-    batch = session_agg_batch(ev).orderBy("user_id").toPandas()
-    stream = session_agg_stream(spark, sf).orderBy("user_id").toPandas()
-    assert len(batch) > 0
-    assert batch.equals(stream)
-    # cross-check totals vs the lag+cumsum sessionize operator (session
-    # boundary semantics differ only on measure-zero exact-gap events)
-    s = sessionize(ev.withColumn("ts", F.col("ts").cast("timestamp")), gap_minutes=30)
-    per_user = s.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_events")).orderBy("user_id").toPandas()
-    assert per_user["n_events"].tolist() == batch["n_events"].tolist()
 
 
 def test_multimodal_plumbing(spark):
@@ -254,7 +200,8 @@ def test_vectorize_mask_golden(spark):
     from ds_raster_pipelines_spark import corpus
     from ds_raster_pipelines_spark.operators.raster import vectorize_mask
 
-    images = corpus.footprint_cols_for_images(corpus.images_from_range(spark, 200))
+    ids = spark.range(0, 200).withColumnRenamed("id", "i")
+    images = corpus.footprint_cols_for_images(corpus.images_from_ids(ids, partitions=0))
     out = vectorize_mask(images, threshold=100).toPandas().set_index("i")
     for i in out.index[:20]:
         c = int(i) % 97
@@ -302,29 +249,6 @@ def test_wav_decode_real_path(spark):
 
     with _pytest.raises(NotImplementedError):
         decode_audio(b"\x00" * 16, "mp3")
-
-
-def test_stateful_stream_matches_batch(spark, tmp_path):
-    """applyInPandasWithState: per-user GroupState survives across
-    micro-batches (maxFilesPerTrigger=1 over 4 files) and its FINAL
-    running totals equal the batch aggregate."""
-    from ds_raster_pipelines_spark.streaming.stateful import (
-        running_user_totals_stream,
-        user_totals_batch,
-    )
-
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    emitted = running_user_totals_stream(
-        spark, events, str(tmp_path / "stage"), n_files=4, query_name="ut_test"
-    ).toPandas()
-    # multiple emissions per user prove multi-batch state updates ran
-    assert emitted.groupby("user_id").size().max() > 1
-    final = emitted.groupby("user_id").agg(
-        n_events=("n_events", "max"), last_ts_us=("last_ts_us", "max")
-    )
-    batch = user_totals_batch(events).toPandas().set_index("user_id")
-    assert final["n_events"].sort_index().equals(batch["n_events"].sort_index())
-    assert final["last_ts_us"].sort_index().equals(batch["last_ts_us"].sort_index())
 
 
 def test_watermark_drops_late_events(spark, tmp_path):

@@ -101,3 +101,52 @@ def test_no_unread_private_names():
         if name not in read
     ]
     assert not found, "module-level private names no package module reads:\n" + "\n".join(found)
+
+
+ROOT = PKG.parent
+# Code outside the package that counts as a reader: the entry points and
+# the tools, never the tests.
+READERS = [ROOT / f for f in ("bench.py", "bench_extra.py", "run_pipeline.py", "__spark_entry__.py")]
+READERS += sorted((ROOT / "perfbench").glob("*.py")) + sorted((ROOT / "tools").rglob("*.py"))
+
+
+def _census_keeps() -> dict[str, str]:
+    """``tools/call_census.py``'s KEEP: "<path in the package>:<qualname>"
+    -> why a def nothing outside tests reads stays."""
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location("call_census", ROOT / "tools" / "call_census.py")
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod.KEEP
+
+
+def _imported(tree: ast.Module) -> set[str]:
+    return {a.name for n in ast.walk(tree) if isinstance(n, ast.ImportFrom) for a in n.names}
+
+
+def _registered(node) -> bool:
+    return any(isinstance(d, ast.Call) and getattr(d.func, "id", None) == "register"
+               for d in node.decorator_list)
+
+
+def test_public_defs_have_a_reader():
+    """Every module-level public def or class in the package is read (a
+    name or attribute load, or an import) by package code or by code
+    outside the tests, is a ``@register``-ed query, or is one of the
+    call census's sanctioned keeps. A def only tests read is dead code."""
+    trees = {p: ast.parse(p.read_text()) for p in sorted(PKG.rglob("*.py"))}
+    others = [ast.parse(p.read_text()) for p in READERS]
+    read = set().union(*(_reads(t) | _imported(t) for t in [*trees.values(), *others]))
+    keeps = _census_keeps()
+    found = [
+        f"{p.relative_to(PKG.parent)}:{node.lineno} {node.name}"
+        for p, t in trees.items()
+        for node in _module_body(t)
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+        and not node.name.startswith("_")
+        and node.name not in read
+        and not _registered(node)
+        and f"{p.relative_to(PKG).as_posix()}:{node.name}" not in keeps
+    ]
+    assert not found, "public defs nothing outside tests reads:\n" + "\n".join(found)
